@@ -1,12 +1,12 @@
 package graft.client
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Grid
 import graft.ingest.{Influx, Pivot}
 import graft.read.Downsample
-import graft.store.{MetricDef, SensorConfig, SensorStore}
+import graft.store.{MetricDef, RollupKind, SensorConfig, SensorStore}
 
 /** Library façade mirroring the reference client's public surface
   * (`/root/reference/src/ong_tsdb/client.py` — `OngTsdbClient`), minus
@@ -24,8 +24,8 @@ import graft.store.{MetricDef, SensorConfig, SensorStore}
   * | `get_lasttimestamp`            | `lastTimestamp`              |
   * | `get_metadata`/`set_level_names`| `metadata` / `setLevelNames`|
   *
-  * Auth tokens are stored with the sensor for config parity but not
-  * enforced — a library embeds in the caller's security context.
+  * Every read and write checks the client's token against the
+  * sensor's keys (see `authRead` / `authWrite`).
   */
 class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
                   adminKey: String = "") {
@@ -89,10 +89,11 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
     store.config(db, sensor).metricNames
 
   /** Reference `update_token` (`client.py:149`): tokens are immutable
-    * per client here — returns a new client bound to the new token.
+    * per client here — returns a new client bound to the new token and
+    * the same admin key.
     */
   def updateToken(newToken: String): GraftClient =
-    new GraftClient(spark, baseDir, newToken)
+    new GraftClient(spark, baseDir, newToken, adminKey)
 
   /** Reference `config_reload` (`client.py:384-390`): configs are read
     * from disk on every access in this engine, so reload is a no-op
@@ -283,47 +284,102 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
         .getOrElse(Nil))
   }
 
+  /** The one rollup route: authorizes the read, then picks the largest
+    * materialized grid `b` of `kind` the query aligns to — `b` divides
+    * the `coarse` output grid and both range ends sit on it
+    * (`fromSec % b == 0`, `(toSec + 1) % b == 0`), because merged
+    * partials are bucket-granular and cannot be trimmed. None — read
+    * raw — when `useRollups` is off, `coarse` is None or nothing
+    * aligns, so routing changes cost, never values.
+    */
+  private def route(db: String, sensor: String, kind: RollupKind,
+                    fromSec: Long, toSec: Long, coarse: Option[Long],
+                    useRollups: Boolean): Option[Long] = {
+    authRead(db, sensor)
+    if (!useRollups) None
+    // equal dir names ⇔ same family (for quantiles, same binWidth)
+    else coarse.flatMap(c => store.listRollups(db, sensor).collect {
+      case (k, b) if k.dirName(b) == kind.dirName(b) && b <= c &&
+          c % b == 0 && fromSec % b == 0 && (toSec + 1) % b == 0 => b
+    }.maxOption)
+  }
+
+  /** A routed aggregate read: the merged `kind` rollup when one aligns
+    * with `coarse`, else `kind`'s own partial and finish over the raw
+    * rows, bucketed by `rawBucket` (of epoch seconds) and stamped
+    * `rawTs` (of `cbucket`).
+    */
+  private def routedAggregate(db: String, sensor: String, kind: RollupKind,
+                              fromSec: Long, toSec: Long,
+                              coarse: Option[Long], useRollups: Boolean,
+                              metrics: Seq[String],
+                              rawBucket: Column => Column,
+                              rawTs: Column): DataFrame =
+    route(db, sensor, kind, fromSec, toSec, coarse, useRollups) match {
+      case Some(b) =>
+        store.readRollup(db, sensor, kind, b, coarse.get, Some(fromSec),
+          Some(toSec), Some(metrics))
+      case None =>
+        kind.finish(store.rawPartials(db, sensor, kind,
+          rawBucket(col("slot")).as("cbucket"), fromSec, toSec, metrics),
+          rawTs, metrics)
+    }
+
+  /** The spread of a Grafana read when it is a whole number of seconds
+    * (a fractional spread can never be a multiple of a rollup bucket).
+    */
+  private def integralSpread(fromSec: Long, toSec: Long,
+                             maxDataPoints: Int): Option[Long] = {
+    val span = toSec - fromSec + 1
+    if (span % maxDataPoints == 0) Some(span / maxDataPoints) else None
+  }
+
+  /** A Grafana-style aggregate read on the reference's RELATIVE
+    * float-spread grid anchored at `fromSec` (`server.py:430-434`):
+    * bucket k = floor((sec - fromSec) / spread), so no bucket precedes
+    * `fromSec` and at most maxDataPoints rows come back even when the
+    * query is misaligned. A rollup's partials snap to the ABSOLUTE
+    * spread grid, so the rollup route is offered only when
+    * `fromSec % spread == 0` makes the two grids coincide.
+    */
+  private def spreadAggregate(db: String, sensor: String, kind: RollupKind,
+                              fromSec: Long, toSec: Long, maxDataPoints: Int,
+                              metrics: Seq[String],
+                              useRollups: Boolean): DataFrame = {
+    val spread = Downsample.spreadOf(fromSec, toSec, maxDataPoints)
+    routedAggregate(db, sensor, kind, fromSec, toSec,
+      integralSpread(fromSec, toSec, maxDataPoints)
+        .filter(sp => fromSec % sp == 0),
+      useRollups, metrics, Downsample.bucket(_, fromSec, spread),
+      timestamp_seconds(lit(fromSec) +
+        floor(col("cbucket") * lit(spread)).cast("long")))
+  }
+
   /** Grafana-style downsampled read (reference `/query`,
     * `server.py:412-475` + `client.read_grafana`): per metric, first
     * value at/after each of `maxDataPoints` boundaries, long format
     * `(metric, value, ts_ms)`.
     *
-    * ROLLUP ROUTING (the 100 TB dashboard path): when a materialized
-    * rollup exists whose bucket ALIGNS with the query, the read is
-    * served from it — touching bucketSec-times fewer rows — instead of
-    * the raw grid. Alignment is required for exactness (ADVICE r2): the
-    * rollup is used only when `fromSec` sits on the rollup grid (no
-    * straddling first bucket whose pre-`fromSec` first value would be
-    * wrong and whose in-range values would be lost) AND the query
-    * spread is an integral multiple of the rollup bucket (so no rollup
-    * bucket straddles a spread boundary and migrates its value into the
-    * wrong output bucket). Then first-per-bucket over
+    * ROLLUP ROUTING (the 100 TB dashboard path): when a first-value
+    * rollup aligns with the query (see `route`, with the integral
+    * spread as the coarse grid), the read is served from it — touching
+    * bucketSec-times fewer rows. No rollup bucket then straddles the
+    * range start or a spread boundary, so first-per-bucket over
     * first-per-rollup-bucket returns exactly the raw first VALUES; only
     * the reported timestamps coarsen to the rollup grid. Rollups are
-    * refreshed on write (`SensorStore.refreshRollups`), so they never
-    * serve pre-upsert data. Any misalignment falls back to the raw
-    * read; `useRollups = false` forces raw (exact timestamps).
+    * refreshed on write, so they never serve pre-upsert data.
+    * `useRollups = false` forces raw (exact timestamps).
     */
   def readGrafana(db: String, sensor: String, fromSec: Long, toSec: Long,
                   maxDataPoints: Int,
                   targets: Option[Seq[String]] = None,
                   useRollups: Boolean = true): DataFrame = {
-    val cfg = store.config(db, sensor)
-    val wanted = targets.getOrElse(cfg.metricNames)
-    val span = toSec - fromSec + 1
-    // integral spread or no rollup: a fractional spread can never be a
-    // multiple of an integer bucket
-    val spreadSec = if (span % maxDataPoints == 0)
-      Some(span / maxDataPoints) else None
-    val rollup = if (useRollups) spreadSec.flatMap(sp =>
-      store.listRollups(db, sensor)
-        .filter(b => b <= sp && sp % b == 0 && fromSec % b == 0)
-        .lastOption)
-    else None
-    val wide = rollup match {
+    val wanted = targets.getOrElse(store.config(db, sensor).metricNames)
+    val wide = route(db, sensor, RollupKind.First, fromSec, toSec,
+        integralSpread(fromSec, toSec, maxDataPoints), useRollups) match {
       case Some(b) =>
-        store.readRollup(db, sensor, b, Some(fromSec), Some(toSec))
-          .select((col("ts") +: wanted.map(graft.core.Cols.q)): _*)
+        store.readRollup(db, sensor, RollupKind.First, b, b, Some(fromSec),
+          Some(toSec), Some(wanted))
       case None =>
         store.read(db, sensor, Some(fromSec), Some(toSec), Some(wanted))
     }
@@ -338,98 +394,33 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
   }
 
   /** Distinct-count dashboard read: per `coarseSec` bucket, the
-    * approximate distinct VALUES per metric over the range. Routes
-    * through the materialized SKETCH rollup when one aligns (rollup
-    * bucket divides the coarse grid AND both range ends sit on the
-    * rollup grid: `fromSec % b == 0`, `(toSec + 1) % b == 0`) — then
-    * the read is a rollup-scale `hll_union_agg` merge and raw data is
-    * never scanned; otherwise falls back to direct sketching over raw
-    * rows. The end-alignment check matters: rollup buckets merge
-    * WHOLE, so a query ending mid-bucket would count values observed
-    * after `toSec` that the raw path excludes. With both ends aligned,
-    * union at fixed lgK is lossless and BOTH routes return identical
-    * estimates (GraftClientSpec pins aligned equality and the
-    * unaligned-end fallback) — routing is a cost decision, never a
-    * semantics one.
+    * approximate distinct VALUES per metric over the range
+    * (`<metric>_distinct`), from a sketch rollup when one aligns, else
+    * by sketching the raw rows. Union at a fixed lgK is lossless, so
+    * both routes return identical estimates (GraftClientSpec pins
+    * aligned equality and the unaligned-end fallback).
     */
   def readDistinct(db: String, sensor: String, fromSec: Long, toSec: Long,
-                   coarseSec: Long, useRollups: Boolean = true): DataFrame = {
-    authRead(db, sensor)
-    val aligned = if (useRollups)
-      store.listSketchRollups(db, sensor)
-        .filter(b => b <= coarseSec && coarseSec % b == 0 &&
-          fromSec % b == 0 && (toSec + 1) % b == 0)
-        .lastOption
-    else None
-    aligned match {
-      case Some(b) =>
-        store.readSketchRollup(db, sensor, b, coarseSec,
-          Some(fromSec), Some(toSec))
-      case None =>
-        val metrics = store.config(db, sensor).metricNames
-        val raw = store.read(db, sensor, Some(fromSec), Some(toSec))
-        val aggs = metrics.map { m =>
-          val c = graft.core.Cols.q(m)
-          hll_sketch_estimate(hll_sketch_agg(
-            when(!isnan(c), c.cast("string")),
-            lit(store.SketchLgK))).as(s"${m}_distinct")
-        }
-        raw
-          .withColumn("cb",
-            Grid.snapSeconds(Grid.tsSeconds(col("ts")), coarseSec))
-          .groupBy("cb")
-          .agg(aggs.head, aggs.tail: _*)
-          .select(timestamp_seconds(col("cb"))
-            .cast(org.apache.spark.sql.types.TimestampType).as("ts") +:
-            metrics.map(m => graft.core.Cols.q(s"${m}_distinct")): _*)
-          .orderBy("ts")
-    }
-  }
+                   coarseSec: Long, useRollups: Boolean = true): DataFrame =
+    routedAggregate(db, sensor, RollupKind.Sketch, fromSec, toSec,
+      Some(coarseSec), useRollups, store.config(db, sensor).metricNames,
+      Grid.snapSeconds(_, coarseSec), timestamp_seconds(col("cbucket")))
 
   /** Percentile dashboard read: per `coarseSec` bucket, the
     * bin-resolution type-1 quantile of each metric's values on the
-    * fixed `binWidth` grid. Routes through a materialized QUANTILE
-    * rollup when one matches (same binWidth, rollup bucket divides the
-    * coarse grid, both range ends on the rollup grid) — then the read
-    * merges integer histogram partials and raw data is never scanned;
-    * otherwise it histograms the raw rows directly ON THE SAME GRID.
-    * Counts are exact integers and the rank math is shared
-    * ([[graft.operators.Quantiles.gridHistQuantile]]), so BOTH routes
-    * return identical values — quantization to binWidth is the
-    * operator's semantic, never a route artifact (GraftClientSpec pins
-    * aligned equality and the unaligned-end fallback).
+    * fixed `binWidth` grid (`<metric>_p<pct>`), from a quantile rollup
+    * of the same binWidth when one aligns, else by histogramming the
+    * raw rows ON THE SAME GRID. Counts are exact integers and the rank
+    * math is shared, so both routes return identical values —
+    * quantization to binWidth is the operator's semantic, never a
+    * route artifact.
     */
   def readQuantile(db: String, sensor: String, fromSec: Long, toSec: Long,
                    coarseSec: Long, pct: Int, binWidth: Double,
-                   useRollups: Boolean = true): DataFrame = {
-    authRead(db, sensor)
-    val aligned = if (useRollups)
-      store.listQuantileRollups(db, sensor)
-        .filter { case (b, bw) =>
-          bw == binWidth && b <= coarseSec && coarseSec % b == 0 &&
-            fromSec % b == 0 && (toSec + 1) % b == 0
-        }.lastOption
-    else None
-    aligned match {
-      case Some((b, bw)) =>
-        store.readQuantileRollup(db, sensor, b, bw, coarseSec, pct,
-          Some(fromSec), Some(toSec))
-      case None =>
-        val metrics = store.config(db, sensor).metricNames
-        val raw = store.read(db, sensor, Some(fromSec), Some(toSec))
-        val long = Pivot.wideToLong(
-          raw.withColumn("cbucket",
-              Grid.snapSeconds(Grid.tsSeconds(col("ts")), coarseSec))
-            .select(col("cbucket") +: metrics.map(graft.core.Cols.q): _*),
-          Seq("cbucket"), metrics)
-        val hist = long.filter(!isnan(col("value")))
-          .withColumn("bin", floor(col("value") / binWidth).cast("long"))
-          .groupBy(col("cbucket"), col("metric"), col("bin"))
-          .agg(count(lit(1)).as("cnt"))
-        graft.operators.Quantiles.gridHistQuantile(hist, metrics, pct,
-          binWidth)
-    }
-  }
+                   useRollups: Boolean = true): DataFrame =
+    routedAggregate(db, sensor, RollupKind.Quantile(binWidth, pct), fromSec,
+      toSec, Some(coarseSec), useRollups, store.config(db, sensor).metricNames,
+      Grid.snapSeconds(_, coarseSec), timestamp_seconds(col("cbucket")))
 
   /** SHARED-BOUNDARY Grafana downsample — the reference's exact
     * multi-target row-selection semantics (`server.py:444-459`): ONE
@@ -454,8 +445,8 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
   def readGrafanaShared(db: String, sensor: String, fromSec: Long,
                         toSec: Long, maxDataPoints: Int,
                         targets: Option[Seq[String]] = None): DataFrame = {
-    val cfg = store.config(db, sensor)
-    val wanted = targets.getOrElse(cfg.metricNames)
+    authRead(db, sensor)
+    val wanted = targets.getOrElse(store.config(db, sensor).metricNames)
     val wide = store.read(db, sensor, Some(fromSec), Some(toSec), Some(wanted))
     val spread = Downsample.spreadOf(fromSec, toSec, maxDataPoints)
     val firstRow = wide.withColumn("sec", Grid.tsSeconds(col("ts")))
@@ -506,128 +497,28 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
 
   /** Grafana-style MEAN downsample: wide `(ts, <metrics...>)` rows, one
     * per spread bucket, each cell the mean of that metric's non-NaN
-    * readings in the bucket.
-    *
-    * ROLLUP ROUTING: when the query aligns (`fromSec` on the spread
-    * grid, spread an integral multiple of a materialized MEAN rollup's
-    * bucket), the answer comes from the rollup's decimal `(sum, count)`
-    * partials re-aggregated to the spread grid — EXACT, because decimal
-    * partial sums merge associatively; the raw path computes the
-    * identical expression shape (DECIMAL(28,6) sums, one double
-    * division) directly on the grid. Misaligned queries always fall
-    * back to raw, so routing changes cost, never values.
+    * readings in the bucket — from the mean rollup's exact decimal
+    * partials when the query aligns, else from the raw rows with the
+    * same expressions.
     */
   def readGrafanaMean(db: String, sensor: String, fromSec: Long,
                       toSec: Long, maxDataPoints: Int,
                       targets: Option[Seq[String]] = None,
-                      useRollups: Boolean = true): DataFrame = {
-    val cfg = store.config(db, sensor)
-    val wanted = targets.getOrElse(cfg.metricNames)
-    val span = toSec - fromSec + 1
-    val spreadSec = if (span % maxDataPoints == 0)
-      Some(span / maxDataPoints) else None
-    // fromSec % spread == 0 makes the query's spread grid coincide with
-    // the ABSOLUTE spread grid the rollup partials snap to
-    val aligned = spreadSec.filter(sp => fromSec % sp == 0)
-    val rollup = if (useRollups) aligned.flatMap(sp =>
-      store.listMeanRollups(db, sensor)
-        .filter(b => b <= sp && sp % b == 0).lastOption)
-    else None
-    rollup match {
-      case Some(b) =>
-        store.readMeanRollup(db, sensor, b, aligned.get,
-            Some(fromSec), Some(toSec))
-          .select((col("ts") +: wanted.map(graft.core.Cols.q)): _*)
-      case None =>
-        val dec = org.apache.spark.sql.types.DecimalType(28, 6)
-        val wide = store.read(db, sensor, Some(fromSec), Some(toSec),
-          Some(wanted))
-        // RELATIVE float-spread bucketing anchored at fromSec — the
-        // same grid as readGrafana / Downsample (reference
-        // `server.py:430-434`): bucket k = floor((sec-fromSec)/spread),
-        // so no bucket ever precedes `fromSec` and at most
-        // maxDataPoints rows come back even for misaligned queries
-        // (fromSec % spread != 0, span % maxDataPoints != 0). Absolute
-        // snapping is used only on the rollup path above, where
-        // alignment is proven before routing — there the two grids
-        // coincide, so the paths stay bitwise-equal.
-        val spread = Downsample.spreadOf(fromSec, toSec, maxDataPoints)
-        val aggs = wanted.flatMap { m =>
-          val c = graft.core.Cols.q(m)
-          Seq(sum(when(!isnan(c), c).cast(dec)).as(s"${m}__sum"),
-            count(when(!isnan(c), c)).as(s"${m}__n"))
-        }
-        wide.withColumn("sec", Grid.tsSeconds(col("ts")))
-          .withColumn("cbucket",
-            Downsample.bucket(col("sec"), fromSec, spread))
-          .groupBy(col("cbucket"))
-          .agg(aggs.head, aggs.tail: _*)
-          .select(timestamp_seconds(lit(fromSec) +
-              floor(col("cbucket") * lit(spread)).cast("long")).as("ts") +:
-            wanted.map(m =>
-              when(graft.core.Cols.q(s"${m}__n") > 0,
-                graft.core.Cols.q(s"${m}__sum").cast("double") /
-                  graft.core.Cols.q(s"${m}__n"))
-                .as(m)): _*)
-          .orderBy("ts")
-    }
-  }
+                      useRollups: Boolean = true): DataFrame =
+    spreadAggregate(db, sensor, RollupKind.Mean, fromSec, toSec,
+      maxDataPoints, targets.getOrElse(store.config(db, sensor).metricNames),
+      useRollups)
 
   /** Grafana-style WINDOWED-STATS downsample for one metric — per
     * spread bucket `(ts, n, avg_value, min_value, max_value)` over the
     * metric's non-missing readings, the dashboard readout of the
-    * oracle-pinned streaming windowed-stats surface (r14 ask #8).
-    *
-    * ROLLUP ROUTING (the `readGrafanaMean` discipline): when the query
-    * aligns (fromSec on the spread grid, spread an integral multiple
-    * of a materialized STATS rollup's window), the answer merges the
-    * rollup's associative partials (integer counts, exact decimal sum,
-    * min/max) — bit-identical to the raw path, which computes the same
-    * decimal-routed expression shape directly on the grid. Misaligned
-    * queries always fall back to raw, so routing changes cost, never
-    * values.
+    * oracle-pinned streaming windowed-stats surface (r14 ask #8) —
+    * from the stats rollup's partials when the query aligns, else from
+    * the raw rows with the same expressions (bit-identical).
     */
   def readGrafanaStats(db: String, sensor: String, fromSec: Long,
                        toSec: Long, maxDataPoints: Int, metric: String,
-                       useRollups: Boolean = true): DataFrame = {
-    val span = toSec - fromSec + 1
-    val spreadSec = if (span % maxDataPoints == 0)
-      Some(span / maxDataPoints) else None
-    val aligned = spreadSec.filter(sp => fromSec % sp == 0)
-    val rollup = if (useRollups) aligned.flatMap(sp =>
-      store.listStatsRollups(db, sensor)
-        .filter(b => b <= sp && sp % b == 0).lastOption)
-    else None
-    rollup match {
-      case Some(b) =>
-        store.readStatsRollup(db, sensor, b, aligned.get,
-          Some(fromSec), Some(toSec), metric)
-      case None =>
-        val dec = org.apache.spark.sql.types.DecimalType(18, 6)
-        val spread = Downsample.spreadOf(fromSec, toSec, maxDataPoints)
-        val c = graft.core.Cols.q(metric)
-        // the same value chain the rollup partials carry: float cell →
-        // double → decimal sum; missing cells (null at rest) dropped
-        store.read(db, sensor, Some(fromSec), Some(toSec),
-            Some(Seq(metric)))
-          .filter(c.isNotNull && !isnan(c))
-          .withColumn("__v", c.cast("double"))
-          .withColumn("sec", Grid.tsSeconds(col("ts")))
-          .withColumn("cbucket",
-            Downsample.bucket(col("sec"), fromSec, spread))
-          .groupBy(col("cbucket"))
-          .agg(count(lit(1)).as("n"),
-            count(col("__v")).as("n_value"),
-            sum(col("__v").cast(dec)).as("sum_value_dec"),
-            min(col("__v")).as("min_value"),
-            max(col("__v")).as("max_value"))
-          .select(timestamp_seconds(lit(fromSec) +
-              floor(col("cbucket") * lit(spread)).cast("long")).as("ts"),
-            col("n"),
-            (col("sum_value_dec").cast("double") / col("n_value"))
-              .as("avg_value"),
-            col("min_value"), col("max_value"))
-          .orderBy("ts")
-    }
-  }
+                       useRollups: Boolean = true): DataFrame =
+    spreadAggregate(db, sensor, RollupKind.Stats, fromSec, toSec,
+      maxDataPoints, Seq(metric), useRollups)
 }

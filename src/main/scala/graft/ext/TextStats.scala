@@ -386,7 +386,7 @@ object TextStats {
   /** Incrementally merge a batch of NEW documents into a persisted
     * [[buildBm25Index]] artifact — the store-rollup lifecycle
     * (`database.py:425-488`'s upsert→refresh contract; the repo's
-    * `materializeSketchRollup` pattern) for the retrieval index: at
+    * `RollupKind` refresh pattern) for the retrieval index: at
     * 100 TB you refresh postings per ingested batch, you never
     * re-tokenize the corpus because a batch arrived (VERDICT r13 ask
     * #1).
@@ -746,7 +746,7 @@ object TextStats {
         mixedBm25(df, idCol, textCol, terms, phrases, k1, b, topN)
     }
 
-  /** Rollup-style routing for BM25 (the `readDistinct` gate, retrieval
+  /** Rollup-style routing for BM25 (GraftClient's rollup route, retrieval
     * edition): probe the persisted index when a COMPLETE
     * ([[hasBm25Index]]) and FRESH ([[bm25IndexFresh]] — recorded N
     * equals the live corpus count) one exists at `indexPath`, else

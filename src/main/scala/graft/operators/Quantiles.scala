@@ -232,6 +232,7 @@ object Quantiles {
     * dashboard companion to the store's quantile rollups. Input is the
     * long-format histogram `(cbucket, metric, bin, cnt)` (bin =
     * ⌊value / binWidth⌋); output is one wide row per bucket with
+    * `ts` (an expression over `cbucket`) and
     * `<metric>_p<pct>` = the lower edge of the first bin whose
     * cumulative count reaches rank ⌈pct·total/100⌉ — the type-1
     * quantile at bin resolution. The rank uses the same integer
@@ -242,7 +243,7 @@ object Quantiles {
     * mean partials, at bin-width resolution instead of exactness.
     */
   def gridHistQuantile(hist: DataFrame, metrics: Seq[String], pct: Int,
-                       binWidth: Double): DataFrame = {
+                       binWidth: Double, ts: Column): DataFrame = {
     require(pct >= 1 && pct <= 100, s"percent out of range: $pct")
     val wCum = org.apache.spark.sql.expressions.Window
       .partitionBy(col("cbucket"), col("metric")).orderBy(col("bin"))
@@ -259,8 +260,7 @@ object Quantiles {
       min(when(col("metric") === m, col("qbin"))).as(s"__b_$m"))
     qbins.groupBy(col("cbucket"))
       .agg(aggs.head, aggs.tail: _*)
-      .select(timestamp_seconds(col("cbucket"))
-        .cast(org.apache.spark.sql.types.TimestampType).as("ts") +:
+      .select(ts.as("ts") +:
         metrics.map(m =>
           (col(s"__b_$m") * binWidth).as(s"${m}_p$pct")): _*)
       .orderBy("ts")

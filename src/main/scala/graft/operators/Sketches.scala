@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * into Spark 4): the pre-aggregation shape that makes "distinct users
   * per <any time range>" a rollup-sized scan at 100 TB.
   *
-  * The pattern mirrors `SensorStore.materializeMeanRollup`: materialize
+  * The pattern mirrors the store's `RollupKind.Sketch`: materialize
   * per-(chunk, bucket) binary sketch PARTIALS once, then answer any
   * coarser/spanning range by `hll_union_agg` over the partials —
   * union is associative and lossless at a fixed lgK, so the merged

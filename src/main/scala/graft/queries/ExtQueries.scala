@@ -346,7 +346,7 @@ object ExtQueries {
   /** Shared BM25 scored frame — (doc_id, bm25 [6-dec truncated],
     * n_terms) for the fixed query, memoized + persisted (three keys
     * read it). Routed through the persisted index probe with the
-    * corpus-scan fallback — the `readDistinct` rollup gate, retrieval
+    * corpus-scan fallback — GraftClient's rollup route, retrieval
     * edition; scores are bit-identical either way (decimal fold).
     */
   private def bm25Of(s: SparkSession, dir: String): DataFrame =

@@ -196,24 +196,12 @@ class SensorStore(spark: SparkSession, baseDir: String) {
               .putStringArray("levels", m.levels.toArray).build()))
         :+ col("checksum"): _*)
 
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      merged
-        .repartition(col("chunk_start"))
-        .write.mode("overwrite")
-        .partitionBy("chunk_start")
-        .parquet(dataDir(db, sensor))
-      // derived data stays derived: re-aggregate the touched chunk
-      // partitions of every materialized rollup so no read can see a
-      // pre-upsert rollup value (full rebuild when evolution widened
-      // the schema — old rollup files lack the new column).
-      refreshRollups(db, sensor, touched.toSeq,
-        fullRebuild = newMetrics.nonEmpty)
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    overwritePartitions(merged, dataDir(db, sensor))
+    // derived data stays derived: re-aggregate the touched chunk
+    // partitions of every materialized rollup so no read can see a
+    // pre-upsert rollup value (full rebuild when evolution widened
+    // the schema — old rollup files lack the new column).
+    refreshRollups(db, sensor, touched, fullRebuild = newMetrics.nonEmpty)
     cfg
   }
 
@@ -294,6 +282,26 @@ class SensorStore(spark: SparkSession, baseDir: String) {
       (if (present("checksum")) col("checksum") else lit(null).cast(FloatType)).as("checksum"): _*)
   }
 
+  /** Raw rows in `[fromSec, toSec]` (None ⇒ open end); the chunk
+    * bounds prune partitions.
+    */
+  private def readRange(db: String, sensor: String, metrics: Seq[String],
+                        fromSec: Option[Long],
+                        toSec: Option[Long]): DataFrame = {
+    val tick = config(db, sensor).tickSeconds
+    val chunkDur = tick * Freq.ChunkRows
+    var df = readRaw(db, sensor, metrics)
+    fromSec.foreach { f =>
+      val fSnap = f - f % tick
+      df = df.filter(col("chunk_start") >= fSnap - fSnap % chunkDur &&
+        col("slot") >= fSnap)
+    }
+    toSec.foreach { t =>
+      df = df.filter(col("chunk_start") <= t && col("slot") <= t)
+    }
+    df
+  }
+
   /** Time-range read (B-1/B-2): `[fromSec, toSec]` inclusive like the
     * reference's `read(start_ts, end_ts)`; None ⇒ open end. Output:
     * `ts` timestamp + requested metric columns, one row per written
@@ -306,21 +314,9 @@ class SensorStore(spark: SparkSession, baseDir: String) {
            validateChecksums: Boolean = false,
            atol: Double = 1e-3,
            nanForMissing: Boolean = false): DataFrame = {
-    val cfg = config(db, sensor)
-    val tick = cfg.tickSeconds
-    val chunkDur = tick * Freq.ChunkRows
-    val all = cfg.metricNames
+    val all = config(db, sensor).metricNames
     val wanted = metrics.getOrElse(all)
-
-    var df = readRaw(db, sensor, all)
-    fromSec.foreach { f =>
-      val fSnap = f - f % tick
-      df = df.filter(col("chunk_start") >= fSnap - fSnap % chunkDur &&
-        col("slot") >= fSnap)
-    }
-    toSec.foreach { t =>
-      df = df.filter(col("chunk_start") <= t && col("slot") <= t)
-    }
+    var df = readRange(db, sensor, all, fromSec, toSec)
     if (validateChecksums) {
       df = df.filter(RowChecksum.isClose(
         RowChecksum.nansum(all.map(graft.core.Cols.q)), col("checksum"),
@@ -351,13 +347,6 @@ class SensorStore(spark: SparkSession, baseDir: String) {
     if (row.isNullAt(0)) None else Some(row.getLong(0))
   }
 
-  /** D-3 migrate: re-encode the sensor's data with a different parquet
-    * codec (the reference's gz↔zst chunk migration,
-    * `fileutils.py:777-954`, collapses to a partitioned rewrite —
-    * checksum columns ride along unchanged, so integrity is preserved
-    * by construction; the reference's backup + checksum-gate dance
-    * exists because its rewrite wasn't atomic).
-    */
   /** Retention: drop every chunk partition that ends at or before
     * `cutoffSec` — whole-chunk granularity (a chunk straddling the
     * cutoff stays, like dropping whole days of a day-partitioned
@@ -372,27 +361,24 @@ class SensorStore(spark: SparkSession, baseDir: String) {
     val cfg = config(db, sensor)
     val chunkDur = cfg.tickSeconds * Freq.ChunkRows
     val dropped = listChunks(db, sensor).filter(_ + chunkDur <= cutoffSec)
-    // EVERY rollup family's tree must be pruned here — a rollup
-    // surviving its deleted source chunks would keep serving an
-    // aligned read over a retention-dropped range while the raw
-    // fallback returns nothing, breaking the "routing changes cost,
-    // never values" invariant (r15 advice: statsrollup_*,
-    // sketchrollup_* and quantrollup_* were missing).
-    val roots = dataDir(db, sensor) +:
-      (listRollups(db, sensor).map(b => s"${sensorDir(db, sensor)}/rollup_$b") ++
-        listMeanRollups(db, sensor)
-          .map(b => s"${sensorDir(db, sensor)}/meanrollup_$b") ++
-        listStatsRollups(db, sensor)
-          .map(b => s"${sensorDir(db, sensor)}/statsrollup_$b") ++
-        listSketchRollups(db, sensor)
-          .map(b => s"${sensorDir(db, sensor)}/sketchrollup_$b") ++
-        listQuantileRollups(db, sensor)
-          .map { case (b, bw) => s"${sensorDir(db, sensor)}/quantrollup_${b}_$bw" })
+    // a rollup surviving its deleted source chunks would keep serving
+    // an aligned read over a retention-dropped range while the raw
+    // fallback returns nothing, so every listed rollup is pruned
+    val roots = dataDir(db, sensor) +: listRollups(db, sensor).map {
+      case (k, b) => rollupDir(db, sensor, k, b)
+    }
     for (root <- roots; c <- dropped)
       rmTree(Paths.get(s"$root/chunk_start=$c"))
     dropped
   }
 
+  /** D-3 migrate: re-encode the sensor's data with a different parquet
+    * codec (the reference's gz↔zst chunk migration,
+    * `fileutils.py:777-954`, collapses to a partitioned rewrite —
+    * checksum columns ride along unchanged, so integrity is preserved
+    * by construction; the reference's backup + checksum-gate dance
+    * exists because its rewrite wasn't atomic).
+    */
   def migrateCompression(db: String, sensor: String, codec: String): Unit = {
     val src = dataDir(db, sensor)
     if (listChunks(db, sensor).isEmpty) return
@@ -411,123 +397,96 @@ class SensorStore(spark: SparkSession, baseDir: String) {
     rmTree(oldP)
   }
 
-  /** Materialize a coarser-grid rollup of the sensor (first non-null
-    * value per `bucketSec` bucket per metric) under
-    * `<sensor>/rollup_<bucketSec>/` — the pre-aggregated downsample
-    * table SURVEY §4 flags as the scale path for dashboard reads: a
-    * maxDataPoints query over years of 1s data hits the rollup and
-    * touches 1/bucketSec of the rows. Rollups are derived data;
-    * re-running overwrites them (cheap to rebuild per partition after
-    * upserts).
+  /** Replace only the chunk partitions `df` holds. Dynamic mode is a
+    * per-write option, never the shared session conf: any concurrent
+    * job can flip that conf, and a write committed in static mode
+    * deletes every chunk it does not rewrite.
     */
-  def materializeRollup(db: String, sensor: String,
-                        bucketSec: Long): String = {
-    val out = s"${sensorDir(db, sensor)}/rollup_$bucketSec"
-    rollupFrame(db, sensor, bucketSec, None)
+  private def overwritePartitions(df: DataFrame, dir: String): Unit =
+    df.repartition(col("chunk_start"))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("chunk_start").parquet(dir)
+
+  // ---- rollups (see RollupKind) ---------------------------------------
+
+  private def rollupDir(db: String, sensor: String, kind: RollupKind,
+                        bucketSec: Long): String =
+    s"${sensorDir(db, sensor)}/${kind.dirName(bucketSec)}"
+
+  /** Materialize `kind` at `bucketSec` under
+    * `<sensor>/<kind.dirName(bucketSec)>/`, chunk-partitioned like the
+    * data so refresh and retention work per chunk. A rebuild rewrites
+    * every chunk (a static overwrite). Returns the directory.
+    */
+  def materialize(db: String, sensor: String, kind: RollupKind,
+                  bucketSec: Long): String = {
+    val out = rollupDir(db, sensor, kind, bucketSec)
+    rollupPartials(db, sensor, kind, bucketSec, None)
       .repartition(col("chunk_start"))
       .write.mode("overwrite").partitionBy("chunk_start").parquet(out)
     out
   }
 
-  /** First-per-bucket rollup aggregation, optionally restricted to a
-    * chunk subset (the unit of incremental refresh).
-    */
-  private def rollupFrame(db: String, sensor: String, bucketSec: Long,
-                          chunks: Option[Seq[Long]]): DataFrame = {
-    val metrics = config(db, sensor).metricNames
-    val aggs = metrics.map(m =>
-      min_by(graft.core.Cols.q(m),
-        when(graft.core.Cols.q(m).isNotNull, col("slot"))).as(m))
-    var raw = readRaw(db, sensor, metrics)
-    chunks.foreach(c => raw = raw.filter(col("chunk_start").isin(c: _*)))
-    raw.withColumn("bucket", Grid.snapSeconds(col("slot"), bucketSec))
-      .groupBy(col("chunk_start"), col("bucket"))
-      .agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Materialize a MERGEABLE mean rollup: per (chunk, bucket) and per
-    * metric, the `(sum, count)` partial pair with the sum routed
-    * through DECIMAL. Unlike the first-per-bucket rollup (exact only
-    * for first-value queries at exactly its grid), these partials
-    * RE-AGGREGATE: any coarser grid's mean derives exactly by summing
-    * them — the pre-aggregation shape that makes dashboard means over
-    * years of fine data a rollup-sized scan at ANY zoom level.
-    */
+  // the per-family entry points existing callers use
+  def materializeRollup(db: String, sensor: String, bucketSec: Long): String =
+    materialize(db, sensor, RollupKind.First, bucketSec)
   def materializeMeanRollup(db: String, sensor: String,
-                            bucketSec: Long): String = {
-    val out = s"${sensorDir(db, sensor)}/meanrollup_$bucketSec"
-    meanRollupFrame(db, sensor, bucketSec, None)
-      .repartition(col("chunk_start"))
-      .write.mode("overwrite").partitionBy("chunk_start").parquet(out)
-    out
-  }
+                            bucketSec: Long): String =
+    materialize(db, sensor, RollupKind.Mean, bucketSec)
+  def materializeStatsRollup(db: String, sensor: String,
+                             bucketSec: Long): String =
+    materialize(db, sensor, RollupKind.Stats, bucketSec)
+  def materializeQuantileRollup(db: String, sensor: String, bucketSec: Long,
+                                binWidth: Double): String =
+    materialize(db, sensor, RollupKind.Quantile(binWidth), bucketSec)
 
-  /** Mean-rollup partial-pair aggregation, optionally restricted to a
+  /** `kind`'s partials per (chunk, bucket), optionally restricted to a
     * chunk subset (the unit of incremental refresh).
     */
-  private def meanRollupFrame(db: String, sensor: String, bucketSec: Long,
-                              chunks: Option[Seq[Long]]): DataFrame = {
+  private def rollupPartials(db: String, sensor: String, kind: RollupKind,
+                             bucketSec: Long,
+                             chunks: Option[Seq[Long]]): DataFrame = {
     val metrics = config(db, sensor).metricNames
-    val dec = org.apache.spark.sql.types.DecimalType(28, 6)
-    val aggs = metrics.flatMap { m =>
-      val c = graft.core.Cols.q(m)
-      Seq(sum(when(!isnan(c), c).cast(dec)).as(s"${m}__sum"),
-        count(when(!isnan(c), c)).as(s"${m}__n"))
-    }
     var raw = readRaw(db, sensor, metrics)
     chunks.foreach(c => raw = raw.filter(col("chunk_start").isin(c: _*)))
-    raw.withColumn("bucket", Grid.snapSeconds(col("slot"), bucketSec))
-      .groupBy(col("chunk_start"), col("bucket"))
-      .agg(aggs.head, aggs.tail: _*)
+    kind.partial(raw, Seq("chunk_start"),
+      kind.storedBucket(Grid.snapSeconds(col("slot"), bucketSec)), metrics)
   }
+
+  /** `kind`'s partials over the raw rows in `[fromSec, toSec]`, grouped
+    * by `bucket` (an expression over the `slot` epoch seconds): the raw
+    * route of a rollup-routed read. Unsorted, so nothing but the
+    * aggregate runs over the raw rows.
+    */
+  def rawPartials(db: String, sensor: String, kind: RollupKind,
+                  bucket: Column, fromSec: Long, toSec: Long,
+                  metrics: Seq[String]): DataFrame =
+    kind.partial(readRange(db, sensor, metrics, Some(fromSec), Some(toSec)),
+      Nil, bucket, metrics)
+
+  /** Materialized rollups of a sensor as (kind, bucketSec), by bucket
+    * (a directory listing — metadata only).
+    */
+  def listRollups(db: String, sensor: String): Seq[(RollupKind, Long)] =
+    listDir(sensorDir(db, sensor)).flatMap(RollupKind.parse)
+      .sortBy { case (k, b) => (b, k.dirName(b)) }
 
   /** Keep materialized rollups EXACT across upserts: re-aggregate only
-    * the touched chunk partitions of every existing rollup (dynamic
-    * partition overwrite — O(touched chunks) work, not a full rebuild),
-    * or rebuild fully when schema evolution added a column. Called from
-    * `write` so a rollup can never silently serve pre-upsert values
-    * (ADVICE r2: stale-rollup invalidation). Caller must already be in
-    * dynamic partitionOverwriteMode for the incremental path.
+    * the touched chunk partitions of every existing rollup (a dynamic
+    * partition overwrite — O(touched chunks) work), or rebuild fully
+    * when schema evolution added a column. Called from `write` so a
+    * rollup can never silently serve pre-upsert values (ADVICE r2:
+    * stale-rollup invalidation).
     */
   private def refreshRollups(db: String, sensor: String,
                              touched: Seq[Long],
-                             fullRebuild: Boolean): Unit = {
-    listRollups(db, sensor).foreach { b =>
-      if (fullRebuild) materializeRollup(db, sensor, b)
-      else rollupFrame(db, sensor, b, Some(touched))
-        .repartition(col("chunk_start"))
-        .write.mode("overwrite").partitionBy("chunk_start")
-        .parquet(s"${sensorDir(db, sensor)}/rollup_$b")
+                             fullRebuild: Boolean): Unit =
+    listRollups(db, sensor).foreach { case (k, b) =>
+      if (fullRebuild) materialize(db, sensor, k, b)
+      else overwritePartitions(rollupPartials(db, sensor, k, b, Some(touched)),
+        rollupDir(db, sensor, k, b))
     }
-    listMeanRollups(db, sensor).foreach { b =>
-      if (fullRebuild) materializeMeanRollup(db, sensor, b)
-      else meanRollupFrame(db, sensor, b, Some(touched))
-        .repartition(col("chunk_start"))
-        .write.mode("overwrite").partitionBy("chunk_start")
-        .parquet(s"${sensorDir(db, sensor)}/meanrollup_$b")
-    }
-    listSketchRollups(db, sensor).foreach { b =>
-      if (fullRebuild) materializeSketchRollup(db, sensor, b)
-      else sketchRollupFrame(db, sensor, b, Some(touched))
-        .repartition(col("chunk_start"))
-        .write.mode("overwrite").partitionBy("chunk_start")
-        .parquet(s"${sensorDir(db, sensor)}/sketchrollup_$b")
-    }
-    listQuantileRollups(db, sensor).foreach { case (b, bw) =>
-      if (fullRebuild) materializeQuantileRollup(db, sensor, b, bw)
-      else quantRollupFrame(db, sensor, b, bw, Some(touched))
-        .repartition(col("chunk_start"))
-        .write.mode("overwrite").partitionBy("chunk_start")
-        .parquet(s"${sensorDir(db, sensor)}/quantrollup_${b}_$bw")
-    }
-    listStatsRollups(db, sensor).foreach { b =>
-      if (fullRebuild) materializeStatsRollup(db, sensor, b)
-      else statsRollupFrame(db, sensor, b, Some(touched))
-        .repartition(col("chunk_start"))
-        .write.mode("overwrite").partitionBy("chunk_start")
-        .parquet(s"${sensorDir(db, sensor)}/statsrollup_$b")
-    }
-  }
 
   /** Rollup read-range guard (r16 advice #4): BOTH bounds must sit on
     * the rollup grid — `fromSec % bucketSec == 0` and
@@ -536,9 +495,9 @@ class SensorStore(spark: SparkSession, baseDir: String) {
     * fromSec would snap down a bucket and silently include readings
     * preceding it, and a misaligned toSec would keep the whole bucket
     * containing it and include readings after it (the symmetric bug).
-    * The client routes (`readGrafana*`, `readDistinct`,
-    * `readQuantile`) prove alignment before routing and fall back to
-    * the raw scan otherwise, so routing changes cost, never values.
+    * GraftClient's routed read proves alignment before routing and
+    * falls back to the raw scan otherwise, so routing changes cost,
+    * never values.
     */
   private def requireRollupAligned(bucketSec: Long, fromSec: Option[Long],
                                    toSec: Option[Long]): Unit = {
@@ -548,382 +507,28 @@ class SensorStore(spark: SparkSession, baseDir: String) {
       s"toSec $t must end on the rollup grid ((toSec+1) % $bucketSec == 0)"))
   }
 
-  /** Read means from a materialized mean rollup, RE-AGGREGATED to any
-    * grid at least as coarse as the rollup's: partial (sum, count)
-    * pairs merge exactly (decimal addition is associative), then one
-    * division per output cell. Null where a coarse bucket holds no
-    * observations.
+  /** Read the materialized `kind` rollup at `bucketSec`, merged to the
+    * `coarseSec` grid (a multiple of `bucketSec`) and finished: `ts` +
+    * the kind's answer columns for `metrics` (default: every metric),
+    * one row per coarse bucket in `[fromSec, toSec]`.
     */
-  def readMeanRollup(db: String, sensor: String, bucketSec: Long,
-                     coarseSec: Long,
-                     fromSec: Option[Long] = None,
-                     toSec: Option[Long] = None): DataFrame = {
+  def readRollup(db: String, sensor: String, kind: RollupKind,
+                 bucketSec: Long, coarseSec: Long,
+                 fromSec: Option[Long] = None, toSec: Option[Long] = None,
+                 metrics: Option[Seq[String]] = None): DataFrame = {
     require(coarseSec % bucketSec == 0,
       s"coarse grid $coarseSec must be a multiple of the rollup grid $bucketSec")
     requireRollupAligned(bucketSec, fromSec, toSec)
-    val metrics = config(db, sensor).metricNames
-    var df = spark.read.parquet(
-      s"${sensorDir(db, sensor)}/meanrollup_$bucketSec")
-    fromSec.foreach(f => df = df.filter(col("bucket") >= f - f % bucketSec))
-    toSec.foreach(t => df = df.filter(col("bucket") <= t))
-    val merged = df
-      .withColumn("cbucket", Grid.snapSeconds(col("bucket"), coarseSec))
-      .groupBy(col("cbucket"))
-      .agg(
-        metrics.flatMap(m => Seq(
-          sum(graft.core.Cols.q(s"${m}__sum")).as(s"${m}__sum"),
-          sum(graft.core.Cols.q(s"${m}__n")).as(s"${m}__n"))).head,
-        metrics.flatMap(m => Seq(
-          sum(graft.core.Cols.q(s"${m}__sum")).as(s"${m}__sum"),
-          sum(graft.core.Cols.q(s"${m}__n")).as(s"${m}__n"))).tail: _*)
-    merged.select(
-      timestamp_seconds(col("cbucket")).cast(TimestampType).as("ts") +:
-        metrics.map(m =>
-          when(graft.core.Cols.q(s"${m}__n") > 0,
-            graft.core.Cols.q(s"${m}__sum").cast("double") /
-              graft.core.Cols.q(s"${m}__n")).as(m)): _*)
-      .orderBy("ts")
+    val ms = metrics.getOrElse(config(db, sensor).metricNames)
+    val bucket = kind.bucketSeconds
+    var df = spark.read.parquet(rollupDir(db, sensor, kind, bucketSec))
+    fromSec.foreach(f => df = df.filter(bucket >= f))
+    toSec.foreach(t => df = df.filter(bucket <= t))
+    kind.finish(
+      kind.merge(df, Grid.snapSeconds(bucket, coarseSec).as("cbucket"), ms),
+      timestamp_seconds(col("cbucket")), ms)
   }
 
-  /** Materialize a MERGEABLE distinct-count SKETCH rollup: per
-    * (chunk, bucket) and per metric, a binary DataSketches HLL partial
-    * over the metric's non-NaN values (stringified — one fixed,
-    * deterministic representation). HLL union is associative and
-    * lossless at a fixed lgK, so "distinct over <any range / any
-    * coarser grid>" merges partials exactly as the direct sketch over
-    * the raw rows would compute (SketchesSpec pins the algebra;
-    * SensorStoreSpec pins this store path) — the dashboard
-    * distinct-over-range read becomes a rollup-sized scan.
-    * lgK is fixed at [[SketchLgK]] so incremental refresh partials
-    * always union with the materialized ones.
-    */
-  def materializeSketchRollup(db: String, sensor: String,
-                              bucketSec: Long): String = {
-    val out = s"${sensorDir(db, sensor)}/sketchrollup_$bucketSec"
-    sketchRollupFrame(db, sensor, bucketSec, None)
-      .repartition(col("chunk_start"))
-      .write.mode("overwrite").partitionBy("chunk_start").parquet(out)
-    out
-  }
-
-  /** Fixed sketch precision for store rollups (union requires equal
-    * lgK between materialize and refresh).
-    */
-  val SketchLgK = 12
-
-  /** Materialize a MERGEABLE quantile rollup: per (chunk, bucket,
-    * metric, bin) the COUNT of non-NaN values whose
-    * ⌊value / binWidth⌋ lands in `bin` — fixed-grid histogram
-    * partials. Counts are exact integers, so merging to any coarser
-    * grid / any aligned range is lossless and "p95 over an arbitrary
-    * range" becomes a rollup-sized scan returning bin-resolution
-    * quantiles — the same materialize-once/merge-anywhere contract as
-    * the HLL sketch rollups, with binWidth as the precision knob.
-    * The grid (binWidth) is part of the rollup's identity: it is
-    * encoded in the directory name so refresh partials always count on
-    * the grid the materialized ones used.
-    */
-  def materializeQuantileRollup(db: String, sensor: String,
-                                bucketSec: Long, binWidth: Double): String = {
-    require(binWidth > 0.0, s"binWidth must be > 0, got $binWidth")
-    val out = s"${sensorDir(db, sensor)}/quantrollup_${bucketSec}_$binWidth"
-    quantRollupFrame(db, sensor, bucketSec, binWidth, None)
-      .repartition(col("chunk_start"))
-      .write.mode("overwrite").partitionBy("chunk_start").parquet(out)
-    out
-  }
-
-  private def quantRollupFrame(db: String, sensor: String, bucketSec: Long,
-                               binWidth: Double,
-                               chunks: Option[Seq[Long]]): DataFrame = {
-    val metrics = config(db, sensor).metricNames
-    var raw = readRaw(db, sensor, metrics)
-    chunks.foreach(c => raw = raw.filter(col("chunk_start").isin(c: _*)))
-    val long = Pivot.wideToLong(
-      raw.withColumn("bucket", Grid.snapSeconds(col("slot"), bucketSec))
-        .select(col("chunk_start") +: col("bucket") +:
-          metrics.map(graft.core.Cols.q): _*),
-      Seq("chunk_start", "bucket"), metrics)
-    long.filter(!isnan(col("value")))
-      .withColumn("bin", floor(col("value") / binWidth).cast("long"))
-      .groupBy(col("chunk_start"), col("bucket"), col("metric"), col("bin"))
-      .agg(count(lit(1)).as("cnt"))
-  }
-
-  /** Read bin-resolution quantiles from a materialized quantile
-    * rollup, merged to any grid at least as coarse as the rollup's:
-    * integer count sums per (coarse bucket, metric, bin), then the
-    * shared [[graft.operators.Quantiles.gridHistQuantile]] rank
-    * selection. Boundary semantics are bucket-granular like the other
-    * rollup readers — callers needing exact range ends must align
-    * them, as [[graft.client.GraftClient.readQuantile]]'s routing
-    * does.
-    */
-  def readQuantileRollup(db: String, sensor: String, bucketSec: Long,
-                         binWidth: Double, coarseSec: Long, pct: Int,
-                         fromSec: Option[Long] = None,
-                         toSec: Option[Long] = None): DataFrame = {
-    require(coarseSec % bucketSec == 0,
-      s"coarse grid $coarseSec must be a multiple of the rollup grid $bucketSec")
-    requireRollupAligned(bucketSec, fromSec, toSec)
-    val metrics = config(db, sensor).metricNames
-    var df = spark.read.parquet(
-      s"${sensorDir(db, sensor)}/quantrollup_${bucketSec}_$binWidth")
-    fromSec.foreach(f => df = df.filter(col("bucket") >= f - f % bucketSec))
-    toSec.foreach(t => df = df.filter(col("bucket") <= t))
-    val hist = df
-      .withColumn("cbucket", Grid.snapSeconds(col("bucket"), coarseSec))
-      .groupBy(col("cbucket"), col("metric"), col("bin"))
-      .agg(sum(col("cnt")).as("cnt"))
-    graft.operators.Quantiles.gridHistQuantile(hist, metrics, pct, binWidth)
-  }
-
-  /** Materialized QUANTILE-rollup (bucketSec, binWidth) pairs present
-    * for a sensor.
-    */
-  def listQuantileRollups(db: String, sensor: String): Seq[(Long, Double)] = {
-    val p = Paths.get(sensorDir(db, sensor))
-    if (!Files.isDirectory(p)) Seq.empty
-    else {
-      val s = Files.list(p)
-      try s.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(_.startsWith("quantrollup_"))
-        .map { d =>
-          val parts = d.stripPrefix("quantrollup_").split("_", 2)
-          (parts(0).toLong, parts(1).toDouble)
-        }.toSeq.sorted
-      finally s.close()
-    }
-  }
-
-  private def sketchRollupFrame(db: String, sensor: String, bucketSec: Long,
-                                chunks: Option[Seq[Long]]): DataFrame = {
-    val metrics = config(db, sensor).metricNames
-    val aggs = metrics.map { m =>
-      val c = graft.core.Cols.q(m)
-      hll_sketch_agg(when(!isnan(c), c.cast("string")), SketchLgK)
-        .as(s"${m}__hll")
-    }
-    var raw = readRaw(db, sensor, metrics)
-    chunks.foreach(c => raw = raw.filter(col("chunk_start").isin(c: _*)))
-    raw.withColumn("bucket", Grid.snapSeconds(col("slot"), bucketSec))
-      .groupBy(col("chunk_start"), col("bucket"))
-      .agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Read distinct-count estimates from a materialized sketch rollup,
-    * merged to any grid at least as coarse as the rollup's: one
-    * `hll_union_agg` per metric over partial-scale rows (never the raw
-    * rows), one estimate per output cell. Null where a coarse bucket
-    * holds no observations.
-    *
-    * Boundary semantics are BUCKET-granular: `fromSec`/`toSec` admit
-    * every rollup bucket that intersects the range, WHOLE (the from
-    * filter rounds down to the bucket grid; the to filter keeps any
-    * bucket starting at or before `toSec`). Merged HLL partials cannot
-    * be trimmed post-hoc, so a range that does not start and end on
-    * the rollup grid over-counts at the edges by up to one bucket each
-    * side. Callers needing exact range semantics must pass
-    * `fromSec % bucketSec == 0` and `(toSec + 1) % bucketSec == 0` —
-    * [[graft.client.GraftClient.readDistinct]]'s routing enforces
-    * exactly this and falls back to raw sketching otherwise.
-    */
-  def readSketchRollup(db: String, sensor: String, bucketSec: Long,
-                       coarseSec: Long,
-                       fromSec: Option[Long] = None,
-                       toSec: Option[Long] = None): DataFrame = {
-    require(coarseSec % bucketSec == 0,
-      s"coarse grid $coarseSec must be a multiple of the rollup grid $bucketSec")
-    requireRollupAligned(bucketSec, fromSec, toSec)
-    val metrics = config(db, sensor).metricNames
-    var df = spark.read.parquet(
-      s"${sensorDir(db, sensor)}/sketchrollup_$bucketSec")
-    fromSec.foreach(f => df = df.filter(col("bucket") >= f - f % bucketSec))
-    toSec.foreach(t => df = df.filter(col("bucket") <= t))
-    val merged = df
-      .withColumn("cbucket", Grid.snapSeconds(col("bucket"), coarseSec))
-      .groupBy(col("cbucket"))
-      .agg(
-        metrics.map(m =>
-          hll_sketch_estimate(
-            hll_union_agg(graft.core.Cols.q(s"${m}__hll"), false))
-            .as(s"${m}_distinct")).head,
-        metrics.map(m =>
-          hll_sketch_estimate(
-            hll_union_agg(graft.core.Cols.q(s"${m}__hll"), false))
-            .as(s"${m}_distinct")).tail: _*)
-    merged.select(
-      timestamp_seconds(col("cbucket")).cast(TimestampType).as("ts") +:
-        metrics.map(m => graft.core.Cols.q(s"${m}_distinct")): _*)
-      .orderBy("ts")
-  }
-
-  /** Materialized SKETCH-rollup buckets present for a sensor. */
-  def listSketchRollups(db: String, sensor: String): Seq[Long] = {
-    val p = Paths.get(sensorDir(db, sensor))
-    if (!Files.isDirectory(p)) Seq.empty
-    else {
-      val s = Files.list(p)
-      try s.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(_.startsWith("sketchrollup_"))
-        .map(_.stripPrefix("sketchrollup_").toLong).toSeq.sorted
-      finally s.close()
-    }
-  }
-
-  /** Materialized rollup buckets present for a sensor (metadata scan). */
-  def listRollups(db: String, sensor: String): Seq[Long] = {
-    val p = Paths.get(sensorDir(db, sensor))
-    if (!Files.isDirectory(p)) Seq.empty
-    else {
-      val s = Files.list(p)
-      try s.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(_.startsWith("rollup_"))
-        .map(_.stripPrefix("rollup_").toLong).toSeq.sorted
-      finally s.close()
-    }
-  }
-
-  /** Materialized MEAN-rollup buckets present for a sensor. */
-  // ---- windowed-STATS rollup (n/avg/min/max per window) --------------
-
-  /** Non-missing readings of every metric as the long-format
-    * `(chunk_start, ts, metric, value)` points frame the streaming
-    * windowed-stats surface aggregates — the bridge that lets the
-    * store rollup ride the ORACLE-PINNED
-    * [[graft.streaming.StreamIngest.windowedStatsPartials]] code path
-    * verbatim (r14 ask #8).
-    */
-  private def statsPointsFrame(db: String, sensor: String,
-                               chunks: Option[Seq[Long]]): DataFrame = {
-    val metrics = config(db, sensor).metricNames
-    var raw = readRaw(db, sensor, metrics)
-    chunks.foreach(c => raw = raw.filter(col("chunk_start").isin(c: _*)))
-    raw.select(col("chunk_start"),
-        timestamp_seconds(col("slot")).cast(TimestampType).as("ts"),
-        explode(array(metrics.map(m =>
-          struct(lit(m).as("metric"),
-            graft.core.Cols.q(m).cast("double").as("value"))): _*))
-          .as("mv"))
-      .select(col("chunk_start"), col("ts"),
-        col("mv.metric").as("metric"), col("mv.value").as("value"))
-      .filter(col("value").isNotNull && !isnan(col("value")))
-  }
-
-  /** The mergeable windowed-stats partials per (chunk, window, metric)
-    * — literally [[graft.streaming.StreamIngest.windowedStatsPartials]]
-    * over [[statsPointsFrame]] with `chunk_start` riding as an extra
-    * key, so the persisted rollup IS the streaming surface's aggregate
-    * (batch ≡ stream ≡ oracle, StreamIngestSpec + the
-    * events_windowed_stats key pin that path; SensorStoreSpec pins
-    * this one equal to it).
-    */
-  private def statsRollupFrame(db: String, sensor: String,
-                               bucketSec: Long,
-                               chunks: Option[Seq[Long]]): DataFrame =
-    graft.streaming.StreamIngest.windowedStatsPartials(
-      statsPointsFrame(db, sensor, chunks), s"$bucketSec seconds",
-      "0 seconds", extraKeys = Seq("chunk_start"))
-
-  /** Materialize the windowed-stats rollup at `bucketSec`: per
-    * (chunk, window, metric) the associative partials (n, n_value,
-    * exact decimal sum, min, max) — every field merges, so any coarser
-    * grid re-aggregates EXACTLY and an upsert refresh rewrites only
-    * the touched chunk partitions ([[refreshRollups]] handles it like
-    * every other rollup family).
-    */
-  def materializeStatsRollup(db: String, sensor: String,
-                             bucketSec: Long): String = {
-    val out = s"${sensorDir(db, sensor)}/statsrollup_$bucketSec"
-    statsRollupFrame(db, sensor, bucketSec, None)
-      .repartition(col("chunk_start"))
-      .write.mode("overwrite").partitionBy("chunk_start").parquet(out)
-    out
-  }
-
-  /** Read one metric's windowed stats from a materialized stats
-    * rollup, re-aggregated to any grid at least as coarse as the
-    * rollup's: counts/decimal sums/min/max merge exactly, the mean
-    * divides once per output cell — the identical final expression
-    * [[graft.streaming.StreamIngest.windowedStats]] applies.
-    */
-  def readStatsRollup(db: String, sensor: String, bucketSec: Long,
-                      coarseSec: Long, fromSec: Option[Long],
-                      toSec: Option[Long], metric: String): DataFrame = {
-    require(coarseSec % bucketSec == 0,
-      s"coarse grid $coarseSec must be a multiple of the rollup grid $bucketSec")
-    // both bounds must sit ON the rollup grid (r15 advice closed the
-    // fromSec side; r16 advice #4 the toSec side and every sibling
-    // path — see requireRollupAligned)
-    requireRollupAligned(bucketSec, fromSec, toSec)
-    var df = spark.read.parquet(
-        s"${sensorDir(db, sensor)}/statsrollup_$bucketSec")
-      .filter(col("metric") === metric)
-    fromSec.foreach(f => df = df.filter(col("window_start") >=
-      timestamp_seconds(lit(f - f % bucketSec))))
-    toSec.foreach(t => df = df.filter(col("window_start") <=
-      timestamp_seconds(lit(t))))
-    df.withColumn("cbucket",
-        Grid.snapSeconds(Grid.tsSeconds(col("window_start")), coarseSec))
-      .groupBy(col("cbucket"))
-      .agg(sum(col("n")).as("n"), sum(col("n_value")).as("n_value"),
-        sum(col("sum_value_dec")).as("sum_value_dec"),
-        min(col("min_value")).as("min_value"),
-        max(col("max_value")).as("max_value"))
-      .select(
-        timestamp_seconds(col("cbucket")).cast(TimestampType).as("ts"),
-        col("n"),
-        (col("sum_value_dec").cast("double") / col("n_value"))
-          .as("avg_value"),
-        col("min_value"), col("max_value"))
-      .orderBy("ts")
-  }
-
-  def listStatsRollups(db: String, sensor: String): Seq[Long] = {
-    val p = Paths.get(sensorDir(db, sensor))
-    if (!Files.isDirectory(p)) Seq.empty
-    else {
-      val s = Files.list(p)
-      try s.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(_.startsWith("statsrollup_"))
-        .map(_.stripPrefix("statsrollup_").toLong).toSeq.sorted
-      finally s.close()
-    }
-  }
-
-  def listMeanRollups(db: String, sensor: String): Seq[Long] = {
-    val p = Paths.get(sensorDir(db, sensor))
-    if (!Files.isDirectory(p)) Seq.empty
-    else {
-      val s = Files.list(p)
-      try s.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(_.startsWith("meanrollup_"))
-        .map(_.stripPrefix("meanrollup_").toLong).toSeq.sorted
-      finally s.close()
-    }
-  }
-
-  /** Read a materialized rollup: `ts` + metric columns on the coarse
-    * grid, pruned by the same chunk partitioning as the base data.
-    */
-  def readRollup(db: String, sensor: String, bucketSec: Long,
-                 fromSec: Option[Long] = None,
-                 toSec: Option[Long] = None): DataFrame = {
-    requireRollupAligned(bucketSec, fromSec, toSec)
-    var df = spark.read.parquet(s"${sensorDir(db, sensor)}/rollup_$bucketSec")
-    fromSec.foreach(f => df = df.filter(col("bucket") >= f - f % bucketSec))
-    toSec.foreach(t => df = df.filter(col("bucket") <= t))
-    df.select(timestamp_seconds(col("bucket")).cast(TimestampType).as("ts") +:
-        config(db, sensor).metricNames.map(graft.core.Cols.q): _*)
-      .orderBy("ts")
-  }
-
-  /** D-1 verify: per-chunk usage statistics. */
   /** Per-chunk integrity audit for the CLI `verify` subcommand
     * (reference `__main__.py:101-109` + the verify walk in
     * `fileutils.py:429-524`): recompute the row nansum and count rows
@@ -946,6 +551,7 @@ class SensorStore(spark: SparkSession, baseDir: String) {
       .orderBy("chunk_start")
   }
 
+  /** D-1 verify: per-chunk usage statistics. */
   def verifyStats(db: String, sensor: String): DataFrame = {
     val cfg = config(db, sensor)
     val tick = cfg.tickSeconds

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.types.TimestampType
@@ -49,51 +49,39 @@ object StreamIngest {
     */
   def windowedStats(points: DataFrame, windowDur: String,
                     watermark: String): DataFrame =
-    windowedStatsPartials(points, windowDur, watermark)
-      .select(col("window_start"), col("metric"), col("n"),
+    points
+      .withWatermark("ts", watermark)
+      .groupBy(window(col("ts"), windowDur), col("metric"))
+      .agg(statsPartials.head, statsPartials.tail: _*)
+      .select(col("window.start").as("window_start"), col("metric"),
+        col("n"),
         (col("sum_value_dec").cast("double") / col("n_value"))
           .as("avg_value"),
         col("min_value"), col("max_value"))
 
-  /** The MERGEABLE form of [[windowedStats]]: the same decimal-routed
-    * aggregate with the partials KEPT — `(window_start, [extraKeys,]
-    * metric, n, n_value, sum_value_dec [exact DECIMAL], min_value,
-    * max_value)`. Every field merges associatively (integer counts,
-    * decimal sum, min/max), so a store rollup can persist these per
-    * (chunk, window) and re-aggregate to any coarser grid EXACTLY —
-    * [[windowedStats]] itself is just this frame with the final
-    * `avg = sum/n_value` division applied, so a rollup built here IS
-    * the oracle-pinned windowed-stats code path. `extraKeys` rides
-    * extra grouping columns (e.g. the store's `chunk_start`) through
-    * the aggregate for partition-grained refresh.
+  /** Windowed-stats partials over a `value` column: `n, n_value,
+    * sum_value_dec [exact DECIMAL], min_value, max_value`. Every field
+    * merges associatively (integer counts, decimal sum, min/max), so the
+    * store's stats rollup persists exactly these per (chunk, window) and
+    * re-aggregates to any coarser grid EXACTLY — the rollup is the
+    * oracle-pinned windowed-stats code path.
     */
-  def windowedStatsPartials(points: DataFrame, windowDur: String,
-                            watermark: String,
-                            extraKeys: Seq[String] = Nil): DataFrame =
-    points
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowDur) +:
-        (extraKeys :+ "metric").map(col): _*)
-      // the mean is DECIMAL-routed (exact, order-independent sums),
-      // not a raw double avg(): micro-batched partial merges reassociate
-      // float additions, so a double fold could diverge between a
-      // streamed and a batch run of the SAME frame — with exact sums,
-      // stream ≡ batch ≡ the DuckDB oracle bit-for-bit (the
-      // events_windowed_stats key pins exactly this code path)
-      .agg(count(lit(1)).as("n"),
-        // avg must be sum(non-null)/count(non-null) — avg() semantics —
-        // not /n: a window containing NULL values would otherwise get a
-        // deflated mean (n counts all rows, n_value only non-null ones)
-        count(col("value")).as("n_value"),
-        sum(col("value").cast(
-            org.apache.spark.sql.types.DecimalType(18, 6)))
-          .as("sum_value_dec"),
-        min(col("value")).as("min_value"),
-        max(col("value")).as("max_value"))
-      .select(col("window.start").as("window_start") +:
-        ((extraKeys :+ "metric") ++
-          Seq("n", "n_value", "sum_value_dec", "min_value",
-            "max_value")).map(col): _*)
+  def statsPartials: Seq[Column] = Seq(
+    count(lit(1)).as("n"),
+    // avg must be sum(non-null)/count(non-null) — avg() semantics —
+    // not /n: a window containing NULL values would otherwise get a
+    // deflated mean (n counts all rows, n_value only non-null ones)
+    count(col("value")).as("n_value"),
+    // the mean is DECIMAL-routed (exact, order-independent sums),
+    // not a raw double avg(): micro-batched partial merges reassociate
+    // float additions, so a double fold could diverge between a
+    // streamed and a batch run of the SAME frame — with exact sums,
+    // stream ≡ batch ≡ the DuckDB oracle bit-for-bit (the
+    // events_windowed_stats key pins exactly this code path)
+    sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
+      .as("sum_value_dec"),
+    min(col("value")).as("min_value"),
+    max(col("value")).as("max_value"))
 
   /** HOPPING (sliding) event-time windows — [[windowedStats]] with a
     * slide shorter than the duration, so each point lands in

@@ -2,9 +2,11 @@ package graft.client
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.store.RollupKind
 
 /** Client-façade round-trips mirroring the reference's end-to-end suite
   * (`tests/test_client.py`): influx-line writes incl. ragged lines and
@@ -86,6 +88,16 @@ class GraftClientSpec extends SparkSpec {
     intercept[graft.core.NotAuthorizedException](
       reader.deleteBefore("d", "s", t0))
     assert(writer.deleteBefore("d", "s", t0).isEmpty) // nothing wholly older
+    // every library read route checks the token, not only `read`
+    Seq[() => Any](
+      () => open.readGrafana("d", "s", t0, t0 + 59, 6),
+      () => open.readGrafanaShared("d", "s", t0, t0 + 59, 6),
+      () => open.readGrafanaJson("d", "s", t0, t0 + 59, 6),
+      () => open.readGrafanaMean("d", "s", t0, t0 + 59, 6),
+      () => open.readGrafanaStats("d", "s", t0, t0 + 59, 6, "a"),
+      () => open.readDistinct("d", "s", t0, t0 + 59, 60L),
+      () => open.readQuantile("d", "s", t0, t0 + 59, 60L, 50, 1.0)
+    ).foreach(route => intercept[graft.core.NotAuthorizedException](route()))
   }
 
   test("frequency matrix round-trip (1s / 15m / 1h / 1d)") {
@@ -181,7 +193,7 @@ class GraftClientSpec extends SparkSpec {
     val lines = (0 until 600).map(i =>
       s"test,circuit=sd v=${i % 23} ${(t0 + i)}000000000")
     c.write(lines)
-    c.store.materializeSketchRollup("test", "sd", 60L)
+    c.store.materialize("test", "sd", RollupKind.Sketch, 60L)
     // aligned coarse grid → rollup route (raw never scanned); the
     // fallback sketches raw rows directly. Lossless union at fixed lgK
     // means IDENTICAL estimates, so routing is purely a cost decision.
@@ -206,7 +218,7 @@ class GraftClientSpec extends SparkSpec {
     // the estimate (i%23 would mask it)
     c.write((0 until 600).map(i =>
       s"test,circuit=sde v=$i ${(t0 + i)}000000000"))
-    c.store.materializeSketchRollup("test", "sde", 60L)
+    c.store.materialize("test", "sde", RollupKind.Sketch, 60L)
     // range ends at t0+569 — inside the [t0+540, t0+600) rollup bucket.
     // The rollup route would merge that bucket WHOLE and count the 30
     // values past the end; routing must reject it (end not on the
@@ -263,6 +275,12 @@ class GraftClientSpec extends SparkSpec {
     assert(c.lastDate("d", "s", "+05:30").contains("2024-01-01 05:30:00"))
     c.configReload() // no-op, kept for call-site parity
     assert(c.updateToken("x").metrics("d", "s") == Seq("p", "q"))
+    // the admin key survives a token switch
+    val keyed = Files.createTempDirectory("graft-admin").toString
+    new GraftClient(spark, keyed).createSensor("d", "k", "1h", Seq(Seq("p")),
+      readKey = "rk", writeKey = "wk")
+    assert(new GraftClient(spark, keyed, adminKey = "A").updateToken("A")
+      .read("d", "k").count() == 0)
   }
 
   test("catalog lifecycle: dbs, sensors, delete") {
@@ -354,9 +372,42 @@ class GraftClientSpec extends SparkSpec {
     // a write that REPLACES the first slot of the second bucket must
     // show through the rollup: overwrite t0+60 itself
     c.write(Seq(s"test,circuit=rf v=777 ${(t0 + 60)}000000000"))
-    val after = c.store.readRollup("test", "rf", 60L).collect()
+    val after = c.store.readRollup("test", "rf", RollupKind.First, 60L, 60L).collect()
     val bucket2 = after.find(_.getTimestamp(0).toInstant.getEpochSecond == t0 + 60).get
     assert(bucket2.getFloat(1) == 777f) // pre-fix: stale 60f
+  }
+
+  test("every RollupKind: the aligned routed read equals the raw read " +
+       "after an upsert and after a schema-evolution rebuild") {
+    val reads: Seq[(RollupKind, (GraftClient, Boolean) => DataFrame)] = Seq(
+      RollupKind.First -> ((c, r) =>
+        c.readGrafana("k", "s", t0, t0 + 599, 5, useRollups = r)),
+      RollupKind.Mean -> ((c, r) =>
+        c.readGrafanaMean("k", "s", t0, t0 + 599, 5, useRollups = r)),
+      RollupKind.Stats -> ((c, r) =>
+        c.readGrafanaStats("k", "s", t0, t0 + 599, 5, "v", useRollups = r)),
+      RollupKind.Sketch -> ((c, r) =>
+        c.readDistinct("k", "s", t0, t0 + 599, 300L, useRollups = r)),
+      RollupKind.Quantile(1.0) -> ((c, r) =>
+        c.readQuantile("k", "s", t0, t0 + 599, 300L, 95, 1.0, useRollups = r)))
+    reads.foreach { case (kind, read) =>
+      val c = freshClient()
+      c.createSensor("k", "s", "1s", Seq(Seq("v")))
+      c.write((0 until 600).map(i =>
+        s"k,circuit=s v=${i % 13} ${(t0 + i)}000000000"))
+      c.store.materialize("k", "s", kind, 60L)
+      def check(step: String): Unit = {
+        val routed = read(c, true)
+        assert(routed.inputFiles.exists(_.contains(s"/${kind.dirName(60L)}/")),
+          s"$kind $step: not served from the rollup")
+        assert(routed.collect().toSeq == read(c, false).collect().toSeq,
+          s"$kind $step")
+      }
+      c.write(Seq(s"k,circuit=s v=1000 ${(t0 + 61)}000000000"))
+      check("upsert")
+      c.write(Seq(s"k,circuit=s v=5,w=7 ${(t0 + 62)}000000000"))
+      check("evolution")
+    }
   }
 
   test("grafana MEAN read: rollup partials re-aggregate to the raw answer") {

@@ -267,13 +267,32 @@ class SensorStoreSpec extends SparkSpec {
       .select(timestamp_seconds(col("sec")).as("ts"), col("metric"), col("value"))
     st.write("test", "s1", pts)
     st.materializeRollup("test", "s1", 60L)
-    val rows = st.readRollup("test", "s1", 60L).collect()
+    val rows = st.readRollup("test", "s1", RollupKind.First, 60L, 60L).collect()
     assert(rows.length == 2)
     assert(rows(0).getFloat(1) == 0f)   // first of minute 0
     assert(rows(1).getFloat(1) == 60f)  // first of minute 1
-    val pruned = st.readRollup("test", "s1", 60L,
+    val pruned = st.readRollup("test", "s1", RollupKind.First, 60L, 60L,
       fromSec = Some(t0 + 60), toSec = Some(t0 + 119)).collect()
     assert(pruned.length == 1 && pruned(0).getFloat(1) == 60f)
+  }
+
+  test("a first-value bucket straddling a chunk boundary reads as ONE " +
+       "row holding the earlier chunk's value") {
+    import spark.implicits._
+    val st = freshStore()
+    st.createSensor(cfg1s)
+    val chunkDur = graft.core.Freq.ChunkRows.toLong
+    val boundary = (1704067200L / chunkDur + 1) * chunkDur
+    assert(boundary % 60 != 0, "fixture needs a 60 s bucket across the boundary")
+    // seconds boundary-3 .. boundary+2: one bucket, two chunk partials
+    st.write("test", "s1", (0 until 6)
+      .map(i => (boundary - 3 + i, "active", i.toDouble))
+      .toDF("sec", "metric", "value")
+      .select(timestamp_seconds(col("sec")).as("ts"), col("metric"),
+        col("value")))
+    st.materializeRollup("test", "s1", 60L)
+    val rows = st.readRollup("test", "s1", RollupKind.First, 60L, 60L).collect()
+    assert(rows.length == 1 && rows(0).getFloat(1) == 0f)
   }
 
   test("deleteBefore drops whole old chunks from data AND rollups") {
@@ -293,7 +312,7 @@ class SensorStoreSpec extends SparkSpec {
     val rollupPaths = Seq(
       st.materializeRollup("test", "s1", 60L),
       st.materializeMeanRollup("test", "s1", 60L),
-      st.materializeSketchRollup("test", "s1", 60L),
+      st.materialize("test", "s1", RollupKind.Sketch, 60L),
       st.materializeQuantileRollup("test", "s1", 60L, 1.0),
       st.materializeStatsRollup("test", "s1", 60L))
     rollupPaths.foreach(p => assert(
@@ -316,10 +335,48 @@ class SensorStoreSpec extends SparkSpec {
       .select(unix_timestamp(col("ts")).as("sec")).collect()
     assert(out.length == 2 && out.forall(_.getLong(0) >= base + chunkDur))
     // the rollup's partition for the dropped chunk is gone too
-    val roll = st.readRollup("test", "s1", 60L)
+    val roll = st.readRollup("test", "s1", RollupKind.First, 60L, 60L)
     assert(roll.count() == 2)
     // idempotent: nothing older remains
     assert(st.deleteBefore("test", "s1", base + chunkDur + 5).isEmpty)
+  }
+
+  test("a write replaces only its own chunks while another job keeps " +
+       "setting the session's partitionOverwriteMode to static") {
+    import spark.implicits._
+    val st = freshStore()
+    st.createSensor(SensorConfig("ow", "s", "1s", Seq(MetricDef(Seq("v")))))
+    val chunkDur = graft.core.Freq.ChunkRows.toLong
+    val base = 1704067200L / chunkDur * chunkDur
+    def pts(rows: Seq[(Long, Double)]) = rows.toDF("sec", "value")
+      .select(timestamp_seconds(col("sec")).as("ts"), lit("v").as("metric"),
+        col("value"))
+    st.write("ow", "s", pts(for (c <- 0 until 3; i <- 0 until 10)
+      yield (base + c * chunkDur + i, (c * 100 + i).toDouble)))
+    val rollup = st.materializeMeanRollup("ow", "s", 60L)
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.getOption(key)
+    @volatile var stop = false
+    val flipper = new Thread(() =>
+      while (!stop) { spark.conf.set(key, "static"); Thread.sleep(1) })
+    flipper.start()
+    try (0 until 3).foreach(j =>
+      st.write("ow", "s", pts(Seq((base + chunkDur + j, 1000.0 + j)))))
+    finally {
+      stop = true
+      flipper.join()
+      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    val got = st.read("ow", "s")
+      .select(unix_timestamp(col("ts")), col("v")).collect()
+      .map(r => r.getLong(0) -> r.getFloat(1)).toMap
+    for (c <- 0 until 3; i <- 0 until 10) {
+      val want = if (c == 1 && i < 3) 1000f + i else c * 100f + i
+      assert(got.get(base + c * chunkDur + i).contains(want), s"chunk $c row $i")
+    }
+    for (c <- 0 until 3) assert(java.nio.file.Files.isDirectory(
+      java.nio.file.Paths.get(s"$rollup/chunk_start=${base + c * chunkDur}")),
+      s"rollup chunk $c")
   }
 
   test("concurrent writers to different sensors do not interfere") {
@@ -364,20 +421,20 @@ class SensorStoreSpec extends SparkSpec {
     st.materializeMeanRollup("mr", "s", 60L)
 
     // read back at the rollup grid: mean of evens in [b, b+60)
-    val at60 = st.readMeanRollup("mr", "s", 60L, 60L).collect()
+    val at60 = st.readRollup("mr", "s", RollupKind.Mean, 60L, 60L).collect()
     assert(at60.length == 10)
     // bucket 0 holds 0,2,...,58 → mean 29
     assert(at60(0).getDouble(1) == 29.0)
 
     // re-aggregated to 300s WITHOUT touching raw data: exact merge
-    val at300 = st.readMeanRollup("mr", "s", 60L, 300L).collect()
+    val at300 = st.readRollup("mr", "s", RollupKind.Mean, 60L, 300L).collect()
     assert(at300.length == 2)
     assert(at300(0).getDouble(1) == 149.0) // mean of 0..298 evens
     assert(at300(1).getDouble(1) == 449.0) // mean of 300..598 evens
 
     // a coarse grid that is not a multiple of the rollup grid refuses
     intercept[IllegalArgumentException] {
-      st.readMeanRollup("mr", "s", 60L, 90L)
+      st.readRollup("mr", "s", RollupKind.Mean, 60L, 90L)
     }
   }
 
@@ -393,20 +450,20 @@ class SensorStoreSpec extends SparkSpec {
       .select(timestamp_seconds(col("sec")).as("ts"), col("metric"),
         col("value"))
     st.write("sk", "s", pts)
-    st.materializeSketchRollup("sk", "s", 60L)
-    assert(st.listSketchRollups("sk", "s") == Seq(60L))
+    st.materialize("sk", "s", RollupKind.Sketch, 60L)
+    assert(st.listRollups("sk", "s") == Seq(RollupKind.Sketch -> 60L))
 
     // merged-to-300s estimates from partials must EQUAL the direct
     // sketch over the raw rows at the same grid (union is lossless at
     // fixed lgK — the SketchesSpec algebra, via the store path)
-    val merged = st.readSketchRollup("sk", "s", 60L, 300L).collect()
+    val merged = st.readRollup("sk", "s", RollupKind.Sketch, 60L, 300L).collect()
     val direct = st.read("sk", "s")
       .select((unix_timestamp(col("ts")) - (unix_timestamp(col("ts")) % 300))
         .as("cb"), col("v"))
       .groupBy("cb")
       .agg(hll_sketch_estimate(
         hll_sketch_agg(when(!isnan(col("v")), col("v").cast("string")),
-          lit(st.SketchLgK))).as("d"))
+          lit(RollupKind.SketchLgK))).as("d"))
       .orderBy("cb").collect()
     assert(merged.length == 2 && direct.length == 2)
     assert(merged.map(_.getLong(1)).toSeq == direct.map(_.getLong(1)).toSeq)
@@ -415,7 +472,7 @@ class SensorStoreSpec extends SparkSpec {
 
     // non-multiple coarse grid refuses, like the mean rollup
     intercept[IllegalArgumentException] {
-      st.readSketchRollup("sk", "s", 60L, 90L)
+      st.readRollup("sk", "s", RollupKind.Sketch, 60L, 90L)
     }
   }
 
@@ -432,14 +489,14 @@ class SensorStoreSpec extends SparkSpec {
     st.write("qr", "s", pts)
     st.materializeQuantileRollup("qr", "s", 60L, binWidth = 1.0)
     st.materializeQuantileRollup("qr", "s", 300L, binWidth = 1.0)
-    assert(st.listQuantileRollups("qr", "s") ==
-      Seq((60L, 1.0), (300L, 1.0)))
+    assert(st.listRollups("qr", "s") ==
+      Seq(RollupKind.Quantile(1.0) -> 60L, RollupKind.Quantile(1.0) -> 300L))
 
     // fine partials merged to 300s must EQUAL the 300s-native rollup:
     // integer counts sum losslessly (merge-equals-direct)
-    val merged = st.readQuantileRollup("qr", "s", 60L, 1.0, 300L, 50)
+    val merged = st.readRollup("qr", "s", RollupKind.Quantile(1.0, 50), 60L, 300L)
       .collect()
-    val direct = st.readQuantileRollup("qr", "s", 300L, 1.0, 300L, 50)
+    val direct = st.readRollup("qr", "s", RollupKind.Quantile(1.0, 50), 300L, 300L)
       .collect()
     assert(merged.map(r => (r.getTimestamp(0), r.getDouble(1))).toSeq ==
       direct.map(r => (r.getTimestamp(0), r.getDouble(1))).toSeq)
@@ -447,7 +504,7 @@ class SensorStoreSpec extends SparkSpec {
     // → cum reaches 150 at bin 49 → p50 = 49.0
     assert(merged.map(_.getDouble(1)).toSeq == Seq(49.0, 49.0))
     // p95: rank ceil(0.95·300)=285 → bin 94
-    val p95 = st.readQuantileRollup("qr", "s", 60L, 1.0, 300L, 95)
+    val p95 = st.readRollup("qr", "s", RollupKind.Quantile(1.0, 95), 60L, 300L)
       .collect()
     assert(p95.map(_.getDouble(1)).toSeq == Seq(94.0, 94.0))
 
@@ -457,12 +514,12 @@ class SensorStoreSpec extends SparkSpec {
       .select(timestamp_seconds(col("sec")).as("ts"), col("metric"),
         col("value"))
     st.write("qr", "s", up)
-    val after = st.readQuantileRollup("qr", "s", 60L, 1.0, 600L, 100)
+    val after = st.readRollup("qr", "s", RollupKind.Quantile(1.0, 100), 60L, 600L)
       .collect()
     assert(after.head.getDouble(1) == 1000.0) // p100 sees the upsert
 
     intercept[IllegalArgumentException] {
-      st.readQuantileRollup("qr", "s", 60L, 1.0, 90L, 50)
+      st.readRollup("qr", "s", RollupKind.Quantile(1.0, 50), 60L, 90L)
     }
     intercept[IllegalArgumentException] {
       st.materializeQuantileRollup("qr", "s", 60L, binWidth = 0.0)

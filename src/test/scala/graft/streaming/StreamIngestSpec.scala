@@ -668,7 +668,7 @@ class StreamIngestSpec extends SparkSpec {
             col("ts"))).as("reactive"))
         .collect().map(r => r.getLong(0) ->
           (Option(r.get(1)), Option(r.get(2)))).toMap
-      val roll = store.readRollup("test", "e2e", 60L)
+      val roll = store.readRollup("test", "e2e", graft.store.RollupKind.First, 60L, 60L)
         .collect().map(r => r.getTimestamp(0).toInstant.getEpochSecond ->
           (Option(r.get(1)), Option(r.get(2)))).toMap
       assert(roll == raw)
