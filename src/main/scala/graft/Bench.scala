@@ -38,27 +38,26 @@ import org.apache.spark.sql.SparkSession
   * forensics (r9 verdict ask #8).
   */
 object Bench {
-  /** Every key that appeared in the PREVIOUS round's compact bench
-    * line (BENCH_r17): the line-fitting policy keeps these entries in
-    * the line before any others so that round-over-round per-key
-    * comparisons of the compact record share (at least) this set.
-    * Update each round from the committed BENCH_r<n>.json. */
-  private val PrevRoundLineKeys: Set[String] = Set(
-    "add_metric_fill", "basket_brand_affinity", "bpe_encode_count",
-    "bpe_fertility", "bpe_token_length_hist", "checksum_filter",
-    "corpus_dsir_weights", "corpus_dup_inflation",
-    "corpus_embedding_coverage", "corpus_epoch_schedule",
-    "corpus_lang_mix", "corpus_length_outliers",
-    "corpus_length_percentiles", "corpus_mix_alpha",
-    "corpus_mix_resample", "corpus_pack_waste",
-    "corpus_quality_tradeoff", "decontaminate_agreement",
-    "dedup_quality_cross", "dedup_substring_runs", "doc_bigram_logprob",
-    "events_cms_heavy_hitters", "lang_id_confusion",
-    "multimodal_audio_rms", "orders_abc_classification",
-    "orders_ntile_deciles", "orders_pareto_share", "orders_rfm_segments",
-    "q21_sole_late_supplier", "quality_ppl_buckets",
-    "retrieval_mixed_topk", "ts_perm_entropy", "ts_running_max_split",
-    "ts_stl_decompose", "unigram_encode_count")
+  /** The keys of the previous round's compact bench line: the
+    * `parsed.queries` of the highest-numbered committed
+    * `BENCH_r<n>.json` in `dir`, or none if there is no such record.
+    * The line-fitting policy keeps these entries in the line before
+    * any others so that round-over-round per-key comparisons of the
+    * compact record share (at least) this set. */
+  private def prevRoundLineKeys(dir: String): Set[String] = {
+    val Round = """BENCH_r(\d+)\.json""".r
+    scala.util.Try { // no record (maxBy of none) or no line: no pins
+      import org.json4s._
+      val latest = new java.io.File(dir).list()
+        .collect { case n @ Round(r) => r.toInt -> n }.maxBy(_._1)._2
+      val record = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(dir, latest)), "UTF-8")
+      jackson.JsonMethods.parse(record) \ "parsed" \ "queries" match {
+        case JObject(fields) => fields.map(_._1).toSet
+        case _ => Set.empty[String]
+      }
+    }.getOrElse(Set.empty)
+  }
 
   private def loadAvg: Double =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean
@@ -79,6 +78,7 @@ object Bench {
     def envDouble(name: String, default: Double): Double =
       scala.util.Try(sys.env(name).trim.toDouble).getOrElse(default)
     val nRuns = envInt("SPARK_GRAFT_BENCH_RUNS", 3).max(1)
+    val prevLineKeys = prevRoundLineKeys(".")
     // wall-clock budget for the WHOLE bench (warm-up + prebuild +
     // passes). The driver's window killed the r15 run at rc=124; stay
     // comfortably inside it and record how far we got instead.
@@ -336,15 +336,15 @@ object Bench {
       // (the r1-r3 benches were captured but unparsed for exactly this
       // reason; r14's line overflowed on spike names). The WHOLE line
       // counts against the budget: keep the slowest queries, drop the
-      // fastest until it fits — but drop PREVIOUS-round line keys LAST
-      // (r17 verdict ask #1b: each round's line carried only that
-      // round's slowest ~35 keys, so line-vs-line round comparisons
-      // shared only 11 keys and 40 keys read as phantom drops; pinning
-      // the previous line's key set keeps n_common ≈ the full line).
+      // fastest until it fits — but drop the pinned keys LAST: the
+      // previous round's line keys (r17 verdict ask #1b: each round's
+      // line carried only that round's slowest ~35 keys, so line-vs-line
+      // round comparisons shared only 11 keys and 40 keys read as
+      // phantom drops) and this pass's 5 slowest keys (so a new severe
+      // regression can never be evicted from the line).
       val full = line(best, 0)
-      val bySlow = best.sortBy { case (k, v) =>
-        (!PrevRoundLineKeys.contains(k), -v)
-      }
+      val pinned = prevLineKeys ++ best.sortBy(-_._2).take(5).map(_._1)
+      val bySlow = best.sortBy { case (k, v) => (!pinned.contains(k), -v) }
       val budget = 1800
       var keep = best.size
       var out = full

@@ -7,7 +7,6 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.util.Base64
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods

@@ -77,88 +77,54 @@ import org.apache.spark.sql.functions._
   */
 object DedupIndex {
 
-  /** Session memo of VERSION-gate verdicts: (stats path, expected
-    * version) → fresh. ONLY TRUE verdicts are cached (r16 advice: a
-    * cached `false` could only be cleared by a write in THIS JVM, so
+  /** VERSION-gate verdicts are memoized in [[graft.core.Artifacts]]
+    * per (stats path, params, expected version), TRUE only (r16 advice:
+    * a cached `false` could only be cleared by a write in THIS JVM, so
     * an index rebuilt by another process would stay permanently routed
-    * to the expensive fallback — a mismatch must re-check every probe
-    * so an out-of-process rebuild is picked up on its next probe).
-    * True verdicts can only be invalidated by a write through
-    * [[refreshExactIndex]] / [[refreshNearIndex]] /
-    * [[refreshSemanticIndex]] / the builds, all of which call
-    * [[invalidateGate]] — under the SINGLE-WRITER-PER-STORE contract
-    * [[DocStore]]'s writer lock enforces (an out-of-process writer
-    * re-stamping the SAME version with different content is outside
-    * it; version monotonicity is the lock's job). Count-gate verdicts
-    * are never cached (nothing tells us the unmanaged corpus changed).
-    */
-  private val gateMemo =
-    scala.collection.concurrent.TrieMap
-      .empty[(String, Long, String), Boolean]
-
-  def invalidateGate(path: String): Unit = {
-    gateMemo.keys.filter(_._1 == path).foreach(gateMemo.remove)
-    dropCachedParts(path)
-  }
-
-  /** The memo key carries the probe's PARAMETERS as well as the
-    * version — a verdict cached for one parameterisation must never
-    * answer a differently-parameterised probe (the param gate is part
-    * of what is being cached). Check-then-put, true only. */
+    * to the expensive fallback). The key carries the probe's PARAMETERS
+    * — a verdict cached for one parameterisation must never answer a
+    * differently-parameterised probe. True verdicts are invalidated by
+    * every write through the refreshes and builds
+    * (`Artifacts.invalidate`) — under the SINGLE-WRITER-PER-STORE
+    * contract [[DocStore]]'s writer lock enforces (an out-of-process
+    * writer re-stamping the SAME version with different content is
+    * outside it; version monotonicity is the lock's job). Count-gate
+    * verdicts are never cached (nothing tells us the unmanaged corpus
+    * changed). */
   private def memoized(path: String, expectedVersion: Option[Long],
                        params: String)
                       (check: => Boolean): Boolean =
     expectedVersion match {
       case Some(v) =>
-        val key = (path, v, params)
-        gateMemo.get(key).getOrElse {
-          val r = check
-          if (r) gateMemo.put(key, true)
-          r
-        }
+        graft.core.Artifacts.verdict(path, params, v.toString)(check)
       case None => check
     }
 
-  /** Session read-through cache of artifact frames — the buffer-pool
-    * analog for repeated probes (a bench pass, a serving loop): the
-    * first probe of a part reads parquet and pins the blocks
-    * MEMORY_AND_DISK (Spark's BlockManager evicts under pressure, so
-    * at 100 TB this degrades to disk-backed re-reads, never an OOM).
-    * Keys carry the VERSION the guarding gate passed at (r16 advice:
-    * a path-only key would keep serving pre-refresh pinned blocks
-    * after an out-of-process refresh whose re-read version gate
-    * passes) — a version-gated probe of v can only ever see frames
-    * read at v. In-process writes additionally invalidate the whole
-    * path via [[invalidateGate]]; caching a NEW version evicts the
-    * superseded pins so stale versions never accumulate. COUNT-gated
-    * probes (expectedVersion = None, keyed -1) have no version to pin
-    * by — they rely on the single-JVM single-writer assumption the
-    * count tier already documents. */
-  private val frameCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Long), DataFrame]
-
+  /** Read-through cache of artifact frames — the buffer-pool analog
+    * for repeated probes (a bench pass, a serving loop): the first
+    * probe of a part reads parquet and pins the blocks MEMORY_AND_DISK
+    * (Spark's BlockManager evicts under pressure, so at 100 TB this
+    * degrades to disk-backed re-reads, never an OOM). Keyed by the
+    * probing SESSION — a frame is bound to the session that read it,
+    * so another session sharing the artifact path reads its own — and
+    * by the VERSION the guarding gate passed at (r16 advice: a
+    * path-only key would keep serving pre-refresh pinned blocks after
+    * an out-of-process refresh whose re-read version gate passes).
+    * In-process writes additionally invalidate the whole path.
+    * COUNT-gated probes (expectedVersion = None, keyed -1) have no
+    * version to pin by — they rely on the single-JVM single-writer
+    * assumption the count tier already documents. */
   private def cachedPart(spark: SparkSession, path: String,
                          part: String,
-                         version: Option[Long]): DataFrame = {
-    val v = version.getOrElse(-1L)
-    frameCache.getOrElseUpdate((path, part, v), {
-      frameCache.keys
-        .filter(k => k._1 == path && k._2 == part && k._3 != v)
-        .foreach(k => frameCache.remove(k).foreach(df =>
-          scala.util.Try(df.unpersist(blocking = false))))
+                         version: Option[Long]): DataFrame =
+    graft.core.Artifacts.part(spark, path, part,
+        version.getOrElse(-1L).toString) {
       // refreshed data parts are partitioned by the stamping version
       // (`v=N/` dirs — the idempotent-refresh layout); the partition
       // column is layout, not payload — drop it (no-op for the
       // unpartitioned frozen parts)
       spark.read.parquet(s"$path/$part").drop("v").persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-  }
-
-  private def dropCachedParts(path: String): Unit =
-    frameCache.keys.filter(_._1 == path).foreach { k =>
-      frameCache.remove(k).foreach(df =>
-        scala.util.Try(df.unpersist(blocking = false)))
     }
 
   /** Write a data part's rows under a `v=<version>/` partition — the
@@ -234,7 +200,7 @@ object DedupIndex {
 
   def buildExactIndex(df: DataFrame, idCol: String, textCol: String,
                       path: String, version: Long = 1L): String = {
-    invalidateGate(path)
+    graft.core.Artifacts.invalidate(path)
     writeVersioned(exactRowsOf(df, idCol, textCol), version,
       s"$path/hashes")
     df.agg(count(lit(1)).as("n"), lit(version).as("version"))
@@ -254,7 +220,7 @@ object DedupIndex {
                         batch: DataFrame, idCol: String,
                         textCol: String,
                         newVersion: Option[Long] = None): String = {
-    invalidateGate(path)
+    graft.core.Artifacts.invalidate(path)
     // read-THEN-overwrite on stats/ needs the old row off disk first
     val old = statsRow(spark, path)
     if (!admitRefresh(old.getAs[Long]("version"), newVersion))
@@ -325,7 +291,7 @@ object DedupIndex {
   def buildNearIndex(df: DataFrame, idCol: String, textCol: String,
                      numHashes: Int, rowsPerBand: Int, n: Int,
                      path: String, version: Long = 1L): String = {
-    invalidateGate(path)
+    graft.core.Artifacts.invalidate(path)
     writeVersioned(
       bandRowsOf(df, idCol, textCol, numHashes, rowsPerBand, n),
       version, s"$path/bands")
@@ -347,7 +313,7 @@ object DedupIndex {
                        batch: DataFrame, idCol: String,
                        textCol: String,
                        newVersion: Option[Long] = None): String = {
-    invalidateGate(path)
+    graft.core.Artifacts.invalidate(path)
     val old = statsRow(spark, path)
     if (!admitRefresh(old.getAs[Long]("version"), newVersion))
       return path
@@ -442,7 +408,7 @@ object DedupIndex {
   def buildSemanticIndex(df: DataFrame, idCol: String, vecCol: String,
                          targetCellSize: Int, iters: Int,
                          path: String, version: Long = 1L): String = {
-    invalidateGate(path)
+    graft.core.Artifacts.invalidate(path)
     val (coarse, anchors) = Dedup.fittedIndex(df, idCol, vecCol,
       targetCellSize, iters)
     coarse.write.mode("overwrite").parquet(s"$path/coarse")
@@ -465,7 +431,7 @@ object DedupIndex {
                            batch: DataFrame, idCol: String,
                            vecCol: String,
                            newVersion: Option[Long] = None): String = {
-    invalidateGate(path)
+    graft.core.Artifacts.invalidate(path)
     val old = statsRow(spark, path)
     if (!admitRefresh(old.getAs[Long]("version"), newVersion))
       return path

@@ -322,7 +322,7 @@ object TextStats {
     */
   def buildBm25Index(df: DataFrame, idCol: String, textCol: String,
                      path: String, version: Long = 1L): String = {
-    invalidateBm25Gate(path)
+    graft.core.Artifacts.invalidate(path)
     val toks = tokensWithLen(df, idCol, textCol)
     toks.agg(sum(col("dl")).cast("double").as("sum_dl"),
         count(lit(1)).cast("double").as("n"),
@@ -332,29 +332,6 @@ object TextStats {
       s"$path/postings")
     path
   }
-
-  /** Session memo of VERSION-gate verdicts — (stats path, expected
-    * version) → fresh, the [[graft.ext.DedupIndex]] discipline: only
-    * version matches are cached (every write path invalidates; a
-    * count-gate verdict is never cached because nothing tells us an
-    * unmanaged corpus changed). */
-  private val bm25GateMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), Boolean]
-
-  /** Check-then-put, TRUE verdicts only (r16 advice: a cached
-    * mismatch could only be cleared by a write in this JVM, so an
-    * index rebuilt by another process would stay permanently routed
-    * to the corpus scan). */
-  private def bm25GateMemoized(path: String, v: Long)
-                              (check: => Boolean): Boolean =
-    bm25GateMemo.get((path, v)).getOrElse {
-      val r = check
-      if (r) bm25GateMemo.put((path, v), true)
-      r
-    }
-
-  def invalidateBm25Gate(path: String): Unit =
-    bm25GateMemo.keys.filter(_._1 == path).foreach(bm25GateMemo.remove)
 
   /** One corpus/batch pass → `(idCol, dl, toks)`, lazily checkpointed
     * so the stats and postings writes share it.
@@ -410,7 +387,7 @@ object TextStats {
                        path: String, batch: DataFrame, idCol: String,
                        textCol: String,
                        newVersion: Option[Long] = None): String = {
-    invalidateBm25Gate(path)
+    graft.core.Artifacts.invalidate(path)
     // read-THEN-overwrite on stats/ needs the old row off disk first
     val old = spark.read.parquet(s"$path/stats").head()
     // refresh admission (DedupIndex.admitRefresh, r16 advice #2):
@@ -446,11 +423,13 @@ object TextStats {
                      expectedVersion: Option[Long] = None): Boolean =
     expectedVersion match {
       case Some(v) =>
-        // version tier (r15 ask #4): one tiny stats read, memoized —
-        // no corpus touch, and a same-count content replacement is
-        // caught because the replacement bumped the corpus version
-        // without refreshing this artifact
-        bm25GateMemoized(path, v) {
+        // version tier (r15 ask #4): one tiny stats read, memoized
+        // true-only in the registry — no corpus touch, and a same-count
+        // content replacement is caught because the replacement bumped
+        // the corpus version without refreshing this artifact. A
+        // count-gate verdict is never cached (nothing tells us an
+        // unmanaged corpus changed).
+        graft.core.Artifacts.verdict(path, "bm25", v.toString) {
           spark.read.parquet(s"$path/stats").head()
             .getAs[Long]("version") == v
         }

@@ -1,7 +1,6 @@
 package graft.store
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Bucketed AT-REST layout for the persisted probe indexes (dedup cell
   * tables, band indexes, content-hash indexes).

@@ -25,7 +25,6 @@ object ParserBench {
         .config("spark.ui.enabled", "false")
         .getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
-      import spark.implicits._
       val n = 1 << 20
       val lines = spark.range(n).select(lit(Line).as("line")).cache()
       lines.count()

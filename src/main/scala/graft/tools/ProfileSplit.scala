@@ -11,7 +11,9 @@ import org.apache.spark.sql.SparkSession
   *               (`queryExecution.executedPlan`), driver-side;
   *   exec      — the `count()` action.
   * Each phase is timed on a FRESH DataFrame per rep so codegen/footer
-  * caches warm across reps exactly like consecutive bench passes.
+  * caches warm across reps exactly like consecutive bench passes; the
+  * phases report their best rep, and `first` is the first rep's total
+  * (one-off cost: codegen compile, shared-artifact builds).
   * Usage: sbt "runMain graft.tools.ProfileSplit <sfDir> <reps> <keys...>"
   */
 object ProfileSplit {
@@ -63,7 +65,8 @@ object ProfileSplit {
       val c = trip.map(_._1).min
       val p = trip.map(_._2).min
       val e = trip.map(_._3).min
-      println(f"[split] $name%-30s construct=$c%6.3f plan=$p%6.3f exec=$e%6.3f total=${c + p + e}%6.3f")
+      val first = trip.head._1 + trip.head._2 + trip.head._3
+      println(f"[split] $name%-30s construct=$c%6.3f plan=$p%6.3f exec=$e%6.3f total=${c + p + e}%6.3f first=$first%6.3f")
     }
     spark.stop()
   }

@@ -185,7 +185,6 @@ class UnigramSpec extends SparkSpec {
   test("EM depth is a real parameter: a larger config (maxPieceLen 8, " +
     "topK 400, 3 E-steps) trains with bounded plans over the fixture " +
     "corpus; the default depth is unchanged (r14 ask #7)") {
-    import spark.implicits._
     val docs = graft.core.Tables.load(spark, "/root/testdata/sf0.001",
       "documents")
     val words = docs.select(explode(split(col("text"), " ")).as("w"))
@@ -218,7 +217,6 @@ class UnigramSpec extends SparkSpec {
     "disagreement (≈2e-9 at this magnitude) cannot flip a floor() — " +
     "a platform change surfaces as THIS diagnosed failure, not a " +
     "silent hash mismatch") {
-    import spark.implicits._
     val docs = graft.core.Tables.load(spark, "/root/testdata/sf0.001",
       "documents")
     val words = docs.select(explode(split(col("text"), " ")).as("w"))

@@ -1,6 +1,5 @@
 package graft.ingest
 
-import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 

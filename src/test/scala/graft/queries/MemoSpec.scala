@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.core.Artifacts
 
 /** Pins that the shared fitted-index memo actually SHARES: each index
   * family builds its artifact once per (session, dir) and every query
@@ -13,18 +14,40 @@ class MemoSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
+  /** The registry lookup for this session's (dir, name) artifact. */
+  private def entry[A](kind: Artifacts.Kind[A], name: String,
+                       session: org.apache.spark.sql.SparkSession = spark)
+      : Option[A] =
+    Artifacts.get(Artifacts.Key(kind, Some(session), dir, name))
+
+  /** Run `body` with the artifact root at a fresh temp dir; always
+    * reset the root and drop (and delete) every index built under it. */
+  private def withArtifactRoot(body: java.nio.file.Path => Unit): Unit = {
+    val root = java.nio.file.Files.createTempDirectory("graft_artifact_root")
+    ExtQueries.setArtifactRoot(Some(root.toString))
+    try body(root)
+    finally {
+      ExtQueries.setArtifactRoot(None)
+      ExtQueries.clearIndexes()
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(root).iterator().asScala.toSeq
+        .sortBy(-_.getNameCount)
+        .foreach(java.nio.file.Files.deleteIfExists(_))
+    }
+  }
+
   test("semantic-dedup fitted index builds once and is reused across " +
     "constructions") {
     ExtQueries.clearMemo()
     graft.SparkEntry.queries("dedup_semantic")(spark, dir)
-    val c1 = ExtQueries.memoEntry(spark, dir, "semfit_coarse")
-    val a1 = ExtQueries.memoEntry(spark, dir, "semfit_anchors")
+    val c1 = entry(Artifacts.SessionFrame, "semfit_coarse")
+    val a1 = entry(Artifacts.SessionFrame, "semfit_anchors")
     assert(c1.isDefined && a1.isDefined,
       "dedup_semantic must populate the semfit memo")
     graft.SparkEntry.queries("dedup_semantic")(spark, dir)
-    assert(ExtQueries.memoEntry(spark, dir, "semfit_coarse").get eq c1.get,
+    assert(entry(Artifacts.SessionFrame, "semfit_coarse").get eq c1.get,
       "second construction re-fit the coarse centroids")
-    assert(ExtQueries.memoEntry(spark, dir, "semfit_anchors").get eq a1.get,
+    assert(entry(Artifacts.SessionFrame, "semfit_anchors").get eq a1.get,
       "second construction re-fit the anchors")
   }
 
@@ -37,34 +60,34 @@ class MemoSpec extends SparkSpec {
         "dedup_incremental_near" -> "near",
         "dedup_incremental_semantic" -> "semantic")) {
       graft.SparkEntry.queries(key)(spark, dir)
-      val p1 = ExtQueries.dedupIndexEntry(spark, dir, kind)
+      val p1 = entry(Artifacts.AtRestIndex, kind)
       assert(p1.isDefined, s"$key must register its $kind artifact")
       assert(java.nio.file.Files.exists(java.nio.file.Paths.get(p1.get)),
         s"$kind artifact must be on disk")
       graft.SparkEntry.queries(key)(spark, dir)
-      assert(ExtQueries.dedupIndexEntry(spark, dir, kind).get == p1.get,
+      assert(entry(Artifacts.AtRestIndex, kind).get == p1.get,
         s"second construction rebuilt the persisted $kind index")
     }
     // clearIndexes deletes + unregisters the dedup artifacts too
     val paths = Seq("exact", "near", "semantic")
-      .map(k => ExtQueries.dedupIndexEntry(spark, dir, k).get)
+      .map(k => entry(Artifacts.AtRestIndex, k).get)
     ExtQueries.clearIndexes()
     for (p <- paths)
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(p)),
         "clearIndexes must delete the dedup artifact trees")
     for (k <- Seq("exact", "near", "semantic"))
-      assert(ExtQueries.dedupIndexEntry(spark, dir, k).isEmpty)
+      assert(entry(Artifacts.AtRestIndex, k).isEmpty)
   }
 
   test("kmeans centroid fit is shared across its whole query family") {
     ExtQueries.clearMemo()
     graft.SparkEntry.queries("similar_ood_score")(spark, dir)
-    val k1 = ExtQueries.memoEntry(spark, dir, "kmeans_cents")
+    val k1 = entry(Artifacts.SessionFrame, "kmeans_cents")
     assert(k1.isDefined, "similar_ood_score must populate kmeans_cents")
     for (key <- Seq("kmeans_fit_assign", "similar_ivf_kmeans",
         "similar_cluster_purity")) {
       graft.SparkEntry.queries(key)(spark, dir)
-      assert(ExtQueries.memoEntry(spark, dir, "kmeans_cents").get eq k1.get,
+      assert(entry(Artifacts.SessionFrame, "kmeans_cents").get eq k1.get,
         s"$key re-fit the centroids instead of sharing the memo")
     }
   }
@@ -74,17 +97,17 @@ class MemoSpec extends SparkSpec {
     "— no per-key corpus tokenize)") {
     ExtQueries.clearMemo()
     graft.SparkEntry.queries("doc_bm25_topk")(spark, dir)
-    val b1 = ExtQueries.memoEntry(spark, dir, "bm25")
+    val b1 = entry(Artifacts.SessionFrame, "bm25")
     assert(b1.isDefined, "doc_bm25_topk must populate the bm25 memo")
     graft.SparkEntry.queries("similar_hybrid_rrf")(spark, dir)
-    assert(ExtQueries.memoEntry(spark, dir, "bm25").get eq b1.get,
+    assert(entry(Artifacts.SessionFrame, "bm25").get eq b1.get,
       "hybrid fusion rebuilt the bm25 frame instead of sharing it")
-    val l1 = ExtQueries.memoEntry(spark, dir, "hyb_lex")
-    val v1 = ExtQueries.memoEntry(spark, dir, "hyb_vec")
+    val l1 = entry(Artifacts.SessionFrame, "hyb_lex")
+    val v1 = entry(Artifacts.SessionFrame, "hyb_vec")
     assert(l1.isDefined && v1.isDefined)
     graft.SparkEntry.queries("similar_hybrid_audit")(spark, dir)
-    assert((ExtQueries.memoEntry(spark, dir, "hyb_lex").get eq l1.get) &&
-      (ExtQueries.memoEntry(spark, dir, "hyb_vec").get eq v1.get),
+    assert((entry(Artifacts.SessionFrame, "hyb_lex").get eq l1.get) &&
+      (entry(Artifacts.SessionFrame, "hyb_vec").get eq v1.get),
       "the audit rebuilt a rank frame instead of sharing the memo")
   }
 
@@ -93,10 +116,10 @@ class MemoSpec extends SparkSpec {
     "probe (VERDICT r13 'wrong' #1 — no orphaned /tmp trees)") {
     ExtQueries.clearMemo()
     ExtQueries.clearIndexes()
-    assert(ExtQueries.indexEntry(spark, dir).isEmpty)
+    assert(entry(Artifacts.AtRestIndex, "bm25").isEmpty)
     val before =
       graft.SparkEntry.queries("doc_bm25_topk")(spark, dir).collect()
-    val path1 = ExtQueries.indexEntry(spark, dir)
+    val path1 = entry(Artifacts.AtRestIndex, "bm25")
     assert(path1.isDefined, "doc_bm25_topk must register the index")
     val p1 = java.nio.file.Paths.get(path1.get)
     assert(java.nio.file.Files.exists(p1), "artifact must be on disk")
@@ -104,7 +127,7 @@ class MemoSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(p1),
       "clearIndexes must DELETE the temp parquet tree, not just " +
         "unregister it")
-    assert(ExtQueries.indexEntry(spark, dir).isEmpty)
+    assert(entry(Artifacts.AtRestIndex, "bm25").isEmpty)
     ExtQueries.clearMemo() // drop the memoized scored frame too
     val after =
       graft.SparkEntry.queries("doc_bm25_topk")(spark, dir).collect()
@@ -122,9 +145,55 @@ class MemoSpec extends SparkSpec {
       assert(names.contains(n), s"prebuild missing $n")
     assert(costs.forall(_._2 >= 0.0))
     // after prebuild, query construction must NOT rebuild anything
-    val c1 = ExtQueries.memoEntry(spark, dir, "semfit_coarse").get
+    val c1 = entry(Artifacts.SessionFrame, "semfit_coarse").get
     graft.SparkEntry.queries("dedup_semantic")(spark, dir)
-    assert(ExtQueries.memoEntry(spark, dir, "semfit_coarse").get eq c1,
+    assert(entry(Artifacts.SessionFrame, "semfit_coarse").get eq c1,
       "construction after prebuild re-fit the index")
+  }
+
+  test("cached index part frames belong to the probing session: a " +
+    "second session probing the same artifact path reads its own") {
+    withArtifactRoot { _ =>
+      ExtQueries.clearIndexes()
+      val other = spark.newSession()
+      for ((key, kind, parts) <- Seq(
+          ("dedup_incremental", "exact", Seq("hashes")),
+          ("dedup_incremental_near", "near", Seq("bands")),
+          ("dedup_incremental_semantic", "semantic",
+            Seq("cells", "coarse", "anchors")));
+          s <- Seq(spark, other)) {
+        graft.SparkEntry.queries(key)(s, dir)
+        val path = entry(Artifacts.AtRestIndex, kind, s).get
+        for (part <- parts) {
+          val df = Artifacts.get(Artifacts.Key(Artifacts.PartFrame,
+            Some(s), path, part, "1"))
+          assert(df.isDefined, s"$key must pin its $part part")
+          assert(df.get.sparkSession eq s,
+            s"$key was served a $part frame another session read")
+        }
+      }
+    }
+  }
+
+  test("one cross-run rule: only at-rest indexes persist under the " +
+    "artifact root; fitted models rebuild in every run") {
+    withArtifactRoot { root =>
+      ExtQueries.clearMemo()
+      ExtQueries.clearIndexes()
+      ExtQueries.prebuildSharedIndexes(spark, dir)
+      import scala.jdk.CollectionConverters._
+      val memoDirs = java.nio.file.Files.walk(root).iterator().asScala
+        .map(_.getFileName.toString).filter(_.startsWith("memo_")).toSeq
+      assert(memoDirs.isEmpty,
+        s"session frames were written under the artifact root: $memoDirs")
+      val k1 = entry(Artifacts.SessionFrame, "kmeans_cents").get
+      ExtQueries.clearMemo()
+      graft.SparkEntry.queries("kmeans_fit_assign")(spark, dir)
+      val k2 = entry(Artifacts.SessionFrame, "kmeans_cents")
+      assert(k2.isDefined && !(k2.get eq k1),
+        "kmeans_fit_assign did not rebuild the centroids after clearMemo")
+      assert(k2.get.inputFiles.isEmpty,
+        "kmeans_cents was read back from disk instead of fitted")
+    }
   }
 }

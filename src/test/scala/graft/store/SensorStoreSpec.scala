@@ -5,7 +5,6 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.ingest.Influx
 
 /** Write→read round-trips through the store — the Spark analog of the
   * reference's highest-value tests (`tests/test_client.py:84-120`:
