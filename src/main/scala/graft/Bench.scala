@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver benchmark: runs every declared query on
   * `SPARK_GRAFT_SF_DIR`, prints ONE JSON line with per-query seconds.
   * A warm-up pass (table footers + a trivial job) runs before timing so
@@ -67,7 +65,7 @@ object Bench {
     val benchStart = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - benchStart) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = graft.core.Session.cpus
     // best-of-3 by default: pass 1 pays codegen + shared-index builds,
     // pass 2 is usually steady, pass 3 confirms it — the r8 verdict's
     // discipline point, applied to the DRIVER-visible record too
@@ -83,48 +81,11 @@ object Bench {
     // passes). The driver's window killed the r15 run at rc=124; stay
     // comfortably inside it and record how far we got instead.
     val budgetS = envInt("SPARK_GRAFT_BENCH_BUDGET_S", 720).max(60)
-    def newSession(nCpus: String): SparkSession = {
-      val sp = SparkSession.builder()
-        .master(s"local[$nCpus]")
-        .config("spark.sql.shuffle.partitions", nCpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        // r17 (guide §3.1): AQE join-strategy knobs on RUNTIME-MEASURED
-        // byte sizes only — planning-time estimates (and with them the
-        // static plan shapes) keep the 10 MB default. The gated
-        // vocabulary-scale joins dropped their eager count() probes in
-        // favor of AQE's exchange statistics; these thresholds size the
-        // decision to the box (128 GiB here; any production executor
-        // that can hold a 10 MB build side holds 64 MB). Overridable:
-        // SPARK_GRAFT_AQE_BHJ / SPARK_GRAFT_AQE_SHJ.
-        .config("spark.sql.adaptive.autoBroadcastJoinThreshold",
-          sys.env.getOrElse("SPARK_GRAFT_AQE_BHJ", "64m"))
-        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-          sys.env.getOrElse("SPARK_GRAFT_AQE_SHJ", "64m"))
-        // r17 (guide §1.1 "decide where the time is going"): the
-        // whole-stage-codegen CLASS cache holds 100 entries by default
-        // — a 290-query board generates ~1-2k distinct codegen units
-        // per pass, so every pass recompiled (janino) and re-JIT'd
-        // nearly every stage; isolated-key profiles ran ~0.3-0.5 s
-        // faster per key than the same key inside a full pass for
-        // exactly this reason. Size the cache to the board (driver AND
-        // executor JVMs compile generated code; any JVM re-running
-        // many distinct plans wants this at any scale). ~50 KB/class.
-        .config("spark.sql.codegen.cache.maxEntries",
-          sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-        // graft's native SQL functions (array_dot, hamming_distance);
-        // the queries' output sorts vanish under .count() via Catalyst's
-        // own EliminateSorts — no custom rule needed
-        .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-        .getOrCreate()
-      // ERROR, not WARN: executor-noise lines (BlockManager re-adds,
-      // accumulator races at shutdown) landing AFTER the result line can
-      // push it out of the driver's 2000-char tail window
-      sp.sparkContext.setLogLevel("ERROR")
-      sp
-    }
-    val spark = newSession(cpus)
+    val spark = graft.core.Session.local(cpus)
+    // ERROR, not WARN: executor-noise lines (BlockManager re-adds,
+    // accumulator races at shutdown) landing AFTER the result line can
+    // push it out of the 2000-char tail window a record reader parses
+    spark.sparkContext.setLogLevel("ERROR")
 
     // persistent prebuild root (r16 verdict ask #1a): shared frames and
     // index artifacts land in deterministic dirs and are REUSED across
@@ -144,7 +105,7 @@ object Bench {
     // probe degraded — that broke the driver contract (the record was
     // stamped cpus:4 with cpus_requested:32) and fed itself with a
     // deliberate burn loop; both are gone. The bench now ALWAYS runs
-    // at $SPARK_GRAFT_CPUS and only stamps the probe series; the
+    // at `Session.cpus` and only stamps the probe series; the
     // DRIVER (or a human reading BASELINE.md) decides what width to
     // request next time.
     def cpuProbeS(): Double = {
@@ -155,7 +116,6 @@ object Bench {
         .selectExpr("sum(id % 7)").collect()
       (System.nanoTime() - t0) / 1e9
     }
-    val cpusNow = scala.util.Try(cpus.trim.toInt).getOrElse(4)
     val probeLog = scala.collection.mutable.ArrayBuffer.empty[Double]
 
     // heartbeat: re-print the latest result line every 20 s so that,
@@ -324,7 +284,7 @@ object Bench {
           (if (probeLog.size >= 2)
             s""","throttle":{"probe_s":${probeLog.map(r3).mkString("[", ",", "]")}}"""
            else "") +
-          s""","cpus":$cpusNow"""
+          s""","cpus":$cpus"""
       def line(entries: Seq[(String, Double)], omitted: Int): String = {
         val qs = entries.map { case (k, v) => "\"" + k + "\":" + r3(v) }
           .mkString("{", ",", "}")

@@ -14,8 +14,10 @@ object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The time-series scan needs `spark.sql.legacy.parquet.nanosAsLong`
-    * (build.sbt sets it for forked JVMs); if the hosting session lacks
-    * it, fall back to the relational flagship so the smoke still runs.
+    * (`graft.core.Session.local` sets it, and build.sbt passes it as a
+    * system property so sessions built elsewhere in a forked JVM get it
+    * too); if the hosting session lacks it, fall back to the relational
+    * flagship so the smoke still runs.
     */
   def entry(spark: SparkSession): DataFrame =
     try {

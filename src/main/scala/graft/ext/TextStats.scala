@@ -61,8 +61,8 @@ object TextStats {
     * eager count — the frame returns unhinted and AQE's runtime
     * exchange statistics (byte-based, scale-adaptive; thresholds
     * `spark.sql.adaptive.autoBroadcastJoinThreshold` /
-    * `...maxShuffledHashJoinLocalMapThreshold`, set in the bench
-    * session, overridable via SPARK_GRAFT_AQE_BHJ/_SHJ) convert the
+    * `...maxShuffledHashJoinLocalMapThreshold`, set in
+    * `graft.core.Session`) convert the
     * planned sort-merge join to broadcast/shuffled-hash when the built
     * side measures small. Values are identical either way — join
     * strategy cannot change results.

@@ -196,8 +196,14 @@ class GraftServer(spark: SparkSession, baseDir: String,
     out.toByteArray
   }
 
+  /** Parse a request body. A parse error is the client's (400); the
+    * same error from a stored file stays a server fault (500). */
   private def parseJson(bytes: Array[Byte]): JValue =
-    JsonMethods.parse(new String(bytes, StandardCharsets.UTF_8))
+    try JsonMethods.parse(new String(bytes, StandardCharsets.UTF_8))
+    catch {
+      case e: com.fasterxml.jackson.core.JsonProcessingException =>
+        throw new BadRequestException(e.getMessage)
+    }
 
   // ---- dispatch ------------------------------------------------------
 
@@ -210,6 +216,13 @@ class GraftServer(spark: SparkSession, baseDir: String,
         makeJs(ex, e.getMessage, 404)
       case e: graft.core.DbNotFoundException =>
         makeJs(ex, e.getMessage, 404)
+      // a body the client sent malformed: influx line, msgpack, JSON
+      case e @ (_: graft.core.InfluxParseException |
+                _: graft.core.InvalidDataWriteException |
+                _: BadRequestException) =>
+        makeJs(ex, s"Bad request: ${e.getMessage}", 400)
+      case e: graft.core.WriteLockTimeoutException =>
+        makeJs(ex, s"Busy: ${e.getMessage}", 503)
       case e: Throwable =>
         makeJs(ex, s"Internal error: ${e.getMessage}", 500)
     }
@@ -563,3 +576,7 @@ class GraftServer(spark: SparkSession, baseDir: String,
     respond(ex, 200, json)
   }
 }
+
+/** A request body the server cannot parse: the client's fault (400). */
+private class BadRequestException(msg: String)
+  extends graft.core.GraftException(msg)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Materializes a coherent REPL×-scaled copy of the full sf0.1 table set
@@ -45,15 +45,7 @@ object MakeBigSf {
     val outDir = args.headOption.getOrElse("target/bigsf")
     val repl = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SRC_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local(graft.core.Session.cpus)
 
     def load(t: String): DataFrame = graft.core.Tables.load(spark, srcDir, t)
     def fanned(df: DataFrame)(per: (DataFrame, Int) => DataFrame): DataFrame =

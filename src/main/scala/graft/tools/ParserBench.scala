@@ -18,13 +18,7 @@ object ParserBench {
 
   def main(args: Array[String]): Unit = {
     for (threads <- Seq(1, 4)) {
-      val spark = SparkSession.builder()
-        .master(s"local[$threads]")
-        .config("spark.sql.shuffle.partitions", threads)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = graft.core.Session.local(threads)
       val n = 1 << 20
       val lines = spark.range(n).select(lit(Line).as("line")).cache()
       lines.count()

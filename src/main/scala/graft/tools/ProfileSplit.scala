@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
 
 /** Splits a query key's wall time into the three phases the bench's
   * timed region actually contains (guide §1: know where the time goes
@@ -14,31 +14,26 @@ import org.apache.spark.sql.SparkSession
   * caches warm across reps exactly like consecutive bench passes; the
   * phases report their best rep, and `first` is the first rep's total
   * (one-off cost: codegen compile, shared-artifact builds).
-  * Usage: sbt "runMain graft.tools.ProfileSplit <sfDir> <reps> <keys...>"
+  * Each key's `explain("formatted")` plan (first rep, before execution)
+  * goes to `<planDir>/<key>.txt`: profile a change's before and after
+  * into two plan dirs and diff them (the plans/r17 evidence format).
+  * Usage: sbt "runMain graft.tools.ProfileSplit <sfDir> <reps> <planDir> <keys...>"
   */
 object ProfileSplit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
+    val planArg = args.lift(2).getOrElse("target/plans")
+    // a key here means keys came without a planDir: refuse, rather
+    // than write plans under it and profile every key
+    require(!graft.SparkEntry.queries.contains(planArg),
+      s"planDir '$planArg' is a query key; usage: <sfDir> <reps> <planDir> <keys...>")
+    val planDir = Files.createDirectories(Paths.get(planArg))
     val names =
-      if (args.length > 2) args.drop(2).toSeq
+      if (args.length > 3) args.drop(3).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_BHJ", "64m"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_SHJ", "64m"))
-      .config("spark.sql.extensions", classOf[graft.GraftExtensions].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local(graft.core.Session.cpus)
+    spark.sparkContext.setLogLevel("ERROR") // keep stdout to result lines
     spark.range(1000).selectExpr("sum(id)").collect()
     graft.core.Tables.All.foreach { t =>
       // NonFatal only (r17 advice): swallowing OOM/linkage errors here
@@ -52,15 +47,19 @@ object ProfileSplit {
 
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
-      val trip = (0 until reps).map { _ =>
+      val trip = (0 until reps).map { rep =>
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         val t1 = System.nanoTime()
         df.queryExecution.executedPlan
         val t2 = System.nanoTime()
-        df.count()
+        if (rep == 0) Files.writeString(planDir.resolve(s"$name.txt"),
+          df.queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode))
         val t3 = System.nanoTime()
-        ((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9)
+        df.count()
+        val t4 = System.nanoTime()
+        ((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t4 - t3) / 1e9)
       }
       val c = trip.map(_._1).min
       val p = trip.map(_._2).min

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-cliff sanity: replicate the sf0.1 events table 10x (~1M rows,
@@ -11,15 +10,7 @@ import org.apache.spark.sql.functions._
   */
 object ScaleSanity {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local(graft.core.Session.cpus)
 
     // Replicated-parquet staging dirs are multi-GB; delete them when the
     // JVM exits (shutdown hook rather than a finally so a mid-run crash

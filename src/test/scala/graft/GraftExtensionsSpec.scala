@@ -32,6 +32,19 @@ class GraftExtensionsSpec extends SparkSpec {
       "SELECT hamming_distance('10', '100') AS d").head().isNullAt(0))
   }
 
+  test("a new session of the factory's context resolves the injected " +
+    "functions without registration, and carries the factory config") {
+    // newSession() gets the spark.sql.extensions functions, never the
+    // ones registered imperatively on another session
+    val fresh = spark.newSession()
+    assert(fresh.sql("SELECT array_dot(array(1.0D, 2.0D), " +
+      "array(3.0D, 4.0D)) AS d").head().getDouble(0) == 11.0)
+    assert(fresh.sql("SELECT hamming_distance('1010', '1001') AS d")
+      .head().getInt(0) == 2)
+    assert(fresh.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(fresh.conf.get("spark.sql.shuffle.partitions") == "4")
+  }
+
   test("bloom_agg + bloom_might_contain: no false negatives, few positives") {
     GraftFunctions.register(spark)
     spark.range(100)

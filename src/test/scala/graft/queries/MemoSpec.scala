@@ -196,4 +196,44 @@ class MemoSpec extends SparkSpec {
         "kmeans_cents was read back from disk instead of fitted")
     }
   }
+
+  test("Artifacts.part: pinning a new version evicts the superseded pin") {
+    val path = "/artifacts-spec/part"
+    def pinned(v: String) = Artifacts.get(
+      Artifacts.Key(Artifacts.PartFrame, Some(spark), path, "p", v))
+    val v1 = Artifacts.part(spark, path, "p", "1")(spark.range(1).toDF())
+    assert(Artifacts.part(spark, path, "p", "1")(fail("re-read pin 1")) eq v1)
+    val v2 = Artifacts.part(spark, path, "p", "2")(spark.range(2).toDF())
+    assert(pinned("1").isEmpty, "the superseded version stayed pinned")
+    assert(pinned("2").get eq v2)
+  }
+
+  test("Artifacts.invalidate drops the verdicts and part frames nested " +
+    "under a path, and keeps session frames") {
+    import Artifacts._
+    val root = "/artifacts-spec/inv"
+    verdict(s"$root/idx", "fresh", "")(true)
+    verdict(s"${root}x", "fresh", "")(true)
+    part(spark, s"$root/idx", "p", "1")(spark.range(1).toDF())
+    val frame = Key(SessionFrame, Some(spark), root, "frame")
+    getOrBuild(frame)(spark.range(1).toDF())
+    invalidate(root)
+    assert(get(Key(GateVerdict, None, s"$root/idx", "fresh")).isEmpty)
+    assert(get(Key(PartFrame, Some(spark), s"$root/idx", "p", "1")).isEmpty)
+    assert(get(frame).isDefined, "invalidate dropped a session frame")
+    assert(get(Key(GateVerdict, None, s"${root}x", "fresh")).isDefined,
+      "a sibling path that only shares the prefix is not nested")
+  }
+
+  test("Artifacts.verdict: verdicts differing only in params are " +
+    "independent, and a failing check is not cached") {
+    val path = "/artifacts-spec/verdict"
+    var checks = 0
+    def check(r: Boolean): Boolean = { checks += 1; r }
+    assert(Artifacts.verdict(path, "g", "a=1")(check(true)))
+    assert(!Artifacts.verdict(path, "g", "a=2")(check(false)))
+    assert(Artifacts.verdict(path, "g", "a=1")(check(false)))
+    assert(Artifacts.verdict(path, "g", "a=2")(check(true)))
+    assert(checks == 3)
+  }
 }

@@ -158,6 +158,33 @@ class GraftServerSpec extends SparkSpec {
       row(0).getFloat(2) == 6.5f)
   }
 
+  test("a malformed body is the client's fault: a bad influx line, a " +
+    "truncated msgpack body and unparseable read_df JSON answer 400") {
+    setupSensor()
+    val truncated = Array(0x91, 0x95, 0xa5).map(_.toByte) ++ "pla".getBytes
+    val codes = Seq(
+        ("/influx", WriteK, "plant,circuit=m1".getBytes),
+        ("/influx_binary", WriteK, truncated),
+        ("/plant/m1/read_df", ReadK, """{"start_ts": 1""".getBytes))
+      .map { case (path, tok, body) =>
+        path -> req("POST", path, Some(tok), Some(body)).statusCode }
+    assert(codes.forall(_._2 == 400), codes)
+  }
+
+  test("a corrupt stored CONFIG.JSON is the server's fault: 500, not 400") {
+    assert(req("POST", "/db/scrap", Some(Admin)).statusCode == 201)
+    val cfg = """{"period":"1s","metrics":["a"],"read_key":"r","write_key":"w"}"""
+    assert(req("POST", "/db/scrap/sensor/s", Some(Admin),
+      Some(cfg.getBytes)).statusCode == 201)
+    val path = java.nio.file.Paths.get(dir, "scrap", "s", "CONFIG.JSON")
+    val stored = java.nio.file.Files.readAllBytes(path)
+    java.nio.file.Files.write(path, stored.take(stored.length / 2))
+    val r = req("POST", "/scrap/s/read_df", Some(Admin),
+      Some("""{"start_ts": 1, "end_ts": 2}""".getBytes))
+    assert(req("DELETE", "/db/scrap", Some(Admin)).statusCode == 200)
+    assert(r.statusCode == 500, new String(r.body()))
+  }
+
   /** Decode the read_df wire exactly as `client.py:536-556` does. */
   private def decodeReadDf(j: JValue): (Array[Double], Array[Float]) = {
     val fields = j.asInstanceOf[JObject].obj.toMap
