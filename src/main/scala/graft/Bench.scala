@@ -57,6 +57,30 @@ object Bench {
     }.getOrElse(Set.empty)
   }
 
+  private def r3(v: Double) = math.rint(v * 1000) / 1000
+
+  /** The `steady_total` and `spread_pct` fields of the record, or none
+    * when a single pass ran: that pass is the cold one (`cold_total`
+    * carries it), and one pass has neither a steady state nor a
+    * spread. `steady_total` is the variance-proof headline: Σ over
+    * keys of the per-key MIN across `passes` (per-key seconds, in key
+    * order). A transient hiccup in any single
+    * pass inflates best-of-N (whole-pass min) but not the per-key
+    * steady sum, so gate comparisons quote this number. `spread_pct`
+    * is the range of `spreadTotals` over its minimum.
+    */
+  private[graft] def steadyFields(passes: Seq[Seq[Double]],
+                                  spreadTotals: Seq[Double]): String =
+    if (passes.size < 2) ""
+    else {
+      val steady = passes.transpose.map(_.min).sum
+      val spread =
+        if (spreadTotals.min > 0)
+          (spreadTotals.max - spreadTotals.min) / spreadTotals.min * 100
+        else 0.0
+      s""","steady_total":${r3(steady)},"spread_pct":${r3(spread)}"""
+    }
+
   private def loadAvg: Double =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .getSystemLoadAverage // -1.0 if the platform can't report it
@@ -219,8 +243,6 @@ object Bench {
         if (ts.max > 3 * ts.min && ts.max - ts.min > 0.5)
           Some(names(i)._1) else None
       }
-    def r3(v: Double) = math.rint(v * 1000) / 1000
-
     // ---- incremental emission -------------------------------------
     // After every completed pass, recompute the whole record from the
     // passes so far, print the compact line (flushed), and rewrite the
@@ -233,12 +255,6 @@ object Bench {
       val totals = passes.map(_.map(_._2).sum)
       val best = passes(totals.indexOf(totals.min))
       val total = totals.min
-      // variance-proof headline (r11 verdict ask #2): Σ over keys of
-      // the per-key MIN across passes. A transient hiccup in any single
-      // pass inflates best-of-N (whole-pass min) but not the per-key
-      // steady sum, so gate comparisons quote this number.
-      val steadyTotal =
-        names.indices.map(i => passes.map(_(i)._2).min).sum
       // after a requeue, drop the worst of the pre-requeue passes
       // specifically (the pass the replay replaced) from the spread
       // window — NOT the global max: if the host never quieted and the
@@ -252,10 +268,6 @@ object Bench {
           val worstFirst = firstTotals.indexOf(firstTotals.max)
           totals.zipWithIndex.collect { case (t, i) if i != worstFirst => t }
         } else totals
-      val spreadPct =
-        if (spreadTotals.min > 0)
-          (spreadTotals.max - spreadTotals.min) / spreadTotals.min * 100
-        else 0.0
       // compact spike evidence (r15 verdict ask #1c): 62 full names in
       // r14's line overflowed the driver's tail window — the line now
       // carries a count plus a bounded sample, full list in the detail
@@ -268,8 +280,7 @@ object Bench {
       val loadEnd = loadAvg
       val evidence =
         s""""runs":${totals.map(r3).mkString("[", ",", "]")}""" +
-          s""","steady_total":${r3(steadyTotal)}""" +
-          s""","spread_pct":${r3(spreadPct)}""" +
+          steadyFields(passes.map(_.map(_._2)), spreadTotals) +
           s""","load_avg":[${r3(loadStart)},${r3(loadEnd)}]""" +
           s""","load_gate":{"threshold":${r3(loadMax)},"pre":${r3(gatePre)},"waited_s":$waited,"contended":$contended}""" +
           s""","prebuild_s":${r3(prebuildTotal)}""" +

@@ -1,5 +1,8 @@
 package graft.client
 
+import java.nio.charset.StandardCharsets
+import java.security.MessageDigest
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,38 +27,43 @@ import graft.store.{MetricDef, RollupKind, SensorConfig, SensorStore}
   * | `get_lasttimestamp`            | `lastTimestamp`              |
   * | `get_metadata`/`set_level_names`| `metadata` / `setLevelNames`|
   *
-  * Every read and write checks the client's token against the
-  * sensor's keys (see `authRead` / `authWrite`).
+  * Every read and write passes the one access gate, [[authorize]].
   */
 class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
                   adminKey: String = "") {
 
   val store = new SensorStore(spark, baseDir)
 
-  /** Reference auth model (`database.py:142-152,170-187` + server
-    * routes): writes need the sensor's write key; reads accept read OR
-    * write key; an `adminKey` holder passes every gate (`database.py:
-    * 178` — "admin key is valid for any action"; the server embedding
-    * sets it, the library default leaves it disabled). A sensor with
-    * empty keys is open (the library default).
+  /** The token must equal one of `keys`, or the admin key when one is
+    * set (`database.py:178` — "admin key is valid for any action"; the
+    * server embedding sets it, the library default leaves it disabled).
+    * Every comparison is an exact constant-time match: an empty key
+    * matches only the empty token.
     */
-  private def isAdmin: Boolean =
-    adminKey.nonEmpty && store.keyOk(adminKey, token)
-
-  private def authWrite(db: String, sensor: String): Unit = {
-    if (isAdmin) return
-    val cfg = store.config(db, sensor)
-    if (cfg.writeKey.nonEmpty && !store.keyOk(cfg.writeKey, token))
-      throw new graft.core.NotAuthorizedException(s"write $db/$sensor")
+  private def check(keys: Seq[String], what: String): Unit = {
+    val tok = token.getBytes(StandardCharsets.UTF_8)
+    def keyOk(k: String) =
+      MessageDigest.isEqual(k.getBytes(StandardCharsets.UTF_8), tok)
+    if (!(adminKey.nonEmpty && keyOk(adminKey)) && !keys.exists(keyOk))
+      throw new graft.core.NotAuthorizedException(what)
   }
 
-  private def authRead(db: String, sensor: String): Unit = {
-    if (isAdmin) return
+  /** The one access gate, the reference's `_check_auth`
+    * (`database.py:170-187`): a write needs the sensor's write key, a
+    * read its read or write key. Returns the config it read, so the
+    * caller works from the same snapshot the decision was made on.
+    */
+  def authorize(db: String, sensor: String, write: Boolean): SensorConfig = {
     val cfg = store.config(db, sensor)
-    if (cfg.readKey.nonEmpty &&
-        !store.keyOk(cfg.readKey, token) && !store.keyOk(cfg.writeKey, token))
-      throw new graft.core.NotAuthorizedException(s"read $db/$sensor")
+    if (write) check(Seq(cfg.writeKey), s"write $db/$sensor")
+    else check(Seq(cfg.readKey, cfg.writeKey), s"read $db/$sensor")
+    cfg
   }
+
+  /** Catalog mutation (create/delete a db or sensor) is admin-only over
+    * HTTP; the library's own catalog calls stay ungated.
+    */
+  def authorizeAdmin(what: String): Unit = check(Nil, what)
 
   // ---- catalog -------------------------------------------------------
 
@@ -119,36 +127,42 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
     * `newMetadata` are dropped (including `level_names`).
     */
   def updateMetadata(db: String, sensor: String,
-                     newMetadata: Map[String, String]): Unit = {
-    authWrite(db, sensor) // reference gates update_metadata behind auth
-    val cfg = store.config(db, sensor)
-    store.createSensor(cfg.copy(metadata = newMetadata))
-  }
+                     newMetadata: Map[String, String]): Unit =
+    rewriteConfig(db, sensor)(_.copy(metadata = newMetadata))
 
   /** Merge variant of [[updateMetadata]] for callers that want to patch
     * a few keys without re-supplying the whole dict: existing keys are
     * overwritten, others kept.
     */
   def mergeMetadata(db: String, sensor: String,
-                    patch: Map[String, String]): Unit = {
-    authWrite(db, sensor)
-    val cfg = store.config(db, sensor)
-    store.createSensor(cfg.copy(metadata = cfg.metadata ++ patch))
-  }
+                    patch: Map[String, String]): Unit =
+    rewriteConfig(db, sensor)(cfg => cfg.copy(metadata = cfg.metadata ++ patch))
 
   /** MultiIndex level names (reference `set_level_names`,
     * `client.py:493-503`): stored comma-joined in metadata.
     */
-  def setLevelNames(db: String, sensor: String, names: Seq[String]): Unit = {
-    authWrite(db, sensor) // metadata mutation — same gate as the writes
-    val cfg = store.config(db, sensor)
-    store.createSensor(cfg.copy(
+  def setLevelNames(db: String, sensor: String, names: Seq[String]): Unit =
+    rewriteConfig(db, sensor)(cfg => cfg.copy(
       metadata = cfg.metadata + ("level_names" -> names.mkString(","))))
+
+  /** A metadata change, write-gated like the reference's
+    * `update_metadata`, read-modify-written under the writer lock so it
+    * cannot drop a metric that a concurrent `write` just added. The
+    * gate runs before the lock, so a refused caller never waits for it.
+    */
+  private def rewriteConfig(db: String, sensor: String)(
+      f: SensorConfig => SensorConfig): Unit = {
+    authorize(db, sensor, write = true)
+    store.withWriterLock(db, sensor) {
+      store.createSensor(f(store.config(db, sensor)))
+    }
   }
 
   def levelNames(db: String, sensor: String): Seq[String] =
-    metadata(db, sensor).get("level_names").map(_.split(",").toSeq)
-      .getOrElse(Seq.empty)
+    levelNamesOf(store.config(db, sensor))
+
+  private def levelNamesOf(cfg: SensorConfig): Seq[String] =
+    cfg.metadata.get("level_names").map(_.split(",").toSeq).getOrElse(Nil)
 
   /** Retention (extension — the reference never deletes data): drop
     * every whole chunk ending at or before `cutoffSec`, from the data
@@ -156,7 +170,7 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
     * gated like the other mutations. Returns the dropped chunk starts.
     */
   def deleteBefore(db: String, sensor: String, cutoffSec: Long): Seq[Long] = {
-    authWrite(db, sensor)
+    authorize(db, sensor, write = true)
     store.deleteBefore(db, sensor, cutoffSec)
   }
 
@@ -165,8 +179,9 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
   /** Ingest influx-protocol lines (reference `client.write`,
     * `client.py:337-370` → `server.write_point_list`). Lines may span
     * multiple (db, sensor) pairs — they are grouped per sensor like the
-    * server's `DbMeterData` (A-3). Missing timestamps get ingest time.
-    * Malformed lines raise, mirroring `InfluxParseException`.
+    * server's `DbMeterData` (A-3) and written by [[writeBatch]]. Missing
+    * timestamps get ingest time. Malformed lines raise, mirroring
+    * `InfluxParseException`.
     */
   def write(lines: Seq[String], fillValue: Double = 0.0): Unit = {
     import spark.implicits._
@@ -183,27 +198,29 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
           col("metric"), col("value"))
       val sensors = pts.select("db", "sensor").distinct().collect()
         .map(r => (r.getString(0), r.getString(1)))
-      sensors.foreach { case (db, sensor) =>
-        authWrite(db, sensor)
-        // locked like the reference server's per-sensor process lock —
-        // concurrent client jobs writing one sensor serialize safely
-        store.writeLocked(db, sensor,
-          pts.filter(col("db") === db && col("sensor") === sensor)
-            .select("ts", "metric", "value"),
-          fillValue)
-      }
+      writeBatch(sensors.toSeq.map { case (db, sensor) =>
+        (db, sensor) -> pts.filter(col("db") === db && col("sensor") === sensor)
+          .select("ts", "metric", "value")
+      }, fillValue)
     } finally { parsed.unpersist(); () }
   }
 
-  /** Long-format ingest for ONE sensor — the `write_point_list` inner
-    * grain (`server.py:215-266`): points `(ts, metric, value)` through
-    * the locked upsert. The binary ingest route lands here after
+  /** Long-format ingest — the `write_point_list` inner grain
+    * (`server.py:215-266`): each sensor's points `(ts, metric, value)`
+    * through the upsert, locked like the reference server's per-sensor
+    * process lock. Every target is authorized before the first write
+    * lands, so a refused sensor leaves the whole batch unwritten. The
+    * binary ingest route lands here after
     * [[graft.ingest.Msgpack.decodePointList]].
     */
-  def writePoints(db: String, sensor: String, points: DataFrame,
-                  fillValue: Double = 0.0): Unit = {
-    authWrite(db, sensor)
-    store.writeLocked(db, sensor, points, fillValue)
+  def writeBatch(batches: Seq[((String, String), DataFrame)],
+                 fillValue: Double = 0.0): Unit = {
+    batches.foreach { case ((db, sensor), _) =>
+      authorize(db, sensor, write = true)
+    }
+    batches.foreach { case ((db, sensor), points) =>
+      store.writeLocked(db, sensor, points, fillValue)
+    }
   }
 
   /** Ingest a wide frame (`ts` + one column per metric) — reference
@@ -212,11 +229,9 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
     */
   def writeDf(db: String, sensor: String, wide: DataFrame,
               fillValue: Double = 0.0): Unit = {
-    authWrite(db, sensor)
     val metrics = wide.columns.filterNot(_ == "ts").toSeq
-    val long = Pivot.wideToLong(wide, Seq("ts"), metrics)
-      .select(col("ts"), col("metric"), col("value").cast("double"))
-    store.writeLocked(db, sensor, long, fillValue)
+    writeBatch(Seq((db, sensor) -> Pivot.wideToLong(wide, Seq("ts"), metrics)
+      .select(col("ts"), col("metric"), col("value").cast("double"))), fillValue)
   }
 
   // ---- read ----------------------------------------------------------
@@ -227,12 +242,24 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
   def read(db: String, sensor: String,
            fromSec: Option[Long] = None, toSec: Option[Long] = None,
            metrics: Option[Seq[String]] = None): DataFrame = {
-    authRead(db, sensor)
+    authorize(db, sensor, write = false)
     store.read(db, sensor, fromSec, toSec, metrics)
   }
 
+  /** The `read_df` snapshot: the config the gate read and the wide
+    * frame of exactly its metrics, unwritten cells as NaN (the
+    * reference's float32 parity), so a schema evolution landing
+    * mid-request cannot make the metric list disagree with the payload.
+    */
+  def readSnapshot(db: String, sensor: String, fromSec: Option[Long],
+                   toSec: Option[Long]): (SensorConfig, DataFrame) = {
+    val cfg = authorize(db, sensor, write = false)
+    (cfg, store.read(db, sensor, fromSec, toSec, Some(cfg.metricNames),
+      nanForMissing = true))
+  }
+
   def lastTimestamp(db: String, sensor: String): Option[Long] = {
-    authRead(db, sensor)
+    authorize(db, sensor, write = false)
     store.lastTimestamp(db, sensor)
   }
 
@@ -240,10 +267,8 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
     * them for a MultiIndex sensor — a list of level tuples
     * (`test_client.py:180-182`). Flat sensors return 1-element tuples.
     */
-  def metricTuples(db: String, sensor: String): Seq[Seq[String]] = {
-    authRead(db, sensor)
-    store.config(db, sensor).metrics.map(_.levels)
-  }
+  def metricTuples(db: String, sensor: String): Seq[Seq[String]] =
+    authorize(db, sensor, write = false).metrics.map(_.levels)
 
   /** The TRUE MultiIndex read (reference `client.py:545-547`): the
     * wide frame whose every metric column carries its LEVEL TUPLE and
@@ -261,9 +286,9 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
   def readMultiIndex(db: String, sensor: String,
                      fromSec: Option[Long] = None,
                      toSec: Option[Long] = None): DataFrame = {
-    val cfg = store.config(db, sensor)
-    val names = levelNames(db, sensor)
-    read(db, sensor, fromSec, toSec).select(
+    val cfg = authorize(db, sensor, write = false)
+    val names = levelNamesOf(cfg)
+    store.read(db, sensor, fromSec, toSec, Some(cfg.metricNames)).select(
       col("ts") +: cfg.metrics.map { m =>
         val b = new org.apache.spark.sql.types.MetadataBuilder()
           .putStringArray("levels", m.levels.toArray)
@@ -284,27 +309,26 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
         .getOrElse(Nil))
   }
 
-  /** The one rollup route: authorizes the read, then picks the largest
-    * materialized grid `b` of `kind` the query aligns to — `b` divides
+  /** The one rollup route: the largest materialized grid `b` of `kind`
+    * the query aligns to — `b` divides
     * the `coarse` output grid and both range ends sit on it
     * (`fromSec % b == 0`, `(toSec + 1) % b == 0`), because merged
     * partials are bucket-granular and cannot be trimmed. None — read
     * raw — when `useRollups` is off, `coarse` is None or nothing
     * aligns, so routing changes cost, never values.
     */
-  private def route(db: String, sensor: String, kind: RollupKind,
+  private def route(cfg: SensorConfig, kind: RollupKind,
                     fromSec: Long, toSec: Long, coarse: Option[Long],
-                    useRollups: Boolean): Option[Long] = {
-    authRead(db, sensor)
+                    useRollups: Boolean): Option[Long] =
     if (!useRollups) None
     // equal dir names ⇔ same family (for quantiles, same binWidth)
-    else coarse.flatMap(c => store.listRollups(db, sensor).collect {
+    else coarse.flatMap(c => store.listRollups(cfg.db, cfg.sensor).collect {
       case (k, b) if k.dirName(b) == kind.dirName(b) && b <= c &&
           c % b == 0 && fromSec % b == 0 && (toSec + 1) % b == 0 => b
     }.maxOption)
-  }
 
-  /** A routed aggregate read: the merged `kind` rollup when one aligns
+  /** A routed aggregate read of `metrics` (default: every metric of
+    * the authorized config): the merged `kind` rollup when one aligns
     * with `coarse`, else `kind`'s own partial and finish over the raw
     * rows, bucketed by `rawBucket` (of epoch seconds) and stamped
     * `rawTs` (of `cbucket`).
@@ -312,18 +336,21 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
   private def routedAggregate(db: String, sensor: String, kind: RollupKind,
                               fromSec: Long, toSec: Long,
                               coarse: Option[Long], useRollups: Boolean,
-                              metrics: Seq[String],
+                              metrics: Option[Seq[String]],
                               rawBucket: Column => Column,
-                              rawTs: Column): DataFrame =
-    route(db, sensor, kind, fromSec, toSec, coarse, useRollups) match {
+                              rawTs: Column): DataFrame = {
+    val cfg = authorize(db, sensor, write = false)
+    val ms = metrics.getOrElse(cfg.metricNames)
+    route(cfg, kind, fromSec, toSec, coarse, useRollups) match {
       case Some(b) =>
         store.readRollup(db, sensor, kind, b, coarse.get, Some(fromSec),
-          Some(toSec), Some(metrics))
+          Some(toSec), Some(ms))
       case None =>
         kind.finish(store.rawPartials(db, sensor, kind,
-          rawBucket(col("slot")).as("cbucket"), fromSec, toSec, metrics),
-          rawTs, metrics)
+          rawBucket(col("slot")).as("cbucket"), fromSec, toSec, ms),
+          rawTs, ms)
     }
+  }
 
   /** The spread of a Grafana read when it is a whole number of seconds
     * (a fractional spread can never be a multiple of a rollup bucket).
@@ -344,7 +371,7 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
     */
   private def spreadAggregate(db: String, sensor: String, kind: RollupKind,
                               fromSec: Long, toSec: Long, maxDataPoints: Int,
-                              metrics: Seq[String],
+                              metrics: Option[Seq[String]],
                               useRollups: Boolean): DataFrame = {
     val spread = Downsample.spreadOf(fromSec, toSec, maxDataPoints)
     routedAggregate(db, sensor, kind, fromSec, toSec,
@@ -374,8 +401,9 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
                   maxDataPoints: Int,
                   targets: Option[Seq[String]] = None,
                   useRollups: Boolean = true): DataFrame = {
-    val wanted = targets.getOrElse(store.config(db, sensor).metricNames)
-    val wide = route(db, sensor, RollupKind.First, fromSec, toSec,
+    val cfg = authorize(db, sensor, write = false)
+    val wanted = targets.getOrElse(cfg.metricNames)
+    val wide = route(cfg, RollupKind.First, fromSec, toSec,
         integralSpread(fromSec, toSec, maxDataPoints), useRollups) match {
       case Some(b) =>
         store.readRollup(db, sensor, RollupKind.First, b, b, Some(fromSec),
@@ -403,7 +431,7 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
   def readDistinct(db: String, sensor: String, fromSec: Long, toSec: Long,
                    coarseSec: Long, useRollups: Boolean = true): DataFrame =
     routedAggregate(db, sensor, RollupKind.Sketch, fromSec, toSec,
-      Some(coarseSec), useRollups, store.config(db, sensor).metricNames,
+      Some(coarseSec), useRollups, None,
       Grid.snapSeconds(_, coarseSec), timestamp_seconds(col("cbucket")))
 
   /** Percentile dashboard read: per `coarseSec` bucket, the
@@ -419,7 +447,7 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
                    coarseSec: Long, pct: Int, binWidth: Double,
                    useRollups: Boolean = true): DataFrame =
     routedAggregate(db, sensor, RollupKind.Quantile(binWidth, pct), fromSec,
-      toSec, Some(coarseSec), useRollups, store.config(db, sensor).metricNames,
+      toSec, Some(coarseSec), useRollups, None,
       Grid.snapSeconds(_, coarseSec), timestamp_seconds(col("cbucket")))
 
   /** SHARED-BOUNDARY Grafana downsample — the reference's exact
@@ -445,8 +473,14 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
   def readGrafanaShared(db: String, sensor: String, fromSec: Long,
                         toSec: Long, maxDataPoints: Int,
                         targets: Option[Seq[String]] = None): DataFrame = {
-    authRead(db, sensor)
-    val wanted = targets.getOrElse(store.config(db, sensor).metricNames)
+    val cfg = authorize(db, sensor, write = false)
+    shared(db, sensor, fromSec, toSec, maxDataPoints,
+      targets.getOrElse(cfg.metricNames))
+  }
+
+  /** [[readGrafanaShared]] of `wanted`, past the gate. */
+  private def shared(db: String, sensor: String, fromSec: Long, toSec: Long,
+                     maxDataPoints: Int, wanted: Seq[String]): DataFrame = {
     val wide = store.read(db, sensor, Some(fromSec), Some(toSec), Some(wanted))
     val spread = Downsample.spreadOf(fromSec, toSec, maxDataPoints)
     val firstRow = wide.withColumn("sec", Grid.tsSeconds(col("ts")))
@@ -479,9 +513,9 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
   def readGrafanaJson(db: String, sensor: String, fromSec: Long,
                       toSec: Long, maxDataPoints: Int,
                       targets: Option[Seq[String]] = None): String = {
-    val wanted = targets.getOrElse(store.config(db, sensor).metricNames)
-    val long = readGrafanaShared(db, sensor, fromSec, toSec, maxDataPoints,
-      Some(wanted))
+    val cfg = authorize(db, sensor, write = false)
+    val wanted = targets.getOrElse(cfg.metricNames)
+    val long = shared(db, sensor, fromSec, toSec, maxDataPoints, wanted)
     val per = long
       .withColumn("dp", format_string("[%f,%f]",
         col("value").cast("double"), col("ts_ms").cast("double")))
@@ -506,8 +540,7 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
                       targets: Option[Seq[String]] = None,
                       useRollups: Boolean = true): DataFrame =
     spreadAggregate(db, sensor, RollupKind.Mean, fromSec, toSec,
-      maxDataPoints, targets.getOrElse(store.config(db, sensor).metricNames),
-      useRollups)
+      maxDataPoints, targets, useRollups)
 
   /** Grafana-style WINDOWED-STATS downsample for one metric — per
     * spread bucket `(ts, n, avg_value, min_value, max_value)` over the
@@ -520,5 +553,5 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
                        toSec: Long, maxDataPoints: Int, metric: String,
                        useRollups: Boolean = true): DataFrame =
     spreadAggregate(db, sensor, RollupKind.Stats, fromSec, toSec,
-      maxDataPoints, Seq(metric), useRollups)
+      maxDataPoints, Some(Seq(metric)), useRollups)
 }

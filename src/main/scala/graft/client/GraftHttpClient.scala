@@ -11,6 +11,8 @@ import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
+import graft.core.Wire.{jstr, zlibInflate}
+
 /** HTTP client for [[graft.server.GraftServer]] — the wire-level analog
   * of the reference `OngTsdbClient` (`client.py:39-571`), speaking the
   * same routes, auth, and byte formats over the JDK `HttpClient`:
@@ -83,19 +85,6 @@ class GraftHttpClient(spark: SparkSession, baseUrl: String,
     orAuthFail(r)(r.statusCode == 200)
   }
 
-  // Full JSON string escaping (backslashes + control chars too, not
-  // just quotes): a metadata value containing `\` or a newline must
-  // still produce a well-formed request body (ADVICE r12).
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' || c > '~' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   def createSensor(db: String, sensor: String, period: String,
                    metrics: Seq[String], readKey: String,
                    writeKey: String,
@@ -117,17 +106,17 @@ class GraftHttpClient(spark: SparkSession, baseUrl: String,
       : Boolean = {
     val names =
       if (levelNames.nonEmpty)
-        Seq(s""""level_names":[${levelNames.map(q).mkString(",")}]""")
+        Seq(s""""level_names":[${levelNames.map(jstr).mkString(",")}]""")
       else Seq.empty
-    val md = (metadata.map { case (k, v) => q(k) + ":" + q(v) } ++ names)
+    val md = (metadata.map { case (k, v) => jstr(k) + ":" + jstr(v) } ++ names)
       .mkString("{", ",", "}")
     val ms = metrics.map {
-      case Seq(one) => q(one)
-      case levels => levels.map(q).mkString("[", ",", "]")
+      case Seq(one) => jstr(one)
+      case levels => levels.map(jstr).mkString("[", ",", "]")
     }
     val body =
-      s"""{"period":${q(period)},"metrics":[${ms.mkString(",")}],
-         |"read_key":${q(readKey)},"write_key":${q(writeKey)},
+      s"""{"period":${jstr(period)},"metrics":[${ms.mkString(",")}],
+         |"read_key":${jstr(readKey)},"write_key":${jstr(writeKey)},
          |"metadata":$md}""".stripMargin
     val r = send("POST", s"/db/$db/sensor/$sensor", Some(body.getBytes))
     orAuthFail(r)(r.statusCode == 201)
@@ -200,17 +189,10 @@ class GraftHttpClient(spark: SparkSession, baseUrl: String,
       val j = js(r).asInstanceOf[JObject].obj.toMap
       val datesLen = j.keys.find(_.forall(_.isDigit)).getOrElse(
         throw new IllegalStateException("no data key in read_df reply"))
-      var data = j(datesLen).asInstanceOf[JString].s
+      val sent = j(datesLen).asInstanceOf[JString].s
         .getBytes(StandardCharsets.ISO_8859_1)
-      if (j.get("compressed").contains(JBool(true))) {
-        val inf = new java.util.zip.Inflater()
-        inf.setInput(data)
-        val out = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](1 << 16)
-        while (!inf.finished()) out.write(buf, 0, inf.inflate(buf))
-        inf.end()
-        data = out.toByteArray
-      }
+      val data =
+        if (j.get("compressed").contains(JBool(true))) zlibInflate(sent) else sent
       val raw = Base64.getMimeDecoder.decode(data)
       val nDates = datesLen.toInt
       val names: Seq[String] = j.get("metrics") match {

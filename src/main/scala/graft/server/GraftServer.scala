@@ -5,16 +5,14 @@ import java.nio.charset.StandardCharsets
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.Base64
 
-
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
 import graft.client.GraftClient
-import graft.core.NotAuthorizedException
+import graft.core.Wire.{jstr, zlibDeflate, zlibInflate}
 import graft.ingest.Msgpack
-import graft.store.{MetricDef, SensorConfig, SensorStore}
 
 /** HTTP serving layer — the process analog of the reference Flask
   * server (`server.py`), on the JDK's built-in `HttpServer` (zero new
@@ -42,11 +40,15 @@ import graft.store.{MetricDef, SensorConfig, SensorStore}
   * advertises gzip and the payload clears the threshold — the byte
   * shape `client.py:536-556` decodes.
   *
-  * Auth = the reference model (`database.py:170-187`): HTTP basic
-  * auth's password is the token; the server's `adminToken` passes
-  * every gate, a sensor's write key covers write+read, its read key
-  * covers read, catalog mutation is admin-only. Missing header → 401
-  * `"Authorization header needed"` (`server.py:91-104`).
+  * Auth = the reference model: HTTP basic auth's password is the
+  * token, handed to a per-request [[GraftClient]] whose one gate,
+  * `authorize`, applies `database.py:170-187` (the server's
+  * `adminToken` passes every gate, a sensor's write key covers
+  * write+read, its read key covers read); catalog mutation is
+  * admin-only. A missing header, or an empty password (on the wire
+  * indistinguishable from no credentials), → 401 `"Authorization
+  * header needed"` (`server.py:91-104`). The server keeps no store of
+  * its own: every route goes through the client.
   */
 class GraftServer(spark: SparkSession, baseDir: String,
                   adminToken: String, port: Int = 0,
@@ -58,7 +60,6 @@ class GraftServer(spark: SparkSession, baseDir: String,
     */
   val compressThreshold = 1024
 
-  private val store = new SensorStore(spark, baseDir)
   private val http =
     HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   // without an executor the JDK server handles requests on ONE thread;
@@ -73,20 +74,7 @@ class GraftServer(spark: SparkSession, baseDir: String,
   def start(): Unit = http.start()
   def stop(): Unit = { http.stop(0); pool.shutdown() }
 
-  private def client(key: String) =
-    new GraftClient(spark, baseDir, key, adminToken)
-
   // ---- plumbing ------------------------------------------------------
-
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' || c > '~' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 
   private def renderJ(v: Any): String = v match {
     case null => "null"
@@ -107,6 +95,12 @@ class GraftServer(spark: SparkSession, baseDir: String,
     case xs: Seq[_] => xs.map(renderJ).mkString("[", ",", "]")
   }
 
+  /** Metric names, or level tuples when any metric has more than one
+    * level — how the reference lists a MultiIndex sensor's metrics.
+    */
+  private def metricsJ(tuples: Seq[Seq[String]]): Seq[Any] =
+    if (tuples.exists(_.length > 1)) tuples else tuples.map(_.head)
+
   /** The reference's `make_js_response` shape (`server.py:84-88`). */
   private def makeJs(ex: HttpExchange, msg: String, code: Int,
                      extra: (String, Any)*): Unit = {
@@ -123,7 +117,9 @@ class GraftServer(spark: SparkSession, baseDir: String,
     try os.write(bytes) finally os.close()
   }
 
-  /** Basic-auth password = the token (`server.py:91-104`). */
+  /** Basic-auth password = the token (`server.py:91-104`); an empty
+    * one counts as no credentials.
+    */
   private def authKey(ex: HttpExchange): Option[String] = {
     Option(ex.getRequestHeaders.getFirst("Authorization"))
       .filter(_.startsWith("Basic "))
@@ -132,34 +128,9 @@ class GraftServer(spark: SparkSession, baseDir: String,
           val dec = new String(Base64.getDecoder.decode(h.drop(6).trim),
             StandardCharsets.UTF_8)
           val i = dec.indexOf(':')
-          if (i >= 0) Some(dec.substring(i + 1)) else None
+          if (i >= 0) Some(dec.substring(i + 1)).filter(_.nonEmpty) else None
         } catch { case _: IllegalArgumentException => None }
       }
-  }
-
-  private def isAdmin(key: String): Boolean =
-    adminToken.nonEmpty && store.keyOk(adminToken, key)
-
-  /** `database.py:170-187`: admin any action; write key → write+read;
-    * read key → read. At the NETWORK boundary a keyless sensor is
-    * admin-only — a DELIBERATE hardening over the reference: its
-    * `_check_auth` runs `hmac.compare_digest(stored, key)`, which
-    * returns True for stored='' vs a presented empty basic-auth
-    * password, so the reference DOES grant empty==empty. We reject
-    * that (`nonEmpty && keyOk`) because an empty password is
-    * indistinguishable from "no credentials supplied" on the wire;
-    * GraftServerSpec pins Some("") → 401 (ADVICE r12/r13).
-    */
-  private def authSensor(key: String, db: String, sensor: String,
-                         write: Boolean): Unit = {
-    if (isAdmin(key)) return
-    val cfg = store.config(db, sensor)
-    val okWrite = cfg.writeKey.nonEmpty && store.keyOk(cfg.writeKey, key)
-    val okRead = cfg.readKey.nonEmpty && store.keyOk(cfg.readKey, key)
-    if (write && !okWrite)
-      throw new NotAuthorizedException(s"write $db/$sensor")
-    if (!write && !(okRead || okWrite))
-      throw new NotAuthorizedException(s"read $db/$sensor")
   }
 
   private def body(ex: HttpExchange): Array[Byte] = {
@@ -171,31 +142,6 @@ class GraftServer(spark: SparkSession, baseDir: String,
     else raw
   }
 
-  private def zlibInflate(data: Array[Byte]): Array[Byte] = {
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(data)
-    val out = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](8192)
-    while (!inf.finished()) {
-      val n = inf.inflate(buf)
-      if (n == 0 && inf.needsInput()) throw new IllegalArgumentException(
-        "truncated zlib body")
-      out.write(buf, 0, n)
-    }
-    inf.end()
-    out.toByteArray
-  }
-
-  private def zlibDeflate(data: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater()
-    d.setInput(data); d.finish()
-    val out = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](8192)
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
-    out.toByteArray
-  }
-
   /** Parse a request body. A parse error is the client's (400); the
     * same error from a stored file stays a server fault (500). */
   private def parseJson(bytes: Array[Byte]): JValue =
@@ -205,12 +151,21 @@ class GraftServer(spark: SparkSession, baseDir: String,
         throw new BadRequestException(e.getMessage)
     }
 
+  /** A metadata object: string values kept, list values comma-joined. */
+  private def metadataOf(j: JValue): Map[String, String] = j match {
+    case JObject(fields) => fields.collect {
+      case (k, JString(v)) => k -> v
+      case (k, JArray(xs)) => k -> xs.collect { case JString(s) => s }.mkString(",")
+    }.toMap
+    case _ => Map.empty
+  }
+
   // ---- dispatch ------------------------------------------------------
 
   private def handle(ex: HttpExchange): Unit = {
     try route(ex)
     catch {
-      case e: NotAuthorizedException =>
+      case e: graft.core.NotAuthorizedException =>
         makeJs(ex, s"Unauthorized: ${e.getMessage}", 401)
       case e: graft.core.SensorNotFoundException =>
         makeJs(ex, e.getMessage, 404)
@@ -239,47 +194,44 @@ class GraftServer(spark: SparkSession, baseDir: String,
         makeJs(ex, "Welcome to graft (ong_tsdb analog) server", 200)
       case ("POST", Seq("config_reload")) =>
         makeJs(ex, "Configuration reloaded", 200)
-      case (_, Seq("db", _*)) | (_, Seq("influx", _*)) |
-           (_, Seq("influx_binary", _*)) | (_, Seq("get_md5", _*)) =>
+      case (_, s) if s.length >= 2 || s.headOption.exists(AuthedRoots) =>
         authKey(ex) match {
           case None => makeJs(ex, "Authorization header needed", 401)
-          case Some(key) => routedAuthed(ex, method, segs, key)
-        }
-      case (_, s) if s.length >= 2 =>
-        authKey(ex) match {
-          case None => makeJs(ex, "Authorization header needed", 401)
-          case Some(key) => routedAuthed(ex, method, segs, key)
+          case Some(key) => routedAuthed(ex, method, segs,
+            new GraftClient(spark, baseDir, key, adminToken))
         }
       case _ => makeJs(ex, "Page not found", 404)
     }
   }
 
+  /** Single-segment routes that still need credentials. */
+  private val AuthedRoots = Set("db", "influx", "influx_binary", "get_md5")
+
   private def routedAuthed(ex: HttpExchange, method: String,
-                           segs: Seq[String], key: String): Unit =
+                           segs: Seq[String], c: GraftClient): Unit =
     (method, segs) match {
       // ---- catalog (`server.py:126-210`) ----
       case ("POST", Seq("db", db)) =>
-        if (!isAdmin(key)) throw new NotAuthorizedException(s"create db $db")
-        if (store.listDbs().contains(db))
+        c.authorizeAdmin(s"create db $db")
+        if (c.existsDb(db))
           makeJs(ex, s"Database $db already exists", 406)
         else {
-          client(key).createDb(db)
+          c.createDb(db)
           makeJs(ex, s"Database $db created ok", 201)
         }
       case ("DELETE", Seq("db", db)) =>
-        if (!isAdmin(key)) throw new NotAuthorizedException(s"delete db $db")
-        if (store.listDbs().contains(db)) {
-          store.deleteDb(db); makeJs(ex, s"Database $db deleted", 200)
+        c.authorizeAdmin(s"delete db $db")
+        if (c.existsDb(db)) {
+          c.deleteDb(db); makeJs(ex, s"Database $db deleted", 200)
         } else makeJs(ex, s"Database $db was not found", 404)
       case ("GET", Seq("db", db)) =>
-        if (store.listDbs().contains(db))
+        if (c.existsDb(db))
           makeJs(ex, s"Database $db exists", 200)
         else makeJs(ex, s"Database $db does not exist", 404)
 
       case ("POST", Seq("db", db, "sensor", sensor)) =>
-        if (!isAdmin(key))
-          throw new NotAuthorizedException(s"create $db/$sensor")
-        if (store.existsSensor(db, sensor))
+        c.authorizeAdmin(s"create $db/$sensor")
+        if (c.existsSensor(db, sensor))
           makeJs(ex, s"Sensor $sensor already exists in Database $db", 406)
         else {
           val j = parseJson(body(ex))
@@ -287,12 +239,12 @@ class GraftServer(spark: SparkSession, baseDir: String,
             case JString(p) => p
             case _ => throw new IllegalArgumentException("period missing")
           }
-          val metrics: Seq[MetricDef] = (j \ "metrics") match {
+          val metrics: Seq[Seq[String]] = (j \ "metrics") match {
             case JArray(xs) => xs.map {
-              case JString(m) => MetricDef(Seq(m))
-              case JArray(levels) => MetricDef(levels.collect {
+              case JString(m) => Seq(m)
+              case JArray(levels) => levels.collect {
                 case JString(l) => l
-              })
+              }
               case other => throw new IllegalArgumentException(
                 s"bad metric $other")
             }
@@ -302,60 +254,40 @@ class GraftServer(spark: SparkSession, baseDir: String,
             case JString(s) => s
             case _ => ""
           }
-          val metadata: Map[String, String] = (j \ "metadata") match {
-            case JObject(fields) => fields.collect {
-              case (k, JString(v)) => k -> v
-              case (k, JArray(xs)) => k -> xs.collect {
-                case JString(s) => s
-              }.mkString(",")
-            }.toMap
-            case _ => Map.empty
-          }
-          store.createSensor(SensorConfig(db, sensor, period, metrics,
-            metadata, optStr(j \ "read_key"), optStr(j \ "write_key")))
+          c.createSensor(db, sensor, period, metrics,
+            optStr(j \ "read_key"), optStr(j \ "write_key"),
+            metadataOf(j \ "metadata"))
           makeJs(ex, s"Sensor $sensor created ok in database $db ", 201)
         }
       case ("DELETE", Seq("db", db, "sensor", sensor)) =>
-        if (!isAdmin(key))
-          throw new NotAuthorizedException(s"delete $db/$sensor")
-        if (store.existsSensor(db, sensor)) {
-          store.deleteSensor(db, sensor)
+        c.authorizeAdmin(s"delete $db/$sensor")
+        if (c.existsSensor(db, sensor)) {
+          c.deleteSensor(db, sensor)
           makeJs(ex, s"Sensor $sensor in Database $db deleted", 200)
         } else makeJs(ex, s"Sensor $sensor or Database $db not found", 404)
       case ("GET", Seq("db", db, "sensor", sensor)) =>
-        if (store.existsSensor(db, sensor)) {
-          authSensor(key, db, sensor, write = false)
+        if (c.existsSensor(db, sensor)) {
+          c.authorize(db, sensor, write = false)
           makeJs(ex, s"Sensor $sensor and database $db exist", 200)
         } else
           makeJs(ex, s"Sensor $sensor or database $db do not exists", 404)
       case ("POST", Seq("db", db, "sensor", sensor, "set_metadata")) =>
-        if (!isAdmin(key))
-          throw new NotAuthorizedException(s"set_metadata $db/$sensor")
-        if (!store.existsSensor(db, sensor))
+        c.authorizeAdmin(s"set_metadata $db/$sensor")
+        if (!c.existsSensor(db, sensor))
           makeJs(ex, s"sensor=$sensor did not exist in database=$db ", 404)
         else {
-          val j = parseJson(body(ex))
-          val md = j match {
-            case JObject(fields) => fields.collect {
-              case (k, JString(v)) => k -> v
-              case (k, JArray(xs)) => k -> xs.collect {
-                case JString(s) => s
-              }.mkString(",")
-            }.toMap
-            case _ => Map.empty[String, String]
-          }
-          client(key).updateMetadata(db, sensor, md)
+          c.updateMetadata(db, sensor, metadataOf(parseJson(body(ex))))
           makeJs(ex,
             s"sensor=$sensor in database=$db configuration changed ok", 200)
         }
 
       // ---- ingest (`server.py:304-328`) ----
-      case ("POST", Seq("influx")) => influxWrite(ex, key, 0.0)
+      case ("POST", Seq("influx")) => influxWrite(ex, c, 0.0)
       case ("POST", Seq("influx", fill)) =>
-        influxWrite(ex, key, graft.ingest.Influx.parseFillValue(fill))
-      case ("POST", Seq("influx_binary")) => binaryWrite(ex, key, 0.0)
+        influxWrite(ex, c, graft.ingest.Influx.parseFillValue(fill))
+      case ("POST", Seq("influx_binary")) => binaryWrite(ex, c, 0.0)
       case ("POST", Seq("influx_binary", fill)) =>
-        binaryWrite(ex, key, graft.ingest.Influx.parseFillValue(fill))
+        binaryWrite(ex, c, graft.ingest.Influx.parseFillValue(fill))
 
       // ---- md5 (`server.py:486-498`) ----
       case ("GET", Seq("get_md5", rest @ _*)) =>
@@ -386,97 +318,54 @@ class GraftServer(spark: SparkSession, baseDir: String,
 
       // ---- data plane (`server.py:330-484`) ----
       case ("POST", Seq(db, sensor, "last_timestamp")) =>
-        authSensor(key, db, sensor, write = false)
-        val last: Any = store.lastTimestamp(db, sensor)
-          .map(_.toDouble).orNull
+        val last: Any = c.lastTimestamp(db, sensor).map(_.toDouble).orNull
         makeJs(ex, null, 200, "last_timestamp" -> last)
-      case ("POST", Seq(db, sensor, "read_df")) =>
-        authSensor(key, db, sensor, write = false)
-        readDf(ex, key, db, sensor)
+      case ("POST", Seq(db, sensor, "read_df")) => readDf(ex, c, db, sensor)
       case ("POST", Seq(db, sensor, "metadata")) =>
-        authSensor(key, db, sensor, write = false)
         makeJs(ex, null, 200,
-          "metadata" -> store.config(db, sensor).metadata)
+          "metadata" -> c.authorize(db, sensor, write = false).metadata)
       case ("GET", Seq(db, sensor)) =>
-        authSensor(key, db, sensor, write = false)
+        c.authorize(db, sensor, write = false)
         respond(ex, 200, renderJ(Map("db" -> db, "sensor" -> sensor)))
-      case ("POST", Seq(db, sensor, "query")) =>
-        authSensor(key, db, sensor, write = false)
-        grafanaQuery(ex, key, db, sensor)
+      case ("POST", Seq(db, sensor, "query")) => grafanaQuery(ex, c, db, sensor)
       case ("POST", Seq(db, sensor, tail)) if tail == "metrics" ||
           tail == "search" =>
-        authSensor(key, db, sensor, write = false)
-        val tuples = client(key).metricTuples(db, sensor)
-        val out: Seq[Any] =
-          if (tuples.exists(_.length > 1)) tuples
-          else tuples.map(_.head)
-        respond(ex, 200, renderJ(out))
+        respond(ex, 200, renderJ(metricsJ(c.metricTuples(db, sensor))))
 
       case _ => makeJs(ex, "Page not found", 404)
     }
 
   // ---- ingest bodies -------------------------------------------------
 
-  /** Server-boundary write gate for the ingest routes: the library
-    * client's empty-key-is-open semantic must not leak through HTTP
-    * (ADVICE r12) — every distinct (db, sensor) in the batch is
-    * checked with the exact-match `authSensor` rule BEFORE any write.
-    * Unknown sensors pass through; the write path raises its own
-    * not-found.
+  /** The client's `write` parses the lines, so the gate and the write
+    * path read the target sensor from the one parse.
     */
-  /** Header→sensor capture, identical to `Influx.parseLines`'s
-    * `regexp_extract(header, ",[^=]+=(.+)$", 1)` so the auth gate and
-    * the write path can never disagree on the target sensor.
-    */
-  private val InfluxHeaderSensor = """,[^=]+=(.+)$""".r
-
-  private def authWriteTargets(key: String,
-                               targets: Iterable[(String, String)]): Unit =
-    targets.foreach { case (db, sensor) =>
-      if (store.existsSensor(db, sensor))
-        authSensor(key, db, sensor, write = true)
-    }
-
-  private def influxWrite(ex: HttpExchange, key: String,
+  private def influxWrite(ex: HttpExchange, c: GraftClient,
                           fill: Double): Unit = {
     val lines = new String(body(ex), StandardCharsets.UTF_8)
       .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-    // (db, sensor) of an influx line: `db,tag=sensor metrics… ts`.
-    // The sensor MUST come from the same capture the write path uses
-    // (Influx.parseLines' `,[^=]+=(.+)$` over the pre-space header) —
-    // an ad-hoc split(",") would read `db,tag=s1,rest …` as sensor
-    // "s1" while the write lands on "s1,rest", letting a
-    // comma-named sensor bypass the gate (ADVICE r13).
-    authWriteTargets(key, lines.flatMap { l =>
-      val header = l.split(" ", 2)(0)
-      InfluxHeaderSensor.findFirstMatchIn(header).map { m =>
-        (header.split(",", 2)(0), m.group(1))
-      }
-    }.distinct)
-    client(key).write(lines, fill)
+    c.write(lines, fill)
     makeJs(ex, s"${lines.size} lines inserted ok", 200)
   }
 
-  private def binaryWrite(ex: HttpExchange, key: String,
+  private def binaryWrite(ex: HttpExchange, c: GraftClient,
                           fill: Double): Unit = {
     import org.apache.spark.sql.functions._
+    import spark.implicits._
     val rows = Msgpack.decodePointList(body(ex))
-    authWriteTargets(key, rows.map(r => (r.db, r.sensor)).distinct)
-    val c = client(key)
-    rows.groupBy(r => (r.db, r.sensor)).foreach { case ((db, sensor), ps) =>
-      import spark.implicits._
-      val pts = ps.map(p => (p.ts_sec, p.metric, p.value))
+    val batches = rows.groupBy(r => (r.db, r.sensor)).toSeq.map {
+      case (target, ps) => target -> ps.map(p => (p.ts_sec, p.metric, p.value))
         .toDF("ts_sec", "metric", "value")
         .select(timestamp_seconds(col("ts_sec")).as("ts"), col("metric"),
           col("value"))
-      c.writePoints(db, sensor, pts, fill)
     }
+    c.writeBatch(batches, fill)
     makeJs(ex, s"${rows.size} lines inserted ok", 200)
   }
 
   // ---- read_df wire (`server.py:339-385` ↔ `client.py:536-556`) ------
 
-  private def readDf(ex: HttpExchange, key: String, db: String,
+  private def readDf(ex: HttpExchange, c: GraftClient, db: String,
                      sensor: String): Unit = {
     // on THIS route the gzip header advertises response compression
     // (`server.py:369-371`); the request body is plain JSON — do not
@@ -491,23 +380,24 @@ class GraftServer(spark: SparkSession, baseDir: String,
     val startTs = num(j \ "start_ts").getOrElse(
       throw new IllegalArgumentException("start_ts missing"))
     val endTs = num(j \ "end_ts")
-    val metrics = store.config(db, sensor).metricNames
+    // metric list, payload width, `metrics` and metadata: one snapshot
+    val (cfg, frame) = c.readSnapshot(db, sensor, Some(startTs.toLong),
+      endTs.map(_.toLong))
+    val metrics = cfg.metricNames
     // driver guard (deliberate reference divergence — the reference
     // materializes whatever the range covers): this route COLLECTS the
     // range to the serving driver to build the wire payload, so a
     // whole-history read of a 100 TB sensor would OOM the server. Cap
     // the collect at readDfMaxRows (+1 row to DETECT overflow without
     // counting) and answer 413 with a narrowing hint instead.
-    val capped = store.read(db, sensor, Some(startTs.toLong),
-        endTs.map(_.toLong), nanForMissing = true)
+    val rows = frame
       .limit(math.min(readDfMaxRows, Int.MaxValue - 1L).toInt + 1)
       .collect()
-    if (capped.length > readDfMaxRows) {
+    if (rows.length > readDfMaxRows) {
       makeJs(ex, s"read_df range exceeds $readDfMaxRows rows; " +
         "narrow [start_ts, end_ts] or raise readDfMaxRows", 413)
       return
     }
-    val rows = capped
     if (rows.isEmpty) { makeJs(ex, "No data", 404); return }
     val datesBuf = ByteBuffer.allocate(rows.length * 8)
       .order(ByteOrder.LITTLE_ENDIAN)
@@ -535,13 +425,10 @@ class GraftServer(spark: SparkSession, baseDir: String,
     // bytes ride the JSON string as ISO-8859-1 chars, like Flask's
     // jsonify of the .decode("ISO-8859-1") value
     val payloadStr = new String(payload, StandardCharsets.ISO_8859_1)
-    val tuples = client(key).metricTuples(db, sensor)
-    val metricsOut: Seq[Any] =
-      if (tuples.exists(_.length > 1)) tuples else tuples.map(_.head)
     val bodyJson = renderJ(Map(
       datesBytes.length.toString -> payloadStr,
-      "metrics" -> metricsOut,
-      "metadata" -> store.config(db, sensor).metadata,
+      "metrics" -> metricsJ(cfg.metrics.map(_.levels)),
+      "metadata" -> cfg.metadata,
       "compressed" -> compressed,
       "version" -> Version))
     respond(ex, 200, bodyJson)
@@ -549,7 +436,7 @@ class GraftServer(spark: SparkSession, baseDir: String,
 
   // ---- grafana (`server.py:412-475`) ---------------------------------
 
-  private def grafanaQuery(ex: HttpExchange, key: String, db: String,
+  private def grafanaQuery(ex: HttpExchange, c: GraftClient, db: String,
                            sensor: String): Unit = {
     val j = parseJson(body(ex))
     def iso(v: JValue): Long = v match {
@@ -571,7 +458,7 @@ class GraftServer(spark: SparkSession, baseDir: String,
       case JDouble(d) => d.toInt
       case _ => 1000
     }
-    val json = client(key).readGrafanaJson(db, sensor, from, to, maxDp,
+    val json = c.readGrafanaJson(db, sensor, from, to, maxDp,
       if (targets.nonEmpty) Some(targets) else None)
     respond(ex, 200, json)
   }

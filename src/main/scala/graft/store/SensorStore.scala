@@ -1,7 +1,7 @@
 package graft.store
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
@@ -58,20 +58,30 @@ class SensorStore(spark: SparkSession, baseDir: String) {
 
   // ---- catalog (B-11) ------------------------------------------------
 
+  /** Write CONFIG.JSON whole: a temp file in the sensor dir, then an
+    * atomic rename over the old one, so a reader (readers take no lock)
+    * sees the old config or the new one, never a torn file.
+    */
   def createSensor(cfg: SensorConfig): Unit = {
-    val dir = Paths.get(sensorDir(cfg.db, cfg.sensor))
-    Files.createDirectories(dir)
-    Files.write(configPath(cfg.db, cfg.sensor),
+    val dir = Files.createDirectories(Paths.get(sensorDir(cfg.db, cfg.sensor)))
+    val tmp = Files.write(
+      dir.resolve(s"CONFIG.JSON.${java.util.UUID.randomUUID()}.tmp"),
       cfg.toJson.getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, configPath(cfg.db, cfg.sensor),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
   def config(db: String, sensor: String): SensorConfig = {
+    requireSensor(db, sensor)
+    SensorConfig.fromJson(new String(
+      Files.readAllBytes(configPath(db, sensor)), StandardCharsets.UTF_8))
+  }
+
+  private def requireSensor(db: String, sensor: String): Unit = {
     if (!Files.isDirectory(Paths.get(s"$baseDir/$db")))
       throw new graft.core.DbNotFoundException(db)
     if (!existsSensor(db, sensor))
       throw new graft.core.SensorNotFoundException(db, sensor)
-    SensorConfig.fromJson(new String(
-      Files.readAllBytes(configPath(db, sensor)), StandardCharsets.UTF_8))
   }
 
   def existsSensor(db: String, sensor: String): Boolean =
@@ -112,12 +122,6 @@ class SensorStore(spark: SparkSession, baseDir: String) {
       finally s.close()
     }
   }
-
-  /** Constant-time token check (reference `database.py:142-152`). */
-  def keyOk(expected: String, provided: String): Boolean =
-    java.security.MessageDigest.isEqual(
-      expected.getBytes(StandardCharsets.UTF_8),
-      provided.getBytes(StandardCharsets.UTF_8))
 
   // ---- write path (A-3..A-8) -----------------------------------------
 
@@ -173,7 +177,7 @@ class SensorStore(spark: SparkSession, baseDir: String) {
     // only the touched partitions participate in the merge
     val touched = incoming.select("chunk_start").distinct()
       .collect().map(_.getLong(0)).toIndexedSeq
-    val existing = readRaw(db, sensor, metrics)
+    val existing = readRaw(cfg, metrics)
       .filter(col("chunk_start").isin(touched: _*))
       .select(Seq("chunk_start", "slot").map(col) ++
         metrics.map(graft.core.Cols.q): _*)
@@ -201,7 +205,7 @@ class SensorStore(spark: SparkSession, baseDir: String) {
     // partitions of every materialized rollup so no read can see a
     // pre-upsert rollup value (full rebuild when evolution widened
     // the schema — old rollup files lack the new column).
-    refreshRollups(db, sensor, touched, fullRebuild = newMetrics.nonEmpty)
+    refreshRollups(cfg, touched, fullRebuild = newMetrics.nonEmpty)
     cfg
   }
 
@@ -217,9 +221,13 @@ class SensorStore(spark: SparkSession, baseDir: String) {
     * never need the lock (parquet job commit keeps them consistent).
     */
   def withWriterLock[T](db: String, sensor: String, timeoutMs: Long = 30000,
-                        staleMs: Long = 600000)(f: => T): T =
+                        staleMs: Long = 600000)(f: => T): T = {
+    // not-found first: the lock creates the directory it locks, which
+    // would leave a missing sensor (and its db) behind as an empty dir
+    requireSensor(db, sensor)
     graft.core.PathLock.withLock(sensorDir(db, sensor), s"$db/$sensor",
       timeoutMs, staleMs)(f)
+  }
 
   /** `write` under the sensor's writer lock — safe for concurrent
     * writer jobs targeting the same sensor.
@@ -246,15 +254,13 @@ class SensorStore(spark: SparkSession, baseDir: String) {
 
   // ---- read path (B-1..B-8) ------------------------------------------
 
-  /** Raw wide frame with every config metric present as a column (lit
-    * null where no file carries it yet) and evolution fills applied to
-    * pre-`since` chunks. No time filter.
+  /** Raw wide frame of `cfg`'s sensor with each of `metrics` present
+    * as a column (lit null where no file carries it yet) and evolution
+    * fills applied to pre-`since` chunks. No time filter.
     */
-  private def readRaw(db: String, sensor: String,
-                      metrics: Seq[String]): DataFrame = {
-    val cfg = config(db, sensor)
-    val path = dataDir(db, sensor)
-    if (listChunks(db, sensor).isEmpty) {
+  private def readRaw(cfg: SensorConfig, metrics: Seq[String]): DataFrame = {
+    val path = dataDir(cfg.db, cfg.sensor)
+    if (listChunks(cfg.db, cfg.sensor).isEmpty) {
       // empty sensor: zero-row frame with the full schema
       import org.apache.spark.sql.types._
       val fields = StructField("chunk_start", LongType) ::
@@ -285,12 +291,12 @@ class SensorStore(spark: SparkSession, baseDir: String) {
   /** Raw rows in `[fromSec, toSec]` (None ⇒ open end); the chunk
     * bounds prune partitions.
     */
-  private def readRange(db: String, sensor: String, metrics: Seq[String],
+  private def readRange(cfg: SensorConfig, metrics: Seq[String],
                         fromSec: Option[Long],
                         toSec: Option[Long]): DataFrame = {
-    val tick = config(db, sensor).tickSeconds
+    val tick = cfg.tickSeconds
     val chunkDur = tick * Freq.ChunkRows
-    var df = readRaw(db, sensor, metrics)
+    var df = readRaw(cfg, metrics)
     fromSec.foreach { f =>
       val fSnap = f - f % tick
       df = df.filter(col("chunk_start") >= fSnap - fSnap % chunkDur &&
@@ -314,9 +320,10 @@ class SensorStore(spark: SparkSession, baseDir: String) {
            validateChecksums: Boolean = false,
            atol: Double = 1e-3,
            nanForMissing: Boolean = false): DataFrame = {
-    val all = config(db, sensor).metricNames
+    val cfg = config(db, sensor)
+    val all = cfg.metricNames
     val wanted = metrics.getOrElse(all)
-    var df = readRange(db, sensor, all, fromSec, toSec)
+    var df = readRange(cfg, all, fromSec, toSec)
     if (validateChecksums) {
       df = df.filter(RowChecksum.isClose(
         RowChecksum.nansum(all.map(graft.core.Cols.q)), col("checksum"),
@@ -341,7 +348,8 @@ class SensorStore(spark: SparkSession, baseDir: String) {
     if (chunks.isEmpty) return None
     // prune to the newest chunk only — the reference reads just the
     // last chunk file (database.py:522-546)
-    val row = readRaw(db, sensor, config(db, sensor).metricNames)
+    val cfg = config(db, sensor)
+    val row = readRaw(cfg, cfg.metricNames)
       .filter(col("chunk_start") === chunks.max)
       .agg(max(col("slot"))).head()
     if (row.isNullAt(0)) None else Some(row.getLong(0))
@@ -422,7 +430,7 @@ class SensorStore(spark: SparkSession, baseDir: String) {
   def materialize(db: String, sensor: String, kind: RollupKind,
                   bucketSec: Long): String = {
     val out = rollupDir(db, sensor, kind, bucketSec)
-    rollupPartials(db, sensor, kind, bucketSec, None)
+    rollupPartials(config(db, sensor), kind, bucketSec, None)
       .repartition(col("chunk_start"))
       .write.mode("overwrite").partitionBy("chunk_start").parquet(out)
     out
@@ -444,11 +452,11 @@ class SensorStore(spark: SparkSession, baseDir: String) {
   /** `kind`'s partials per (chunk, bucket), optionally restricted to a
     * chunk subset (the unit of incremental refresh).
     */
-  private def rollupPartials(db: String, sensor: String, kind: RollupKind,
+  private def rollupPartials(cfg: SensorConfig, kind: RollupKind,
                              bucketSec: Long,
                              chunks: Option[Seq[Long]]): DataFrame = {
-    val metrics = config(db, sensor).metricNames
-    var raw = readRaw(db, sensor, metrics)
+    val metrics = cfg.metricNames
+    var raw = readRaw(cfg, metrics)
     chunks.foreach(c => raw = raw.filter(col("chunk_start").isin(c: _*)))
     kind.partial(raw, Seq("chunk_start"),
       kind.storedBucket(Grid.snapSeconds(col("slot"), bucketSec)), metrics)
@@ -462,7 +470,8 @@ class SensorStore(spark: SparkSession, baseDir: String) {
   def rawPartials(db: String, sensor: String, kind: RollupKind,
                   bucket: Column, fromSec: Long, toSec: Long,
                   metrics: Seq[String]): DataFrame =
-    kind.partial(readRange(db, sensor, metrics, Some(fromSec), Some(toSec)),
+    kind.partial(
+      readRange(config(db, sensor), metrics, Some(fromSec), Some(toSec)),
       Nil, bucket, metrics)
 
   /** Materialized rollups of a sensor as (kind, bucketSec), by bucket
@@ -479,13 +488,12 @@ class SensorStore(spark: SparkSession, baseDir: String) {
     * rollup can never silently serve pre-upsert values (ADVICE r2:
     * stale-rollup invalidation).
     */
-  private def refreshRollups(db: String, sensor: String,
-                             touched: Seq[Long],
+  private def refreshRollups(cfg: SensorConfig, touched: Seq[Long],
                              fullRebuild: Boolean): Unit =
-    listRollups(db, sensor).foreach { case (k, b) =>
-      if (fullRebuild) materialize(db, sensor, k, b)
-      else overwritePartitions(rollupPartials(db, sensor, k, b, Some(touched)),
-        rollupDir(db, sensor, k, b))
+    listRollups(cfg.db, cfg.sensor).foreach { case (k, b) =>
+      if (fullRebuild) materialize(cfg.db, cfg.sensor, k, b)
+      else overwritePartitions(rollupPartials(cfg, k, b, Some(touched)),
+        rollupDir(cfg.db, cfg.sensor, k, b))
     }
 
   /** Rollup read-range guard (r16 advice #4): BOTH bounds must sit on
@@ -539,12 +547,13 @@ class SensorStore(spark: SparkSession, baseDir: String) {
     * checksums pass, matching `read(validateChecksums = true)`.
     */
   def checksumAudit(db: String, sensor: String): DataFrame = {
-    val all = config(db, sensor).metricNames
+    val cfg = config(db, sensor)
+    val all = cfg.metricNames
     val bad = col("checksum").isNotNull &&
       !RowChecksum.isClose(
         RowChecksum.nansum(all.map(graft.core.Cols.q)), col("checksum"),
         rtol = 1e-5, atol = 1e-3)
-    readRaw(db, sensor, all)
+    readRaw(cfg, all)
       .groupBy(col("chunk_start"))
       .agg(count(lit(1)).as("rows_total"),
         count(when(bad, 1)).as("rows_corrupt"))
@@ -561,7 +570,7 @@ class SensorStore(spark: SparkSession, baseDir: String) {
       c.isNotNull && !isnan(c)
     }.reduce(_ || _)
     graft.maint.VerifyStats.stats(
-      readRaw(db, sensor, metrics),
+      readRaw(cfg, metrics),
       Seq.empty, col("chunk_start"),
       ((col("slot") - col("chunk_start")) / tick).cast("long"), used)
   }

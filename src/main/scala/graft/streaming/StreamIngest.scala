@@ -511,8 +511,8 @@ object StreamIngest {
         col("r_ts"), col("r_value"))
   }
 
-  /** writeStream into the sensor store via foreachBatch upsert.
-    * Caller starts/stops the returned writer.
+  /** writeStream into the sensor store via foreachBatch upsert under
+    * the sensor's writer lock. Caller starts/stops the returned writer.
     */
   def writer(points: DataFrame, store: SensorStore, db: String,
              sensor: String, fillValue: Double = 0.0)
@@ -522,7 +522,7 @@ object StreamIngest {
       .trigger(Trigger.ProcessingTime(0L))
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         if (!batch.isEmpty) {
-          store.write(db, sensor, batch.toDF(), fillValue)
+          store.writeLocked(db, sensor, batch.toDF(), fillValue)
         }
         ()
       }
@@ -534,8 +534,8 @@ object StreamIngest {
     *
     *   lines → [[parse]] (malformed lines dropped, missing timestamps
     *   stamped at batch time) → optional [[dedupPoints]] (bounded-state
-    *   at-least-once dedup) → foreachBatch upsert under the sensor
-    *   WRITER LOCK → incremental rollup refresh.
+    *   at-least-once dedup) → [[writer]] (foreachBatch upsert under
+    *   the sensor WRITER LOCK) → incremental rollup refresh.
     *
     * Per-batch invariants, each carried by a part this composes:
     *  - ATOMIC: the micro-batch lands via parquet job commit — a reader
@@ -567,16 +567,8 @@ object StreamIngest {
               dedupWatermark: Option[String] = None)
       : DataStreamWriter[org.apache.spark.sql.Row] = {
     val pts = parse(lines, lineCol, db, sensor)
-    val deduped = dedupWatermark.fold(pts)(w => dedupPoints(pts, w))
-    deduped.writeStream
-      .outputMode("update")
-      .trigger(Trigger.ProcessingTime(0L))
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          store.writeLocked(db, sensor, batch.toDF(), fillValue)
-        }
-        ()
-      }
+    writer(dedupWatermark.fold(pts)(w => dedupPoints(pts, w)), store, db,
+      sensor, fillValue)
   }
 
   /** Streaming exact dedup bounded by the watermark: duplicate points

@@ -609,4 +609,50 @@ class GraftClientSpec extends SparkSpec {
     assert(out.length == 5)
     assert(out.map(_.getFloat(1)).toSeq == (0 until 5).map(_.toFloat))
   }
+
+  test("a write refused on one of its sensors lands on none of them: " +
+    "every target is authorized before the first write") {
+    val dir = Files.createTempDirectory("graft-batch-auth").toString
+    val admin = new GraftClient(spark, dir)
+    admin.createSensor("d", "s1", "1s", Seq(Seq("a")),
+      readKey = "rk", writeKey = "wk")
+    admin.createSensor("d", "s2", "1s", Seq(Seq("a")),
+      readKey = "rk", writeKey = "other")
+    val writer = new GraftClient(spark, dir, token = "wk")
+    intercept[graft.core.NotAuthorizedException](writer.write(Seq(
+      s"d,circuit=s1 a=1 ${t0}000000000",
+      s"d,circuit=s2 a=2 ${t0}000000000")))
+    assert(admin.store.lastTimestamp("d", "s1").isEmpty)
+    assert(admin.store.lastTimestamp("d", "s2").isEmpty)
+  }
+
+  test("an empty key matches only the empty token (database.py:170-187 " +
+    "exact match): token 'x' may not read a sensor whose read key is ''") {
+    val dir = Files.createTempDirectory("graft-empty-key").toString
+    new GraftClient(spark, dir).createSensor("d", "s", "1s", Seq(Seq("a")),
+      readKey = "", writeKey = "wk")
+    intercept[graft.core.NotAuthorizedException](
+      new GraftClient(spark, dir, token = "x").read("d", "s"))
+    new GraftClient(spark, dir).read("d", "s").collect()
+    new GraftClient(spark, dir, token = "wk").read("d", "s").collect()
+    intercept[graft.core.NotAuthorizedException](
+      new GraftClient(spark, dir).write(Seq(s"d,circuit=s a=1 ${t0}000000000")))
+  }
+
+  test("a metadata change waits for the sensor's writer lock") {
+    import scala.concurrent.duration._
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    val c = freshClient()
+    c.createSensor("d", "s", "1s", Seq(Seq("a")))
+    val pending = c.store.withWriterLock("d", "s") {
+      val f = Future(c.setLevelNames("d", "s", Seq("x", "y")))(
+        ExecutionContext.global)
+      Thread.sleep(3000)
+      assert(!f.isCompleted, "setLevelNames ran while the lock was held")
+      assert(c.levelNames("d", "s").isEmpty)
+      f
+    }
+    Await.result(pending, 60.seconds)
+    assert(c.levelNames("d", "s") == Seq("x", "y"))
+  }
 }

@@ -646,4 +646,42 @@ class SensorStoreSpec extends SparkSpec {
     files.forEachRemaining(p => if (p.toString.endsWith(".gz.parquet")) sawGz = true)
     assert(sawGz)
   }
+
+  test("CONFIG.JSON rewrites are atomic: a reader parsing the config " +
+    "while it is rewritten 200 times never sees a torn file") {
+    val st = freshStore()
+    val wide = SensorConfig("test", "cfg", "1s",
+      (0 until 300).map(i => MetricDef(Seq(s"metric_$i"))))
+    st.createSensor(wide)
+    @volatile var writing = true
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val reads = new java.util.concurrent.atomic.AtomicLong()
+    val reader = new Thread(() =>
+      while (writing) {
+        try { st.config("test", "cfg"); reads.incrementAndGet() }
+        catch { case e: Throwable => errors.add(e) }
+      })
+    reader.start()
+    try (1 to 200).foreach(i =>
+      st.createSensor(wide.copy(metadata = Map("i" -> i.toString))))
+    finally { writing = false; reader.join() }
+    assert(errors.isEmpty, s"${errors.size} failed reads, first: ${errors.peek()}")
+    assert(reads.get > 0)
+    assert(st.config("test", "cfg").metadata == Map("i" -> "200"))
+  }
+
+  test("a locked write to a missing sensor raises not-found and leaves " +
+    "no directory behind") {
+    import spark.implicits._
+    val st = freshStore()
+    val pts = Seq((1704067200L, "v", 1.0)).toDF("sec", "metric", "value")
+      .select(timestamp_seconds(col("sec")).as("ts"), col("metric"),
+        col("value"))
+    intercept[graft.core.DbNotFoundException](st.writeLocked("ghost", "s", pts))
+    assert(st.listDbs().isEmpty)
+    st.createSensor(SensorConfig("real", "s", "1s", Seq(MetricDef(Seq("v")))))
+    intercept[graft.core.SensorNotFoundException](
+      st.writeLocked("real", "ghost", pts))
+    assert(st.listSensors("real") == Seq("s"))
+  }
 }

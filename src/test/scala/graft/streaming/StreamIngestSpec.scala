@@ -1032,4 +1032,33 @@ class StreamIngestSpec extends SparkSpec {
         stream.zip(batch).filter { case (a, b) => a != b }
           .take(10).mkString("\n"))
   }
+
+  test("writer upserts under the sensor's writer lock: a micro-batch " +
+    "does not land while the lock is held") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+
+    val dir = Files.createTempDirectory("graft-stream-lock").toString
+    val store = new SensorStore(spark, dir)
+    store.createSensor(SensorConfig("test", "lk", "1s",
+      Seq(MetricDef(Seq("active")))))
+    val t0 = 1704067200L
+    val src = MemoryStream[String]
+    val points = StreamIngest.parse(src.toDF().withColumnRenamed("value", "line"),
+      "line", "test", "lk")
+    val query = StreamIngest.writer(points, store, "test", "lk").start()
+    try {
+      store.withWriterLock("test", "lk") {
+        src.addData(s"test,circuit=lk active=1 ${t0}000000000")
+        // long enough for an unlocked batch to land several times over
+        val deadline = System.currentTimeMillis() + 8000
+        while (System.currentTimeMillis() < deadline &&
+               store.lastTimestamp("test", "lk").isEmpty) Thread.sleep(200)
+        assert(store.lastTimestamp("test", "lk").isEmpty,
+          "the micro-batch landed while the writer lock was held")
+      }
+      query.processAllAvailable()
+    } finally query.stop()
+    assert(store.lastTimestamp("test", "lk").contains(t0))
+  }
 }
