@@ -3,8 +3,6 @@ package graft
 import java.io.PrintStream
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.SparkSession
 
 import graft.store.SensorStore
@@ -29,10 +27,10 @@ import graft.store.SensorStore
   * `--force` is the explicit consent).
   *
   * There is NO `repair` subcommand: the reference repairs truncated
-  * chunk files (`__main__.py:110-172`) — a failure class parquet's
-  * atomic commit removes by construction (a partial write never
-  * becomes visible). Row-value corruption, the class that remains, is
-  * `verify`'s job. `--help` says so.
+  * chunk files (`__main__.py:110-172`) — a failure class the store's
+  * atomic commit removes by construction (a commit record lists only
+  * the files of a finished write). Row-value corruption, the class
+  * that remains, is `verify`'s job. `--help` says so.
   */
 object Main {
 
@@ -49,8 +47,8 @@ object Main {
       |           --base-dir DIR   store root (required)
       |           --db NAME        only this database
       |  migrate  Re-write sensor data with a different parquet codec.
-      |           DRY-RUN by default; --force applies. The swap is
-      |           atomic per sensor (write-new + two renames).
+      |           DRY-RUN by default; --force applies. The rewrite
+      |           commits as one new version of each sensor.
       |           --base-dir DIR   store root (required)
       |           --db NAME        only this database
       |           --target CODEC   zstd (default) | gzip | snappy | none
@@ -65,7 +63,7 @@ object Main {
       |           --port N            listen port (default 5000)
       |
       |  There is no `repair`: the reference repairs truncated chunk
-      |  files, a failure class parquet's atomic commit removes by
+      |  files, a failure class the store's atomic commit removes by
       |  construction. Value-level corruption is what `verify` reports.
       |""".stripMargin
 
@@ -121,7 +119,7 @@ object Main {
       case "migrate" => migrate(store, baseDir, dbs, opts.target,
         opts.force, out)
       case "repair" =>
-        out.println("repair: not needed on this store — parquet's " +
+        out.println("repair: not needed on this store — its " +
           "atomic commit cannot leave a truncated chunk visible. " +
           "Run `verify` for value-level integrity.")
         2
@@ -222,17 +220,6 @@ object Main {
     0
   }
 
-  private def dataFiles(baseDir: String, db: String,
-                        sensor: String): Seq[String] = {
-    val dir = Paths.get(baseDir, db, sensor, "data")
-    if (!Files.isDirectory(dir)) return Seq.empty
-    Files.walk(dir).iterator().asScala
-      .filter(p => Files.isRegularFile(p))
-      .map(_.getFileName.toString)
-      .filter(n => n.endsWith(".parquet") && !n.startsWith("."))
-      .toSeq
-  }
-
   private def migrate(store: SensorStore, baseDir: String,
                       dbs: Seq[String], target: String, force: Boolean,
                       out: PrintStream): Int = {
@@ -247,7 +234,7 @@ object Main {
     var migrated = 0
     var skipped = 0
     for ((db, sensor) <- sensors) {
-      val files = dataFiles(baseDir, db, sensor)
+      val files = store.dataFiles(db, sensor).map(Paths.get(_).getFileName.toString)
       if (files.isEmpty) {
         out.println(s"  SKIP    $db/$sensor (no chunks)"); skipped += 1
       } else if (files.forall(inTarget)) {

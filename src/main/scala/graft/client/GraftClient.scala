@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Grid
 import graft.ingest.{Influx, Pivot}
 import graft.read.Downsample
-import graft.store.{MetricDef, RollupKind, SensorConfig, SensorStore}
+import graft.store.{MetricDef, RollupKind, SensorConfig, SensorStore, SensorVersion}
 
 /** Library façade mirroring the reference client's public surface
   * (`/root/reference/src/ong_tsdb/client.py` — `OngTsdbClient`), minus
@@ -50,14 +50,16 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
 
   /** The one access gate, the reference's `_check_auth`
     * (`database.py:170-187`): a write needs the sensor's write key, a
-    * read its read or write key. Returns the config it read, so the
-    * caller works from the same snapshot the decision was made on.
+    * read its read or write key. Returns the version it resolved, so
+    * the caller reads exactly the config and files the decision was
+    * made on.
     */
-  def authorize(db: String, sensor: String, write: Boolean): SensorConfig = {
-    val cfg = store.config(db, sensor)
+  def authorize(db: String, sensor: String, write: Boolean): SensorVersion = {
+    val v = store.resolve(db, sensor)
+    val cfg = v.config
     if (write) check(Seq(cfg.writeKey), s"write $db/$sensor")
     else check(Seq(cfg.readKey, cfg.writeKey), s"read $db/$sensor")
-    cfg
+    v
   }
 
   /** Catalog mutation (create/delete a db or sensor) is admin-only over
@@ -103,8 +105,8 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
   def updateToken(newToken: String): GraftClient =
     new GraftClient(spark, baseDir, newToken, adminKey)
 
-  /** Reference `config_reload` (`client.py:384-390`): configs are read
-    * from disk on every access in this engine, so reload is a no-op
+  /** Reference `config_reload` (`client.py:384-390`): every access
+    * resolves the sensor's current commit record, so reload is a no-op
     * kept for call-site parity.
     */
   def configReload(): Unit = ()
@@ -146,16 +148,14 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
       metadata = cfg.metadata + ("level_names" -> names.mkString(","))))
 
   /** A metadata change, write-gated like the reference's
-    * `update_metadata`, read-modify-written under the writer lock so it
-    * cannot drop a metric that a concurrent `write` just added. The
-    * gate runs before the lock, so a refused caller never waits for it.
+    * `update_metadata`, committed by `SensorStore.updateConfig` under
+    * the writer lock. The gate runs before the lock, so a refused
+    * caller never waits for it.
     */
   private def rewriteConfig(db: String, sensor: String)(
       f: SensorConfig => SensorConfig): Unit = {
     authorize(db, sensor, write = true)
-    store.withWriterLock(db, sensor) {
-      store.createSensor(f(store.config(db, sensor)))
-    }
+    store.updateConfig(db, sensor)(f)
   }
 
   def levelNames(db: String, sensor: String): Seq[String] =
@@ -219,7 +219,7 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
       authorize(db, sensor, write = true)
     }
     batches.foreach { case ((db, sensor), points) =>
-      store.writeLocked(db, sensor, points, fillValue)
+      store.write(db, sensor, points, fillValue)
     }
   }
 
@@ -242,33 +242,32 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
   def read(db: String, sensor: String,
            fromSec: Option[Long] = None, toSec: Option[Long] = None,
            metrics: Option[Seq[String]] = None): DataFrame = {
-    authorize(db, sensor, write = false)
-    store.read(db, sensor, fromSec, toSec, metrics)
+    store.readVersion(authorize(db, sensor, write = false), fromSec, toSec,
+      metrics)
   }
 
-  /** The `read_df` snapshot: the config the gate read and the wide
-    * frame of exactly its metrics, unwritten cells as NaN (the
-    * reference's float32 parity), so a schema evolution landing
-    * mid-request cannot make the metric list disagree with the payload.
+  /** The `read_df` snapshot: the config of the version the gate
+    * resolved and the wide frame of exactly its metrics, unwritten
+    * cells as NaN (the reference's float32 parity), so a schema
+    * evolution landing mid-request cannot make the metric list disagree
+    * with the payload.
     */
   def readSnapshot(db: String, sensor: String, fromSec: Option[Long],
                    toSec: Option[Long]): (SensorConfig, DataFrame) = {
-    val cfg = authorize(db, sensor, write = false)
-    (cfg, store.read(db, sensor, fromSec, toSec, Some(cfg.metricNames),
-      nanForMissing = true))
+    val v = authorize(db, sensor, write = false)
+    (v.config, store.readVersion(v, fromSec, toSec,
+      Some(v.config.metricNames), nanForMissing = true))
   }
 
-  def lastTimestamp(db: String, sensor: String): Option[Long] = {
-    authorize(db, sensor, write = false)
-    store.lastTimestamp(db, sensor)
-  }
+  def lastTimestamp(db: String, sensor: String): Option[Long] =
+    store.lastTimestamp(authorize(db, sensor, write = false))
 
   /** Tuple metrics exactly as the reference's `get_metrics` returns
     * them for a MultiIndex sensor — a list of level tuples
     * (`test_client.py:180-182`). Flat sensors return 1-element tuples.
     */
   def metricTuples(db: String, sensor: String): Seq[Seq[String]] =
-    authorize(db, sensor, write = false).metrics.map(_.levels)
+    authorize(db, sensor, write = false).config.metrics.map(_.levels)
 
   /** The TRUE MultiIndex read (reference `client.py:545-547`): the
     * wide frame whose every metric column carries its LEVEL TUPLE and
@@ -286,9 +285,10 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
   def readMultiIndex(db: String, sensor: String,
                      fromSec: Option[Long] = None,
                      toSec: Option[Long] = None): DataFrame = {
-    val cfg = authorize(db, sensor, write = false)
+    val v = authorize(db, sensor, write = false)
+    val cfg = v.config
     val names = levelNamesOf(cfg)
-    store.read(db, sensor, fromSec, toSec, Some(cfg.metricNames)).select(
+    store.readVersion(v, fromSec, toSec, Some(cfg.metricNames)).select(
       col("ts") +: cfg.metrics.map { m =>
         val b = new org.apache.spark.sql.types.MetadataBuilder()
           .putStringArray("levels", m.levels.toArray)
@@ -317,14 +317,14 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
     * raw — when `useRollups` is off, `coarse` is None or nothing
     * aligns, so routing changes cost, never values.
     */
-  private def route(cfg: SensorConfig, kind: RollupKind,
+  private def route(v: SensorVersion, kind: RollupKind,
                     fromSec: Long, toSec: Long, coarse: Option[Long],
                     useRollups: Boolean): Option[Long] =
     if (!useRollups) None
-    // equal dir names ⇔ same family (for quantiles, same binWidth)
-    else coarse.flatMap(c => store.listRollups(cfg.db, cfg.sensor).collect {
-      case (k, b) if k.dirName(b) == kind.dirName(b) && b <= c &&
-          c % b == 0 && fromSec % b == 0 && (toSec + 1) % b == 0 => b
+    else coarse.flatMap(c => v.rollups.collect {
+      case r if r.sameAs(kind, r.bucketSec) && r.bucketSec <= c &&
+          c % r.bucketSec == 0 && fromSec % r.bucketSec == 0 &&
+          (toSec + 1) % r.bucketSec == 0 => r.bucketSec
     }.maxOption)
 
   /** A routed aggregate read of `metrics` (default: every metric of
@@ -339,14 +339,13 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
                               metrics: Option[Seq[String]],
                               rawBucket: Column => Column,
                               rawTs: Column): DataFrame = {
-    val cfg = authorize(db, sensor, write = false)
-    val ms = metrics.getOrElse(cfg.metricNames)
-    route(cfg, kind, fromSec, toSec, coarse, useRollups) match {
+    val v = authorize(db, sensor, write = false)
+    val ms = metrics.getOrElse(v.config.metricNames)
+    route(v, kind, fromSec, toSec, coarse, useRollups) match {
       case Some(b) =>
-        store.readRollup(db, sensor, kind, b, coarse.get, Some(fromSec),
-          Some(toSec), Some(ms))
+        store.readRollup(v, kind, b, coarse.get, Some(fromSec), Some(toSec), ms)
       case None =>
-        kind.finish(store.rawPartials(db, sensor, kind,
+        kind.finish(store.rawPartials(v, kind,
           rawBucket(col("slot")).as("cbucket"), fromSec, toSec, ms),
           rawTs, ms)
     }
@@ -401,15 +400,15 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
                   maxDataPoints: Int,
                   targets: Option[Seq[String]] = None,
                   useRollups: Boolean = true): DataFrame = {
-    val cfg = authorize(db, sensor, write = false)
-    val wanted = targets.getOrElse(cfg.metricNames)
-    val wide = route(cfg, RollupKind.First, fromSec, toSec,
+    val v = authorize(db, sensor, write = false)
+    val wanted = targets.getOrElse(v.config.metricNames)
+    val wide = route(v, RollupKind.First, fromSec, toSec,
         integralSpread(fromSec, toSec, maxDataPoints), useRollups) match {
       case Some(b) =>
-        store.readRollup(db, sensor, RollupKind.First, b, b, Some(fromSec),
-          Some(toSec), Some(wanted))
+        store.readRollup(v, RollupKind.First, b, b, Some(fromSec),
+          Some(toSec), wanted)
       case None =>
-        store.read(db, sensor, Some(fromSec), Some(toSec), Some(wanted))
+        store.readVersion(v, Some(fromSec), Some(toSec), Some(wanted))
     }
     val withSec = wide.withColumn("sec", Grid.tsSeconds(col("ts")))
     val long = Pivot.wideToLong(withSec, Seq("sec"), wanted)
@@ -473,15 +472,15 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
   def readGrafanaShared(db: String, sensor: String, fromSec: Long,
                         toSec: Long, maxDataPoints: Int,
                         targets: Option[Seq[String]] = None): DataFrame = {
-    val cfg = authorize(db, sensor, write = false)
-    shared(db, sensor, fromSec, toSec, maxDataPoints,
-      targets.getOrElse(cfg.metricNames))
+    val v = authorize(db, sensor, write = false)
+    shared(v, fromSec, toSec, maxDataPoints,
+      targets.getOrElse(v.config.metricNames))
   }
 
-  /** [[readGrafanaShared]] of `wanted`, past the gate. */
-  private def shared(db: String, sensor: String, fromSec: Long, toSec: Long,
+  /** [[readGrafanaShared]] of `wanted` in the version the gate resolved. */
+  private def shared(v: SensorVersion, fromSec: Long, toSec: Long,
                      maxDataPoints: Int, wanted: Seq[String]): DataFrame = {
-    val wide = store.read(db, sensor, Some(fromSec), Some(toSec), Some(wanted))
+    val wide = store.readVersion(v, Some(fromSec), Some(toSec), Some(wanted))
     val spread = Downsample.spreadOf(fromSec, toSec, maxDataPoints)
     val firstRow = wide.withColumn("sec", Grid.tsSeconds(col("ts")))
       .withColumn("bucket", Downsample.bucket(col("sec"), fromSec, spread))
@@ -513,9 +512,9 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
   def readGrafanaJson(db: String, sensor: String, fromSec: Long,
                       toSec: Long, maxDataPoints: Int,
                       targets: Option[Seq[String]] = None): String = {
-    val cfg = authorize(db, sensor, write = false)
-    val wanted = targets.getOrElse(cfg.metricNames)
-    val long = shared(db, sensor, fromSec, toSec, maxDataPoints, wanted)
+    val v = authorize(db, sensor, write = false)
+    val wanted = targets.getOrElse(v.config.metricNames)
+    val long = shared(v, fromSec, toSec, maxDataPoints, wanted)
     val per = long
       .withColumn("dp", format_string("[%f,%f]",
         col("value").cast("double"), col("ts_ms").cast("double")))

@@ -1,7 +1,10 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s._
+
+import graft.core.CommitLog
 
 /** Corpus-owning ingest surface (r15 verdict ask #5): ONE write path
   * that appends a documents batch and refreshes every derived
@@ -20,14 +23,16 @@ import org.apache.spark.sql.functions._
   *    (replace/delete) committed at version V. The LIVE corpus is
   *    the union of the dirs the current commit record lists; dirs no
   *    commit record references are invisible.
-  *  - `meta_v<V>/`  the COMMIT RECORDS: one row
-  *    `(version, n, docs_dirs)` each. The current store state is the
-  *    highest V whose dir carries `_SUCCESS` — committing a version
-  *    IS writing its meta dir, an atomic job commit; nothing else is
-  *    a commit. Records older than V-1 are pruned after each commit.
-  *  - `txn_v<V>/`  write-ahead ingest INTENT (one row: the batch's
-  *    id-level fingerprint), written before any index refresh so a
-  *    torn ingest's re-run can verify it is redoing the SAME
+  *  - `_commit/v<V>.json`  the COMMIT RECORDS ([[graft.core.CommitLog]],
+  *    the protocol `SensorStore` shares): `(version, n, docs_dirs)`
+  *    and, for an ingest, its batch fingerprint. The current store
+  *    state is the highest V present — committing a version IS
+  *    creating its record; nothing else is a commit. Records older
+  *    than V-1 are pruned after each commit, and so are the segments
+  *    only they list.
+  *  - `_commit/intent_v<V>.json`  write-ahead ingest INTENT (the
+  *    batch's id-level fingerprint), written before any index refresh
+  *    so a torn ingest's re-run can verify it is redoing the SAME
   *    transaction and a DIFFERENT batch fails loudly instead of
   *    healing the wrong redo.
   *  - `index/bm25/`, `index/exact/`, `index/near/`, `index/semantic/`
@@ -38,7 +43,7 @@ import org.apache.spark.sql.functions._
   * Transactional commit order of [[ingestBatch]] — version-gate
   * routing makes the multi-artifact refresh atomic WITHOUT a
   * coordinator:
-  *  1. write the `txn_v<V+1>` intent (or verify it, on a redo);
+  *  1. write the `intent_v<V+1>` intent (or verify it, on a redo);
   *  2. refresh every enabled index, stamping the NEW version v+1
   *     (each refresh is IDEMPOTENT — its rows go to the `v=<v+1>`
   *     partition via dynamic overwrite, so a redo replaces rather
@@ -47,10 +52,10 @@ import org.apache.spark.sql.functions._
   *     current: [[DedupIndex.admitRefresh]]);
   *  3. write the batch segment `docs/b<V+1>` (overwrite — a redo
   *     rewrites the same dir);
-  *  4. commit `meta_v<V+1>` — the one and only commit point.
+  *  4. commit record `v<V+1>` — the one and only commit point.
   * A crash ANYWHERE before step 4 leaves the current commit record at
   * V: already-refreshed indexes read v+1 ≠ V → their probes fall back
-  * to the session build over the dirs meta_v<V> lists (the pre-ingest
+  * to the session build over the dirs record V lists (the pre-ingest
   * corpus — correct by construction); the un-referenced batch segment
   * is invisible. Re-running the SAME ingest verifies the intent,
   * re-applies each step idempotently, and commits — "re-ingest
@@ -114,62 +119,49 @@ object DocStore {
   // commit records
   // ------------------------------------------------------------------
 
-  private def fs(spark: SparkSession, p: String) =
-    new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+  private def corrupt = new IllegalStateException("corrupt DocStore record")
 
-  /** Versions with a COMMITTED record dir of the given prefix (its
-    * `_SUCCESS` present — a torn record write is not a commit). */
-  private def committedVersions(spark: SparkSession, root: String,
-                                prefix: String): Seq[Long] = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val f = fs(spark, root)
-    if (!f.exists(rootPath)) Seq.empty
-    else f.listStatus(rootPath).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith(prefix))
-      .flatMap(n => scala.util.Try(n.stripPrefix(prefix).toLong).toOption)
-      .filter(v => f.exists(
-        new org.apache.hadoop.fs.Path(s"$root/$prefix$v/_SUCCESS")))
+  private def docsDirs(rec: JValue): List[String] = rec \ "docs_dirs" match {
+    case JArray(ds) => ds.collect { case JString(d) => d }
+    case _ => throw corrupt
   }
 
-  private def currentMetaRow(spark: SparkSession, root: String): Row = {
-    val vs = committedVersions(spark, root, "meta_v")
-    require(vs.nonEmpty, s"no committed DocStore at $root")
-    spark.read.parquet(s"$root/meta_v${vs.max}").head()
+  private def long(j: JValue): Long = j match {
+    case JInt(x) => x.toLong
+    case JLong(x) => x
+    case _ => throw corrupt
   }
 
-  def version(spark: SparkSession, root: String): Long =
-    currentMetaRow(spark, root).getAs[Long]("version")
+  private def log(root: String) = new CommitLog(root, docsDirs)
 
-  def count(spark: SparkSession, root: String): Long =
-    currentMetaRow(spark, root).getAs[Long]("n")
+  /** The current record: `(version, n, docs_dirs)`. */
+  private def current(root: String): (Long, Long, List[String]) =
+    log(root).current() match {
+      case Some((v, rec)) => (v, long(rec \ "n"), docsDirs(rec))
+      case None =>
+        throw new IllegalArgumentException(s"no committed DocStore at $root")
+    }
+
+  def version(spark: SparkSession, root: String): Long = current(root)._1
+
+  def count(spark: SparkSession, root: String): Long = current(root)._2
 
   /** The LIVE corpus: the union of the segment dirs the current
     * commit record lists. */
-  def docs(spark: SparkSession, root: String): DataFrame = {
-    val dirs = currentMetaRow(spark, root)
-      .getSeq[String](2).map(d => s"$root/$d")
-    spark.read.parquet(dirs: _*)
-  }
+  def docs(spark: SparkSession, root: String): DataFrame =
+    spark.read.parquet(current(root)._3.map(d => s"$root/$d"): _*)
 
-  /** Committing a version IS writing its record dir — atomic via the
-    * parquet job commit; everything before this is invisible. Prunes
-    * records older than the previous version afterwards (the previous
-    * stays so a reader that listed mid-commit still resolves). */
-  private def commitMeta(spark: SparkSession, root: String, v: Long,
-                         n: Long, docsDirs: Seq[String]): Unit = {
-    spark.range(1).select(lit(v).as("version"), lit(n).as("n"),
-        array(docsDirs.map(lit): _*).as("docs_dirs"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/meta_v$v")
-    val f = fs(spark, root)
-    (committedVersions(spark, root, "meta_v") ++
-        committedVersions(spark, root, "txn_v"))
-      .filter(_ <= v - 2).distinct.foreach { old =>
-        Seq(s"$root/meta_v$old", s"$root/txn_v$old").foreach(p =>
-          scala.util.Try(f.delete(new org.apache.hadoop.fs.Path(p), true)))
-      }
-  }
+  /** Commit version `v` listing `docsDirs`; `fp` is the ingest batch's
+    * fingerprint. Segments only pruned records list go with them (the
+    * previous record stays, so a reader that resolved it mid-commit
+    * still finds its segments). */
+  private def commit(root: String, v: Long, n: Long, docsDirs: Seq[String],
+                     fp: Option[(Long, Long)]): Unit =
+    log(root).commit(v, JObject(
+      "version" -> JLong(v), "n" -> JLong(n),
+      "docs_dirs" -> JArray(docsDirs.map(JString(_)).toList),
+      "fp" -> fp.fold[JValue](JNull) { case (fn, fh) =>
+        JArray(List(JLong(fn), JLong(fh))) }))
 
   private def withStoreLock[T](root: String)(f: => T): T =
     graft.core.PathLock.withLock(root, s"docstore:$root")(f)
@@ -193,12 +185,11 @@ object DocStore {
     * version 1, the commit record last. */
   def init(spark: SparkSession, root: String, df: DataFrame,
            cfg: Config): String = withStoreLock(root) {
-    require(committedVersions(spark, root, "meta_v").isEmpty,
-      s"DocStore already committed at $root")
+    require(log(root).versions.isEmpty, s"DocStore already committed at $root")
     df.write.mode("overwrite").parquet(s"$root/docs/b1")
     val corpus = spark.read.parquet(s"$root/docs/b1")
     buildIndexes(spark, root, corpus, cfg, 1L)
-    commitMeta(spark, root, 1L, corpus.count(), Seq("docs/b1"))
+    commit(root, 1L, corpus.count(), Seq("docs/b1"), None)
     root
   }
 
@@ -226,19 +217,17 @@ object DocStore {
     * with a different batch fails loudly. Returns the new version. */
   def ingestBatch(spark: SparkSession, root: String, batch: DataFrame,
                   cfg: Config): Long = withStoreLock(root) {
-    val m = currentMetaRow(spark, root)
-    val v = m.getAs[Long]("version") + 1
+    val (cur, n, dirs) = current(root)
+    val v = cur + 1
     val (bn, bh) = fingerprintOf(batch, cfg.idCol)
-    if (committedVersions(spark, root, "txn_v").contains(v)) {
-      val t = spark.read.parquet(s"$root/txn_v$v").head()
-      require(t.getAs[Long]("fp_n") == bn && t.getAs[Long]("fp_h") == bh,
+    log(root).intent(v) match {
+      case Some(t) => require(long(t \ "fp_n") == bn && long(t \ "fp_h") == bh,
         s"torn ingest at $root v$v was of a DIFFERENT batch — re-run " +
           "the original batch to heal it, or rebuildIndexes after a " +
           "manual repair")
-    } else
-      spark.range(1).select(lit(v).as("version"), lit(bn).as("fp_n"),
-          lit(bh).as("fp_h"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/txn_v$v")
+      case None => log(root).writeIntent(v, JObject("version" -> JLong(v),
+        "fp_n" -> JLong(bn), "fp_h" -> JLong(bh)))
+    }
     if (cfg.bm25)
       TextStats.refreshBm25Index(spark, bm25Path(root), batch,
         cfg.idCol, cfg.textCol, newVersion = Some(v))
@@ -253,8 +242,7 @@ object DocStore {
         cfg.idCol, cfg.vecCol.get, newVersion = Some(v)))
     val seg = s"docs/b$v"
     batch.write.mode("overwrite").parquet(s"$root/$seg")
-    commitMeta(spark, root, v, m.getAs[Long]("n") + bn,
-      m.getSeq[String](2) :+ seg)
+    commit(root, v, n + bn, dirs :+ seg, Some((bn, bh)))
     v
   }
 
@@ -295,19 +283,17 @@ object DocStore {
     * record). */
   private def rewrite(spark: SparkSession, root: String, cfg: Config,
                       merged: DataFrame): Long = {
-    val m = currentMetaRow(spark, root)
     // fence ABOVE any written ingest intent: a torn ingest may have
     // stamped artifacts at meta+1 already (intent always precedes the
     // refreshes), and a rewrite committing at that same version would
     // make those stale artifacts version-match the rewritten corpus —
     // wrong verdicts served as fresh. Skipping the intent's version
     // keeps them mismatched (fallback) until rebuildIndexes.
-    val txns = committedVersions(spark, root, "txn_v")
-    val v = (m.getAs[Long]("version") max txns.foldLeft(0L)(_ max _)) + 1
+    val v = (version(spark, root) +: log(root).intents).max + 1
     val seg = s"docs/r$v"
     merged.write.mode("overwrite").parquet(s"$root/$seg")
     val n = spark.read.parquet(s"$root/$seg").count()
-    commitMeta(spark, root, v, n, Seq(seg))
+    commit(root, v, n, Seq(seg), None)
     v
   }
 
@@ -324,31 +310,15 @@ object DocStore {
     // state, so a torn ingest's half-applied intent no longer guards
     // anything — dropping it unblocks future ingests from the
     // different-batch redo check
-    val f = fs(spark, root)
-    committedVersions(spark, root, "txn_v").filter(_ > v).foreach(tv =>
-      scala.util.Try(f.delete(
-        new org.apache.hadoop.fs.Path(s"$root/txn_v$tv"), true)))
+    log(root).intents.filter(_ > v).foreach(log(root).dropIntent)
     v
   }
 
-  /** Drop corpus segment dirs no retained commit record references
-    * (a rewrite leaves the pre-rewrite segments on disk so the
-    * previous record stays resolvable). Run it once post-rewrite
-    * readers have drained — the retention valve, like the store's
-    * `deleteBefore`. */
+  /** Drop corpus segment dirs no retained commit record references:
+    * what a torn ingest or rewrite left behind (each commit already
+    * deletes the segments only the records it prunes list). */
   def vacuum(spark: SparkSession, root: String): Unit =
-    withStoreLock(root) {
-      val keep = committedVersions(spark, root, "meta_v")
-        .flatMap(mv => spark.read.parquet(s"$root/meta_v$mv").head()
-          .getSeq[String](2))
-        .map(_.stripPrefix("docs/")).toSet
-      val f = fs(spark, root)
-      val docsRoot = new org.apache.hadoop.fs.Path(s"$root/docs")
-      if (f.exists(docsRoot))
-        f.listStatus(docsRoot).toSeq.map(_.getPath)
-          .filterNot(p => keep.contains(p.getName))
-          .foreach(p => scala.util.Try(f.delete(p, true)))
-    }
+    withStoreLock(root) { log(root).sweep(Seq("docs")) }
 
   // ------------------------------------------------------------------
   // store-bound routed probes: corpus = the store's docs, expected

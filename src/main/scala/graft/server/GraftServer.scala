@@ -19,8 +19,9 @@ import graft.ingest.Msgpack
   * dependencies; a production deployment would front the same handler
   * with any servlet engine). Route-for-route with the reference:
   *
-  *  - `GET /` hello; `POST /config_reload` (config is read per call
-  *    here, so reload is a no-op ack — `server.py:112-118`)
+  *  - `GET /` hello; `POST /config_reload` (each call resolves the
+  *    sensor's commit record, so reload is a no-op ack —
+  *    `server.py:112-118`)
   *  - `POST|DELETE|GET /db/<db>` create/delete/exists
   *    (`server.py:126-156`; create → 201, already-exists → 406,
   *    missing → 404)
@@ -143,7 +144,7 @@ class GraftServer(spark: SparkSession, baseDir: String,
   }
 
   /** Parse a request body. A parse error is the client's (400); the
-    * same error from a stored file stays a server fault (500). */
+    * same error from a stored record stays a server fault (500). */
   private def parseJson(bytes: Array[Byte]): JValue =
     try JsonMethods.parse(new String(bytes, StandardCharsets.UTF_8))
     catch {
@@ -237,7 +238,7 @@ class GraftServer(spark: SparkSession, baseDir: String,
           val j = parseJson(body(ex))
           val period = (j \ "period") match {
             case JString(p) => p
-            case _ => throw new IllegalArgumentException("period missing")
+            case _ => throw new BadRequestException("period missing")
           }
           val metrics: Seq[Seq[String]] = (j \ "metrics") match {
             case JArray(xs) => xs.map {
@@ -245,10 +246,9 @@ class GraftServer(spark: SparkSession, baseDir: String,
               case JArray(levels) => levels.collect {
                 case JString(l) => l
               }
-              case other => throw new IllegalArgumentException(
-                s"bad metric $other")
+              case other => throw new BadRequestException(s"bad metric $other")
             }
-            case _ => throw new IllegalArgumentException("metrics missing")
+            case _ => throw new BadRequestException("metrics missing")
           }
           def optStr(f: JValue) = f match {
             case JString(s) => s
@@ -323,7 +323,7 @@ class GraftServer(spark: SparkSession, baseDir: String,
       case ("POST", Seq(db, sensor, "read_df")) => readDf(ex, c, db, sensor)
       case ("POST", Seq(db, sensor, "metadata")) =>
         makeJs(ex, null, 200,
-          "metadata" -> c.authorize(db, sensor, write = false).metadata)
+          "metadata" -> c.authorize(db, sensor, write = false).config.metadata)
       case ("GET", Seq(db, sensor)) =>
         c.authorize(db, sensor, write = false)
         respond(ex, 200, renderJ(Map("db" -> db, "sensor" -> sensor)))
@@ -378,7 +378,7 @@ class GraftServer(spark: SparkSession, baseDir: String,
       case _ => None
     }
     val startTs = num(j \ "start_ts").getOrElse(
-      throw new IllegalArgumentException("start_ts missing"))
+      throw new BadRequestException("start_ts missing"))
     val endTs = num(j \ "end_ts")
     // metric list, payload width, `metrics` and metadata: one snapshot
     val (cfg, frame) = c.readSnapshot(db, sensor, Some(startTs.toLong),
@@ -440,10 +440,13 @@ class GraftServer(spark: SparkSession, baseDir: String,
                            sensor: String): Unit = {
     val j = parseJson(body(ex))
     def iso(v: JValue): Long = v match {
-      case JString(s) => java.time.Instant.parse(s).getEpochSecond
+      case JString(s) =>
+        try java.time.Instant.parse(s).getEpochSecond
+        catch { case e: java.time.format.DateTimeParseException =>
+          throw new BadRequestException(e.getMessage) }
       case JDouble(d) => d.toLong
       case JInt(i) => i.toLong
-      case _ => throw new IllegalArgumentException("bad range timestamp")
+      case _ => throw new BadRequestException("bad range timestamp")
     }
     val from = iso(j \ "range" \ "from")
     val to = iso(j \ "range" \ "to")

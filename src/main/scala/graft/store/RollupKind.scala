@@ -12,8 +12,9 @@ import graft.ingest.Pivot
   * materializes per (chunk, bucket) and answers coarser reads from —
   * the pre-aggregated downsample tables SURVEY §4 flags as the scale
   * path for dashboard reads. A kind is four things:
-  *  - `dirName(bucketSec)`: the rollup's directory under the sensor,
-  *    its on-disk identity (refresh and retention find rollups by it);
+  *  - `name` (and a quantile's `binWidth`): its identity in the
+  *    sensor's commit record; `dirName(bucketSec)` names the directory
+  *    its files go under;
   *  - `partial`: the aggregate over raw wide rows (`slot` + metric
   *    columns) grouped by key columns and a bucket column;
   *  - `merge`: stored partials re-aggregated to a coarser bucket
@@ -28,8 +29,8 @@ import graft.ingest.Pivot
   * only in cost.
   */
 sealed trait RollupKind {
-  def prefix: String
-  def dirName(bucketSec: Long): String = s"$prefix$bucketSec"
+  def name: String
+  def dirName(bucketSec: Long): String = s"rollup_${name}_$bucketSec"
 
   /** The stored bucket key built from bucket-start seconds, and the
     * stored key read back as seconds.
@@ -51,23 +52,16 @@ object RollupKind {
     */
   val SketchLgK = 12
 
-  private val QuantilePrefix = "quantrollup_"
-
-  /** Inverse of `dirName`: the kind and bucket a rollup directory
-    * holds, None for any other directory.
-    */
-  def parse(dir: String): Option[(RollupKind, Long)] =
-    Seq(First, Mean, Stats, Sketch).find(k => dir.startsWith(k.prefix)) match {
-      case Some(k) => dir.stripPrefix(k.prefix).toLongOption.map(k -> _)
-      case None if dir.startsWith(QuantilePrefix) =>
-        dir.stripPrefix(QuantilePrefix).split("_", 2) match {
-          case Array(b, bw) =>
-            for (b <- b.toLongOption; bw <- bw.toDoubleOption)
-              yield Quantile(bw) -> b
-          case _ => None
-        }
-      case None => None
-    }
+  /** The kind a commit record names; `binWidth` only for quantiles. */
+  def of(name: String, binWidth: Option[Double]): RollupKind = name match {
+    case "first" => First
+    case "mean" => Mean
+    case "stats" => Stats
+    case "sketch" => Sketch
+    case "quantile" => Quantile(binWidth.getOrElse(
+      throw new IllegalStateException("a quantile rollup needs its bin width")))
+    case other => throw new IllegalStateException(s"unknown rollup kind $other")
+  }
 
   private def grouped(rows: DataFrame, keys: Seq[Column],
                       aggs: Seq[Column]): DataFrame =
@@ -87,7 +81,7 @@ object RollupKind {
     * rollup buckets.
     */
   case object First extends RollupKind {
-    val prefix = "rollup_"
+    val name = "first"
     def partial(rows: DataFrame, keys: Seq[String], bucket: Column,
                 metrics: Seq[String]): DataFrame =
       grouped(rows, keys.map(col) :+ bucket, metrics.map(m =>
@@ -109,7 +103,7 @@ object RollupKind {
     * any coarser grid derives exactly, with one division per output cell.
     */
   case object Mean extends RollupKind {
-    val prefix = "meanrollup_"
+    val name = "mean"
     def partial(rows: DataFrame, keys: Seq[String], bucket: Column,
                 metrics: Seq[String]): DataFrame =
       grouped(rows, keys.map(col) :+ bucket, metrics.flatMap { m =>
@@ -137,7 +131,7 @@ object RollupKind {
     * one metric.
     */
   case object Stats extends RollupKind {
-    val prefix = "statsrollup_"
+    val name = "stats"
     override def storedBucket(sec: Column): Column =
       timestamp_seconds(sec).as("window_start")
     override def bucketSeconds: Column = Grid.tsSeconds(col("window_start"))
@@ -171,7 +165,7 @@ object RollupKind {
     * direct sketch over the raw rows.
     */
   case object Sketch extends RollupKind {
-    val prefix = "sketchrollup_"
+    val name = "sketch"
     def partial(rows: DataFrame, keys: Seq[String], bucket: Column,
                 metrics: Seq[String]): DataFrame =
       grouped(rows, keys.map(col) :+ bucket, metrics.map(m =>
@@ -193,15 +187,15 @@ object RollupKind {
     * integer counts merge losslessly; `finish` selects the `pct`
     * type-1 quantile at bin resolution
     * ([[graft.operators.Quantiles.gridHistQuantile]]). `binWidth` is
-    * part of the directory name, so refresh counts on the grid the
+    * part of the commit record, so refresh counts on the grid the
     * materialized partials used; `pct` is read-time only.
     */
   final case class Quantile(binWidth: Double, pct: Int = 50)
       extends RollupKind {
     require(binWidth > 0.0, s"binWidth must be > 0, got $binWidth")
-    val prefix = QuantilePrefix
+    val name = "quantile"
     override def dirName(bucketSec: Long): String =
-      s"$prefix${bucketSec}_$binWidth"
+      s"rollup_${name}_${bucketSec}_$binWidth"
     def partial(rows: DataFrame, keys: Seq[String], bucket: Column,
                 metrics: Seq[String]): DataFrame = {
       val pts = points(rows, keys, bucket, metrics)

@@ -1,10 +1,9 @@
 package graft.store
 
 import org.json4s._
-import org.json4s.jackson.JsonMethods
-import org.json4s.jackson.JsonMethods.{compact, render}
 
-/** Per-sensor schema — the CONFIG.JSON equivalent
+/** Per-sensor schema — the reference's CONFIG.JSON, carried here in
+  * each [[SensorVersion]] record
   * (`/root/reference/src/ong_tsdb/database.py:53-57,271-281`): tick
   * frequency, ordered metrics (flat or multi-level names → encoded as
   * dot-joined column names, level names kept in metadata), free-form
@@ -41,27 +40,26 @@ case class SensorConfig(
 
   def metricNames: Seq[String] = metrics.map(_.name)
 
-  def toJson: String = {
+  def toJValue: JValue = {
     val m = JArray(metrics.map { md =>
       JObject(
         "levels" -> JArray(md.levels.map(JString(_)).toList),
         "fill" -> md.fill.map(JDouble(_)).getOrElse(JNull),
         "since" -> md.since.map(JLong(_)).getOrElse(JNull))
     }.toList)
-    compact(render(JObject(
+    JObject(
       "db" -> JString(db),
       "sensor" -> JString(sensor),
       "freq" -> JString(freq),
       "metrics" -> m,
       "metadata" -> JObject(metadata.map { case (k, v) => k -> (JString(v): JValue) }.toList),
       "read_key" -> JString(readKey),
-      "write_key" -> JString(writeKey))))
+      "write_key" -> JString(writeKey))
   }
 }
 
 object SensorConfig {
-  def fromJson(s: String): SensorConfig = {
-    val j = JsonMethods.parse(s)
+  def fromJValue(j: JValue): SensorConfig = {
     def str(f: String): String = (j \ f) match {
       case JString(v) => v
       case _ => ""

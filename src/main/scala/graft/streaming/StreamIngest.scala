@@ -522,7 +522,7 @@ object StreamIngest {
       .trigger(Trigger.ProcessingTime(0L))
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         if (!batch.isEmpty) {
-          store.writeLocked(db, sensor, batch.toDF(), fillValue)
+          store.write(db, sensor, batch.toDF(), fillValue)
         }
         ()
       }
@@ -538,14 +538,16 @@ object StreamIngest {
     *   the sensor WRITER LOCK) → incremental rollup refresh.
     *
     * Per-batch invariants, each carried by a part this composes:
-    *  - ATOMIC: the micro-batch lands via parquet job commit — a reader
-    *    sees all of a batch's cells or none (`SensorStore.write`);
-    *  - SERIALIZED: `writeLocked` holds the per-sensor lock, so this
+    *  - ATOMIC: the micro-batch's files and refreshed rollups become
+    *    visible together when `SensorStore.write` commits the sensor's
+    *    next record — a reader resolves a version and sees all of a
+    *    batch's cells or none;
+    *  - SERIALIZED: `write` holds the per-sensor lock, so this
     *    stream, a second stream, and ad-hoc batch writers to the same
     *    sensor cannot interleave their read-modify-write merges;
     *  - DERIVED DATA STAYS DERIVED: `write` re-aggregates the touched
-    *    chunk partitions of every materialized rollup inside the same
-    *    call, so after EVERY batch a rollup read equals re-aggregating
+    *    chunks of every materialized rollup into the same record, so
+    *    after EVERY batch a rollup read equals re-aggregating
     *    the raw cells — late points included (no pre-upsert value is
     *    ever served);
     *  - EFFECTIVELY-ONCE **for timestamped lines**: cell upsert is

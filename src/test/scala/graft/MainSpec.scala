@@ -3,8 +3,6 @@ package graft
 import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.functions._
 
 import graft.store.{MetricDef, SensorConfig, SensorStore}
@@ -41,12 +39,11 @@ class MainSpec extends SparkSpec {
     st.write("db1", "s1", pts)
   }
 
+  /** Names of the data files the sensor's current version lists (the
+    * previous version's files stay on disk one commit longer). */
   private def dataFileNames(dir: String): Seq[String] =
-    Files.walk(Paths.get(dir, "db1", "s1", "data")).iterator().asScala
-      .filter(Files.isRegularFile(_))
-      .map(_.getFileName.toString)
-      .filter(n => n.endsWith(".parquet") && !n.startsWith("."))
-      .toSeq
+    new SensorStore(spark, dir).dataFiles("db1", "s1")
+      .map(Paths.get(_).getFileName.toString)
 
   test("usage and bad input: no args / unknown subcommand / missing " +
     "base-dir exit 2; --help exits 0; repair explains its absence") {
@@ -72,24 +69,10 @@ class MainSpec extends SparkSpec {
     assert(rc0 == 0, out0)
     assert(out0.contains("0 corrupt row(s)"), out0)
 
-    // tamper one stored checksum on disk (the corruption class verify
-    // exists for), same swap technique as SensorStoreSpec
-    val dataPath = s"$dir/db1/s1/data"
-    val tmp = Files.createTempDirectory("cli-tamper").toString
-    spark.read.parquet(dataPath)
-      .withColumn("checksum",
-        when(col("slot") === 1704067200L, col("checksum") + lit(100f))
-          .otherwise(col("checksum")))
-      .write.mode("overwrite").partitionBy("chunk_start").parquet(tmp)
-    def rm(p: java.nio.file.Path): Unit = {
-      if (Files.isDirectory(p)) {
-        val s = Files.list(p)
-        try s.iterator().forEachRemaining(rm(_)) finally s.close()
-      }
-      Files.deleteIfExists(p)
-    }
-    rm(Paths.get(dataPath))
-    Files.move(Paths.get(tmp), Paths.get(dataPath))
+    // tamper one stored checksum in a listed file (the corruption class
+    // verify exists for), same technique as SensorStoreSpec
+    graft.store.Tamper.checksum(spark, st.dataFiles("db1", "s1"),
+      1704067200L, 100f)
 
     val (rc1, out1) = run("verify", "--base-dir", dir, "--corrupt-only")
     assert(rc1 == 1, out1)

@@ -50,6 +50,19 @@ class DocStoreSpec extends SparkSpec {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  private def log(root: String) = new graft.core.CommitLog(root, _ => Nil)
+
+  /** The write-ahead intent `ingestBatch` writes for `batch` at `v`. */
+  private def writeIntent(root: String, v: Long,
+                          batch: org.apache.spark.sql.DataFrame): Unit = {
+    import org.json4s._
+    val fp = batch.agg(count(lit(1)).as("n"),
+      coalesce(bit_xor(xxhash64(col("doc_id").cast("string"))), lit(0L))
+        .as("h")).head()
+    log(root).writeIntent(v, JObject("version" -> JLong(v),
+      "fp_n" -> JLong(fp.getAs[Long]("n")), "fp_h" -> JLong(fp.getAs[Long]("h"))))
+  }
+
   test("ingestBatch: every routed probe serves the updated corpus " +
     "through the ARTIFACT path, bit-equal to a cold full rebuild") {
     // live store: init on 5/7 of the corpus, ingest the %7==6 slice;
@@ -172,13 +185,7 @@ class DocStoreSpec extends SparkSpec {
     // simulate the torn ingest of batchA: intent written + index
     // stamped v2, crash before the commit (the intent is step 1 of
     // ingestBatch — replicate its record shape)
-    val fp = batchA.agg(count(lit(1)).as("n"),
-      coalesce(bit_xor(xxhash64(col("doc_id").cast("string"))), lit(0L))
-        .as("h")).head()
-    spark.range(1).select(lit(2L).as("version"),
-        lit(fp.getAs[Long]("n")).as("fp_n"),
-        lit(fp.getAs[Long]("h")).as("fp_h"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/txn_v2")
+    writeIntent(root, 2L, batchA)
     DedupIndex.refreshExactIndex(spark, DocStore.exactPath(root),
       batchA, "doc_id", "text", newVersion = Some(2L))
 
@@ -385,5 +392,78 @@ class DocStoreSpec extends SparkSpec {
       "segments of the retained commit records must survive")
     assert(rows(DocStore.docs(spark, root)).sameElements(before),
       "vacuum changed the live corpus")
+  }
+
+  test("crash states: an ingest's files or intent without its record, a " +
+    "torn temp record and an unpruned commit read as the last committed " +
+    "version; the re-run heals") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val corpus0 = all.filter(col("doc_id") % 7 === 0)
+    val batchA = all.filter(col("doc_id") % 7 === 1)
+    val batchB = all.filter(col("doc_id") % 7 === 2)
+    val cfgLite = DocStore.Config("doc_id", "text", bm25 = false,
+      exact = true)
+    def build(): String = {
+      val root = tmp("dscrash")
+      DocStore.init(spark, root, corpus0, cfgLite)           // v1
+      DocStore.ingestBatch(spark, root, batchA, cfgLite)     // v2
+      root
+    }
+    // every read, with the probe checked against the raw scan of the
+    // corpus the store's record lists
+    def answers(root: String) = {
+      val probe = DocStore.dedupBatchExact(spark, root, cfgLite, batchB)
+      assert(rows(probe).sameElements(rows(DedupIndex.incrementalExactRouted(
+        spark, batchB, DocStore.docs(spark, root), "doc_id", "text", None))),
+        "probe != raw scan")
+      (DocStore.version(spark, root), DocStore.count(spark, root),
+        rows(DocStore.docs(spark, root)).toSeq, rows(probe).toSeq)
+    }
+    val twin = build()
+    DocStore.ingestBatch(spark, twin, batchB, cfgLite)
+    val afterB = answers(twin)
+    def rec(root: String) = Paths.get(root, "_commit", "v3.json")
+
+    def torn(tear: String => Unit): Unit = {
+      val root = build()
+      val before = answers(root)
+      tear(root)
+      assert(answers(root) == before)
+      DocStore.ingestBatch(spark, root, batchB, cfgLite) // the re-run
+      assert(answers(root) == afterB)
+      assert(log(root).versions == Seq(2L, 3L))
+      val s = Files.list(Paths.get(root, "_commit"))
+      try assert(!s.iterator().asScala.exists(_.toString.endsWith(".tmp")))
+      finally s.close()
+    }
+    // the ingest's segment, index refresh and intent are down, its
+    // record is not
+    torn { root =>
+      DocStore.ingestBatch(spark, root, batchB, cfgLite)
+      Files.delete(rec(root))
+    }
+    // its record was cut short in the temp file
+    torn { root =>
+      DocStore.ingestBatch(spark, root, batchB, cfgLite)
+      val bytes = Files.readAllBytes(rec(root))
+      Files.delete(rec(root))
+      Files.write(Paths.get(root, "_commit", "v3.json.torn.tmp"),
+        bytes.take(bytes.length / 2))
+    }
+    // only the intent is down
+    torn(root => writeIntent(root, 3L, batchB))
+
+    // v3 committed, the prune of v1 never ran: reads are v3's, and the
+    // next commit prunes
+    val root = build()
+    val v1 = Files.readAllBytes(Paths.get(root, "_commit", "v1.json"))
+    DocStore.ingestBatch(spark, root, batchB, cfgLite)
+    Files.write(Paths.get(root, "_commit", "v1.json"), v1)
+    assert(answers(root) == afterB)
+    val batchC = all.filter(col("doc_id") % 7 === 4)
+    assert(DocStore.ingestBatch(spark, root, batchC, cfgLite) == 4L)
+    assert(log(root).versions == Seq(3L, 4L))
+    assert(DocStore.count(spark, root) == afterB._2 + batchC.count())
   }
 }

@@ -176,13 +176,35 @@ class GraftServerSpec extends SparkSpec {
     val cfg = """{"period":"1s","metrics":["a"],"read_key":"r","write_key":"w"}"""
     assert(req("POST", "/db/scrap/sensor/s", Some(Admin),
       Some(cfg.getBytes)).statusCode == 201)
-    val path = java.nio.file.Paths.get(dir, "scrap", "s", "CONFIG.JSON")
+    // the stored config lives in the sensor's commit record
+    val path = java.nio.file.Paths.get(dir, "scrap", "s", "_commit", "v1.json")
     val stored = java.nio.file.Files.readAllBytes(path)
     java.nio.file.Files.write(path, stored.take(stored.length / 2))
     val r = req("POST", "/scrap/s/read_df", Some(Admin),
       Some("""{"start_ts": 1, "end_ts": 2}""".getBytes))
     assert(req("DELETE", "/db/scrap", Some(Admin)).statusCode == 200)
     assert(r.statusCode == 500, new String(r.body()))
+  }
+
+  test("a request field that is missing or malformed is the client's " +
+    "fault: 400, not 500") {
+    setupSensor()
+    def code(path: String, tok: String, body: String) =
+      req("POST", path, Some(tok), Some(body.getBytes)).statusCode
+    assert(req("POST", "/db/bad400", Some(Admin)).statusCode == 201)
+    val codes = Seq(
+      "no period" -> code("/db/bad400/sensor/s", Admin, """{"metrics":["a"]}"""),
+      "no metrics" -> code("/db/bad400/sensor/s", Admin, """{"period":"1s"}"""),
+      "bad metric" -> code("/db/bad400/sensor/s", Admin,
+        """{"period":"1s","metrics":[1]}"""),
+      "no start_ts" -> code("/plant/m1/read_df", ReadK, """{"end_ts": 2}"""),
+      "bad range timestamp" -> code("/plant/m1/query", ReadK,
+        """{"range":{"from":true,"to":2},"targets":[{"target":"active"}]}"""),
+      "unparseable ISO timestamp" -> code("/plant/m1/query", ReadK,
+        """{"range":{"from":"yesterday","to":"2024-01-01T00:00:00Z"},""" +
+          """"targets":[{"target":"active"}]}"""))
+    assert(req("DELETE", "/db/bad400", Some(Admin)).statusCode == 200)
+    assert(codes.forall(_._2 == 400), codes)
   }
 
   /** Decode the read_df wire exactly as `client.py:536-556` does. */

@@ -221,7 +221,7 @@ class SensorStoreSpec extends SparkSpec {
 
   test("checksum validation drops tampered rows, like the corrupt-chunk skip") {
     import spark.implicits._
-    val (st, dir) = freshStoreDir()
+    val st = freshStore()
     st.createSensor(cfg1s)
     val t0 = 1704067200L
     val pts = Seq((t0, "active", 1.0), (t0 + 1, "active", 2.0))
@@ -230,24 +230,9 @@ class SensorStoreSpec extends SparkSpec {
     st.write("test", "s1", pts)
     assert(st.read("test", "s1", validateChecksums = true).count() == 2)
 
-    // tamper one row's stored checksum on disk (out-of-band corruption):
-    // write tampered copy to a tmp dir, then swap it in
-    val dataPath = s"$dir/test/s1/data"
-    val tmp = Files.createTempDirectory("tamper").toString
-    spark.read.parquet(dataPath)
-      .withColumn("checksum",
-        when(col("slot") === t0, col("checksum") + lit(100f))
-          .otherwise(col("checksum")))
-      .write.mode("overwrite").partitionBy("chunk_start").parquet(tmp)
-    def rm(p: java.nio.file.Path): Unit = {
-      if (Files.isDirectory(p)) {
-        val s = Files.list(p)
-        try s.iterator().forEachRemaining(rm(_)) finally s.close()
-      }
-      Files.deleteIfExists(p)
-    }
-    rm(java.nio.file.Paths.get(dataPath))
-    Files.move(java.nio.file.Paths.get(tmp), java.nio.file.Paths.get(dataPath))
+    // tamper one row's stored checksum in the listed file, in place
+    // (out-of-band corruption)
+    Tamper.checksum(spark, st.dataFiles("test", "s1"), t0, 100f)
 
     assert(st.read("test", "s1", validateChecksums = false).count() == 2)
     val ok = st.read("test", "s1", validateChecksums = true)
@@ -296,7 +281,7 @@ class SensorStoreSpec extends SparkSpec {
 
   test("deleteBefore drops whole old chunks from data AND rollups") {
     import spark.implicits._
-    val st = freshStore()
+    val (st, dir) = freshStoreDir()
     st.createSensor(cfg1s)
     val chunkDur = 16384L // 1s tick × 2^14 rows
     val base = 1704067200L / chunkDur * chunkDur
@@ -308,34 +293,41 @@ class SensorStoreSpec extends SparkSpec {
     st.write("test", "s1", pts)
     // EVERY rollup family must be retention-pruned (r15 advice: the
     // stats/sketch/quant trees used to outlive their source chunks)
-    val rollupPaths = Seq(
-      st.materializeRollup("test", "s1", 60L),
-      st.materializeMeanRollup("test", "s1", 60L),
-      st.materialize("test", "s1", RollupKind.Sketch, 60L),
-      st.materializeQuantileRollup("test", "s1", 60L, 1.0),
-      st.materializeStatsRollup("test", "s1", 60L))
-    rollupPaths.foreach(p => assert(
-      java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get(s"$p/chunk_start=$base")), p))
+    st.materializeRollup("test", "s1", 60L)
+    st.materializeMeanRollup("test", "s1", 60L)
+    st.materialize("test", "s1", RollupKind.Sketch, 60L)
+    st.materializeQuantileRollup("test", "s1", 60L, 1.0)
+    st.materializeStatsRollup("test", "s1", 60L)
+    val v0 = st.resolve("test", "s1")
+    assert(v0.rollups.size == 5)
+    v0.rollups.foreach(r => assert(r.chunks.contains(base), r.kind))
+    val oldFiles = (v0.data(base) ++ v0.rollups.flatMap(_.chunks(base)))
+      .map(f => java.nio.file.Paths.get(s"$dir/test/s1/$f"))
+    assert(oldFiles.forall(java.nio.file.Files.exists(_)))
     assert(st.listChunks("test", "s1").length == 3)
     // cutoff INSIDE the second chunk → only the wholly-older first
     // chunk drops (whole-chunk granularity)
     val dropped = st.deleteBefore("test", "s1", base + chunkDur + 5)
     assert(dropped == Seq(base))
-    rollupPaths.foreach { p =>
-      assert(!java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get(s"$p/chunk_start=$base")), p)
-      assert(java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get(s"$p/chunk_start=${base + chunkDur}")), p)
+    val v1 = st.resolve("test", "s1")
+    v1.rollups.foreach { r =>
+      assert(!r.chunks.contains(base), r.kind)
+      assert(r.chunks.contains(base + chunkDur), r.kind)
     }
     assert(st.listChunks("test", "s1") ==
       Seq(base + chunkDur, base + 2 * chunkDur))
     val out = st.read("test", "s1")
       .select(unix_timestamp(col("ts")).as("sec")).collect()
     assert(out.length == 2 && out.forall(_.getLong(0) >= base + chunkDur))
-    // the rollup's partition for the dropped chunk is gone too
+    // the rollup no longer reads the dropped chunk either
     val roll = st.readRollup("test", "s1", RollupKind.First, 60L, 60L)
     assert(roll.count() == 2)
+    // the dropped chunk's files stay for readers of the previous
+    // version, and go with the next commit
+    assert(oldFiles.forall(java.nio.file.Files.exists(_)))
+    st.updateConfig("test", "s1")(identity)
+    assert(oldFiles.forall(!java.nio.file.Files.exists(_)),
+      oldFiles.filter(java.nio.file.Files.exists(_)))
     // idempotent: nothing older remains
     assert(st.deleteBefore("test", "s1", base + chunkDur + 5).isEmpty)
   }
@@ -352,7 +344,7 @@ class SensorStoreSpec extends SparkSpec {
         col("value"))
     st.write("ow", "s", pts(for (c <- 0 until 3; i <- 0 until 10)
       yield (base + c * chunkDur + i, (c * 100 + i).toDouble)))
-    val rollup = st.materializeMeanRollup("ow", "s", 60L)
+    st.materializeMeanRollup("ow", "s", 60L)
     val key = "spark.sql.sources.partitionOverwriteMode"
     val prev = spark.conf.getOption(key)
     @volatile var stop = false
@@ -373,9 +365,8 @@ class SensorStoreSpec extends SparkSpec {
       val want = if (c == 1 && i < 3) 1000f + i else c * 100f + i
       assert(got.get(base + c * chunkDur + i).contains(want), s"chunk $c row $i")
     }
-    for (c <- 0 until 3) assert(java.nio.file.Files.isDirectory(
-      java.nio.file.Paths.get(s"$rollup/chunk_start=${base + c * chunkDur}")),
-      s"rollup chunk $c")
+    assert(st.resolve("ow", "s").rollups.head.chunks.keySet ==
+      (0 until 3).map(base + _ * chunkDur).toSet, "rollup chunks")
   }
 
   test("concurrent writers to different sensors do not interfere") {
@@ -543,7 +534,7 @@ class SensorStoreSpec extends SparkSpec {
           .toDF("sec", "metric", "value")
           .select(timestamp_seconds(col("sec")).as("ts"), col("metric"),
             col("value"))
-        st.writeLocked("race", "s", pts)
+        st.write("race", "s", pts)
       }
     }
     Await.result(Future.sequence(futures), 300.seconds)
@@ -677,11 +668,219 @@ class SensorStoreSpec extends SparkSpec {
     val pts = Seq((1704067200L, "v", 1.0)).toDF("sec", "metric", "value")
       .select(timestamp_seconds(col("sec")).as("ts"), col("metric"),
         col("value"))
-    intercept[graft.core.DbNotFoundException](st.writeLocked("ghost", "s", pts))
+    intercept[graft.core.DbNotFoundException](st.write("ghost", "s", pts))
     assert(st.listDbs().isEmpty)
     st.createSensor(SensorConfig("real", "s", "1s", Seq(MetricDef(Seq("v")))))
     intercept[graft.core.SensorNotFoundException](
-      st.writeLocked("real", "ghost", pts))
+      st.write("real", "ghost", pts))
     assert(st.listSensors("real") == Seq("s"))
+  }
+
+  test("readers racing a live-edge writer never fail and always read one " +
+    "committed version: read, lastTimestamp and a rollup-routed read") {
+    import spark.implicits._
+    val (st, dir) = freshStoreDir()
+    val client = new graft.client.GraftClient(spark, dir)
+    st.createSensor(SensorConfig("race", "edge", "1s",
+      Seq(MetricDef(Seq("a")), MetricDef(Seq("b")))))
+    val chunkDur = graft.core.Freq.ChunkRows.toLong
+    val c0 = 1704067200L / chunkDur * chunkDur
+    // the live window: 240 s on the 60 s grid inside the second chunk
+    val w0 = ((c0 + chunkDur + 600) / 60 + 1) * 60
+    val last = w0 + 239
+    def batch(k: Int) = (for (t <- w0 to last; m <- Seq("a", "b"))
+        yield (t, m, k.toDouble)).toDF("sec", "metric", "value")
+      .select(timestamp_seconds(col("sec")).as("ts"), col("metric"),
+        col("value"))
+    st.write("race", "edge", Seq((c0 + 5, "a", 1.0), (c0 + 5, "b", 1.0))
+      .toDF("sec", "metric", "value")
+      .select(timestamp_seconds(col("sec")).as("ts"), col("metric"),
+        col("value")))
+    st.write("race", "edge", batch(0))
+    st.materializeMeanRollup("race", "edge", 60L)
+    st.materializeRollup("race", "edge", 60L)
+
+    // version k holds k in every cell of the window
+    val wrong = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def oneVersion(what: String, vals: Seq[Double], n: Int): Unit =
+      if (vals.size != n || vals.distinct.size != 1 ||
+          vals.head != vals.head.toInt || vals.head < 0 || vals.head > 20)
+        wrong.add(s"$what: ${vals.size} values, distinct ${vals.distinct.take(5)}")
+    @volatile var writing = true
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val reads = new java.util.concurrent.atomic.AtomicLong()
+    val readers = (0 until 2).map(_ => new Thread(() =>
+      while (writing) {
+        try {
+          oneVersion("read", st.read("race", "edge", Some(w0), Some(last))
+            .collect().toSeq.flatMap(r => Seq(r.getFloat(1), r.getFloat(2)))
+            .map(_.toDouble), 480)
+          val lt = st.lastTimestamp("race", "edge")
+          if (!lt.contains(last)) wrong.add(s"lastTimestamp $lt")
+          // spread 60 on the 60 s grid: served by the mean rollup
+          oneVersion("rollup mean", client.readGrafanaMean("race", "edge",
+              w0, last, 4).collect().toSeq
+            .flatMap(r => Seq(r.getDouble(1), r.getDouble(2))), 8)
+          reads.incrementAndGet()
+        } catch { case e: Throwable => errors.add(e) }
+      }))
+    readers.foreach(_.start())
+    try (1 to 20).foreach(k => st.write("race", "edge", batch(k)))
+    finally { writing = false; readers.foreach(_.join()) }
+    assert(errors.isEmpty, s"${errors.size} reads threw, first: ${errors.peek()}")
+    assert(wrong.isEmpty, s"${wrong.size} answers of no version: ${wrong.peek()}")
+    assert(reads.get > 0)
+    val now = st.read("race", "edge", Some(w0), Some(last)).collect()
+    assert(now.length == 240 && now.forall(r => r.getFloat(1) == 20f))
+  }
+
+  test("crash states: a version's files without its record, a torn temp " +
+    "record and an unpruned commit all read as the last committed " +
+    "version, and re-running the write heals the store") {
+    import spark.implicits._
+    import java.nio.file.{Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val chunkDur = graft.core.Freq.ChunkRows.toLong
+    val c0 = 1704067200L / chunkDur * chunkDur
+    def pts(rows: Seq[(Long, Double)]) = rows.toDF("sec", "value")
+      .select(timestamp_seconds(col("sec")).as("ts"), lit("v").as("metric"),
+        col("value"))
+    // v1 create, v2 two chunks, v3 a 64 s mean rollup, v4 an upsert
+    def build(dir: String): SensorStore = {
+      val st = new SensorStore(spark, dir)
+      st.createSensor(SensorConfig("cr", "s", "1s", Seq(MetricDef(Seq("v")))))
+      st.write("cr", "s", pts((0 until 100).map(i => (c0 + i * 7, i.toDouble)) ++
+        (0 until 100).map(i => (c0 + chunkDur + i * 5, i * 2.0))))
+      st.materializeMeanRollup("cr", "s", 64L)
+      st.write("cr", "s", pts((0 until 50).map(i =>
+        (c0 + chunkDur + i * 5, 500.0 + i))))
+      st
+    }
+    // the write under test upserts chunk 1 and opens chunk 2
+    val writeB = pts(Seq((c0 + chunkDur + 3, 99.0), (c0 + 2 * chunkDur + 1, 7.0)))
+    def answers(dir: String): (Seq[String], Option[Long], Seq[String]) = {
+      val c = new graft.client.GraftClient(spark, dir)
+      def mean(useRollups: Boolean) = c.readGrafanaMean("cr", "s", c0,
+        c0 + 3 * chunkDur - 1, 768, useRollups = useRollups)
+        .collect().map(_.toString).toSeq
+      val routed = mean(useRollups = true)
+      assert(routed == mean(useRollups = false), "rollup route != raw scan")
+      (c.read("cr", "s").collect().map(_.toString).toSeq,
+        c.lastTimestamp("cr", "s"), routed)
+    }
+    def files(root: Path): Seq[Path] = {
+      val s = Files.walk(root)
+      try s.iterator().asScala.filter(Files.isRegularFile(_)).toList
+      finally s.close()
+    }
+    val twin = Files.createTempDirectory("graft-twin").toString
+    build(twin).write("cr", "s", writeB)
+    val afterB = answers(twin)
+
+    def crash(committed: Boolean)(tear: (Path, Path) => Unit): Unit = {
+      val (_, dir) = freshStoreDir()
+      val st = build(dir)
+      val before = answers(dir)
+      assert(before != afterB)
+      val sd = Paths.get(dir, "cr", "s")
+      val snap = Files.createTempDirectory("graft-snap")
+      files(sd).foreach { f =>
+        val to = snap.resolve(sd.relativize(f).toString)
+        Files.createDirectories(to.getParent)
+        Files.copy(f, to)
+      }
+      st.write("cr", "s", writeB)
+      tear(sd, snap)
+      assert(answers(dir) == (if (committed) afterB else before))
+      st.write("cr", "s", writeB) // the re-run
+      assert(answers(dir) == afterB)
+      // healed: the last two records, no temp record, and every parquet
+      // file on disk listed by one of them
+      val log = new graft.core.CommitLog(sd.toString, SensorVersion.chunkDirs)
+      val vs = log.versions
+      assert(vs.size == 2 && vs(1) == vs(0) + 1, vs)
+      val listed = vs.flatMap { v =>
+        val sv = SensorVersion.fromJValue(v, log.record(v))
+        sv.data.values.flatten ++ sv.rollups.flatMap(_.chunks.values.flatten)
+      }.toSet
+      val onDisk = files(sd).map(sd.relativize(_).toString)
+        .filter(f => f.endsWith(".parquet") && !f.split('/').last.startsWith("."))
+      assert(onDisk.toSet == listed, onDisk.toSet.diff(listed))
+      assert(!files(sd.resolve("_commit")).exists(_.toString.endsWith(".tmp")))
+    }
+
+    // version 5's files are down, its record is not
+    crash(committed = false) { (sd, _) =>
+      Files.delete(sd.resolve("_commit/v5.json"))
+    }
+    // the record of version 5 was cut short in its temp file
+    crash(committed = false) { (sd, _) =>
+      val rec = Files.readAllBytes(sd.resolve("_commit/v5.json"))
+      Files.delete(sd.resolve("_commit/v5.json"))
+      Files.write(sd.resolve("_commit/v5.json.torn.tmp"),
+        rec.take(rec.length / 2))
+    }
+    // version 5 committed, the prune of version 3 never ran
+    crash(committed = true) { (sd, snap) =>
+      files(snap).foreach { f =>
+        val to = sd.resolve(snap.relativize(f).toString)
+        if (!Files.exists(to)) {
+          Files.createDirectories(to.getParent)
+          Files.copy(f, to)
+        }
+      }
+      assert(Files.exists(sd.resolve("_commit/v3.json")))
+    }
+  }
+
+  test("jobs per read are pinned: lastTimestamp, a one-chunk read and a " +
+    "Grafana read list no directory and infer no schema") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (st, dir) = freshStoreDir()
+    st.createSensor(cfg1s)
+    val chunkDur = graft.core.Freq.ChunkRows.toLong
+    val c0 = 1704067200L / chunkDur * chunkDur
+    // 40 chunks, so a listing or footer read over the sensor would show
+    st.write("test", "s1", (0 until 40).flatMap(c => (0 until 10).map(i =>
+        (c0 + c * chunkDur + i * 60, "active", (c * 10 + i).toDouble)))
+      .toDF("sec", "metric", "value")
+      .select(timestamp_seconds(col("sec")).as("ts"), col("metric"),
+        col("value")))
+    st.materializeRollup("test", "s1", 60L)
+    val client = new graft.client.GraftClient(spark, dir)
+    val sc = spark.sparkContext
+    def jobs(f: => Any): Int = {
+      val group = s"jobcount-${java.util.UUID.randomUUID()}"
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val drained = new java.util.concurrent.CountDownLatch(1)
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+            case Some(`group`) => n.incrementAndGet(); ()
+            case Some(g) if g == s"$group-end" => drained.countDown()
+            case _ => ()
+          }
+      }
+      sc.addSparkListener(l)
+      try {
+        sc.setJobGroup(group, "job count")
+        f
+        // the bus delivers in order: once this marker job is seen, every
+        // job of `f` has been counted
+        sc.setJobGroup(s"$group-end", "marker")
+        sc.parallelize(Seq(1), 1).count()
+        assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+      n.get
+    }
+    val lt = jobs(st.lastTimestamp("test", "s1"))
+    val rd = jobs(st.read("test", "s1", Some(c0 + 5 * chunkDur),
+      Some(c0 + 5 * chunkDur + 600)).collect())
+    val gf = jobs(client.readGrafana("test", "s1", c0, c0 + 10 * chunkDur - 1,
+      640).collect())
+    // a schema inference or a listing job over the 40 chunks would add
+    // to each; the sorted read is sample + shuffle + result
+    assert((lt, rd, gf) == ((1, 3, 6)), "jobs (lastTimestamp, read, grafana)")
   }
 }
