@@ -11,11 +11,10 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   *  - entries bound to a session die with it: every access evicts the
   *    entries of stopped sessions (multi-session JVMs — the test
   *    suites — would otherwise pin dead sessions' DataFrames);
-  *  - [[invalidate]] drops a path's gate verdicts and part frames —
-  *    every in-process write to an at-rest artifact calls it;
-  *  - gate verdicts are cached TRUE-only: a cached mismatch could only
-  *    be cleared by a write in this JVM, so an artifact rebuilt by
-  *    another process would stay routed to the fallback forever;
+  *  - a part frame is keyed by the commit sequence of the index record
+  *    it was read from, which no later commit reuses; [[invalidate]]
+  *    drops a path's part frames when its tree is deleted or restarts
+  *    its sequence;
   *  - [[clear]] drops one kind (the `clearMemo` / `clearIndexes`
   *    valves), unpersisting the frames it held.
   * Nothing here persists across JVM runs: only at-rest indexes live on
@@ -31,9 +30,6 @@ object Artifacts {
   case object SessionFrame extends Kind[DataFrame]
   /** The path of a persisted index tree the session probes. */
   case object AtRestIndex extends Kind[String]
-  /** A freshness-gate verdict over an artifact's files (session-free:
-    * it describes file state). Always `true`. */
-  case object GateVerdict extends Kind[Boolean]
   /** A pinned read of one part of an at-rest artifact. */
   case object PartFrame extends Kind[DataFrame]
 
@@ -71,18 +67,6 @@ object Artifacts {
     entries.getOrElseUpdate(key, build).asInstanceOf[A]
   }
 
-  /** A freshness gate memoized per (path, gate name, params): check,
-    * and remember only a pass. */
-  def verdict(path: String, name: String, params: String)
-             (check: => Boolean): Boolean = {
-    val key = Key(GateVerdict, None, path, name, params)
-    get(key).getOrElse {
-      val r = check
-      if (r) entries.put(key, true)
-      r
-    }
-  }
-
   /** A pinned part frame of an at-rest artifact, read by `read` once
     * per (session, path, part, version). Pinning a new version evicts
     * the superseded pins of that part, so stale versions never pile up
@@ -97,10 +81,10 @@ object Artifacts {
     }
   }
 
-  /** Drop the gate verdicts and part frames of `path` (and of any
-    * artifact nested under it): called by every write to it. */
+  /** Drop the part frames of `path` (and of any artifact nested under
+    * it). */
   def invalidate(path: String): Unit =
-    dropWhere(k => (k.kind == GateVerdict || k.kind == PartFrame) &&
+    dropWhere(k => k.kind == PartFrame &&
       (k.path == path || k.path.startsWith(path + "/")))
 
   /** Drop every entry of `kind`, returning what was dropped. */

@@ -10,7 +10,8 @@ import org.json4s.JValue
 import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
 /** The one commit protocol of the on-disk stores
-  * ([[graft.store.SensorStore]], [[graft.ext.DocStore]]): a store's
+  * ([[graft.store.SensorStore]], [[graft.ext.DocStore]]) and of the
+  * at-rest indexes ([[graft.ext.Index]]): a store's
   * state is a versioned JSON record under `root/_commit/`, the
   * reference's temp-file + `os.replace` discipline
   * (`fileutils.py:325-360`) applied to a whole version.
@@ -102,6 +103,21 @@ final class CommitLog(root: String, listed: JValue => Iterable[String]) {
     */
   def sweep(roots: Seq[String]): Unit =
     sweepChildren(roots, versions.flatMap(v => listed(record(v))).toSet)
+
+  /** A root without a record holds nothing committed: remove every
+    * child but `_commit` and the writer lock — what an earlier on-disk
+    * layout or an uncommitted first write left behind.
+    */
+  def clearUncommitted(): Unit = {
+    val rp = Paths.get(root)
+    if (versions.isEmpty && Files.isDirectory(rp)) {
+      val s = Files.list(rp)
+      val dead = try s.iterator().asScala.filterNot(c =>
+          Set("_commit", "_WRITE_LOCK")(c.getFileName.toString)).toList
+        finally s.close()
+      dead.foreach(CommitLog.rmTree)
+    }
+  }
 
   private def put(name: String, j: JValue, exclusive: Boolean): Unit = {
     Files.createDirectories(dir)

@@ -36,20 +36,19 @@ import graft.core.CommitLog
   *    transaction and a DIFFERENT batch fails loudly instead of
   *    healing the wrong redo.
   *  - `index/bm25/`, `index/exact/`, `index/near/`, `index/semantic/`
-  *    the enabled artifacts (each with its own internal
-  *    data-parts-first / stats-last commit order and per-version
-  *    partitioned data parts — [[DedupIndex]]).
+  *    the enabled indexes, each with its own commit record stamped
+  *    with the corpus version it reflects ([[Index]]).
   *
   * Transactional commit order of [[ingestBatch]] — version-gate
   * routing makes the multi-artifact refresh atomic WITHOUT a
   * coordinator:
   *  1. write the `intent_v<V+1>` intent (or verify it, on a redo);
   *  2. refresh every enabled index, stamping the NEW version v+1
-  *     (each refresh is IDEMPOTENT — its rows go to the `v=<v+1>`
-  *     partition via dynamic overwrite, so a redo replaces rather
-  *     than duplicates — and REFUSES a non-contiguous version, so an
-  *     artifact that missed a replace/delete is never stamped
-  *     current: [[DedupIndex.admitRefresh]]);
+  *     (each refresh is IDEMPOTENT — it skips an index already
+  *     stamped v+1, and a torn attempt's files are replaced by the
+  *     redo, never read — and REFUSES a non-contiguous version, so an
+  *     index that missed a replace/delete is never stamped current:
+  *     [[Index.admitRefresh]]);
   *  3. write the batch segment `docs/b<V+1>` (overwrite — a redo
   *     rewrites the same dir);
   *  4. commit record `v<V+1>` — the one and only commit point.
@@ -82,7 +81,7 @@ import graft.core.CommitLog
   *
   * 100 TB shape: ingest cost is batch-scale (each refresh tokenizes /
   * hashes / bands / assigns ONLY the batch and commits one clustered
-  * partition; intent, stats and meta are one-row writes), and probe
+  * version dir; intents and records are small JSON files), and probe
   * cost is index-probe-scale — the corpus is never rescanned because
   * a batch arrived. A rewrite ([[replaceDocs]]/[[deleteDocs]]) is
   * priced once at corpus-copy cost — at scale that becomes a
@@ -93,10 +92,14 @@ object DocStore {
 
   /** LSH parameters of the near-dup index (must match the probes'). */
   case class NearParams(numHashes: Int = 8, rowsPerBand: Int = 1,
-                        shingleN: Int = 3)
+                        shingleN: Int = 3) {
+    def kind: IndexKind = IndexKind.Near(numHashes, rowsPerBand, shingleN)
+  }
 
   /** Fit parameters of the SemDeDup cell index. */
-  case class SemParams(targetCellSize: Int = 32, iters: Int = 1)
+  case class SemParams(targetCellSize: Int = 32, iters: Int = 1) {
+    def kind: IndexKind = IndexKind.Semantic(targetCellSize, iters)
+  }
 
   /** Which artifacts the store maintains, and the corpus column
     * names. `sem` requires `vecCol`. */
@@ -114,6 +117,13 @@ object DocStore {
   def exactPath(root: String): String = s"$root/index/exact"
   def nearPath(root: String): String = s"$root/index/near"
   def semPath(root: String): String = s"$root/index/semantic"
+
+  /** The enabled indexes: (kind, path, indexed column). */
+  private def indexes(root: String, cfg: Config): Seq[(IndexKind, String, String)] =
+    Option.when(cfg.bm25)((IndexKind.Bm25, bm25Path(root), cfg.textCol)).toSeq ++
+      Option.when(cfg.exact)((IndexKind.Exact, exactPath(root), cfg.textCol)) ++
+      cfg.near.map(np => (np.kind, nearPath(root), cfg.textCol)) ++
+      cfg.sem.map(sp => (sp.kind, semPath(root), cfg.vecCol.get))
 
   // ------------------------------------------------------------------
   // commit records
@@ -182,34 +192,24 @@ object DocStore {
   }
 
   /** Create the store: corpus segment + every enabled artifact at
-    * version 1, the commit record last. */
+    * version 1, the commit record last. A root without a record holds
+    * nothing committed, so whatever it holds goes first. */
   def init(spark: SparkSession, root: String, df: DataFrame,
            cfg: Config): String = withStoreLock(root) {
     require(log(root).versions.isEmpty, s"DocStore already committed at $root")
+    log(root).clearUncommitted()
     df.write.mode("overwrite").parquet(s"$root/docs/b1")
     val corpus = spark.read.parquet(s"$root/docs/b1")
-    buildIndexes(spark, root, corpus, cfg, 1L)
+    buildIndexes(root, corpus, cfg, 1L)
     commit(root, 1L, corpus.count(), Seq("docs/b1"), None)
     root
   }
 
-  private def buildIndexes(spark: SparkSession, root: String,
-                           corpus: DataFrame, cfg: Config,
-                           v: Long): Unit = {
-    if (cfg.bm25)
-      TextStats.buildBm25Index(corpus, cfg.idCol, cfg.textCol,
-        bm25Path(root), version = v)
-    if (cfg.exact)
-      DedupIndex.buildExactIndex(corpus, cfg.idCol, cfg.textCol,
-        exactPath(root), version = v)
-    cfg.near.foreach(np =>
-      DedupIndex.buildNearIndex(corpus, cfg.idCol, cfg.textCol,
-        np.numHashes, np.rowsPerBand, np.shingleN, nearPath(root),
-        version = v))
-    cfg.sem.foreach(sp =>
-      DedupIndex.buildSemanticIndex(corpus, cfg.idCol, cfg.vecCol.get,
-        sp.targetCellSize, sp.iters, semPath(root), version = v))
-  }
+  private def buildIndexes(root: String, corpus: DataFrame, cfg: Config,
+                           v: Long): Unit =
+    indexes(root, cfg).foreach { case (kind, path, c) =>
+      Index.build(kind, corpus, cfg.idCol, c, path, version = v)
+    }
 
   /** Ingest a batch of NEW documents: intent, artifact refreshes,
     * batch segment, commit record — in that order (rationale in the
@@ -228,18 +228,9 @@ object DocStore {
       case None => log(root).writeIntent(v, JObject("version" -> JLong(v),
         "fp_n" -> JLong(bn), "fp_h" -> JLong(bh)))
     }
-    if (cfg.bm25)
-      TextStats.refreshBm25Index(spark, bm25Path(root), batch,
-        cfg.idCol, cfg.textCol, newVersion = Some(v))
-    if (cfg.exact)
-      DedupIndex.refreshExactIndex(spark, exactPath(root), batch,
-        cfg.idCol, cfg.textCol, newVersion = Some(v))
-    cfg.near.foreach(_ =>
-      DedupIndex.refreshNearIndex(spark, nearPath(root), batch,
-        cfg.idCol, cfg.textCol, newVersion = Some(v)))
-    cfg.sem.foreach(_ =>
-      DedupIndex.refreshSemanticIndex(spark, semPath(root), batch,
-        cfg.idCol, cfg.vecCol.get, newVersion = Some(v)))
+    indexes(root, cfg).foreach { case (_, path, c) =>
+      Index.refresh(path, batch, cfg.idCol, c, newVersion = Some(v))
+    }
     val seg = s"docs/b$v"
     batch.write.mode("overwrite").parquet(s"$root/$seg")
     commit(root, v, n + bn, dirs :+ seg, Some((bn, bh)))
@@ -279,8 +270,8 @@ object DocStore {
     * count it, commit a record listing ONLY the new segment. The
     * merged plan reads the OLD segments and writes a NEW one — no
     * path is both read and written, so no checkpoint barrier is
-    * needed and a torn write is invisible (no `_SUCCESS`, no commit
-    * record). */
+    * needed and a torn write is invisible (no commit record lists
+    * it). */
   private def rewrite(spark: SparkSession, root: String, cfg: Config,
                       merged: DataFrame): Long = {
     // fence ABOVE any written ingest intent: a torn ingest may have
@@ -304,7 +295,7 @@ object DocStore {
   def rebuildIndexes(spark: SparkSession, root: String,
                      cfg: Config): Long = withStoreLock(root) {
     val v = version(spark, root)
-    buildIndexes(spark, root, docs(spark, root), cfg, v)
+    buildIndexes(root, docs(spark, root), cfg, v)
     // void any DEAD ingest intent above the committed version: the
     // rebuild just replaced every artifact with the committed corpus's
     // state, so a torn ingest's half-applied intent no longer guards

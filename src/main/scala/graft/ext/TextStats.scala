@@ -283,7 +283,7 @@ object TextStats {
     * runs INSIDE the tokenize projection, so only matching-term rows
     * ever reach an aggregate; df and the (N, Σlen) scalars are
     * broadcast. At 100 TB prefer [[bm25FromIndex]] over a persisted
-    * [[buildBm25Index]] artifact (same scores, no corpus tokenize);
+    * [[IndexKind.Bm25]] index (same scores, no corpus tokenize);
     * [[bm25Routed]] picks automatically.
     */
   def bm25(df: DataFrame, idCol: String, textCol: String,
@@ -305,51 +305,33 @@ object TextStats {
     bm25Score(tf, stats, idCol, k1, b)
   }
 
-  /** Materialize the BM25 retrieval index: `postings/` =
-    * `(term, idCol, dl, tf, pos)` clustered + sorted by term (so a
-    * probe's `term IN (…)` prunes parquet row groups via min/max
-    * stats — at 100 TB a query touches only its terms' postings,
-    * never the corpus), and `stats/` = the one-row exact
-    * `(sum_dl, n)`. `pos` is the sorted 1-based token positions of
-    * the term in the doc (the POSITIONAL payload phrase retrieval
-    * intersects — r13 ask #3; bounded per posting by the doc's own
-    * length, the standard inverted-index payload); `tf = |pos|`. One
-    * tokenize pass feeds both parts via a lazy checkpoint. This is
-    * the at-rest twin of the bounded `doc_inverted_index` catalog
-    * artifact: same structure, plus the payload BM25 scoring needs.
-    * A bag-of-words probe never reads `pos` — column pruning drops it
-    * at the scan.
-    */
-  def buildBm25Index(df: DataFrame, idCol: String, textCol: String,
-                     path: String, version: Long = 1L): String = {
-    graft.core.Artifacts.invalidate(path)
-    val toks = tokensWithLen(df, idCol, textCol)
-    toks.agg(sum(col("dl")).cast("double").as("sum_dl"),
-        count(lit(1)).cast("double").as("n"),
-        lit(version).as("version"))
-      .write.mode("overwrite").parquet(s"$path/stats")
-    DedupIndex.writeVersioned(postingsOf(toks, idCol), version,
-      s"$path/postings")
-    path
-  }
-
   /** One corpus/batch pass → `(idCol, dl, toks)`, lazily checkpointed
-    * so the stats and postings writes share it.
+    * so the BM25 index's tallies and postings share it.
     */
-  private def tokensWithLen(df: DataFrame, idCol: String,
-                            textCol: String): DataFrame =
+  private[ext] def tokensWithLen(df: DataFrame, idCol: String,
+                                 textCol: String): DataFrame =
     df.select(col(idCol), split(col(textCol), " ").as("toks"))
       .select(col(idCol), size(col("toks")).cast("long").as("dl"),
         col("toks"))
       .localCheckpoint(false)
 
-  /** Positional postings of a tokenized frame: per (term, doc) the
-    * sorted 1-based positions and their count, term-clustered for
-    * row-group pruning. Shared verbatim by [[buildBm25Index]] and
-    * [[refreshBm25Index]] so full and incremental parts can never
-    * diverge in schema or clustering.
+  /** The BM25 retrieval index's rows ([[IndexKind.Bm25]]): positional
+    * postings `(term, idCol, dl, tf, pos)`, per (term, doc) the sorted
+    * 1-based positions and their count, clustered + sorted by term so
+    * a probe's `term IN (…)` prunes parquet row groups via min/max
+    * stats — at 100 TB a query touches only its terms' postings, never
+    * the corpus. `pos` is the POSITIONAL payload phrase retrieval
+    * intersects (r13 ask #3; bounded per posting by the doc's own
+    * length); `tf = |pos|`. A bag-of-words probe never reads `pos` —
+    * column pruning drops it at the scan. Postings rows are per (term,
+    * doc), so a refresh's batch adds NEW rows and the existing files
+    * (and the row-group stats the probe prunes on) are never
+    * rewritten; the record's `n` and `sum_dl` are integer sums, so old
+    * + batch equals the full-build value bit-for-bit. This is the
+    * at-rest twin of the bounded `doc_inverted_index` catalog
+    * artifact: same structure, plus the payload BM25 scoring needs.
     */
-  private def postingsOf(toks: DataFrame, idCol: String): DataFrame =
+  private[ext] def postingsOf(toks: DataFrame, idCol: String): DataFrame =
     toks.select(col(idCol), col("dl"),
         posexplode(col("toks")).as(Seq("p0", "term")))
       .select(col(idCol), col("dl"), col("term"),
@@ -360,112 +342,28 @@ object TextStats {
       .repartition(col("term"))
       .sortWithinPartitions("term")
 
-  /** Incrementally merge a batch of NEW documents into a persisted
-    * [[buildBm25Index]] artifact — the store-rollup lifecycle
-    * (`database.py:425-488`'s upsert→refresh contract; the repo's
-    * `RollupKind` refresh pattern) for the retrieval index: at
-    * 100 TB you refresh postings per ingested batch, you never
-    * re-tokenize the corpus because a batch arrived (VERDICT r13 ask
-    * #1).
-    *
-    * The merge is exact and touches ONLY the batch:
-    *  - postings rows are per (term, doc), so a new doc's postings are
-    *    NEW rows — the refresh APPENDS one term-clustered part; the
-    *    existing parts (and their row-group min/max term stats the
-    *    probe prunes on) are never rewritten;
-    *  - `stats/` is additive: Σlen and N are integer sums, so
-    *    old + batch equals the full-rebuild value bit-for-bit (exact
-    *    in double far past any real corpus count).
-    * Caller contract: batch ids are NOT already indexed (ingest
-    * appends new docs). Tear-safety: postings append first, stats
-    * overwrite last — a crash between the two leaves a stale N that
-    * [[bm25IndexFresh]]'s gate catches (falls back to the scan), and
-    * a torn write of either part drops its `_SUCCESS`, which
-    * [[hasBm25Index]] catches.
-    */
-  def refreshBm25Index(spark: org.apache.spark.sql.SparkSession,
-                       path: String, batch: DataFrame, idCol: String,
-                       textCol: String,
-                       newVersion: Option[Long] = None): String = {
-    graft.core.Artifacts.invalidate(path)
-    // read-THEN-overwrite on stats/ needs the old row off disk first
-    val old = spark.read.parquet(s"$path/stats").head()
-    // refresh admission (DedupIndex.admitRefresh, r16 advice #2):
-    // target == recorded → this refresh already committed (a torn
-    // ingest's re-run) — skip; target not recorded+1 → stale lineage
-    // (a replace/delete bumped the corpus without a rebuild) — refuse
-    // to stamp, the gate keeps routing to the scan until a rebuild
-    if (!DedupIndex.admitRefresh(old.getAs[Long]("version"), newVersion))
-      return path
-    val v = newVersion.getOrElse(old.getAs[Long]("version") + 1)
-    val toks = tokensWithLen(batch, idCol, textCol)
-    val merged = toks.agg(
-      (coalesce(sum(col("dl")), lit(0L)).cast("double") +
-        lit(old.getAs[Double]("sum_dl"))).as("sum_dl"),
-      (count(lit(1)).cast("double") +
-        lit(old.getAs[Double]("n"))).as("n"),
-      lit(v).as("version"))
-    DedupIndex.writeVersionedDelta(postingsOf(toks, idCol), v,
-      s"$path/postings")
-    merged.write.mode("overwrite").parquet(s"$path/stats")
-    path
-  }
+  /** The exact one-row `(sum_dl, n)` corpus stats of a committed BM25
+    * index, from its record — broadcast like the scan's. */
+  private def statsOf(spark: org.apache.spark.sql.SparkSession,
+                      index: IndexCommit): DataFrame =
+    broadcast(spark.range(1).select(
+      lit(index.tally("sum_dl").toDouble).as("sum_dl"),
+      lit(index.n.toDouble).as("n")))
 
-  /** Staleness gate for a persisted BM25 index: the artifact's exact
-    * doc count N (already in `stats/` — the watermark) must equal the
-    * live corpus row count, else the index predates an ingest (or a
-    * refresh tore between postings and stats) and must not serve
-    * scores. The count is a parquet-footer aggregate — metadata cost,
-    * not a corpus scan.
-    */
-  def bm25IndexFresh(spark: org.apache.spark.sql.SparkSession,
-                     path: String, corpus: DataFrame,
-                     expectedVersion: Option[Long] = None): Boolean =
-    expectedVersion match {
-      case Some(v) =>
-        // version tier (r15 ask #4): one tiny stats read, memoized
-        // true-only in the registry — no corpus touch, and a same-count
-        // content replacement is caught because the replacement bumped
-        // the corpus version without refreshing this artifact. A
-        // count-gate verdict is never cached (nothing tells us an
-        // unmanaged corpus changed).
-        graft.core.Artifacts.verdict(path, "bm25", v.toString) {
-          spark.read.parquet(s"$path/stats").head()
-            .getAs[Long]("version") == v
-        }
-      case None =>
-        spark.read.parquet(s"$path/stats").select(col("n")).head()
-          .getDouble(0) == corpus.count().toDouble
-    }
-
-  /** True when a [[buildBm25Index]] artifact is COMPLETE at `path`
-    * (both parts committed — `_SUCCESS` markers, not mere directory
-    * existence, so a torn build never routes the probe).
-    */
-  def hasBm25Index(spark: org.apache.spark.sql.SparkSession,
-                   path: String): Boolean = {
-    val conf = spark.sessionState.newHadoopConf()
-    Seq("postings", "stats").forall { part =>
-      val p = new org.apache.hadoop.fs.Path(s"$path/$part/_SUCCESS")
-      p.getFileSystem(conf).exists(p)
-    }
-  }
-
-  /** BM25 by probing a persisted [[buildBm25Index]] artifact: read the
-    * query terms' postings (predicate pushed into the parquet scan —
-    * the corpus text is never touched), broadcast the exact stats row,
+  /** BM25 by probing a committed BM25 index ([[IndexKind.Bm25]]): read
+    * the query terms' postings (predicate pushed into the parquet scan
+    * — the corpus text is never touched), broadcast the exact stats,
     * and run the same decimal scoring tail. Bit-identical to [[bm25]]
     * on the same corpus: tf/dl/df/N/Σlen are equal by construction and
     * the decimal fold is order-independent.
     */
-  def bm25FromIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                    idCol: String, terms: Seq[String], k1: Double = 1.2,
-                    b: Double = 0.75): DataFrame = {
+  def bm25FromIndex(spark: org.apache.spark.sql.SparkSession,
+                    index: IndexCommit, idCol: String, terms: Seq[String],
+                    k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "bm25 needs at least one query term")
-    val tf = spark.read.parquet(s"$path/postings").drop("v")
+    val tf = index.part(spark, "postings")
       .filter(col("term").isInCollection(terms))
-    val stats = broadcast(spark.read.parquet(s"$path/stats"))
-    bm25Score(tf, stats, idCol, k1, b)
+    bm25Score(tf, statsOf(spark, index), idCol, k1, b)
   }
 
   /** Shared scoring tail of phrase retrieval: the phrase is ONE unit
@@ -565,24 +463,22 @@ object TextStats {
     * [[phraseBm25]] on the same corpus.
     */
   def phraseBm25FromIndex(spark: org.apache.spark.sql.SparkSession,
-                          path: String, idCol: String,
+                          index: IndexCommit, idCol: String,
                           terms: Seq[String], k1: Double, b: Double,
-                          topN: Int): DataFrame = {
-    val stats = broadcast(spark.read.parquet(s"$path/stats"))
-    phraseScore(phraseHitsProbe(spark, path, idCol, terms), stats,
-      idCol, k1, b, topN)
-  }
+                          topN: Int): DataFrame =
+    phraseScore(phraseHitsProbe(spark, index, idCol, terms),
+      statsOf(spark, index), idCol, k1, b, topN)
 
   /** The phrase's tf ≥ 1 hits `(idCol, dl, tf)` by positional-postings
     * intersection — reads ONLY the n terms' postings (term filter
     * pushed into each parquet scan). Shared by [[phraseBm25FromIndex]]
     * and the mixed retrieval probe path. */
   private def phraseHitsProbe(spark: org.apache.spark.sql.SparkSession,
-                              path: String, idCol: String,
+                              index: IndexCommit, idCol: String,
                               terms: Seq[String]): DataFrame = {
     require(terms.size >= 2, "a phrase needs at least two terms")
     def side(term: String, posAs: String, withDl: Boolean) = {
-      val raw = spark.read.parquet(s"$path/postings")
+      val raw = index.part(spark, "postings")
         .filter(col("term") === term)
       if (withDl) raw.select(col(idCol), col("dl"), col("pos").as(posAs))
       else raw.select(col(idCol), col("pos").as(posAs))
@@ -601,16 +497,16 @@ object TextStats {
 
   /** Two-word convenience form of the n-ary [[phraseBm25FromIndex]]. */
   def phraseBm25FromIndex(spark: org.apache.spark.sql.SparkSession,
-                          path: String, idCol: String, first: String,
+                          index: IndexCommit, idCol: String, first: String,
                           second: String, k1: Double = 1.2,
                           b: Double = 0.75, topN: Int = 10): DataFrame =
-    phraseBm25FromIndex(spark, path, idCol, Seq(first, second), k1, b,
+    phraseBm25FromIndex(spark, index, idCol, Seq(first, second), k1, b,
       topN)
 
-  /** Routing gate for N-word phrase retrieval: probe needs a COMPLETE,
-    * FRESH index whose postings CARRY the positional payload (a pre-
-    * positional artifact routes to the scan, not an
-    * AnalysisException); else one corpus pass. Results identical
+  /** Routing gate for N-word phrase retrieval: probe the index when
+    * [[Index.gate]] passes (every committed BM25 index carries the
+    * positional payload; a tree without a record, such as one built
+    * before it, never routes); else one corpus pass. Results identical
     * either way.
     */
   def phraseBm25Routed(spark: org.apache.spark.sql.SparkSession,
@@ -619,12 +515,10 @@ object TextStats {
                        k1: Double, b: Double, topN: Int,
                        // no default: the 2-word overload carries them
                        expectedVersion: Option[Long]): DataFrame =
-    indexPath.filter(p => hasBm25Index(spark, p) &&
-        spark.read.parquet(s"$p/postings")
-          .schema.fieldNames.contains("pos") &&
-        bm25IndexFresh(spark, p, df, expectedVersion)) match {
-      case Some(p) =>
-        phraseBm25FromIndex(spark, p, idCol, terms, k1, b, topN)
+    indexPath.flatMap(Index.gate(_, IndexKind.Bm25, df,
+        expectedVersion)) match {
+      case Some(c) =>
+        phraseBm25FromIndex(spark, c, idCol, terms, k1, b, topN)
       case None => phraseBm25(df, idCol, textCol, terms, k1, b, topN)
     }
 
@@ -692,58 +586,53 @@ object TextStats {
     * side only its own terms' postings — the corpus text is never
     * touched. */
   def mixedBm25FromIndex(spark: org.apache.spark.sql.SparkSession,
-                         path: String, idCol: String,
+                         index: IndexCommit, idCol: String,
                          terms: Seq[String], phrases: Seq[Seq[String]],
                          k1: Double = 1.2, b: Double = 0.75,
                          topN: Int = 10): DataFrame = {
     require(terms.nonEmpty && phrases.nonEmpty,
       "mixed retrieval needs both terms and at least one phrase")
-    val stats = broadcast(spark.read.parquet(s"$path/stats"))
-    mixedCombine(bm25FromIndex(spark, path, idCol, terms, k1, b),
+    val stats = statsOf(spark, index)
+    mixedCombine(bm25FromIndex(spark, index, idCol, terms, k1, b),
       phrases.map(ph => phraseScoreAll(
-        phraseHitsProbe(spark, path, idCol, ph), stats, idCol, k1, b)),
+        phraseHitsProbe(spark, index, idCol, ph), stats, idCol, k1, b)),
       idCol, topN)
   }
 
-  /** Routing gate for mixed retrieval — the [[phraseBm25Routed]] gate
-    * (complete + positional payload + fresh): the probe needs the
-    * positions for its phrase components. Results identical either
-    * way. */
+  /** Routing gate for mixed retrieval — the [[phraseBm25Routed]] gate.
+    * Results identical either way. */
   def mixedBm25Routed(spark: org.apache.spark.sql.SparkSession,
                       df: DataFrame, idCol: String, textCol: String,
                       terms: Seq[String], phrases: Seq[Seq[String]],
                       indexPath: Option[String], k1: Double = 1.2,
                       b: Double = 0.75, topN: Int = 10,
                       expectedVersion: Option[Long] = None): DataFrame =
-    indexPath.filter(p => hasBm25Index(spark, p) &&
-        spark.read.parquet(s"$p/postings")
-          .schema.fieldNames.contains("pos") &&
-        bm25IndexFresh(spark, p, df, expectedVersion)) match {
-      case Some(p) =>
-        mixedBm25FromIndex(spark, p, idCol, terms, phrases, k1, b, topN)
+    indexPath.flatMap(Index.gate(_, IndexKind.Bm25, df,
+        expectedVersion)) match {
+      case Some(c) =>
+        mixedBm25FromIndex(spark, c, idCol, terms, phrases, k1, b, topN)
       case None =>
         mixedBm25(df, idCol, textCol, terms, phrases, k1, b, topN)
     }
 
   /** Rollup-style routing for BM25 (GraftClient's rollup route, retrieval
-    * edition): probe the persisted index when a COMPLETE
-    * ([[hasBm25Index]]) and FRESH ([[bm25IndexFresh]] — recorded N
-    * equals the live corpus count) one exists at `indexPath`, else
-    * fall back to the one-pass corpus scan. A stale index — one that
-    * predates an ingest — re-routes to the scan instead of silently
-    * serving old scores (VERDICT r13 ask #1); [[refreshBm25Index]]
-    * restores the probe path. Scores are identical either way —
-    * routing cannot change results, only whether the corpus text is
-    * re-tokenized.
+    * edition): probe the committed index at `indexPath` when
+    * [[Index.gate]] passes (its stamp equals `expectedVersion`, or
+    * without one its N equals the live corpus count), else fall back
+    * to the one-pass corpus scan. A stale index — one that predates an
+    * ingest — re-routes to the scan instead of silently serving old
+    * scores (VERDICT r13 ask #1); [[Index.refresh]] restores the probe
+    * path. Scores are identical either way — routing cannot change
+    * results, only whether the corpus text is re-tokenized.
     */
   def bm25Routed(spark: org.apache.spark.sql.SparkSession, df: DataFrame,
                  idCol: String, textCol: String, terms: Seq[String],
                  indexPath: Option[String], k1: Double = 1.2,
                  b: Double = 0.75,
                  expectedVersion: Option[Long] = None): DataFrame =
-    indexPath.filter(p => hasBm25Index(spark, p) &&
-        bm25IndexFresh(spark, p, df, expectedVersion)) match {
-      case Some(p) => bm25FromIndex(spark, p, idCol, terms, k1, b)
+    indexPath.flatMap(Index.gate(_, IndexKind.Bm25, df,
+        expectedVersion)) match {
+      case Some(c) => bm25FromIndex(spark, c, idCol, terms, k1, b)
       case None => bm25(df, idCol, textCol, terms, k1, b)
     }
 

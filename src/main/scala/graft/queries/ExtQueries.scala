@@ -3,8 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Artifacts, Tables}
-import graft.ext.{Dedup, Multimodal, Sampling, Similarity, TextStats}
+import graft.core.{Artifacts, CommitLog, Tables}
+import graft.ext.{Dedup, Index, IndexKind, Multimodal, Sampling, Similarity,
+  TextStats}
 
 /** North-star extension queries (SURVEY.md §2.F): dedup, similarity
   * search, text analysis, multimodal plumbing — over `documents` /
@@ -91,14 +92,15 @@ object ExtQueries {
     * Staleness defenses: the corpus tag folds in a FINGERPRINT of the
     * corpus parquet files (name/length/mtime), so a regenerated test
     * corpus at the same path gets a fresh tag; each index is
-    * additionally validity-checked through its own freshness gate
-    * (count + parameter tiers); bump [[PrebuildEpoch]] whenever an
+    * additionally validity-checked through its own gate
+    * ([[graft.ext.Index.gate]]: a commit record, the count and
+    * parameter tiers); bump [[PrebuildEpoch]] whenever an
     * operator changes the CONTENT of an index so an old cache can
     * never serve a new operator's bench.
     */
   @volatile private var artifactRoot: Option[String] = None
   def setArtifactRoot(r: Option[String]): Unit = { artifactRoot = r }
-  val PrebuildEpoch = 1
+  val PrebuildEpoch = 2
 
   private def tagOf(dir: String): String = {
     val fp = try {
@@ -148,12 +150,11 @@ object ExtQueries {
     }
 
   private def bm25IndexOf(s: SparkSession, dir: String): String =
-    // reuse only a COMPLETE, count-fresh artifact (the session probes
+    // reuse only a committed, count-fresh index (the session probes
     // expect version 1, which every cold build stamps)
     atRestIndex(s, dir, "bm25")(p =>
-        TextStats.hasBm25Index(s, p) &&
-        TextStats.bm25IndexFresh(s, p, docs(s, dir), None))(
-      p => TextStats.buildBm25Index(docs(s, dir), "doc_id", "text", p))
+        Index.gate(p, IndexKind.Bm25, docs(s, dir), None).isDefined)(
+      p => Index.build(IndexKind.Bm25, docs(s, dir), "doc_id", "text", p))
 
   /** The fixed batch/corpus split of the incremental-dedup board keys:
     * every 7th doc (id % 7 == 3) is "the new batch", the rest is the
@@ -166,28 +167,25 @@ object ExtQueries {
 
   private def exactIdxOf(s: SparkSession, dir: String): String =
     atRestIndex(s, dir, "exact")(p =>
-        graft.ext.DedupIndex.hasExactIndex(s, p) &&
-        graft.ext.DedupIndex.exactIndexFresh(s, p, incCorpusDocs(s, dir)))(
-      p => graft.ext.DedupIndex
-        .buildExactIndex(incCorpusDocs(s, dir), "doc_id", "text", p))
+        Index.gate(p, IndexKind.Exact, incCorpusDocs(s, dir), None).isDefined)(
+      p => Index.build(IndexKind.Exact, incCorpusDocs(s, dir), "doc_id",
+        "text", p))
 
   private def nearIdxOf(s: SparkSession, dir: String): String =
     atRestIndex(s, dir, "near")(p =>
-        graft.ext.DedupIndex.hasNearIndex(s, p) &&
-        graft.ext.DedupIndex.nearIndexFresh(s, p, incCorpusDocs(s, dir),
-          NumHashes, 1, 3))(
-      p => graft.ext.DedupIndex
-        .buildNearIndex(incCorpusDocs(s, dir), "doc_id", "text",
-          NumHashes, 1, 3, p))
+        Index.gate(p, nearKind, incCorpusDocs(s, dir), None).isDefined)(
+      p => Index.build(nearKind, incCorpusDocs(s, dir), "doc_id", "text", p))
+
+  // a def: `NumHashes` is initialised further down this object
+  private def nearKind = IndexKind.Near(NumHashes, 1, 3)
 
   private def semIdxOf(s: SparkSession, dir: String): String =
     atRestIndex(s, dir, "semantic")(p =>
-        graft.ext.DedupIndex.hasSemanticIndex(s, p) &&
-        graft.ext.DedupIndex.semanticIndexFresh(s, p, incCorpusEmb(s, dir),
-          32, 1))(
-      p => graft.ext.DedupIndex
-        .buildSemanticIndex(incCorpusEmb(s, dir), "vec_id", "embedding",
-          targetCellSize = 32, iters = 1, p))
+        Index.gate(p, semKind, incCorpusEmb(s, dir), None).isDefined)(
+      p => Index.build(semKind, incCorpusEmb(s, dir), "vec_id",
+        "embedding", p))
+
+  private val semKind = IndexKind.Semantic(targetCellSize = 32, iters = 1)
 
   /** The managed corpus of the `docstore_ingest_dedup` key: a
     * [[graft.ext.DocStore]] initialised on 5/7 of the documents
@@ -201,6 +199,11 @@ object ExtQueries {
   private val docStoreCfg = graft.ext.DocStore.Config("doc_id", "text",
     bm25 = false, exact = true)
 
+  /** The store's exact index is committed at the store's v2. */
+  private def docStoreIndexed(s: SparkSession, root: String): Boolean =
+    Index.gate(graft.ext.DocStore.exactPath(root), IndexKind.Exact,
+      graft.ext.DocStore.docs(s, root), Some(2L)).isDefined
+
   private def docStoreOf(s: SparkSession, dir: String): String =
     atRestIndex(s, dir, "docstore")(root =>
         // reusable iff the full init+ingest lifecycle committed: v2
@@ -208,11 +211,7 @@ object ExtQueries {
         graft.ext.DocStore.version(s, root) == 2L &&
         graft.ext.DocStore.count(s, root) ==
           docs(s, dir).filter(col("doc_id") % 7 =!= 3).count() &&
-        graft.ext.DedupIndex.hasExactIndex(s,
-          graft.ext.DocStore.exactPath(root)) &&
-        graft.ext.DedupIndex.exactIndexFresh(s,
-          graft.ext.DocStore.exactPath(root),
-          graft.ext.DocStore.docs(s, root), Some(2L))) { root =>
+        docStoreIndexed(s, root)) { root =>
       val d = docs(s, dir).select("doc_id", "text")
       graft.ext.DocStore.init(s, root,
         d.filter(col("doc_id") % 7 =!= 3 && col("doc_id") % 7 =!= 6),
@@ -236,11 +235,7 @@ object ExtQueries {
         graft.ext.DocStore.count(s, root) ==
           docs(s, dir).filter(col("doc_id") % 7 =!= 3 &&
             col("doc_id") % 7 =!= 6).count() &&
-        graft.ext.DedupIndex.hasExactIndex(s,
-          graft.ext.DocStore.exactPath(root)) &&
-        graft.ext.DedupIndex.exactIndexFresh(s,
-          graft.ext.DocStore.exactPath(root),
-          graft.ext.DocStore.docs(s, root), Some(2L))) { root =>
+        docStoreIndexed(s, root)) { root =>
       val d = docs(s, dir).select("doc_id", "text")
       graft.ext.DocStore.init(s, root,
         d.filter(col("doc_id") % 7 =!= 3), docStoreCfg)
@@ -250,8 +245,8 @@ object ExtQueries {
     }
 
   /** Release the at-rest index artifacts: unregister every entry,
-    * drop its gate verdicts and part frames, AND delete its temp
-    * parquet tree. The companion valve to [[clearMemo]] — which
+    * drop its part frames, AND delete its temp parquet tree. The
+    * companion valve to [[clearMemo]] — which
     * deliberately leaves the at-rest artifacts intact so a cleared memo
     * can re-probe without a rebuild — for session teardown / corpus
     * cycling, where the temp trees would otherwise accumulate as
@@ -265,15 +260,8 @@ object ExtQueries {
     Artifacts.clear(Artifacts.AtRestIndex).foreach { p =>
       Artifacts.invalidate(p)
       if (!artifactRoot.exists(r => p.startsWith(r)))
-        try {
-          val root = java.nio.file.Paths.get(p)
-          if (java.nio.file.Files.exists(root)) {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(root).iterator().asScala.toSeq
-              .sortBy(-_.getNameCount)
-              .foreach(java.nio.file.Files.deleteIfExists(_))
-          }
-        } catch { case _: java.io.IOException => () }
+        try CommitLog.rmTree(java.nio.file.Paths.get(p))
+        catch { case _: java.io.IOException => () }
     }
 
   /** Shared BM25 scored frame — (doc_id, bm25 [6-dec truncated],
@@ -286,9 +274,9 @@ object ExtQueries {
     frame(s, dir, "bm25")(
       TextStats.bm25Routed(s, docs(s, dir), "doc_id", "text", QTerms,
         Some(bm25IndexOf(s, dir)),
-        // session-built artifact is version 1: the gate memoizes the
-        // version match, so a steady probe pays no corpus count and
-        // no repeated stats read (r15 ask #4)
+        // session-built artifact is version 1: the version gate reads
+        // the commit record only, so a probe pays no corpus count and
+        // no Spark job (r15 ask #4)
         expectedVersion = Some(1L)).persist())
 
   /** The two bounded rank frames of the hybrid-retrieval pair

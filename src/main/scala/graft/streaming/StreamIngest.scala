@@ -298,13 +298,12 @@ object StreamIngest {
               val nearPath = graft.ext.DocStore.nearPath(root)
               val corpus = graft.ext.DocStore.docs(spark, root)
               val bands =
-                if (graft.ext.DedupIndex.hasNearIndex(spark, nearPath) &&
-                    graft.ext.DedupIndex.nearIndexFresh(spark, nearPath,
-                      corpus, np.numHashes, np.rowsPerBand, np.shingleN,
-                      Some(v)))
-                  graft.ext.DedupIndex.bandTable(spark, nearPath)
-                else graft.ext.DedupIndex.bandRows(corpus, cfg.idCol,
-                  cfg.textCol, np.numHashes, np.rowsPerBand, np.shingleN)
+                graft.ext.Index.gate(nearPath, np.kind, corpus, Some(v)) match {
+                  case Some(c) => c.part(spark, "bands")
+                  case None => graft.ext.DedupIndex.bandRows(corpus,
+                    cfg.idCol, cfg.textCol, np.numHashes, np.rowsPerBand,
+                    np.shingleN)
+                }
               val b = bandBloom(bands, expectedItems)
               cached = Some((v, b))
               b

@@ -28,6 +28,11 @@ class DedupIndexSpec extends SparkSpec {
   private def rows(df: org.apache.spark.sql.DataFrame): Array[String] =
     df.orderBy("doc_id").collect().map(_.toString)
 
+  private def passes(path: String, kind: IndexKind,
+                     corpus: org.apache.spark.sql.DataFrame,
+                     expected: Option[Long] = None): Boolean =
+    Index.gate(path, kind, corpus, expected).isDefined
+
   // ---------------------------------------------------------------- exact
 
   test("exact index: routed probe is BIT-IDENTICAL to the session " +
@@ -40,9 +45,9 @@ class DedupIndexSpec extends SparkSpec {
     assert(session.nonEmpty)
 
     val full = tmp("exfull")
-    DedupIndex.buildExactIndex(corpus, "doc_id", "text", full)
-    assert(DedupIndex.hasExactIndex(spark, full))
-    assert(DedupIndex.exactIndexFresh(spark, full, corpus))
+    Index.build(IndexKind.Exact, corpus, "doc_id", "text", full)
+    assert(Index.current(full).isDefined)
+    assert(passes(full, IndexKind.Exact, corpus))
     val probeFull = DedupIndex.incrementalExactRouted(spark, batch,
       corpus, "doc_id", "text", Some(full))
     assert(probeFull.queryExecution.executedPlan.toString
@@ -50,11 +55,11 @@ class DedupIndexSpec extends SparkSpec {
     assert(rows(probeFull).sameElements(session), "probe != session")
 
     val inc = tmp("exinc")
-    DedupIndex.buildExactIndex(corpus.filter(col("doc_id") % 2 === 0),
+    Index.build(IndexKind.Exact, corpus.filter(col("doc_id") % 2 === 0),
       "doc_id", "text", inc)
-    DedupIndex.refreshExactIndex(spark, inc,
+    Index.refresh(inc,
       corpus.filter(col("doc_id") % 2 =!= 0), "doc_id", "text")
-    assert(DedupIndex.exactIndexFresh(spark, inc, corpus),
+    assert(passes(inc, IndexKind.Exact, corpus),
       "refreshed index must carry the full corpus count")
     assert(rows(DedupIndex.incrementalExactRouted(spark, batch, corpus,
       "doc_id", "text", Some(inc))).sameElements(session),
@@ -68,8 +73,8 @@ class DedupIndexSpec extends SparkSpec {
     val corpus = docs.filter(col("doc_id") % 7 =!= 3)
     val idx = tmp("exstale")
     val half = corpus.filter(col("doc_id") % 2 === 0)
-    DedupIndex.buildExactIndex(half, "doc_id", "text", idx)
-    assert(!DedupIndex.exactIndexFresh(spark, idx, corpus))
+    Index.build(IndexKind.Exact, half, "doc_id", "text", idx)
+    assert(!passes(idx, IndexKind.Exact, corpus))
     val session = rows(DedupIndex.incrementalExactRouted(spark, batch,
       corpus, "doc_id", "text", None))
     val stale = DedupIndex.incrementalExactRouted(spark, batch, corpus,
@@ -77,7 +82,7 @@ class DedupIndexSpec extends SparkSpec {
     assert(!stale.queryExecution.executedPlan.toString.contains("hashes"),
       "stale artifact must NOT be probed")
     assert(rows(stale).sameElements(session))
-    DedupIndex.refreshExactIndex(spark, idx,
+    Index.refresh(idx,
       corpus.filter(col("doc_id") % 2 =!= 0), "doc_id", "text")
     val routed = DedupIndex.incrementalExactRouted(spark, batch, corpus,
       "doc_id", "text", Some(idx))
@@ -86,15 +91,15 @@ class DedupIndexSpec extends SparkSpec {
     assert(rows(routed).sameElements(session))
   }
 
-  test("exact index: a TORN build (missing _SUCCESS) never routes the " +
-    "probe") {
+  test("exact index: a TORN build (files without a record) never " +
+    "routes the probe") {
     val batch = docs.filter(col("doc_id") % 7 === 3)
     val corpus = docs.filter(col("doc_id") % 7 =!= 3)
     val torn = tmp("extorn")
-    DedupIndex.buildExactIndex(corpus, "doc_id", "text", torn)
+    Index.build(IndexKind.Exact, corpus, "doc_id", "text", torn)
     java.nio.file.Files.delete(
-      java.nio.file.Paths.get(torn, "stats", "_SUCCESS"))
-    assert(!DedupIndex.hasExactIndex(spark, torn))
+      java.nio.file.Paths.get(torn, "_commit", "v1.json"))
+    assert(Index.current(torn).isEmpty)
     val routed = DedupIndex.incrementalExactRouted(spark, batch, corpus,
       "doc_id", "text", Some(torn))
     assert(!routed.queryExecution.executedPlan.toString.contains("hashes"))
@@ -117,24 +122,24 @@ class DedupIndexSpec extends SparkSpec {
     assert(session.nonEmpty)
 
     val full = tmp("nrfull")
-    DedupIndex.buildNearIndex(corpus, "doc_id", "text", 8, 1, 3, full)
-    assert(DedupIndex.nearIndexFresh(spark, full, corpus, 8, 1, 3))
+    Index.build(IndexKind.Near(8, 1, 3), corpus, "doc_id", "text", full)
+    assert(passes(full, IndexKind.Near(8, 1, 3), corpus))
     val probe = routed(Some(full))
     assert(probe.queryExecution.executedPlan.toString.contains("bands"),
       "fresh artifact must be probed")
     assert(rows(probe).sameElements(session), "probe != session")
 
     val inc = tmp("nrinc")
-    DedupIndex.buildNearIndex(corpus.filter(col("doc_id") % 2 === 0),
-      "doc_id", "text", 8, 1, 3, inc)
-    DedupIndex.refreshNearIndex(spark, inc,
+    Index.build(IndexKind.Near(8, 1, 3),
+      corpus.filter(col("doc_id") % 2 === 0), "doc_id", "text", inc)
+    Index.refresh(inc,
       corpus.filter(col("doc_id") % 2 =!= 0), "doc_id", "text")
-    assert(DedupIndex.nearIndexFresh(spark, inc, corpus, 8, 1, 3))
+    assert(passes(inc, IndexKind.Near(8, 1, 3), corpus))
     assert(rows(routed(Some(inc))).sameElements(session),
       "refresh != rebuild/session")
 
     // parameter gate: same artifact, different banding request → scan
-    assert(!DedupIndex.nearIndexFresh(spark, full, corpus, 8, 2, 3),
+    assert(!passes(full, IndexKind.Near(8, 2, 3), corpus),
       "an artifact with different LSH parameters must not read FRESH")
     val mis = DedupIndex.incrementalNearRouted(spark, batch, corpus,
       "doc_id", "text", 8, 2, 3, Some(full))
@@ -147,9 +152,9 @@ class DedupIndexSpec extends SparkSpec {
     val batch = docs.filter(col("doc_id") % 7 === 3)
     val corpus = docs.filter(col("doc_id") % 7 =!= 3)
     val idx = tmp("nrstale")
-    DedupIndex.buildNearIndex(corpus.filter(col("doc_id") % 2 === 0),
-      "doc_id", "text", 8, 1, 3, idx)
-    assert(!DedupIndex.nearIndexFresh(spark, idx, corpus, 8, 1, 3))
+    Index.build(IndexKind.Near(8, 1, 3),
+      corpus.filter(col("doc_id") % 2 === 0), "doc_id", "text", idx)
+    assert(!passes(idx, IndexKind.Near(8, 1, 3), corpus))
     def routed(p: Option[String]) =
       DedupIndex.incrementalNearRouted(spark, batch, corpus, "doc_id",
         "text", 8, 1, 3, p)
@@ -157,7 +162,7 @@ class DedupIndexSpec extends SparkSpec {
     val stale = routed(Some(idx))
     assert(!stale.queryExecution.executedPlan.toString.contains("bands"))
     assert(rows(stale).sameElements(session))
-    DedupIndex.refreshNearIndex(spark, idx,
+    Index.refresh(idx,
       corpus.filter(col("doc_id") % 2 =!= 0), "doc_id", "text")
     val fresh = routed(Some(idx))
     assert(fresh.queryExecution.executedPlan.toString.contains("bands"))
@@ -180,10 +185,10 @@ class DedupIndexSpec extends SparkSpec {
     assert(session.nonEmpty)
 
     val full = tmp("smfull")
-    DedupIndex.buildSemanticIndex(corpus, "vec_id", "embedding", 32, 1,
+    Index.build(IndexKind.Semantic(32, 1), corpus, "vec_id", "embedding",
       full)
-    assert(DedupIndex.hasSemanticIndex(spark, full))
-    assert(DedupIndex.semanticIndexFresh(spark, full, corpus, 32, 1))
+    assert(Index.current(full).isDefined)
+    assert(passes(full, IndexKind.Semantic(32, 1), corpus))
     assert(routed(Some(full)).sameElements(session), "probe != session")
 
     // frozen-index refresh contract: build on A, refresh with B ⇒
@@ -191,14 +196,14 @@ class DedupIndexSpec extends SparkSpec {
     val a = corpus.filter(col("vec_id") % 2 === 0)
     val b = corpus.filter(col("vec_id") % 2 =!= 0)
     val inc = tmp("sminc")
-    DedupIndex.buildSemanticIndex(a, "vec_id", "embedding", 32, 1, inc)
-    DedupIndex.refreshSemanticIndex(spark, inc, b, "vec_id", "embedding")
-    assert(DedupIndex.semanticIndexFresh(spark, inc, corpus, 32, 1))
-    val got = spark.read.parquet(s"$inc/cells").drop("v")
+    Index.build(IndexKind.Semantic(32, 1), a, "vec_id", "embedding", inc)
+    Index.refresh(inc, b, "vec_id", "embedding")
+    assert(passes(inc, IndexKind.Semantic(32, 1), corpus))
+    val c = Index.current(inc).get
+    val got = c.part(spark, "cells")
       .orderBy("corpus_id").collect().map(_.toString)
     val want = Dedup.assignCells(corpus, "vec_id", "embedding",
-        spark.read.parquet(s"$inc/coarse"),
-        spark.read.parquet(s"$inc/anchors"))
+        c.part(spark, "coarse"), c.part(spark, "anchors"))
       .select(col("cell"), col("vec_id").as("corpus_id"),
         col("embedding").as("corpus_vec"))
       .orderBy("corpus_id").collect().map(_.toString)
@@ -213,14 +218,14 @@ class DedupIndexSpec extends SparkSpec {
     val batch = docs.filter(col("doc_id") % 7 === 3)
     val corpus = docs.filter(col("doc_id") % 7 =!= 3)
     val idx = tmp("exver")
-    DedupIndex.buildExactIndex(corpus, "doc_id", "text", idx, version = 1L)
+    Index.build(IndexKind.Exact, corpus, "doc_id", "text", idx, version = 1L)
 
     // version tier passes without consulting the corpus at all: hand
     // the gate a POISON corpus that counts to ZERO rows — the count
     // tier would read NOT-fresh on it, so a passing gate proves the
     // version tier never looked
     val poison = corpus.filter(lit(false))
-    assert(DedupIndex.exactIndexFresh(spark, idx, poison, Some(1L)))
+    assert(passes(idx, IndexKind.Exact, poison, Some(1L)))
     val probe = DedupIndex.incrementalExactRouted(spark, batch, corpus,
       "doc_id", "text", Some(idx), expectedVersion = Some(1L))
     assert(probe.queryExecution.executedPlan.toString.contains("hashes"))
@@ -231,44 +236,44 @@ class DedupIndexSpec extends SparkSpec {
     // the corpus moved to version 2 (e.g. a SAME-COUNT text
     // replacement — invisible to the count gate by construction) but
     // the index still records v1 → must NOT serve
-    assert(!DedupIndex.exactIndexFresh(spark, idx, corpus, Some(2L)))
+    assert(!passes(idx, IndexKind.Exact, corpus, Some(2L)))
     val stale = DedupIndex.incrementalExactRouted(spark, batch, corpus,
       "doc_id", "text", Some(idx), expectedVersion = Some(2L))
     assert(!stale.queryExecution.executedPlan.toString.contains("hashes"),
       "a version-mismatched artifact must NOT be probed")
 
-    // refresh stamping v2 invalidates the memoized false verdict and
+    // refresh stamping v2 commits a record the gate passes, and
     // restores the probe (empty batch: the replacement didn't add docs)
-    DedupIndex.refreshExactIndex(spark, idx, corpus.limit(0), "doc_id",
+    Index.refresh(idx, corpus.limit(0), "doc_id",
       "text", newVersion = Some(2L))
-    assert(DedupIndex.exactIndexFresh(spark, idx, poison, Some(2L)))
+    assert(passes(idx, IndexKind.Exact, poison, Some(2L)))
     val back = DedupIndex.incrementalExactRouted(spark, batch, corpus,
       "doc_id", "text", Some(idx), expectedVersion = Some(2L))
     assert(back.queryExecution.executedPlan.toString.contains("hashes"))
 
     // near + semantic carry the same tier
     val nidx = tmp("nrver")
-    DedupIndex.buildNearIndex(corpus, "doc_id", "text", 8, 1, 3, nidx,
+    Index.build(IndexKind.Near(8, 1, 3), corpus, "doc_id", "text", nidx,
       version = 5L)
-    assert(DedupIndex.nearIndexFresh(spark, nidx, poison, 8, 1, 3,
+    assert(passes(nidx, IndexKind.Near(8, 1, 3), poison,
       Some(5L)))
-    assert(!DedupIndex.nearIndexFresh(spark, nidx, corpus, 8, 1, 3,
+    assert(!passes(nidx, IndexKind.Near(8, 1, 3), corpus,
       Some(6L)))
     val sidx = tmp("smver")
     val scorpus = emb.filter(col("vec_id") % 7 =!= 3)
-    DedupIndex.buildSemanticIndex(scorpus, "vec_id", "embedding", 32, 1,
+    Index.build(IndexKind.Semantic(32, 1), scorpus, "vec_id", "embedding",
       sidx, version = 3L)
     val spoison = scorpus.filter(lit(false))
-    assert(DedupIndex.semanticIndexFresh(spark, sidx, spoison, 32, 1,
+    assert(passes(sidx, IndexKind.Semantic(32, 1), spoison,
       Some(3L)))
-    assert(!DedupIndex.semanticIndexFresh(spark, sidx, scorpus, 32, 1,
+    assert(!passes(sidx, IndexKind.Semantic(32, 1), scorpus,
       Some(4L)))
     // the parameter gate rides the version tier too (r15 advice: an
     // artifact FITTED differently is a different index even at the
     // right version)
-    assert(!DedupIndex.semanticIndexFresh(spark, sidx, scorpus, 32, 2,
+    assert(!passes(sidx, IndexKind.Semantic(32, 2), scorpus,
       Some(3L)))
-    assert(!DedupIndex.semanticIndexFresh(spark, sidx, scorpus, 16, 1,
+    assert(!passes(sidx, IndexKind.Semantic(16, 1), scorpus,
       Some(3L)))
   }
 
@@ -277,9 +282,9 @@ class DedupIndexSpec extends SparkSpec {
     val batch = emb.filter(col("vec_id") % 7 === 3)
     val corpus = emb.filter(col("vec_id") % 7 =!= 3)
     val idx = tmp("smstale")
-    DedupIndex.buildSemanticIndex(corpus.filter(col("vec_id") % 2 === 0),
-      "vec_id", "embedding", 32, 1, idx)
-    assert(!DedupIndex.semanticIndexFresh(spark, idx, corpus, 32, 1))
+    Index.build(IndexKind.Semantic(32, 1),
+      corpus.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx)
+    assert(!passes(idx, IndexKind.Semantic(32, 1), corpus))
     def routedDf(p: Option[String]) =
       DedupIndex.incrementalSemanticRouted(spark, batch, corpus,
         "vec_id", "embedding", 32, 1, 0.40, p)
@@ -291,7 +296,7 @@ class DedupIndexSpec extends SparkSpec {
     assert(stale.orderBy("vec_id").collect().map(_.toString)
       .sameElements(routedDf(None).orderBy("vec_id").collect()
         .map(_.toString)))
-    DedupIndex.refreshSemanticIndex(spark, idx,
+    Index.refresh(idx,
       corpus.filter(col("vec_id") % 2 =!= 0), "vec_id", "embedding")
     val fresh = routedDf(Some(idx))
     assert(fresh.queryExecution.executedPlan.toString.contains("cells"),

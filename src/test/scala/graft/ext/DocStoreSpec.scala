@@ -18,7 +18,7 @@ import graft.core.Tables
   *  - replace/delete are copy-on-write (r16 advice #1) and route every
   *    probe to the fallback until [[DocStore.rebuildIndexes]];
   *  - an ingest AFTER an un-rebuilt replace must NOT stamp the stale
-  *    artifacts current (refresh refusal, `DedupIndex.admitRefresh`);
+  *    artifacts current (refresh refusal, `Index.admitRefresh`);
   *  - concurrent ingests serialize under the store writer lock
   *    (r16 verdict ask #3) and converge to the serial outcome.
   */
@@ -104,11 +104,10 @@ class DocStoreSpec extends SparkSpec {
     val sem = DocStore.dedupBatchSemantic(spark, live, cfg, batch, 0.40)
     assert(plan(sem).contains("cells"),
       "sem: refreshed store must probe the artifact")
+    val semIdx = Index.current(DocStore.semPath(live)).get
     val semWant = Dedup.incrementalSemantic(batch,
-      spark.read.parquet(s"${DocStore.semPath(live)}/cells").drop("v"),
-      spark.read.parquet(s"${DocStore.semPath(live)}/coarse"),
-      spark.read.parquet(s"${DocStore.semPath(live)}/anchors"),
-      "doc_id", "vec", 0.40)
+      semIdx.part(spark, "cells"), semIdx.part(spark, "coarse"),
+      semIdx.part(spark, "anchors"), "doc_id", "vec", 0.40)
     assert(rows(sem).sameElements(rows(semWant)),
       "sem: store probe != direct artifact computation")
   }
@@ -128,9 +127,9 @@ class DocStoreSpec extends SparkSpec {
     // simulate the tear: the index refreshes of ingestBatch ran
     // (stamped v2) but the crash hit before the segment write and the
     // commit — exactly the window the commit ordering defends
-    TextStats.refreshBm25Index(spark, DocStore.bm25Path(root),
+    Index.refresh(DocStore.bm25Path(root),
       ingested, "doc_id", "text", newVersion = Some(2L))
-    DedupIndex.refreshExactIndex(spark, DocStore.exactPath(root),
+    Index.refresh(DocStore.exactPath(root),
       ingested, "doc_id", "text", newVersion = Some(2L))
     assert(DocStore.version(spark, root) == 1L, "commit must still be v1")
     val probe = DocStore.dedupBatchExact(spark, root, cfgLite, batch)
@@ -144,9 +143,8 @@ class DocStoreSpec extends SparkSpec {
 
     // re-running the ingest end-to-end from the torn state completes
     // the transaction IDEMPOTENTLY: the already-stamped refreshes are
-    // skipped (admitRefresh), the versioned-partition layout means a
-    // partially-committed refresh would have been REPLACED, not
-    // appended to
+    // skipped (admitRefresh), and a refresh torn before its record
+    // would have been REPLACED at the same sequence, not appended to
     DocStore.ingestBatch(spark, root, ingested, cfgLite)
     assert(DocStore.version(spark, root) == 2L)
     val cold = tmp("dstearcold")
@@ -164,10 +162,9 @@ class DocStoreSpec extends SparkSpec {
     assert(rows(hb).sameElements(
       rows(DocStore.bm25(spark, cold, cfgLite, Seq("stream", "spark")))),
       "healed bm25 != cold rebuild — the redo double-counted")
-    // stats are exact, not conservatively over-counted
-    val sn = spark.read
-      .parquet(s"${DocStore.exactPath(root)}/stats").head()
-    assert(sn.getAs[Long]("n") == DocStore.count(spark, root),
+    // the record's count is exact, not conservatively over-counted
+    assert(Index.current(DocStore.exactPath(root)).get.n ==
+      DocStore.count(spark, root),
       "healed index stats must record the exact corpus count")
   }
 
@@ -186,7 +183,7 @@ class DocStoreSpec extends SparkSpec {
     // stamped v2, crash before the commit (the intent is step 1 of
     // ingestBatch — replicate its record shape)
     writeIntent(root, 2L, batchA)
-    DedupIndex.refreshExactIndex(spark, DocStore.exactPath(root),
+    Index.refresh(DocStore.exactPath(root),
       batchA, "doc_id", "text", newVersion = Some(2L))
 
     // redoing with a DIFFERENT batch must not "heal" the wrong redo

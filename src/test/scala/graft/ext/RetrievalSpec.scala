@@ -21,16 +21,18 @@ class RetrievalSpec extends SparkSpec {
   // a second query, disjoint from the board's fixed one
   private val terms2 = Seq("data", "model", "stream")
 
+  private def at(path: String): IndexCommit = Index.current(path).get
+
   test("bm25 corpus scan and index probe score BIT-IDENTICALLY — for " +
     "the board's query AND a second one (the routing gate cannot " +
     "change results)") {
     val idx = java.nio.file.Files.createTempDirectory("bm25idx").toString
-    TextStats.buildBm25Index(docs, "doc_id", "text", idx)
-    assert(TextStats.hasBm25Index(spark, idx))
+    Index.build(IndexKind.Bm25, docs, "doc_id", "text", idx)
+    assert(Index.current(idx).isDefined)
     for (terms <- Seq(Seq("spark", "merge", "vector"), terms2)) {
       val scan = TextStats.bm25(docs, "doc_id", "text", terms)
         .orderBy("doc_id").collect().map(_.toString)
-      val probe = TextStats.bm25FromIndex(spark, idx, "doc_id", terms)
+      val probe = TextStats.bm25FromIndex(spark, at(idx), "doc_id", terms)
         .orderBy("doc_id").collect().map(_.toString)
       assert(scan.sameElements(probe),
         s"scan vs probe diverged for $terms:\n" +
@@ -43,13 +45,12 @@ class RetrievalSpec extends SparkSpec {
   test("bm25Routed gates on a COMPLETE artifact: missing or torn index " +
     "falls back to the corpus scan with equal results") {
     val ghost = java.nio.file.Files.createTempDirectory("bm25ghost").toString
-    assert(!TextStats.hasBm25Index(spark, ghost))
-    // torn build: postings committed, stats missing
+    assert(Index.current(ghost).isEmpty)
+    // torn build: postings written, record missing
     val torn = java.nio.file.Files.createTempDirectory("bm25torn").toString
-    TextStats.buildBm25Index(docs, "doc_id", "text", torn)
-    val statsSuccess = java.nio.file.Paths.get(torn, "stats", "_SUCCESS")
-    java.nio.file.Files.delete(statsSuccess)
-    assert(!TextStats.hasBm25Index(spark, torn))
+    Index.build(IndexKind.Bm25, docs, "doc_id", "text", torn)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(torn, "_commit", "v1.json"))
+    assert(Index.current(torn).isEmpty)
     val direct = TextStats.bm25(docs, "doc_id", "text", terms2)
       .orderBy("doc_id").collect().map(_.toString)
     for (p <- Seq(None, Some(ghost), Some(torn))) {
@@ -66,17 +67,17 @@ class RetrievalSpec extends SparkSpec {
     val half = docs.filter(col("doc_id") % 2 === 0)
     val rest = docs.filter(col("doc_id") % 2 =!= 0)
     val inc = java.nio.file.Files.createTempDirectory("bm25inc").toString
-    TextStats.buildBm25Index(half, "doc_id", "text", inc)
-    TextStats.refreshBm25Index(spark, inc, rest, "doc_id", "text")
-    assert(TextStats.hasBm25Index(spark, inc))
-    assert(TextStats.bm25IndexFresh(spark, inc, docs),
+    Index.build(IndexKind.Bm25, half, "doc_id", "text", inc)
+    Index.refresh(inc, rest, "doc_id", "text")
+    assert(Index.current(inc).isDefined)
+    assert(Index.gate(inc, IndexKind.Bm25, docs, None).isDefined,
       "refreshed index must carry the full corpus count")
     val full = java.nio.file.Files.createTempDirectory("bm25full").toString
-    TextStats.buildBm25Index(docs, "doc_id", "text", full)
+    Index.build(IndexKind.Bm25, docs, "doc_id", "text", full)
     for (terms <- Seq(Seq("spark", "merge", "vector"), terms2)) {
-      val probeInc = TextStats.bm25FromIndex(spark, inc, "doc_id", terms)
+      val probeInc = TextStats.bm25FromIndex(spark, at(inc), "doc_id", terms)
         .orderBy("doc_id").collect().map(_.toString)
-      val probeFull = TextStats.bm25FromIndex(spark, full, "doc_id", terms)
+      val probeFull = TextStats.bm25FromIndex(spark, at(full), "doc_id", terms)
         .orderBy("doc_id").collect().map(_.toString)
       val scan = TextStats.bm25(docs, "doc_id", "text", terms)
         .orderBy("doc_id").collect().map(_.toString)
@@ -93,9 +94,9 @@ class RetrievalSpec extends SparkSpec {
     val half = docs.filter(col("doc_id") % 2 === 0)
     val rest = docs.filter(col("doc_id") % 2 =!= 0)
     val idx = java.nio.file.Files.createTempDirectory("bm25stale").toString
-    TextStats.buildBm25Index(half, "doc_id", "text", idx)
-    assert(TextStats.hasBm25Index(spark, idx))
-    assert(!TextStats.bm25IndexFresh(spark, idx, docs),
+    Index.build(IndexKind.Bm25, half, "doc_id", "text", idx)
+    assert(Index.current(idx).isDefined)
+    assert(!Index.gate(idx, IndexKind.Bm25, docs, None).isDefined,
       "a half-corpus index must read as STALE against the full corpus")
     val scan = TextStats.bm25(docs, "doc_id", "text", terms2)
       .orderBy("doc_id").collect().map(_.toString)
@@ -105,7 +106,7 @@ class RetrievalSpec extends SparkSpec {
       "stale index must NOT be probed")
     assert(stale.orderBy("doc_id").collect().map(_.toString)
       .sameElements(scan), "stale fallback diverged from the scan")
-    TextStats.refreshBm25Index(spark, idx, rest, "doc_id", "text")
+    Index.refresh(idx, rest, "doc_id", "text")
     val routed = TextStats.bm25Routed(spark, docs, "doc_id", "text",
       terms2, Some(idx))
     assert(routed.queryExecution.executedPlan.toString.contains("postings"),
@@ -118,11 +119,11 @@ class RetrievalSpec extends SparkSpec {
     "the corpus scan on TWO phrases; matched docs really contain the " +
     "adjacent pair (r13 ask #3)") {
     val idx = java.nio.file.Files.createTempDirectory("bm25pos").toString
-    TextStats.buildBm25Index(docs, "doc_id", "text", idx)
+    Index.build(IndexKind.Bm25, docs, "doc_id", "text", idx)
     for ((w1, w2) <- Seq(("stream", "spark"), ("merge", "part"))) {
       val scan = TextStats.phraseBm25(docs, "doc_id", "text", w1, w2,
         topN = 50).orderBy("doc_id").collect().map(_.toString)
-      val probe = TextStats.phraseBm25FromIndex(spark, idx, "doc_id",
+      val probe = TextStats.phraseBm25FromIndex(spark, at(idx), "doc_id",
         w1, w2, topN = 50).orderBy("doc_id").collect().map(_.toString)
       assert(scan.nonEmpty, s"phrase '$w1 $w2' matched nothing — vacuous")
       assert(scan.sameElements(probe),
@@ -138,12 +139,11 @@ class RetrievalSpec extends SparkSpec {
         s"a scored doc does not contain '$w1 $w2'")
     }
     // routing: a positional probe falls back to the scan when the
-    // artifact predates the positional payload (no pos column)
+    // artifact predates the positional payload (no pos column) — such
+    // a tree carries no commit record
     val legacy = java.nio.file.Files.createTempDirectory("bm25leg").toString
-    spark.read.parquet(s"$idx/postings").drop("pos")
+    at(idx).part(spark, "postings").drop("pos")
       .write.parquet(s"$legacy/postings")
-    spark.read.parquet(s"$idx/stats")
-      .write.parquet(s"$legacy/stats")
     val routed = TextStats.phraseBm25Routed(spark, docs, "doc_id",
       "text", "stream", "spark", Some(legacy))
     assert(!routed.queryExecution.executedPlan.toString.contains("postings"),
@@ -158,12 +158,12 @@ class RetrievalSpec extends SparkSpec {
     "the full adjacent run; the 2-word forms delegate unchanged " +
     "(r14 ask #3)") {
     val idx = java.nio.file.Files.createTempDirectory("bm25pos3").toString
-    TextStats.buildBm25Index(docs, "doc_id", "text", idx)
+    Index.build(IndexKind.Bm25, docs, "doc_id", "text", idx)
     for (phrase <- Seq(Seq("big", "order", "scan"),
         Seq("group", "slow", "spark"))) {
       val scan = TextStats.phraseBm25(docs, "doc_id", "text", phrase,
         1.2, 0.75, 50).orderBy("doc_id").collect().map(_.toString)
-      val probe = TextStats.phraseBm25FromIndex(spark, idx, "doc_id",
+      val probe = TextStats.phraseBm25FromIndex(spark, at(idx), "doc_id",
         phrase, 1.2, 0.75, 50).orderBy("doc_id").collect()
         .map(_.toString)
       assert(scan.nonEmpty, s"phrase $phrase matched nothing — vacuous")
@@ -185,7 +185,7 @@ class RetrievalSpec extends SparkSpec {
     val ghost = Seq("big", "order", "scan", "zzzz")
     assert(TextStats.phraseBm25(docs, "doc_id", "text", ghost, 1.2,
       0.75, 50).collect().isEmpty)
-    assert(TextStats.phraseBm25FromIndex(spark, idx, "doc_id", ghost,
+    assert(TextStats.phraseBm25FromIndex(spark, at(idx), "doc_id", ghost,
       1.2, 0.75, 50).collect().isEmpty)
     // the 2-word convenience form IS the n-ary path (no drift)
     val two = TextStats.phraseBm25(docs, "doc_id", "text", "stream",
@@ -201,13 +201,13 @@ class RetrievalSpec extends SparkSpec {
     "pure paths' own components; docs matching only one side still " +
     "score") {
     val idx = java.nio.file.Files.createTempDirectory("bm25mix").toString
-    TextStats.buildBm25Index(docs, "doc_id", "text", idx)
+    Index.build(IndexKind.Bm25, docs, "doc_id", "text", idx)
     for ((terms, phrases) <- Seq(
         (Seq("spark", "merge", "vector"), Seq(Seq("stream", "spark"))),
         (Seq("index"), Seq(Seq("merge", "part"), Seq("stream", "spark"))))) {
       val scan = TextStats.mixedBm25(docs, "doc_id", "text", terms,
         phrases, topN = 50).orderBy("doc_id").collect().map(_.toString)
-      val probe = TextStats.mixedBm25FromIndex(spark, idx, "doc_id",
+      val probe = TextStats.mixedBm25FromIndex(spark, at(idx), "doc_id",
         terms, phrases, topN = 50).orderBy("doc_id").collect()
         .map(_.toString)
       assert(scan.nonEmpty, "mixed query matched nothing — vacuous")

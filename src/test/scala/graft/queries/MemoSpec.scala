@@ -208,32 +208,18 @@ class MemoSpec extends SparkSpec {
     assert(pinned("2").get eq v2)
   }
 
-  test("Artifacts.invalidate drops the verdicts and part frames nested " +
-    "under a path, and keeps session frames") {
+  test("Artifacts.invalidate drops the part frames nested under a path, " +
+    "and keeps session frames") {
     import Artifacts._
     val root = "/artifacts-spec/inv"
-    verdict(s"$root/idx", "fresh", "")(true)
-    verdict(s"${root}x", "fresh", "")(true)
     part(spark, s"$root/idx", "p", "1")(spark.range(1).toDF())
+    part(spark, s"${root}x", "p", "1")(spark.range(1).toDF())
     val frame = Key(SessionFrame, Some(spark), root, "frame")
     getOrBuild(frame)(spark.range(1).toDF())
     invalidate(root)
-    assert(get(Key(GateVerdict, None, s"$root/idx", "fresh")).isEmpty)
     assert(get(Key(PartFrame, Some(spark), s"$root/idx", "p", "1")).isEmpty)
     assert(get(frame).isDefined, "invalidate dropped a session frame")
-    assert(get(Key(GateVerdict, None, s"${root}x", "fresh")).isDefined,
+    assert(get(Key(PartFrame, Some(spark), s"${root}x", "p", "1")).isDefined,
       "a sibling path that only shares the prefix is not nested")
-  }
-
-  test("Artifacts.verdict: verdicts differing only in params are " +
-    "independent, and a failing check is not cached") {
-    val path = "/artifacts-spec/verdict"
-    var checks = 0
-    def check(r: Boolean): Boolean = { checks += 1; r }
-    assert(Artifacts.verdict(path, "g", "a=1")(check(true)))
-    assert(!Artifacts.verdict(path, "g", "a=2")(check(false)))
-    assert(Artifacts.verdict(path, "g", "a=1")(check(false)))
-    assert(Artifacts.verdict(path, "g", "a=2")(check(true)))
-    assert(checks == 3)
   }
 }

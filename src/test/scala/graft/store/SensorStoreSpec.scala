@@ -836,7 +836,6 @@ class SensorStoreSpec extends SparkSpec {
   test("jobs per read are pinned: lastTimestamp, a one-chunk read and a " +
     "Grafana read list no directory and infer no schema") {
     import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val (st, dir) = freshStoreDir()
     st.createSensor(cfg1s)
     val chunkDur = graft.core.Freq.ChunkRows.toLong
@@ -849,31 +848,7 @@ class SensorStoreSpec extends SparkSpec {
         col("value")))
     st.materializeRollup("test", "s1", 60L)
     val client = new graft.client.GraftClient(spark, dir)
-    val sc = spark.sparkContext
-    def jobs(f: => Any): Int = {
-      val group = s"jobcount-${java.util.UUID.randomUUID()}"
-      val n = new java.util.concurrent.atomic.AtomicInteger()
-      val drained = new java.util.concurrent.CountDownLatch(1)
-      val l = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-            case Some(`group`) => n.incrementAndGet(); ()
-            case Some(g) if g == s"$group-end" => drained.countDown()
-            case _ => ()
-          }
-      }
-      sc.addSparkListener(l)
-      try {
-        sc.setJobGroup(group, "job count")
-        f
-        // the bus delivers in order: once this marker job is seen, every
-        // job of `f` has been counted
-        sc.setJobGroup(s"$group-end", "marker")
-        sc.parallelize(Seq(1), 1).count()
-        assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
-      n.get
-    }
+    def jobs(f: => Any): Int = graft.JobCount(spark)(f)
     val lt = jobs(st.lastTimestamp("test", "s1"))
     val rd = jobs(st.read("test", "s1", Some(c0 + 5 * chunkDur),
       Some(c0 + 5 * chunkDur + 600)).collect())
