@@ -104,16 +104,17 @@ final class CommitLog(root: String, listed: JValue => Iterable[String]) {
   def sweep(roots: Seq[String]): Unit =
     sweepChildren(roots, versions.flatMap(v => listed(record(v))).toSet)
 
-  /** A root without a record holds nothing committed: remove every
-    * child but `_commit` and the writer lock — what an earlier on-disk
-    * layout or an uncommitted first write left behind.
+  /** A root without a record holds nothing committed: remove each of
+    * its children that `owned` names — what an earlier on-disk layout
+    * or an uncommitted first write of this store left behind. Any
+    * other child is not the store's and stays.
     */
-  def clearUncommitted(): Unit = {
+  def clearUncommitted(owned: String => Boolean): Unit = {
     val rp = Paths.get(root)
     if (versions.isEmpty && Files.isDirectory(rp)) {
       val s = Files.list(rp)
-      val dead = try s.iterator().asScala.filterNot(c =>
-          Set("_commit", "_WRITE_LOCK")(c.getFileName.toString)).toList
+      val dead = try s.iterator().asScala
+          .filter(c => owned(c.getFileName.toString)).toList
         finally s.close()
       dead.foreach(CommitLog.rmTree)
     }

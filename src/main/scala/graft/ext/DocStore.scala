@@ -90,25 +90,14 @@ import graft.core.CommitLog
   */
 object DocStore {
 
-  /** LSH parameters of the near-dup index (must match the probes'). */
-  case class NearParams(numHashes: Int = 8, rowsPerBand: Int = 1,
-                        shingleN: Int = 3) {
-    def kind: IndexKind = IndexKind.Near(numHashes, rowsPerBand, shingleN)
-  }
-
-  /** Fit parameters of the SemDeDup cell index. */
-  case class SemParams(targetCellSize: Int = 32, iters: Int = 1) {
-    def kind: IndexKind = IndexKind.Semantic(targetCellSize, iters)
-  }
-
   /** Which artifacts the store maintains, and the corpus column
     * names. `sem` requires `vecCol`. */
   case class Config(idCol: String, textCol: String,
                     vecCol: Option[String] = None,
                     bm25: Boolean = true,
                     exact: Boolean = true,
-                    near: Option[NearParams] = None,
-                    sem: Option[SemParams] = None) {
+                    near: Option[IndexKind.Near] = None,
+                    sem: Option[IndexKind.Semantic] = None) {
     require(sem.isEmpty || vecCol.nonEmpty,
       "the semantic index needs a vector column")
   }
@@ -122,8 +111,8 @@ object DocStore {
   private def indexes(root: String, cfg: Config): Seq[(IndexKind, String, String)] =
     Option.when(cfg.bm25)((IndexKind.Bm25, bm25Path(root), cfg.textCol)).toSeq ++
       Option.when(cfg.exact)((IndexKind.Exact, exactPath(root), cfg.textCol)) ++
-      cfg.near.map(np => (np.kind, nearPath(root), cfg.textCol)) ++
-      cfg.sem.map(sp => (sp.kind, semPath(root), cfg.vecCol.get))
+      cfg.near.map((_, nearPath(root), cfg.textCol)) ++
+      cfg.sem.map((_, semPath(root), cfg.vecCol.get))
 
   // ------------------------------------------------------------------
   // commit records
@@ -193,11 +182,13 @@ object DocStore {
 
   /** Create the store: corpus segment + every enabled artifact at
     * version 1, the commit record last. A root without a record holds
-    * nothing committed, so whatever it holds goes first. */
+    * nothing committed, so what a torn init or the earlier layout (its
+    * `meta_v<N>` / `txn_v<N>` record dirs) left there goes first. */
   def init(spark: SparkSession, root: String, df: DataFrame,
            cfg: Config): String = withStoreLock(root) {
     require(log(root).versions.isEmpty, s"DocStore already committed at $root")
-    log(root).clearUncommitted()
+    log(root).clearUncommitted(c => c == "docs" || c == "index" ||
+      c.matches("(meta|txn)_v\\d+"))
     df.write.mode("overwrite").parquet(s"$root/docs/b1")
     val corpus = spark.read.parquet(s"$root/docs/b1")
     buildIndexes(root, corpus, cfg, 1L)

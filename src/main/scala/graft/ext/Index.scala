@@ -1,9 +1,5 @@
 package graft.ext
 
-import java.nio.file.{Files, Paths}
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -21,9 +17,6 @@ sealed abstract class IndexKind(val name: String, val data: String,
   /** Parameters a probe must match: an index built with others is a
     * different index, not a stale one. */
   def params: List[(String, Int)] = Nil
-  /** Whether probes pin the parts in memory. BM25 probes push their
-    * term filter into the scan, which a pinned frame would hide. */
-  def pinned: Boolean = true
   /** The one pass over a build's or refresh's input that both the
     * tallies and the rows read. */
   def prepare(df: DataFrame, idCol: String, valCol: String): DataFrame = df
@@ -39,7 +32,6 @@ sealed abstract class IndexKind(val name: String, val data: String,
 object IndexKind {
   /** BM25 postings `(term, id, dl, tf, pos)`; tallies N and Σdl. */
   case object Bm25 extends IndexKind("bm25", "postings") {
-    override def pinned: Boolean = false
     override def prepare(df: DataFrame, idCol: String,
                          textCol: String): DataFrame =
       TextStats.tokensWithLen(df, idCol, textCol)
@@ -58,7 +50,8 @@ object IndexKind {
   }
 
   /** MinHash bands `(band, band_key, corpus_id)`. */
-  final case class Near(numHashes: Int, rowsPerBand: Int, shingleN: Int)
+  final case class Near(numHashes: Int = 8, rowsPerBand: Int = 1,
+                        shingleN: Int = 3)
       extends IndexKind("near", "bands") {
     override def params: List[(String, Int)] = List("num_hashes" -> numHashes,
       "rows_per_band" -> rowsPerBand, "shingle_n" -> shingleN)
@@ -70,7 +63,7 @@ object IndexKind {
 
   /** SemDeDup cells `(cell, corpus_id, corpus_vec)`, assigned through
     * the two-level index (`coarse` + `anchors`) fitted by the build. */
-  final case class Semantic(targetCellSize: Int, iters: Int)
+  final case class Semantic(targetCellSize: Int = 32, iters: Int = 1)
       extends IndexKind("semantic", "cells", Seq("coarse", "anchors")) {
     override def params: List[(String, Int)] =
       List("target_cell_size" -> targetCellSize, "iters" -> iters)
@@ -95,9 +88,9 @@ object IndexKind {
   }
 }
 
-/** One part of an index: its files, relative to the index path, and
-  * the schema they are read with. */
-final case class IndexPart(files: Seq[String], schema: StructType)
+/** One part of an index: its version dirs `<part>/v<seq>`, relative to
+  * the index path, and the schema they are read with. */
+final case class IndexPart(dirs: Seq[String], schema: StructType)
 
 /** One committed state of the index at `path`, its record
   * `_commit/v<seq>.json`. `stamp` is the corpus version it reflects;
@@ -107,24 +100,20 @@ final case class IndexCommit(path: String, seq: Long, kind: IndexKind,
                              parts: Map[String, IndexPart]) {
   def n: Long = tally("n")
 
-  /** The one part reader: exactly the listed files with the recorded
-    * schema (no directory listing, no footer read), memoized per
-    * (session, path, part, seq). A part with more files than Spark
-    * lists without a job (`parallelPartitionDiscovery.threshold`) is
-    * read as its version dirs instead. */
+  /** The one part reader: exactly the listed version dirs with the
+    * recorded schema (no footer read), unpinned — so a probe's filter
+    * reaches the parquet scan (the BM25 term filter) and a one-pass
+    * reader (the streaming bloom build) pins nothing. */
+  def read(spark: SparkSession, name: String): DataFrame = {
+    val p = parts(name)
+    spark.read.schema(p.schema).parquet(p.dirs.map(d => s"$path/$d"): _*)
+  }
+
+  /** [[read]], pinned and memoized per (session, path, part, seq): the
+    * dedup probes join every batch against the whole part. */
   def part(spark: SparkSession, name: String): DataFrame =
-    Artifacts.part(spark, path, name, seq.toString) {
-      val p = parts(name)
-      val paths =
-        if (p.files.size <= spark.sessionState.conf.parallelPartitionDiscoveryThreshold)
-          p.files
-        else p.files.map(Index.dirOf).distinct
-      val df = spark.read.schema(p.schema)
-        .parquet(paths.map(f => s"$path/$f"): _*)
-      if (kind.pinned)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df
-    }
+    Artifacts.part(spark, path, name, seq.toString)(read(spark, name)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   def toJValue: JValue = JObject(
     "seq" -> JLong(seq), "kind" -> JString(kind.name),
@@ -132,7 +121,7 @@ final case class IndexCommit(path: String, seq: Long, kind: IndexKind,
     "stamp" -> JLong(stamp),
     "tally" -> JObject(tally.toList.sorted.map { case (k, v) => k -> JLong(v) }),
     "parts" -> JObject(parts.toList.sortBy(_._1).map { case (k, p) =>
-      k -> JObject("files" -> JArray(p.files.map(JString(_)).toList),
+      k -> JObject("dirs" -> JArray(p.dirs.map(JString(_)).toList),
         "schema" -> JString(p.schema.json))
     }))
 }
@@ -147,15 +136,16 @@ final case class IndexCommit(path: String, seq: Long, kind: IndexKind,
   *
   * An index at `path` is a [[graft.core.CommitLog]] at `path`: each
   * build or refresh writes its rows to `<part>/v<seq>/`, then commits
-  * the record [[IndexCommit]] listing every part's files. Nothing is
-  * visible before the record, so a torn write is invisible and the
-  * re-run at the same `seq` replaces its files. A record only ever
-  * serves a probe through [[gate]]: a record read fires no Spark job,
-  * so nothing is memoized.
+  * the record [[IndexCommit]] listing every part's version dirs.
+  * Nothing is visible before the record, so a torn write is invisible
+  * and the re-run at the same `seq` replaces its dir. A part read lists
+  * its dirs on the driver while they number at most Spark's
+  * `parallelPartitionDiscovery.threshold` (32); past that many
+  * refreshes without a rebuild, the listing runs as a Spark job. A
+  * record only ever serves a probe through [[gate]], which reads it
+  * afresh on every call: a small file read that fires no Spark job.
   */
 object Index {
-
-  private[ext] def dirOf(f: String): String = f.substring(0, f.lastIndexOf('/'))
 
   private def corrupt(path: String) =
     new IllegalStateException(s"corrupt index record at $path")
@@ -173,7 +163,7 @@ object Index {
 
   private def partsOf(path: String, j: JValue): Map[String, IndexPart] =
     fields(path, j \ "parts").map { case (name, p) =>
-      (p \ "files", p \ "schema") match {
+      (p \ "dirs", p \ "schema") match {
         case (JArray(fs), JString(s)) => name -> IndexPart(
           fs.collect { case JString(f) => f },
           DataType.fromJson(s).asInstanceOf[StructType])
@@ -183,7 +173,7 @@ object Index {
 
   /** A record owns its parts' version dirs, the unit of pruning. */
   private def log(path: String) = new CommitLog(path,
-    j => partsOf(path, j).values.flatMap(_.files.map(dirOf)).toSet)
+    j => partsOf(path, j).values.flatMap(_.dirs))
 
   def current(path: String): Option[IndexCommit] =
     log(path).current().map { case (seq, j) =>
@@ -215,13 +205,14 @@ object Index {
       expected.fold(c.n == corpus.count())(_ == c.stamp))
 
   /** Build the index of `kind` over `df` at `path`, stamped `version`:
-    * a new record listing only the new files. The first build at a
-    * path without a record first clears it. */
+    * a new record listing only the new dirs. The first build at a path
+    * without a record first clears what an earlier layout or a torn
+    * first build left there: the kind's part dirs and `stats/`. */
   def build(kind: IndexKind, df: DataFrame, idCol: String, valCol: String,
             path: String, version: Long = 1L): String = {
     val prev = current(path)
     if (prev.isEmpty) {
-      log(path).clearUncommitted()
+      log(path).clearUncommitted((kind.parts :+ "stats").toSet)
       // its sequence restarts at 1: drop pins an earlier tree left
       Artifacts.invalidate(path)
     }
@@ -276,22 +267,18 @@ object Index {
     val rows = write(kind.rows(prepared, idCol, valCol, frozen), path,
       kind.data, seq)
     val data = base.get(kind.data)
-      .fold(rows)(b => b.copy(files = b.files ++ rows.files))
+      .fold(rows)(b => b.copy(dirs = b.dirs ++ rows.dirs))
     log(path).commit(seq, IndexCommit(path, seq, kind, stamp, tally,
       base.updated(kind.data, data)).toJValue, sweep = kind.parts)
     path
   }
 
   /** Write `rows` to `<part>/v<seq>/` — plain overwrite, so a torn
-    * attempt at the same `seq` is replaced — and list what it wrote. */
+    * attempt at the same `seq` is replaced. */
   private def write(rows: DataFrame, path: String, part: String,
                     seq: Long): IndexPart = {
     val dir = s"$part/v$seq"
     rows.write.mode("overwrite").parquet(s"$path/$dir")
-    val s = Files.list(Paths.get(path, dir))
-    val files = try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(f => f.endsWith(".parquet") && !f.startsWith(".")).toList.sorted
-      finally s.close()
-    IndexPart(files.map(f => s"$dir/$f"), rows.schema)
+    IndexPart(Seq(dir), rows.schema)
   }
 }

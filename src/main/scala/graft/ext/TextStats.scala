@@ -361,7 +361,7 @@ object TextStats {
                     index: IndexCommit, idCol: String, terms: Seq[String],
                     k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "bm25 needs at least one query term")
-    val tf = index.part(spark, "postings")
+    val tf = index.read(spark, "postings")
       .filter(col("term").isInCollection(terms))
     bm25Score(tf, statsOf(spark, index), idCol, k1, b)
   }
@@ -478,7 +478,7 @@ object TextStats {
                               terms: Seq[String]): DataFrame = {
     require(terms.size >= 2, "a phrase needs at least two terms")
     def side(term: String, posAs: String, withDl: Boolean) = {
-      val raw = index.part(spark, "postings")
+      val raw = index.read(spark, "postings")
         .filter(col("term") === term)
       if (withDl) raw.select(col(idCol), col("dl"), col("pos").as(posAs))
       else raw.select(col(idCol), col("pos").as(posAs))

@@ -298,8 +298,8 @@ object StreamIngest {
               val nearPath = graft.ext.DocStore.nearPath(root)
               val corpus = graft.ext.DocStore.docs(spark, root)
               val bands =
-                graft.ext.Index.gate(nearPath, np.kind, corpus, Some(v)) match {
-                  case Some(c) => c.part(spark, "bands")
+                graft.ext.Index.gate(nearPath, np, corpus, Some(v)) match {
+                  case Some(c) => c.read(spark, "bands")
                   case None => graft.ext.DedupIndex.bandRows(corpus,
                     cfg.idCol, cfg.textCol, np.numHashes, np.rowsPerBand,
                     np.shingleN)

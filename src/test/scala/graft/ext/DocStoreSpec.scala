@@ -38,8 +38,8 @@ class DocStoreSpec extends SparkSpec {
 
   private val cfg = DocStore.Config("doc_id", "text",
     vecCol = Some("vec"), bm25 = true, exact = true,
-    near = Some(DocStore.NearParams(8, 1, 3)),
-    sem = Some(DocStore.SemParams(32, 1)))
+    near = Some(IndexKind.Near(8, 1, 3)),
+    sem = Some(IndexKind.Semantic(32, 1)))
 
   private def tmp(tag: String): String =
     java.nio.file.Files.createTempDirectory(tag).toString
@@ -274,7 +274,7 @@ class DocStoreSpec extends SparkSpec {
     val corpus0 = all.filter(col("doc_id") % 7 =!= 3)
     val root = tmp("dsdel")
     val cfgTxt = DocStore.Config("doc_id", "text", bm25 = true,
-      exact = true, near = Some(DocStore.NearParams(8, 1, 3)))
+      exact = true, near = Some(IndexKind.Near(8, 1, 3)))
     DocStore.init(spark, root, corpus0, cfgTxt)
 
     val terms = Seq("stream", "spark")

@@ -76,15 +76,17 @@ class IndexSpec extends SparkSpec {
       finally s.close()
     }
 
-  /** The index tree holds its records and the dirs and files they
-    * list, nothing else. */
-  private def onlyListed(path: String): Unit = {
+  /** The index tree holds its records and the dirs they list (plus
+    * `other`, a child that is not the index's), nothing else. */
+  private def onlyListed(path: String, other: Set[String] = Set.empty): Unit = {
     val c = Index.current(path).get
-    assert(children(Paths.get(path)) == c.kind.parts.toSet + "_commit")
+    assert(children(Paths.get(path)) == c.kind.parts.toSet + "_commit" ++ other)
     for ((name, part) <- c.parts)
       assert(children(Paths.get(path, name)) ==
-        part.files.map(f => f.split('/')(1)).toSet, s"$path/$name")
-    assert(files(path) == c.parts.values.flatMap(_.files).toSet)
+        part.dirs.map(d => d.split('/')(1)).toSet, s"$path/$name")
+    val dirs = c.parts.values.flatMap(_.dirs).toSet
+    assert(files(path).forall(f => dirs(f.substring(0, f.lastIndexOf('/')))),
+      s"$path holds a parquet file outside the listed dirs")
     assert(!children(Paths.get(path, "_commit")).exists(_.endsWith(".tmp")))
   }
 
@@ -169,38 +171,34 @@ class IndexSpec extends SparkSpec {
     }
   }
 
-  test("a part with more files than Spark lists without a job is read " +
-    "through its version dirs, with the same answers") {
+  test("a part is read through exactly its listed version dirs, with " +
+    "the same answers") {
     val p = tmp("idxdirs")
     Index.build(IndexKind.Exact, slice(0, 200), "doc_id", "text", p)
     Index.refresh(p, slice(200, 300), "doc_id", "text")
     Index.refresh(p, slice(300, 1000), "doc_id", "text")
-    val listed = Index.current(p).get.parts("hashes").files
-    assert(listed.size > 2)
-    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    val threshold = spark.conf.get(key)
-    spark.conf.set(key, "2")
-    try {
-      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
-        LogicalRelation}
-      val files = Index.current(p).get.part(spark, "hashes")
-        .queryExecution.analyzed.collectFirst {
-          case l: LogicalRelation => l.relation
-        }.collect { case r: HadoopFsRelation => r.location }.get
-      assert(files.rootPaths.map(_.getName).toSet == Set("v1", "v2", "v3"),
-        s"the part was not read through its version dirs: ${files.rootPaths}")
-      assert(files.inputFiles.map(f => f.substring(f.indexOf("hashes/")))
-        .toSet == listed.toSet)
-      val routed = DedupIndex.incrementalExactRouted(spark, batch,
-        slice(0, 1000), "doc_id", "text", Some(p), Some(3L))
-      assert(routed.queryExecution.executedPlan.toString.contains("hashes"))
-      assert(rows(routed) == rows(DedupIndex.incrementalExactRouted(spark,
-        batch, slice(0, 1000), "doc_id", "text", None)))
-    } finally spark.conf.set(key, threshold)
+    val c = Index.current(p).get
+    assert(c.parts("hashes").dirs == Seq("hashes/v1", "hashes/v2", "hashes/v3"))
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    val location = c.read(spark, "hashes")
+      .queryExecution.analyzed.collectFirst {
+        case l: LogicalRelation => l.relation
+      }.collect { case r: HadoopFsRelation => r.location }.get
+    assert(location.rootPaths.map(_.getName).toSet == Set("v1", "v2", "v3"),
+      s"the part was not read through its version dirs: ${location.rootPaths}")
+    assert(location.inputFiles.map(f => f.substring(f.indexOf("hashes/")))
+      .toSet == files(p))
+    val routed = DedupIndex.incrementalExactRouted(spark, batch,
+      slice(0, 1000), "doc_id", "text", Some(p), Some(3L))
+    assert(routed.queryExecution.executedPlan.toString.contains("hashes"))
+    assert(rows(routed) == rows(DedupIndex.incrementalExactRouted(spark,
+      batch, slice(0, 1000), "doc_id", "text", None)))
   }
 
   test("DocStore.init and the first build over an earlier on-disk layout " +
-    "keep only _commit, the writer lock and what the records list") {
+    "keep only _commit, the writer lock, what the records list and what " +
+    "neither layout wrote") {
     val one = all.limit(3)
     // the earlier index layout: v=N data partitions, a stats/ row and
     // _SUCCESS markers
@@ -208,15 +206,21 @@ class IndexSpec extends SparkSpec {
       one.withColumn("v", lit(1L)).write.partitionBy("v").parquet(s"$p/hashes")
       one.select(count(lit(1)).as("n")).write.parquet(s"$p/stats")
     }
+    // a child neither layout wrote is not the store's: it stays
+    def unrelated(p: String): Unit = {
+      Files.createDirectories(Paths.get(p))
+      Files.write(Paths.get(p, "notes.txt"), "keep".getBytes)
+    }
     val root = tmp("dsold")
     // the earlier store layout: meta_v / txn_v record dirs
     for (d <- Seq("meta_v1", "meta_v2", "txn_v2", "docs/b1", "docs/b2"))
       one.write.parquet(s"$root/$d")
     oldIndex(DocStore.exactPath(root))
+    unrelated(root)
     val cfg = DocStore.Config("doc_id", "text", bm25 = false, exact = true)
     DocStore.init(spark, root, slice(0, 1000), cfg)
     assert(children(Paths.get(root)) -- Set("_WRITE_LOCK") ==
-      Set("_commit", "docs", "index"))
+      Set("_commit", "docs", "index", "notes.txt"))
     assert(children(Paths.get(root, "docs")) == Set("b1"))
     assert(children(Paths.get(root, "index")) == Set("exact"))
     onlyListed(DocStore.exactPath(root))
@@ -224,8 +228,10 @@ class IndexSpec extends SparkSpec {
 
     val idx = tmp("idxold")
     oldIndex(idx)
+    unrelated(idx)
     Index.build(IndexKind.Exact, slice(0, 1000), "doc_id", "text", idx)
-    onlyListed(idx)
+    onlyListed(idx, other = Set("notes.txt"))
+    assert(new String(Files.readAllBytes(Paths.get(idx, "notes.txt"))) == "keep")
     val routed = DedupIndex.incrementalExactRouted(spark, batch,
       slice(0, 1000), "doc_id", "text", Some(idx), Some(1L))
     assert(routed.queryExecution.executedPlan.toString.contains("hashes"))

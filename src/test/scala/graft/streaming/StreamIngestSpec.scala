@@ -310,7 +310,7 @@ class StreamIngestSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val root = java.nio.file.Files.createTempDirectory("gbb").toString
     val cfg = graft.ext.DocStore.Config("doc_id", "text", bm25 = false,
-      exact = false, near = Some(graft.ext.DocStore.NearParams(8, 1, 3)))
+      exact = false, near = Some(graft.ext.IndexKind.Near(8, 1, 3)))
     val corpus = Seq(
       (1L, "the quick brown fox jumps over the lazy dog today"),
       (2L, "completely different words about spark execution engines"))
