@@ -3,10 +3,11 @@ package graft.client
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Grid
+import graft.core.Wire.jstr
 import graft.ingest.{Influx, Pivot}
 import graft.read.Downsample
 import graft.store.{MetricDef, RollupKind, SensorConfig, SensorStore, SensorVersion}
@@ -250,12 +251,13 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
     * resolved and the wide frame of exactly its metrics, unwritten
     * cells as NaN (the reference's float32 parity), so a schema
     * evolution landing mid-request cannot make the metric list disagree
-    * with the payload.
+    * with the payload. The frame is unordered: the caller collects it
+    * and orders the rows it got.
     */
   def readSnapshot(db: String, sensor: String, fromSec: Option[Long],
                    toSec: Option[Long]): (SensorConfig, DataFrame) = {
     val v = authorize(db, sensor, write = false)
-    (v.config, store.readVersion(v, fromSec, toSec,
+    (v.config, store.readUnordered(v, fromSec, toSec,
       Some(v.config.metricNames), nanForMissing = true))
   }
 
@@ -408,7 +410,7 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
         store.readRollup(v, RollupKind.First, b, b, Some(fromSec),
           Some(toSec), wanted)
       case None =>
-        store.readVersion(v, Some(fromSec), Some(toSec), Some(wanted))
+        store.readUnordered(v, Some(fromSec), Some(toSec), Some(wanted))
     }
     val withSec = wide.withColumn("sec", Grid.tsSeconds(col("ts")))
     val long = Pivot.wideToLong(withSec, Seq("sec"), wanted)
@@ -479,53 +481,61 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
 
   /** [[readGrafanaShared]] of `wanted` in the version the gate resolved. */
   private def shared(v: SensorVersion, fromSec: Long, toSec: Long,
-                     maxDataPoints: Int, wanted: Seq[String]): DataFrame = {
-    val wide = store.readVersion(v, Some(fromSec), Some(toSec), Some(wanted))
+                     maxDataPoints: Int, wanted: Seq[String]): DataFrame =
+    Pivot.wideToLong(firstRows(v, fromSec, toSec, maxDataPoints, wanted),
+        Seq("sec"), wanted)
+      .filter(!isnan(col("value")))
+      .select(col("metric"), col("value"), (col("sec") * 1000).as("ts_ms"))
+      .orderBy("metric", "ts_ms")
+
+  /** The first grid row of every non-empty spread bucket, unordered:
+    * `sec` + the `wanted` cells — one aggregate over the unsorted range,
+    * at most `maxDataPoints` rows.
+    */
+  private def firstRows(v: SensorVersion, fromSec: Long, toSec: Long,
+                        maxDataPoints: Int, wanted: Seq[String]): DataFrame = {
+    val wide = store.readUnordered(v, Some(fromSec), Some(toSec), Some(wanted))
     val spread = Downsample.spreadOf(fromSec, toSec, maxDataPoints)
-    val firstRow = wide.withColumn("sec", Grid.tsSeconds(col("ts")))
+    wide.withColumn("sec", Grid.tsSeconds(col("ts")))
       .withColumn("bucket", Downsample.bucket(col("sec"), fromSec, spread))
       .groupBy(col("bucket"))
       .agg(min_by(struct(col("sec") +: wanted.map(graft.core.Cols.q): _*),
         col("sec")).as("r"))
       .select(col("r.sec").as("sec") +:
         wanted.map(m => col("r").getField(m).as(m)): _*)
-    Pivot.wideToLong(firstRow, Seq("sec"), wanted)
-      .filter(!isnan(col("value")))
-      .select(col("metric"), col("value"), (col("sec") * 1000).as("ts_ms"))
-      .orderBy("metric", "ts_ms")
   }
 
   /** The reference's exact Grafana wire JSON (`server.py:461-475`):
     * `[{"target":T,"datapoints":[[value,ts_ms],…]},…]` — one object
     * per REQUESTED target in request order (a data-less target emits
-    * an empty list), datapoints in time order, NaN cells dropped
-    * (`server.py:453-455`), numbers printed as C "%f" exactly like
-    * the reference's `"[%f,%f]" % (value, dt*1000)`. Row selection is
-    * the shared-boundary downsample ([[readGrafanaShared]] — the
-    * server's one-boundary-for-all-targets loop). The per-target
-    * datapoint strings are built and joined IN the engine (codegen'd
-    * format_string + struct sort + array_join); the driver folds one
-    * bounded string per target — ≤ maxDataPoints points each, the
-    * Grafana panel-width contract, so the collect is safe by
-    * construction.
+    * an empty list), datapoints in time order, null and NaN cells
+    * dropped (`server.py:453-455`), numbers printed as C "%f" exactly
+    * like the reference's `"[%f,%f]" % (value, dt*1000)`. Row selection
+    * is the shared-boundary downsample ([[readGrafanaShared]] — the
+    * server's one-boundary-for-all-targets loop) as one aggregate. The
+    * driver collects its rows — at most `maxDataPoints`, the Grafana
+    * panel-width contract, so the collect is bounded by construction —
+    * orders them by time and renders them with `java.util.Formatter`
+    * at `Locale.US`, the formatter Spark's `format_string` uses. Each
+    * target is a JSON string literal ([[graft.core.Wire.jstr]]), so any
+    * metric name survives the reply.
     */
   def readGrafanaJson(db: String, sensor: String, fromSec: Long,
                       toSec: Long, maxDataPoints: Int,
                       targets: Option[Seq[String]] = None): String = {
     val v = authorize(db, sensor, write = false)
     val wanted = targets.getOrElse(v.config.metricNames)
-    val long = shared(v, fromSec, toSec, maxDataPoints, wanted)
-    val per = long
-      .withColumn("dp", format_string("[%f,%f]",
-        col("value").cast("double"), col("ts_ms").cast("double")))
-      .groupBy(col("metric"))
-      .agg(array_join(transform(
-        array_sort(collect_list(struct(col("ts_ms"), col("dp")))),
-        x => x.getField("dp")), ",").as("dps"))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    wanted.map(t =>
-        s"""{"target":"$t","datapoints":[${per.getOrElse(t, "")}]}""")
-      .mkString("[", ",", "]")
+    val rows = firstRows(v, fromSec, toSec, maxDataPoints, wanted).collect()
+      .sortBy(_.getLong(0))
+    def point(r: Row, i: Int) = String.format(java.util.Locale.US, "[%f,%f]",
+      Double.box(r.getFloat(i).toDouble), Double.box((r.getLong(0) * 1000).toDouble))
+    wanted.map { t =>
+      val i = wanted.indexOf(t) + 1
+      val dps = rows.collect {
+        case r if !r.isNullAt(i) && !r.getFloat(i).isNaN => point(r, i)
+      }
+      s"""{"target":${jstr(t)},"datapoints":[${dps.mkString(",")}]}"""
+    }.mkString("[", ",", "]")
   }
 
   /** Grafana-style MEAN downsample: wide `(ts, <metrics...>)` rows, one

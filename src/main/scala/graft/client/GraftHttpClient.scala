@@ -6,6 +6,8 @@ import java.nio.charset.StandardCharsets
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.Base64
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 import org.json4s._
@@ -151,16 +153,19 @@ class GraftHttpClient(spark: SparkSession, baseUrl: String,
 
   def metrics(db: String, sensor: String): Seq[String] = {
     val r = send("POST", s"/$db/$sensor/metrics")
-    orAuthFail(r)(js(r) match {
-      case JArray(xs) => xs.map {
-        case JString(s) => s
-        case JArray(levels) => levels.collect {
-          case JString(l) => l
-        }.mkString(".")
-        case other => other.toString
-      }
-      case _ => Seq.empty
-    })
+    orAuthFail(r)(metricNames(js(r)))
+  }
+
+  /** A reply's metric list: names, a level tuple joined with dots. */
+  private def metricNames(j: JValue): Seq[String] = j match {
+    case JArray(xs) => xs.map {
+      case JString(s) => s
+      case JArray(levels) => levels.collect {
+        case JString(l) => l
+      }.mkString(".")
+      case other => other.toString
+    }
+    case _ => Seq.empty
   }
 
   def metadata(db: String, sensor: String): Map[String, String] = {
@@ -195,16 +200,7 @@ class GraftHttpClient(spark: SparkSession, baseUrl: String,
         if (j.get("compressed").contains(JBool(true))) zlibInflate(sent) else sent
       val raw = Base64.getMimeDecoder.decode(data)
       val nDates = datesLen.toInt
-      val names: Seq[String] = j.get("metrics") match {
-        case Some(JArray(xs)) => xs.map {
-          case JString(s) => s
-          case JArray(levels) => levels.collect {
-            case JString(l) => l
-          }.mkString(".")
-          case other => other.toString
-        }
-        case _ => Seq.empty
-      }
+      val names = metricNames(j.getOrElse("metrics", JNothing))
       val nRows = nDates / 8
       val db8 = ByteBuffer.wrap(raw, 0, nDates)
         .order(ByteOrder.LITTLE_ENDIAN)
@@ -223,9 +219,9 @@ class GraftHttpClient(spark: SparkSession, baseUrl: String,
       }
       val schema = StructType(StructField("ts", TimestampType) +:
         names.map(StructField(_, FloatType)))
-      Some(spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toSeq), schema)
-        .orderBy("ts"))
+      // the wire carries the rows in time order: a local relation keeps
+      // it, and collecting one runs no Spark job
+      Some(spark.createDataFrame(rows.asJava, schema))
     }
   }
 }

@@ -240,7 +240,8 @@ object Quantiles {
     * partials and a direct histogram over raw rows give IDENTICAL
     * answers: histogram counts are exact integers and addition is
     * associative — the same merge-anywhere algebra as the (sum, count)
-    * mean partials, at bin-width resolution instead of exactness.
+    * mean partials, at bin-width resolution instead of exactness. The
+    * rows come back unordered: the caller orders the bounded answer.
     */
   def gridHistQuantile(hist: DataFrame, metrics: Seq[String], pct: Int,
                        binWidth: Double, ts: Column): DataFrame = {
@@ -263,7 +264,6 @@ object Quantiles {
       .select(ts.as("ts") +:
         metrics.map(m =>
           (col(s"__b_$m") * binWidth).as(s"${m}_p$pct")): _*)
-      .orderBy("ts")
   }
 
   /** Exact GLOBAL running sum of a DECIMAL column in (valueCol,

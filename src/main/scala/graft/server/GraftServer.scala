@@ -389,16 +389,19 @@ class GraftServer(spark: SparkSession, baseDir: String,
     // range to the serving driver to build the wire payload, so a
     // whole-history read of a 100 TB sensor would OOM the server. Cap
     // the collect at readDfMaxRows (+1 row to DETECT overflow without
-    // counting) and answer 413 with a narrowing hint instead.
-    val rows = frame
+    // counting) and answer 413 with a narrowing hint instead. The frame
+    // is unsorted: a sort under the limit would plan a top-K whose
+    // buffers are sized by the cap, so the rows are ordered here.
+    val got = frame
       .limit(math.min(readDfMaxRows, Int.MaxValue - 1L).toInt + 1)
       .collect()
-    if (rows.length > readDfMaxRows) {
+    if (got.length > readDfMaxRows) {
       makeJs(ex, s"read_df range exceeds $readDfMaxRows rows; " +
         "narrow [start_ts, end_ts] or raise readDfMaxRows", 413)
       return
     }
-    if (rows.isEmpty) { makeJs(ex, "No data", 404); return }
+    if (got.isEmpty) { makeJs(ex, "No data", 404); return }
+    val rows = got.sortBy(_.getTimestamp(0).getTime)
     val datesBuf = ByteBuffer.allocate(rows.length * 8)
       .order(ByteOrder.LITTLE_ENDIAN)
     val valuesBuf = ByteBuffer.allocate(rows.length * metrics.length * 4)

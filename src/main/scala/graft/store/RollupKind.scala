@@ -20,8 +20,9 @@ import graft.ingest.Pivot
   *  - `merge`: stored partials re-aggregated to a coarser bucket
   *    `cbucket` — exact, because every partial field merges
   *    associatively (integer counts, DECIMAL sums, min/max, HLL union);
-  *  - `finish`: partials holding one row per `cbucket` → the answer,
-  *    stamped `ts` and ordered by it.
+  *  - `answer`: partials holding one row per `cbucket` → the answer
+  *    columns, stamped `ts`, unordered. Every kind's reads order it
+  *    through the one shared step, `finish`.
   *
   * A read that cannot use a rollup answers with `finish(partial(raw
   * rows bucketed at the coarse grid))`, so the rollup route (partial →
@@ -42,7 +43,17 @@ sealed trait RollupKind {
               metrics: Seq[String]): DataFrame
   def merge(parts: DataFrame, cbucket: Column,
             metrics: Seq[String]): DataFrame
-  def finish(merged: DataFrame, ts: Column, metrics: Seq[String]): DataFrame
+  def answer(merged: DataFrame, ts: Column, metrics: Seq[String]): DataFrame
+
+  /** The read's answer: [[answer]] in `ts` order, the one place a
+    * rollup answer is ordered. It holds at most one row per coarse
+    * bucket, so it sorts in ONE partition: a range-partitioned
+    * `orderBy` would add a sampling job and an exchange for rows that
+    * fit one task.
+    */
+  final def finish(merged: DataFrame, ts: Column,
+                   metrics: Seq[String]): DataFrame =
+    answer(merged, ts, metrics).coalesce(1).sortWithinPartitions("ts")
 }
 
 object RollupKind {
@@ -93,9 +104,9 @@ object RollupKind {
       grouped(parts, Seq(cbucket), metrics.map(m =>
         min_by(q(m), when(q(m).isNotNull,
           struct(bucketSeconds, col("chunk_start")))).as(m)))
-    def finish(merged: DataFrame, ts: Column,
+    def answer(merged: DataFrame, ts: Column,
                metrics: Seq[String]): DataFrame =
-      merged.select(ts.as("ts") +: metrics.map(q): _*).orderBy("ts")
+      merged.select(ts.as("ts") +: metrics.map(q): _*)
   }
 
   /** Per metric the `(sum, count)` of non-NaN values, the sum routed
@@ -116,12 +127,11 @@ object RollupKind {
       grouped(parts, Seq(cbucket), metrics.flatMap(m => Seq(
         sum(q(s"${m}__sum")).as(s"${m}__sum"),
         sum(q(s"${m}__n")).as(s"${m}__n"))))
-    def finish(merged: DataFrame, ts: Column,
+    def answer(merged: DataFrame, ts: Column,
                metrics: Seq[String]): DataFrame =
       merged.select(ts.as("ts") +: metrics.map(m =>
           when(q(s"${m}__n") > 0,
             q(s"${m}__sum").cast("double") / q(s"${m}__n")).as(m)): _*)
-        .orderBy("ts")
   }
 
   /** Windowed stats (n, avg, min, max) per metric, stored as
@@ -150,13 +160,12 @@ object RollupKind {
           sum(col("sum_value_dec")).as("sum_value_dec"),
           min(col("min_value")).as("min_value"),
           max(col("max_value")).as("max_value")))
-    def finish(merged: DataFrame, ts: Column,
+    def answer(merged: DataFrame, ts: Column,
                metrics: Seq[String]): DataFrame =
       merged.select(ts.as("ts"), col("n"),
           (col("sum_value_dec").cast("double") / col("n_value"))
             .as("avg_value"),
           col("min_value"), col("max_value"))
-        .orderBy("ts")
   }
 
   /** Per metric a binary DataSketches HLL of the non-NaN values
@@ -175,16 +184,15 @@ object RollupKind {
               metrics: Seq[String]): DataFrame =
       grouped(parts, Seq(cbucket), metrics.map(m =>
         hll_union_agg(q(s"${m}__hll"), false).as(s"${m}__hll")))
-    def finish(merged: DataFrame, ts: Column,
+    def answer(merged: DataFrame, ts: Column,
                metrics: Seq[String]): DataFrame =
       merged.select(ts.as("ts") +: metrics.map(m =>
           hll_sketch_estimate(q(s"${m}__hll")).as(s"${m}_distinct")): _*)
-        .orderBy("ts")
   }
 
   /** Per (metric, bin) the COUNT of non-NaN values with
     * ⌊value / binWidth⌋ = bin — fixed-grid histogram partials whose
-    * integer counts merge losslessly; `finish` selects the `pct`
+    * integer counts merge losslessly; `answer` selects the `pct`
     * type-1 quantile at bin resolution
     * ([[graft.operators.Quantiles.gridHistQuantile]]). `binWidth` is
     * part of the commit record, so refresh counts on the grid the
@@ -207,7 +215,7 @@ object RollupKind {
               metrics: Seq[String]): DataFrame =
       grouped(parts, Seq(cbucket, col("metric"), col("bin")),
         Seq(sum(col("cnt")).as("cnt")))
-    def finish(merged: DataFrame, ts: Column,
+    def answer(merged: DataFrame, ts: Column,
                metrics: Seq[String]): DataFrame =
       graft.operators.Quantiles.gridHistQuantile(merged, metrics, pct,
         binWidth, ts)

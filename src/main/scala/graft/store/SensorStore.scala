@@ -393,7 +393,19 @@ class SensorStore(spark: SparkSession, baseDir: String) {
                   metrics: Option[Seq[String]] = None,
                   validateChecksums: Boolean = false,
                   atol: Double = 1e-3,
-                  nanForMissing: Boolean = false): DataFrame = {
+                  nanForMissing: Boolean = false): DataFrame =
+    readUnordered(v, fromSec, toSec, metrics, validateChecksums, atol,
+      nanForMissing).orderBy("ts")
+
+  /** [[readVersion]] without its sort, for the engine's own callers
+    * that aggregate the rows next or collect them and order the few
+    * they keep: a global sort is a sampling job and a shuffle that no
+    * such answer uses.
+    */
+  private[graft] def readUnordered(v: SensorVersion, fromSec: Option[Long],
+      toSec: Option[Long], metrics: Option[Seq[String]],
+      validateChecksums: Boolean = false, atol: Double = 1e-3,
+      nanForMissing: Boolean = false): DataFrame = {
     val all = v.config.metricNames
     val wanted = metrics.getOrElse(all)
     var df = readRange(v, all, fromSec, toSec)
@@ -411,8 +423,7 @@ class SensorStore(spark: SparkSession, baseDir: String) {
       else graft.core.Cols.q(m)
     }
     df.select(timestamp_seconds(col("slot")).cast(TimestampType).as("ts") +:
-        outCols: _*)
-      .orderBy("ts")
+      outCols: _*)
   }
 
   /** B-8: latest written tick as epoch seconds, None when empty. */

@@ -578,6 +578,84 @@ class GraftClientSpec extends SparkSpec {
     assert(aPts.toSeq == Seq((1.0, t0 * 1000), (3.0, (t0 + 5) * 1000)))
   }
 
+  /** The Grafana wire as the engine built it before `readGrafanaJson`
+    * rendered on the driver, VERBATIM: `format_string` + `collect_list`
+    * + `array_sort` + `array_join` over the shared-boundary long rows.
+    * The oracle of the byte-identity spec below.
+    */
+  private def engineGrafanaJson(c: GraftClient, db: String, sensor: String,
+                                fromSec: Long, toSec: Long, maxDataPoints: Int,
+                                targets: Option[Seq[String]]): String = {
+    val wanted = targets.getOrElse(c.metrics(db, sensor))
+    val long = c.readGrafanaShared(db, sensor, fromSec, toSec, maxDataPoints,
+      Some(wanted))
+    val per = long
+      .withColumn("dp", format_string("[%f,%f]",
+        col("value").cast("double"), col("ts_ms").cast("double")))
+      .groupBy(col("metric"))
+      .agg(array_join(transform(
+        array_sort(collect_list(struct(col("ts_ms"), col("dp")))),
+        x => x.getField("dp")), ",").as("dps"))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    wanted.map(t =>
+        s"""{"target":"$t","datapoints":[${per.getOrElse(t, "")}]}""")
+      .mkString("[", ",", "]")
+  }
+
+  test("grafana wire JSON rendered on the driver is byte-identical to the " +
+       "engine-side rendering: NaN and null cells, a sparse metric, a " +
+       "data-less target, extreme values, fractional spreads, misaligned " +
+       "ranges, seeded random queries") {
+    import spark.implicits._
+    val c = freshClient()
+    c.createSensor("test", "gj", "1s", Seq(Seq("a"), Seq("b"), Seq("c")))
+    def put(pts: Seq[(Long, String, Double)], fill: Double = 0.0): Unit =
+      c.store.write("test", "gj", pts.toDF("sec", "metric", "value")
+        .select(timestamp_seconds(col("sec")).as("ts"), col("metric"),
+          col("value")), fill)
+    val rng = new scala.util.Random(20240101)
+    val special = Seq(-1.5, -273.15, 123456789.5, 1e-7, -1e-7, 0.0, 3.25)
+    def value(): Double =
+      if (rng.nextInt(4) == 0) special(rng.nextInt(special.size))
+      else rng.nextGaussian() * 1000
+    // chunk 0: `a` dense, `b` sparse (every 7th tick), `c` never written
+    put((0 until 600).flatMap { i =>
+      (t0 + i, "a", value()) +:
+        (if (i % 7 == 3) Seq((t0 + i, "b", value())) else Nil)
+    })
+    // a later chunk adds `d` with a NaN fill, so `d` reads NaN on chunk
+    // 0's rows; there `a` is written on every other tick only (null cells)
+    val t1 = t0 + 20000
+    put((0 until 600).flatMap { i =>
+      (if (i % 2 == 0) Seq((t1 + i, "a", value())) else Nil) :+
+        ((t1 + i, "d", value()))
+    }, fill = Double.NaN)
+    val cases = Seq[(Long, Long, Int, Option[Seq[String]])](
+      (t0, t0 + 599, 60, None),
+      (t0, t0 + 599, 7, None),
+      (t0 + 3, t0 + 250, 13, Some(Seq("b", "a"))),
+      (t0 - 50, t0 + 20599, 50, Some(Seq("d", "c", "a", "b"))),
+      (t1 + 1, t1 + 598, 600, Some(Seq("a", "d"))),
+      (t0 + 10, t0 + 12, 9, None)) ++
+      (0 until 10).map { _ =>
+        val from = t0 - 20 + rng.nextInt(20700)
+        (from.toLong, from + 1L + rng.nextInt(3000), 1 + rng.nextInt(400),
+          Some(rng.shuffle(Seq("a", "b", "c", "d")).take(1 + rng.nextInt(4))))
+      }
+    var points = 0
+    cases.foreach { case (from, to, maxDp, targets) =>
+      val got = c.readGrafanaJson("test", "gj", from, to, maxDp, targets)
+      val want = engineGrafanaJson(c, "test", "gj", from, to, maxDp, targets)
+      assert(got == want, s"($from, $to, $maxDp, $targets)")
+      points += "\\[[-0-9.]+,[0-9.]+\\]".r.findAllIn(got).size
+    }
+    // the fixture does reach every kind of value it names
+    val all = c.readGrafanaJson("test", "gj", t0, t0 + 599, 600, Some(Seq("a")))
+    assert(all.contains("[123456792.000000,") && all.contains("[-273.149994,") &&
+      all.contains("[0.000000,") && all.contains("[-0.000000,"), all)
+    assert(points > 1000, s"only $points datapoints compared")
+  }
+
   test("update_metadata replaces the dict; mergeMetadata patches it " +
        "(reference database.py:287-298)") {
     val c = freshClient()

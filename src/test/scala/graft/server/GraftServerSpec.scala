@@ -337,6 +337,47 @@ class GraftServerSpec extends SparkSpec {
     assert(got == want, s"grafana wire diverged:\n$got\n$want")
   }
 
+  test("grafana /query returns every target as a JSON string: quotes, " +
+    "backslashes and names outside Latin-1 round-trip") {
+    import org.apache.spark.sql.functions.{col, timestamp_seconds}
+    import spark.implicits._
+    import graft.core.Wire.jstr
+    setupSensor()
+    val names = Seq("a\"b", "a\\b", "\u6e29\u5ea6")
+    val cfg = s"""{"period":"1s","metrics":[${names.map(jstr).mkString(",")}],
+      "read_key":"read-tok","write_key":"write-tok"}"""
+    assert(req("POST", "/db/plant/sensor/esc", Some(Admin),
+      Some(cfg.getBytes(StandardCharsets.UTF_8))).statusCode == 201)
+    val t0 = 1704326400L
+    val pts = names.zipWithIndex.flatMap { case (m, i) =>
+      (0 until 10).map(k => (t0 + k, m, (i * 10 + k).toDouble))
+    }.toDF("sec", "metric", "value")
+      .select(timestamp_seconds(col("sec")).as("ts"), col("metric"),
+        col("value"))
+    new GraftClient(spark, dir, WriteK).writeBatch(Seq(("plant", "esc") -> pts))
+
+    val range = s"""{"from":"${java.time.Instant.ofEpochSecond(t0)}",""" +
+      s""""to":"${java.time.Instant.ofEpochSecond(t0 + 9)}"}"""
+    val q = s"""{"range":$range,"maxDataPoints":5,"targets":[""" +
+      names.map(n => s"""{"target":${jstr(n)}}""").mkString(",") + "]}"
+    val r = req("POST", "/plant/esc/query", Some(ReadK),
+      Some(q.getBytes(StandardCharsets.UTF_8)))
+    assert(r.statusCode == 200)
+    val reply = js(r)
+    assert(reply.isInstanceOf[JArray], s"not a JSON array: $reply")
+    val got = reply.children.map(o => (o \ "target", o \ "datapoints") match {
+      case (JString(t), JArray(dps)) => t -> dps.map {
+        case JArray(List(JDouble(v), JDouble(ms))) => (v, ms.toLong)
+        case other => fail(s"bad datapoint $other")
+      }
+      case other => fail(s"bad target object $other")
+    })
+    // spread 2: the first row of each bucket, t0, t0 + 2, …, t0 + 8
+    assert(got == names.zipWithIndex.map { case (n, i) =>
+      n -> (0 until 10 by 2).map(k => ((i * 10 + k).toDouble, (t0 + k) * 1000))
+    })
+  }
+
   test("concurrent requests run on the handler pool — 16 parallel " +
     "reads all answer correctly (the gevent-pool analog)") {
     setupSensor()

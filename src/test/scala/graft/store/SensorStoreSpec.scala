@@ -847,15 +847,55 @@ class SensorStoreSpec extends SparkSpec {
       .select(timestamp_seconds(col("sec")).as("ts"), col("metric"),
         col("value")))
     st.materializeRollup("test", "s1", 60L)
+    st.materializeMeanRollup("test", "s1", 60L)
+    st.materializeStatsRollup("test", "s1", 60L)
+    st.materializeQuantileRollup("test", "s1", 60L, 1.0)
     val client = new graft.client.GraftClient(spark, dir)
     def jobs(f: => Any): Int = graft.JobCount(spark)(f)
+    val (one, oneEnd) = (c0 + 5 * chunkDur, c0 + 5 * chunkDur + 600)
     val lt = jobs(st.lastTimestamp("test", "s1"))
-    val rd = jobs(st.read("test", "s1", Some(c0 + 5 * chunkDur),
-      Some(c0 + 5 * chunkDur + 600)).collect())
+    val rd = jobs(st.read("test", "s1", Some(one), Some(oneEnd)).collect())
     val gf = jobs(client.readGrafana("test", "s1", c0, c0 + 10 * chunkDur - 1,
       640).collect())
     // a schema inference or a listing job over the 40 chunks would add
-    // to each; the sorted read is sample + shuffle + result
-    assert((lt, rd, gf) == ((1, 3, 6)), "jobs (lastTimestamp, read, grafana)")
+    // to each; the sorted read is sample + shuffle + result, and the
+    // Grafana read sorts only its answer: aggregate + sample + shuffle +
+    // result
+    assert((lt, rd, gf) == ((1, 3, 4)), "jobs (lastTimestamp, read, grafana)")
+
+    // the Grafana wire is one aggregate (shuffle + result) rendered on
+    // the driver; the read_df snapshot collects unsorted under its limit
+    assert(jobs(client.readGrafanaJson("test", "s1", c0,
+      c0 + 10 * chunkDur - 1, 640)) <= 2, "jobs of readGrafanaJson")
+    assert(jobs(client.readSnapshot("test", "s1", Some(one), Some(oneEnd))
+      ._2.limit(1001).collect()) == 1, "jobs of readSnapshot + limit collect")
+
+    // a rollup answer sorts in one partition: no sampling job, no
+    // exchange. Hour `h` sits on the 60 s grid (its chunk-0 rows fall
+    // in it) and routes to the rollups; `h + 7` falls back to raw.
+    val h = c0 + 128
+    for (from <- Seq(h, h + 7)) {
+      val to = from + 3599
+      assert(jobs(client.readGrafanaMean("test", "s1", from, to, 60)
+        .collect()) <= 2, s"jobs of readGrafanaMean from $from")
+      assert(jobs(client.readGrafanaStats("test", "s1", from, to, 60, "active")
+        .collect()) <= 2, s"jobs of readGrafanaStats from $from")
+      assert(jobs(client.readQuantile("test", "s1", from, to, 600, 50, 1.0)
+        .collect()) <= 4, s"jobs of readQuantile from $from")
+    }
+
+    // the HTTP client builds its frame from the reply as a local
+    // relation: no job on its own thread; the server's handler fires
+    // the one snapshot collect
+    val server = new graft.server.GraftServer(spark, dir, "adm")
+    server.start()
+    try {
+      val http = new graft.client.GraftHttpClient(spark,
+        s"http://127.0.0.1:${server.boundPort}", "adm")
+      val (mine, handler) = graft.JobCount.split(spark)(
+        assert(http.read("test", "s1", one, Some(oneEnd)).get.collect()
+          .length == 10))
+      assert((mine, handler) == ((0, 1)), "jobs (HTTP client, server handler)")
+    } finally server.stop()
   }
 }
