@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Grid
 import graft.core.Wire.jstr
 import graft.ingest.{Influx, Pivot}
+import graft.ingest.Msgpack.PointRow
 import graft.read.Downsample
 import graft.store.{MetricDef, RollupKind, SensorConfig, SensorStore, SensorVersion}
 
@@ -22,6 +23,7 @@ import graft.store.{MetricDef, RollupKind, SensorConfig, SensorStore, SensorVers
   * | `create_sensor` (+keys, meta)  | `createSensor`               |
   * | `delete_sensor` / `delete_db`  | `deleteSensor` / `deleteDb`  |
   * | `write(seq_of_lines, fill)`    | `write(lines, fill)`         |
+  * | `write_point_list`             | `writePoints(points, fill)`  |
   * | `write_df(db, sensor, df)`     | `writeDf` (wide frame)       |
   * | `read(db, sensor, f, t, m)`    | `read` → wide frame          |
   * | `read_grafana(...)`            | `readGrafana` → long frame   |
@@ -178,49 +180,39 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
   // ---- write ---------------------------------------------------------
 
   /** Ingest influx-protocol lines (reference `client.write`,
-    * `client.py:337-370` → `server.write_point_list`). Lines may span
-    * multiple (db, sensor) pairs — they are grouped per sensor like the
-    * server's `DbMeterData` (A-3) and written by [[writeBatch]]. Missing
-    * timestamps get ingest time. Malformed lines raise, mirroring
-    * `InfluxParseException`.
+    * `client.py:337-370` → `server.write_point_list`): decoded on the
+    * driver ([[graft.ingest.Influx.decode]]), a line without a
+    * timestamp stamped with ingest time, then [[writePoints]]. A
+    * malformed line raises `InfluxParseException` before anything is
+    * written.
     */
-  def write(lines: Seq[String], fillValue: Double = 0.0): Unit = {
-    import spark.implicits._
-    val parsed = Influx.parseLines(lines.toDF("line"), "line").cache()
-    try {
-      val bad = parsed.filter(col("malformed")).select("line").limit(1).collect()
-      if (bad.nonEmpty)
-        throw new graft.core.InfluxParseException(bad(0).getString(0))
-      val nowSec = System.currentTimeMillis() / 1000
-      val pts = parsed
-        .withColumn("ts_sec", coalesce(col("ts_sec"), lit(nowSec)))
-        .select(col("db"), col("sensor"),
-          timestamp_seconds(col("ts_sec")).as("ts"),
-          col("metric"), col("value"))
-      val sensors = pts.select("db", "sensor").distinct().collect()
-        .map(r => (r.getString(0), r.getString(1)))
-      writeBatch(sensors.toSeq.map { case (db, sensor) =>
-        (db, sensor) -> pts.filter(col("db") === db && col("sensor") === sensor)
-          .select("ts", "metric", "value")
-      }, fillValue)
-    } finally { parsed.unpersist(); () }
-  }
+  def write(lines: Seq[String], fillValue: Double = 0.0): Unit =
+    writePoints(Influx.decode(lines, System.currentTimeMillis() / 1000),
+      fillValue)
 
-  /** Long-format ingest — the `write_point_list` inner grain
-    * (`server.py:215-266`): each sensor's points `(ts, metric, value)`
-    * through the upsert, locked like the reference server's per-sensor
-    * process lock. Every target is authorized before the first write
-    * lands, so a refused sensor leaves the whole batch unwritten. The
-    * binary ingest route lands here after
-    * [[graft.ingest.Msgpack.decodePointList]].
+  /** The one write path of a decoded body, influx or msgpack — the
+    * reference's `write_point_list` (`server.py:214-293`): points may
+    * span several (db, sensor) pairs, grouped per sensor like the
+    * server's `DbMeterData` (A-3), each group in arrival order. An empty
+    * metric name refuses the body (`InvalidDataWriteException`), and
+    * every target is authorized before the first write lands, so a
+    * refused sensor leaves the whole body unwritten. Each group reaches
+    * `store.write` as a local frame, locked like the reference server's
+    * per-sensor process lock.
     */
-  def writeBatch(batches: Seq[((String, String), DataFrame)],
-                 fillValue: Double = 0.0): Unit = {
-    batches.foreach { case ((db, sensor), _) =>
-      authorize(db, sensor, write = true)
-    }
-    batches.foreach { case ((db, sensor), points) =>
-      store.write(db, sensor, points, fillValue)
+  def writePoints(points: Seq[PointRow], fillValue: Double = 0.0): Unit = {
+    import spark.implicits._
+    points.find(_.metric.isEmpty).foreach(p =>
+      throw new graft.core.InvalidDataWriteException(
+        s"empty metric name in a point for ${p.db}/${p.sensor}"))
+    val groups = points.groupBy(p => (p.db, p.sensor))
+    val targets = points.map(p => (p.db, p.sensor)).distinct
+    targets.foreach { case (db, sensor) => authorize(db, sensor, write = true) }
+    targets.foreach { case t @ (db, sensor) =>
+      store.write(db, sensor, groups(t).map(p => (p.ts_sec, p.metric, p.value))
+        .toDF("ts_sec", "metric", "value")
+        .select(timestamp_seconds(col("ts_sec")).as("ts"), col("metric"),
+          col("value")), fillValue)
     }
   }
 
@@ -230,9 +222,10 @@ class GraftClient(spark: SparkSession, baseDir: String, token: String = "",
     */
   def writeDf(db: String, sensor: String, wide: DataFrame,
               fillValue: Double = 0.0): Unit = {
+    authorize(db, sensor, write = true)
     val metrics = wide.columns.filterNot(_ == "ts").toSeq
-    writeBatch(Seq((db, sensor) -> Pivot.wideToLong(wide, Seq("ts"), metrics)
-      .select(col("ts"), col("metric"), col("value").cast("double"))), fillValue)
+    store.write(db, sensor, Pivot.wideToLong(wide, Seq("ts"), metrics)
+      .select(col("ts"), col("metric"), col("value").cast("double")), fillValue)
   }
 
   // ---- read ----------------------------------------------------------

@@ -3,7 +3,6 @@ package graft.client
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
-import java.nio.{ByteBuffer, ByteOrder}
 import java.util.Base64
 
 import scala.jdk.CollectionConverters._
@@ -14,6 +13,7 @@ import org.json4s._
 import org.json4s.jackson.JsonMethods
 
 import graft.core.Wire.{jstr, zlibInflate}
+import graft.ingest.BinaryFrame
 
 /** HTTP client for [[graft.server.GraftServer]] — the wire-level analog
   * of the reference `OngTsdbClient` (`client.py:39-571`), speaking the
@@ -199,23 +199,15 @@ class GraftHttpClient(spark: SparkSession, baseUrl: String,
       val data =
         if (j.get("compressed").contains(JBool(true))) zlibInflate(sent) else sent
       val raw = Base64.getMimeDecoder.decode(data)
-      val nDates = datesLen.toInt
       val names = metricNames(j.getOrElse("metrics", JNothing))
-      val nRows = nDates / 8
-      val db8 = ByteBuffer.wrap(raw, 0, nDates)
-        .order(ByteOrder.LITTLE_ENDIAN)
-      val vb = ByteBuffer.wrap(raw, nDates, raw.length - nDates)
-        .order(ByteOrder.LITTLE_ENDIAN)
-      val rows = (0 until nRows).map { _ =>
-        val ts = db8.getDouble
-        val vals = names.map { _ =>
-          val f = vb.getFloat
-          if (f.isNaN) null else java.lang.Float.valueOf(f)
-        }
+      val (dates, values) = BinaryFrame.decode(raw, datesLen.toInt / 8,
+        names.length)
+      val rows = dates.toSeq.zip(values).map { case (ts, vs) =>
         org.apache.spark.sql.Row.fromSeq(
           java.sql.Timestamp.from(
             java.time.Instant.ofEpochSecond(ts.toLong,
-              math.round((ts - ts.toLong) * 1e9))) +: vals)
+              math.round((ts - ts.toLong) * 1e9))) +:
+            vs.toSeq.map(f => if (f.isNaN) null else java.lang.Float.valueOf(f)))
       }
       val schema = StructType(StructField("ts", TimestampType) +:
         names.map(StructField(_, FloatType)))

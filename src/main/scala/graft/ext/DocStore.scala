@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.json4s._
 
 import graft.core.CommitLog
@@ -24,8 +25,8 @@ import graft.core.CommitLog
   *    the union of the dirs the current commit record lists; dirs no
   *    commit record references are invisible.
   *  - `_commit/v<V>.json`  the COMMIT RECORDS ([[graft.core.CommitLog]],
-  *    the protocol `SensorStore` shares): `(version, n, docs_dirs)`
-  *    and, for an ingest, its batch fingerprint. The current store
+  *    the protocol `SensorStore` shares): `(version, n, docs_dirs,
+  *    schema)` and, for an ingest, its batch fingerprint. The current store
   *    state is the highest V present — committing a version IS
   *    creating its record; nothing else is a commit. Records older
   *    than V-1 are pruned after each commit, and so are the segments
@@ -133,10 +134,16 @@ object DocStore {
 
   private def log(root: String) = new CommitLog(root, docsDirs)
 
-  /** The current record: `(version, n, docs_dirs)`. */
-  private def current(root: String): (Long, Long, List[String]) =
+  /** The current record: `(version, n, docs_dirs, docs schema)`; a
+    * record written before schemas were recorded has none. */
+  private def current(root: String)
+      : (Long, Long, List[String], Option[StructType]) =
     log(root).current() match {
-      case Some((v, rec)) => (v, long(rec \ "n"), docsDirs(rec))
+      case Some((v, rec)) => (v, long(rec \ "n"), docsDirs(rec),
+        rec \ "schema" match {
+          case JString(s) => Some(DataType.fromJson(s).asInstanceOf[StructType])
+          case _ => None
+        })
       case None =>
         throw new IllegalArgumentException(s"no committed DocStore at $root")
     }
@@ -146,19 +153,24 @@ object DocStore {
   def count(spark: SparkSession, root: String): Long = current(root)._2
 
   /** The LIVE corpus: the union of the segment dirs the current
-    * commit record lists. */
-  def docs(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(current(root)._3.map(d => s"$root/$d"): _*)
+    * commit record lists, read with the schema it records — no footer
+    * read, so building a probe over it runs no job. */
+  def docs(spark: SparkSession, root: String): DataFrame = {
+    val (_, _, dirs, schema) = current(root)
+    schema.fold(spark.read)(spark.read.schema(_))
+      .parquet(dirs.map(d => s"$root/$d"): _*)
+  }
 
-  /** Commit version `v` listing `docsDirs`; `fp` is the ingest batch's
-    * fingerprint. Segments only pruned records list go with them (the
-    * previous record stays, so a reader that resolved it mid-commit
-    * still finds its segments). */
+  /** Commit version `v` listing `docsDirs`, whose rows have `schema`;
+    * `fp` is the ingest batch's fingerprint. Segments only pruned
+    * records list go with them (the previous record stays, so a reader
+    * that resolved it mid-commit still finds its segments). */
   private def commit(root: String, v: Long, n: Long, docsDirs: Seq[String],
-                     fp: Option[(Long, Long)]): Unit =
+                     schema: StructType, fp: Option[(Long, Long)]): Unit =
     log(root).commit(v, JObject(
       "version" -> JLong(v), "n" -> JLong(n),
       "docs_dirs" -> JArray(docsDirs.map(JString(_)).toList),
+      "schema" -> JString(schema.json),
       "fp" -> fp.fold[JValue](JNull) { case (fn, fh) =>
         JArray(List(JLong(fn), JLong(fh))) }))
 
@@ -192,7 +204,7 @@ object DocStore {
     df.write.mode("overwrite").parquet(s"$root/docs/b1")
     val corpus = spark.read.parquet(s"$root/docs/b1")
     buildIndexes(root, corpus, cfg, 1L)
-    commit(root, 1L, corpus.count(), Seq("docs/b1"), None)
+    commit(root, 1L, corpus.count(), Seq("docs/b1"), corpus.schema, None)
     root
   }
 
@@ -208,7 +220,8 @@ object DocStore {
     * with a different batch fails loudly. Returns the new version. */
   def ingestBatch(spark: SparkSession, root: String, batch: DataFrame,
                   cfg: Config): Long = withStoreLock(root) {
-    val (cur, n, dirs) = current(root)
+    val (cur, n, dirs, _) = current(root)
+    val schema = docs(spark, root).schema
     val v = cur + 1
     val (bn, bh) = fingerprintOf(batch, cfg.idCol)
     log(root).intent(v) match {
@@ -224,7 +237,7 @@ object DocStore {
     }
     val seg = s"docs/b$v"
     batch.write.mode("overwrite").parquet(s"$root/$seg")
-    commit(root, v, n + bn, dirs :+ seg, Some((bn, bh)))
+    commit(root, v, n + bn, dirs :+ seg, schema, Some((bn, bh)))
     v
   }
 
@@ -273,9 +286,10 @@ object DocStore {
     // keeps them mismatched (fallback) until rebuildIndexes.
     val v = (version(spark, root) +: log(root).intents).max + 1
     val seg = s"docs/r$v"
+    val schema = docs(spark, root).schema
     merged.write.mode("overwrite").parquet(s"$root/$seg")
-    val n = spark.read.parquet(s"$root/$seg").count()
-    commit(root, v, n, Seq(seg), None)
+    val n = spark.read.schema(schema).parquet(s"$root/$seg").count()
+    commit(root, v, n, Seq(seg), schema, None)
     v
   }
 

@@ -2,31 +2,17 @@ package graft.ingest
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-
-/** Binary wire-frame codec (reference A-2): the reference's binary read
-  * response is `float64 dates || float32 value-matrix` decoded with
-  * `np.frombuffer` (`client.py:549-560`, values dtype `__init__.py:26`).
-  * Here the same layout decodes distributed: a typed `mapPartitions`
-  * over payload records — ByteBuffer views, zero copies beyond the
-  * payload itself, no driver involvement — emitting long-format points.
-  * The encode side exists for round-trips and for serving the same
-  * frame format back out.
+/** The `read_df` wire frame (reference A-2): `float64 dates ||
+  * float32 value-matrix`, little-endian (numpy's default), the layout
+  * the reference client decodes with `np.frombuffer`
+  * (`client.py:549-560`, values dtype `__init__.py:26`). The server
+  * encodes its reply with [[encode]] and the HTTP client decodes it
+  * with [[decode]]: one codec for both ends.
   */
 object BinaryFrame {
 
-  /** One wire frame: `nRows` float64 epoch-seconds, then an
-    * `nRows × nMetrics` row-major float32 matrix.
-    */
-  case class Frame(frame_id: Long, n_rows: Int, n_metrics: Int,
-                   payload: Array[Byte])
-
-  case class Point(frame_id: Long, row: Int, metric_idx: Int,
-                   ts_sec: Double, value: Float)
-
-  /** Little-endian encode (numpy default byte order). */
-  def encode(frameId: Long, dates: Array[Double],
-             values: Array[Array[Float]]): Frame = {
+  /** `dates` as float64, then one float32 row of `values` per date. */
+  def encode(dates: Array[Double], values: Array[Array[Float]]): Array[Byte] = {
     require(values.length == dates.length, "one value row per date")
     val nMetrics = if (values.isEmpty) 0 else values(0).length
     val buf = ByteBuffer.allocate(dates.length * 8 +
@@ -36,45 +22,22 @@ object BinaryFrame {
       require(row.length == nMetrics, "ragged value matrix")
       row.foreach(buf.putFloat)
     }
-    Frame(frameId, dates.length, nMetrics, buf.array())
+    buf.array()
   }
 
-  /** Distributed decode: one task per partition of frames; each frame
-    * unpacks to `n_rows × n_metrics` long-format points. A malformed
-    * payload (wrong byte count) throws a per-frame
-    * [[graft.core.InvalidDataWriteException]] — mirroring the
-    * reference's corrupt-chunk byte-count guard (`database.py:470-476`).
+  /** The `nDates` dates and `nDates × nMetrics` values of `bytes`. A
+    * wrong byte count throws [[graft.core.InvalidDataWriteException]],
+    * mirroring the reference's corrupt-chunk byte-count guard
+    * (`database.py:470-476`).
     */
-  def decode(frames: Dataset[Frame]): Dataset[Point] = {
-    import frames.sparkSession.implicits._
-    frames.mapPartitions { it =>
-      it.flatMap { f =>
-        val expected = f.n_rows * 8 + f.n_rows * f.n_metrics * 4
-        if (f.payload.length != expected)
-          throw new graft.core.InvalidDataWriteException(
-            s"Binary frame ${f.frame_id}: expected $expected bytes, " +
-              s"got ${f.payload.length}")
-        val buf = ByteBuffer.wrap(f.payload).order(ByteOrder.LITTLE_ENDIAN)
-        val dates = Array.fill(f.n_rows)(buf.getDouble)
-        for {
-          r <- (0 until f.n_rows).iterator
-          m <- (0 until f.n_metrics).iterator
-        } yield Point(f.frame_id, r, m, dates(r), buf.getFloat(
-          f.n_rows * 8 + (r * f.n_metrics + m) * 4))
-      }
-    }
-  }
-
-  /** Decoded points joined back to metric names, as the store's
-    * canonical long ingest shape `(ts, metric, value)`.
-    */
-  def toPoints(decoded: Dataset[Point], metricNames: Seq[String]): DataFrame = {
-    import decoded.sparkSession.implicits._
-    import org.apache.spark.sql.functions._
-    val names = metricNames.zipWithIndex
-      .map { case (n, i) => (i, n) }.toDF("metric_idx", "metric")
-    decoded.toDF().join(broadcast(names), "metric_idx")
-      .select(timestamp_seconds(col("ts_sec")).as("ts"), col("metric"),
-        col("value").cast("double").as("value"))
+  def decode(bytes: Array[Byte], nDates: Int,
+             nMetrics: Int): (Array[Double], Array[Array[Float]]) = {
+    val expected = nDates * 8L + nDates.toLong * nMetrics * 4
+    if (bytes.length != expected)
+      throw new graft.core.InvalidDataWriteException(
+        s"Binary frame: expected $expected bytes, got ${bytes.length}")
+    val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    val dates = Array.fill(nDates)(buf.getDouble)
+    (dates, Array.fill(nDates)(Array.fill(nMetrics)(buf.getFloat)))
   }
 }

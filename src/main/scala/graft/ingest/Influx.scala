@@ -1,7 +1,11 @@
 package graft.ingest
 
+import java.util.regex.Pattern
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.ingest.Msgpack.PointRow
 
 /** InfluxDB-line-protocol ingest (reference operator A-1).
   *
@@ -11,10 +15,12 @@ import org.apache.spark.sql.functions._
   * the trailing nanosecond timestamp is optional (missing → ingest
   * time); a malformed line raises (`InfluxParseException`).
   *
-  * Implemented as pure Column expressions (split/regexp — all
-  * codegen'd); the multi-metric field list is exploded into long rows
-  * `(db, sensor, metric, value, ts_sec)`, the engine's canonical ingest
-  * shape.
+  * One decoder, [[decodeLine]], plain Scala on whoever calls it: the
+  * server and the library decode a write body on the driver into
+  * [[Msgpack.PointRow]]s ([[decode]]), the points the `/influx_binary`
+  * body decodes to; a DataFrame of lines decodes through the same
+  * function as a UDF ([[parseLines]]) into the engine's long rows
+  * `(db, sensor, metric, value, ts_sec)`.
   */
 object Influx {
 
@@ -23,53 +29,91 @@ object Influx {
     */
   val LineRegex = """^([^, ]+),[^= ]+=([^ ]+) ([^ ]+)( -?\d+)?$"""
 
-  /** Parse a DataFrame with a string column `lineCol` into long-format
-    * points. Output columns: db, sensor, metric, value (double),
-    * ts_sec (long; null when the line had no timestamp — caller fills
-    * ingest time), malformed (boolean).
+  private val Line = Pattern.compile(LineRegex)
+  private val SensorRe = Pattern.compile(""",[^=]+=(.+)$""")
+  private val TsRe = Pattern.compile(""" (-?\d+)$""")
+
+  /** One field of an accepted line; a field without `=` has no value
+    * and a line without a timestamp no `ts_sec`.
     */
-  def parseLines(df: DataFrame, lineCol: String): DataFrame = {
-    // `get()` (not getItem) everywhere: under ANSI mode an out-of-bounds
-    // index throws, and malformed lines must FLAG, not crash the batch
-    val line = col(lineCol)
-    val header = get(split(line, " "), lit(0))
-    val fields = coalesce(get(split(line, " "), lit(1)), lit(""))
-    val tsStr = regexp_extract(line, """ (-?\d+)$""", 1)
-    df.withColumn("malformed", !line.rlike(LineRegex))
-      .withColumn("db", get(split(header, ","), lit(0)))
-      .withColumn("sensor", regexp_extract(header, """,[^=]+=(.+)$""", 1))
-      .withColumn("field", explode(split(fields, ",")))
-      .withColumn("metric", get(split(col("field"), "="), lit(0)))
-      // TRY_CAST, not cast: a non-numeric value ('m=abc') must FLAG the
-      // row, not throw SparkNumberFormatException under ANSI mode and
-      // kill the whole batch (the reference raises per line:
-      // server_utils.py float(v) ValueError).
-      .withColumn("value_str", get(split(col("field"), "="), lit(1)))
-      .withColumn("value", expr("try_cast(value_str AS DOUBLE)"))
-      .withColumn("malformed",
-        col("malformed") || (col("value").isNull && col("value_str").isNotNull))
-      // integer arithmetic on int64, NOT decimal division: Spark rounds
-      // a decimal quotient half-up at the result scale (6) BEFORE any
-      // floor can run, so 1704067199999999999 ns became ...200 s. An
-      // int64 holds epoch-ns until year 2262. Spark's `div` TRUNCATES
-      // toward zero while the reference's Python `//` FLOORS — they
-      // differ on pre-epoch (negative) nanoseconds — so correct the
-      // truncated quotient by 1 whenever a negative remainder was
-      // discarded (java-style % keeps the dividend's sign). This floors
-      // for every sign and, unlike `ns - pmod(ns, 1e9)`, cannot
-      // overflow at the int64 edges under ANSI. try_cast → null for
-      // absurd digit runs (treated as no-timestamp) instead of an ANSI
-      // overflow crash.
-      .withColumn("ts_ns_str", tsStr)
-      .withColumn("__ts_ns", expr("try_cast(ts_ns_str AS BIGINT)"))
-      .withColumn("ts_sec",
-        when(col("ts_ns_str") === "", lit(null).cast("long"))
-          .otherwise(expr(
-            """__ts_ns div 1000000000
-              | - (CASE WHEN __ts_ns % 1000000000 < 0 THEN 1 ELSE 0 END)"""
-              .stripMargin)))
-      .drop("field", "value_str", "ts_ns_str", "__ts_ns")
+  private case class Field(db: String, sensor: String, metric: String,
+                           value: Option[Double], ts_sec: Option[Long])
+
+  /** The first match of `p`'s group 1 in `s`, or "" — Spark's
+    * `regexp_extract`.
+    */
+  private def extract(p: Pattern, s: String): String = {
+    val m = p.matcher(s)
+    if (m.find()) Option(m.group(1)).getOrElse("") else ""
   }
+
+  /** Spark's string→double rule (what `try_cast(v AS DOUBLE)` accepts):
+    * Java's number syntax, then the `inf`/`infinity`/`nan` literals in
+    * any case; anything else is not a number.
+    */
+  private def toDouble(s: String): Option[Double] =
+    try Some(s.toDouble) catch {
+      case _: NumberFormatException =>
+        s.trim.toLowerCase(java.util.Locale.ROOT) match {
+          case "inf" | "+inf" | "infinity" | "+infinity" =>
+            Some(Double.PositiveInfinity)
+          case "-inf" | "-infinity" => Some(Double.NegativeInfinity)
+          case "nan" => Some(Double.NaN)
+          case _ => None
+        }
+    }
+
+  /** The fields of one line, or None when it is malformed: the line
+    * fails [[LineRegex]], or a field has an empty name or a non-numeric
+    * value. Strings split as Spark's `split` does (Java's, trailing
+    * empties kept). The ns→s stamp FLOORS like the reference's Python
+    * `//`, on pre-epoch timestamps too (`Math.floorDiv`, which cannot
+    * overflow at the int64 edges); a digit run past int64 counts as no
+    * timestamp.
+    */
+  private def decodeLine(line: String): Option[Seq[Field]] = {
+    val lm = Line.matcher(Option(line).getOrElse(""))
+    if (!lm.find()) None
+    else {
+      val Array(header, fields, _*) = line.split(" ", -1)
+      val (db, sensor) = (lm.group(1), extract(SensorRe, header))
+      val ts = extract(TsRe, line).toLongOption.map(Math.floorDiv(_, 1000000000L))
+      val values = fields.split(",", -1).toSeq.map { f =>
+        val kv = f.split("=", -1)
+        (kv(0), kv.lift(1).map(toDouble))
+      }
+      Option.when(values.forall { case (m, v) => m.nonEmpty && !v.contains(None) })(
+        values.map { case (m, v) => Field(db, sensor, m, v.flatten, ts) })
+    }
+  }
+
+  /** Decode a write body's lines into points, stamping a line without a
+    * timestamp `nowSec` and a field without a value NaN (a cell the
+    * write leaves alone); the first malformed line raises
+    * [[graft.core.InfluxParseException]], so a bad line refuses the
+    * whole body.
+    */
+  def decode(lines: Seq[String], nowSec: Long): Seq[PointRow] =
+    lines.flatMap(line => decodeLine(line)
+      .getOrElse(throw new graft.core.InfluxParseException(line))
+      .map(f => PointRow(f.db, f.sensor, f.metric, f.value.getOrElse(Double.NaN),
+        f.ts_sec.getOrElse(nowSec).toDouble)))
+
+  private val parseUdf = udf((line: String) => decodeLine(line))
+
+  /** Parse a DataFrame with a string column `lineCol` into long-format
+    * points, keeping its other columns. Output columns: malformed
+    * (boolean), db, sensor, metric, value (double; null for a field
+    * without `=`), ts_sec (long; null when the line had no timestamp —
+    * caller fills ingest time). A malformed line gives one row, flagged,
+    * its other columns null.
+    */
+  def parseLines(df: DataFrame, lineCol: String): DataFrame =
+    Seq("db", "sensor", "metric", "value", "ts_sec").foldLeft(
+        df.withColumn("__field", explode_outer(parseUdf(col(lineCol))))
+          .withColumn("malformed", col("__field").isNull)) {
+        (acc, c) => acc.withColumn(c, col(s"__field.$c"))
+      }.drop("__field")
 
   /** Fill-value parsing (reference C-5, `server.py:296-301`): numeric
     * string → its value; "nan" (any case) → NaN; anything else → warn

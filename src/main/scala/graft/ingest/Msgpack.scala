@@ -3,8 +3,6 @@ package graft.ingest
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-
 /** Wire-compatible decode of the reference's `/influx_binary` body —
   * the LAST interop surface where the reference client had an artifact
   * graft could not consume. The reference client posts
@@ -17,19 +15,19 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   *
   * The decoder below implements exactly the msgpack subset that body
   * can contain (arrays, strings, float32/64, all int widths, nil/bool)
-  * from the public msgpack spec — no library, no reflection, and like
-  * [[BinaryFrame]] the distributed path is a typed `mapPartitions`
-  * over payload records (per-partition imperative byte-walk; the one
-  * sanctioned non-declarative shape). A malformed payload throws
-  * [[graft.core.InvalidDataWriteException]] with the byte offset.
+  * from the public msgpack spec — no library, no reflection — on the
+  * driver, into the [[PointRow]]s an influx body decodes to too
+  * ([[Influx.decode]]); `GraftClient.writePoints` writes either. A
+  * malformed payload throws [[graft.core.InvalidDataWriteException]]
+  * with the byte offset.
   */
 object Msgpack {
 
-  /** One decoded row of the reference 5-tuple list. */
+  /** One point of a write body, either wire format: `ts_sec` in epoch
+    * seconds, NaN `value` for a cell the write leaves alone.
+    */
   case class PointRow(db: String, sensor: String, metric: String,
                       value: Double, ts_sec: Double)
-
-  case class Payload(payload_id: Long, body: Array[Byte])
 
   // ---- minimal msgpack value model --------------------------------
   sealed trait V
@@ -122,20 +120,5 @@ object Msgpack {
         case _ => fail(0, "metric/value with non-str/non-numeric entries")
       }
     }
-  }
-
-  /** Distributed decode: one task per partition of payloads — the
-    * [[BinaryFrame.decode]] shape. Output is the canonical long ingest
-    * stream `(ts, db, sensor, metric, value)`, ready for
-    * [[graft.store.SensorStore.write]] / the [[Pivot]] grouping — i.e.
-    * a real ong_tsdb client's binary POST body ingests unmodified.
-    */
-  def decode(payloads: Dataset[Payload]): DataFrame = {
-    import payloads.sparkSession.implicits._
-    import org.apache.spark.sql.functions._
-    payloads.mapPartitions(_.flatMap(p => decodePointList(p.body)))
-      .toDF()
-      .select(timestamp_seconds(col("ts_sec")).as("ts"), col("db"),
-        col("sensor"), col("metric"), col("value"))
   }
 }

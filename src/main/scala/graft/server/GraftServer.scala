@@ -2,7 +2,6 @@ package graft.server
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.nio.{ByteBuffer, ByteOrder}
 import java.util.Base64
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -12,7 +11,7 @@ import org.json4s.jackson.JsonMethods
 
 import graft.client.GraftClient
 import graft.core.Wire.{jstr, zlibDeflate, zlibInflate}
-import graft.ingest.Msgpack
+import graft.ingest.{BinaryFrame, Msgpack}
 
 /** HTTP serving layer — the process analog of the reference Flask
   * server (`server.py`), on the JDK's built-in `HttpServer` (zero new
@@ -36,10 +35,10 @@ import graft.ingest.Msgpack
   *    `/search`; `GET /get_md5/<path>` (`server.py:330-498`)
   *
   * `read_df` speaks the reference's exact wire: float64-LE epoch
-  * seconds ++ float32-LE row-major values, MIME-base64'd, keyed by
-  * `str(len(dates_bytes))`, optionally zlib-compressed when the client
-  * advertises gzip and the payload clears the threshold — the byte
-  * shape `client.py:536-556` decodes.
+  * seconds ++ float32-LE row-major values ([[BinaryFrame]]),
+  * MIME-base64'd, keyed by `str(len(dates_bytes))`, optionally
+  * zlib-compressed when the client advertises gzip and the payload
+  * clears the threshold — the byte shape `client.py:536-556` decodes.
   *
   * Auth = the reference model: HTTP basic auth's password is the
   * token, handed to a per-request [[GraftClient]] whose one gate,
@@ -337,8 +336,9 @@ class GraftServer(spark: SparkSession, baseDir: String,
 
   // ---- ingest bodies -------------------------------------------------
 
-  /** The client's `write` parses the lines, so the gate and the write
-    * path read the target sensor from the one parse.
+  /** Both ingest bodies decode on the driver into points, and the
+    * client's `writePoints` gates and writes them: the gate reads the
+    * targets from the one decode.
     */
   private def influxWrite(ex: HttpExchange, c: GraftClient,
                           fill: Double): Unit = {
@@ -350,17 +350,9 @@ class GraftServer(spark: SparkSession, baseDir: String,
 
   private def binaryWrite(ex: HttpExchange, c: GraftClient,
                           fill: Double): Unit = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val rows = Msgpack.decodePointList(body(ex))
-    val batches = rows.groupBy(r => (r.db, r.sensor)).toSeq.map {
-      case (target, ps) => target -> ps.map(p => (p.ts_sec, p.metric, p.value))
-        .toDF("ts_sec", "metric", "value")
-        .select(timestamp_seconds(col("ts_sec")).as("ts"), col("metric"),
-          col("value"))
-    }
-    c.writeBatch(batches, fill)
-    makeJs(ex, s"${rows.size} lines inserted ok", 200)
+    val points = Msgpack.decodePointList(body(ex))
+    c.writePoints(points, fill)
+    makeJs(ex, s"${points.size} lines inserted ok", 200)
   }
 
   // ---- read_df wire (`server.py:339-385` ↔ `client.py:536-556`) ------
@@ -402,34 +394,24 @@ class GraftServer(spark: SparkSession, baseDir: String,
     }
     if (got.isEmpty) { makeJs(ex, "No data", 404); return }
     val rows = got.sortBy(_.getTimestamp(0).getTime)
-    val datesBuf = ByteBuffer.allocate(rows.length * 8)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    val valuesBuf = ByteBuffer.allocate(rows.length * metrics.length * 4)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    rows.foreach { r =>
-      datesBuf.putDouble(r.getTimestamp(0).toInstant.toEpochMilli / 1000.0)
-      var i = 0
-      while (i < metrics.length) {
-        valuesBuf.putFloat(
-          if (r.isNullAt(i + 1)) Float.NaN else r.getFloat(i + 1))
-        i += 1
-      }
-    }
-    val datesBytes = datesBuf.array()
-    val raw = datesBytes ++ valuesBuf.array()
+    val raw = BinaryFrame.encode(
+      rows.map(_.getTimestamp(0).toInstant.toEpochMilli / 1000.0),
+      rows.map(r => Array.tabulate(metrics.length)(i =>
+        if (r.isNullAt(i + 1)) Float.NaN else r.getFloat(i + 1))))
+    val datesLen = rows.length * 8
     // python base64.encodebytes: MIME lines of 76 chars, trailing \n
     val encoded = Base64.getMimeEncoder(76, Array('\n'.toByte))
       .encode(raw) ++ Array('\n'.toByte)
     val wantsGzip = Option(
       ex.getRequestHeaders.getFirst("Content-Encoding"))
       .exists(_.equalsIgnoreCase("gzip"))
-    val compressed = datesBytes.length > compressThreshold && wantsGzip
+    val compressed = datesLen > compressThreshold && wantsGzip
     val payload = if (compressed) zlibDeflate(encoded) else encoded
     // bytes ride the JSON string as ISO-8859-1 chars, like Flask's
     // jsonify of the .decode("ISO-8859-1") value
     val payloadStr = new String(payload, StandardCharsets.ISO_8859_1)
     val bodyJson = renderJ(Map(
-      datesBytes.length.toString -> payloadStr,
+      datesLen.toString -> payloadStr,
       "metrics" -> metricsJ(cfg.metrics.map(_.levels)),
       "metadata" -> cfg.metadata,
       "compressed" -> compressed,

@@ -238,7 +238,11 @@ class SensorStore(spark: SparkSession, baseDir: String) {
   // ---- write path (A-3..A-8) -----------------------------------------
 
   /** Ingest a long-format batch: columns (ts timestamp, metric string,
-    * value double). Semantics of the reference write path:
+    * value double) — a local frame from `GraftClient.writePoints`, or
+    * any DataFrame (streaming, `writeDf`, bulk loads). One aggregate
+    * over the snapped points finds the batch's metrics and the chunks
+    * it touches before the pivot. Semantics of the reference write
+    * path:
     *  - timestamps snap DOWN to the tick grid (A-6);
     *  - within a batch, the last row wins per (tick, metric) cell (A-4);
     *  - only non-NaN/non-null incoming cells overwrite stored cells
@@ -268,30 +272,27 @@ class SensorStore(spark: SparkSession, baseDir: String) {
       val chunkDur = tick * Freq.ChunkRows
 
       // arrival order for last-write-wins within the batch
-      val ordered = points.withColumn("_arrival", monotonically_increasing_id())
+      val snapped = points.withColumn("_arrival", monotonically_increasing_id())
+        .withColumn("slot", Grid.snap(col("ts"), tick))
+        .withColumn("chunk_start", Grid.snapSeconds(col("slot"), chunkDur))
 
-      // schema discovery: which metrics does the batch carry? (small,
-      // bounded by sensor width — a metadata-sized collect)
-      val batchMetrics = ordered.select("metric").distinct()
-        .collect().map(_.getString(0)).toSeq
+      // the batch's metrics (schema discovery, bounded by sensor width)
+      // and the chunks it touches (only their files join the merge):
+      // one aggregate, one metadata-sized collect
+      val found = snapped.agg(collect_set("metric"), collect_set("chunk_start"))
+        .head()
       val known = cfg.metricNames.toSet
-      val newMetrics = batchMetrics.filterNot(known)
+      val newMetrics = found.getSeq[String](0).filterNot(known)
       if (newMetrics.nonEmpty) {
         val since = prev.data.keys.maxOption.fold(0L)(_ + chunkDur)
         cfg = cfg.copy(metrics = cfg.metrics ++ newMetrics.sorted.map(m =>
           MetricDef(Seq(m), fill = Some(fillValue), since = Some(since))))
       }
       val metrics = cfg.metricNames
+      val touched = found.getSeq[Long](1)
 
-      val snapped = ordered
-        .withColumn("slot", Grid.snap(col("ts"), tick))
-        .withColumn("chunk_start", Grid.snapSeconds(col("slot"), chunkDur))
       val incoming = Pivot.longToWide(snapped, Seq("chunk_start", "slot"),
         "metric", "value", "_arrival", metrics)
-
-      // only the touched chunks' files participate in the merge
-      val touched = incoming.select("chunk_start").distinct()
-        .collect().map(_.getLong(0)).toIndexedSeq
       val existing = readRaw(cfg, touched.flatMap(prev.data.getOrElse(_, Nil)),
           metrics)
         .select(Seq("chunk_start", "slot").map(col) ++

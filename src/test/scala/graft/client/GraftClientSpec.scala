@@ -704,6 +704,50 @@ class GraftClientSpec extends SparkSpec {
     assert(admin.store.lastTimestamp("d", "s2").isEmpty)
   }
 
+  test("a 2000-line write and an /influx_binary body each fire at most " +
+    "6 jobs: one discovery aggregate and the data put") {
+    val dir = Files.createTempDirectory("graft-write-jobs").toString
+    val c = new GraftClient(spark, dir)
+    val ms = Seq("m0", "m1", "m2", "m3")
+    c.createSensor("d", "s", "1s", ms.map(Seq(_)))
+    def lines(from: Long) = (0 until 2000).map(i =>
+      s"d,circuit=s ${ms.map(m => s"$m=$i").mkString(",")} ${from + i}000000000")
+    c.write(lines(t0)) // the first write creates the chunk
+    assert(graft.JobCount(spark)(c.write(lines(t0 + 2000))) <= 6,
+      "jobs of a 2000-line write")
+
+    // [('d', 's', ms, [i, …], ns), …] as msgpack: array16 of 5-tuples
+    val bb = java.nio.ByteBuffer.allocate(1 << 16)
+    def pStr(s: String): Unit = {
+      val b = s.getBytes("UTF-8"); bb.put((0xa0 | b.length).toByte); bb.put(b)
+    }
+    bb.put(0xdc.toByte); bb.putShort(500.toShort)
+    (0 until 500).foreach { i =>
+      bb.put(0x95.toByte); pStr("d"); pStr("s")
+      bb.put((0x90 | ms.size).toByte); ms.foreach(pStr)
+      bb.put((0x90 | ms.size).toByte)
+      ms.foreach { _ => bb.put(0xcb.toByte); bb.putDouble(i.toDouble) }
+      bb.put(0xcf.toByte); bb.putLong((t0 + 4000 + i) * 1000000000L)
+    }
+    val body = java.util.Arrays.copyOf(bb.array(), bb.position())
+    val server = new graft.server.GraftServer(spark, dir, "adm")
+    server.start()
+    try {
+      val post = java.net.http.HttpRequest.newBuilder(java.net.URI.create(
+          s"http://127.0.0.1:${server.boundPort}/influx_binary"))
+        .header("Authorization", "Basic " + java.util.Base64.getEncoder
+          .encodeToString("u:adm".getBytes))
+        .POST(java.net.http.HttpRequest.BodyPublishers.ofByteArray(body))
+        .build()
+      val (mine, handler) = graft.JobCount.split(spark)(
+        assert(java.net.http.HttpClient.newHttpClient().send(post,
+          java.net.http.HttpResponse.BodyHandlers.ofString())
+          .statusCode == 200))
+      assert(mine == 0 && handler <= 6, s"jobs ($mine, $handler) of a post")
+    } finally server.stop()
+    assert(c.lastTimestamp("d", "s").contains(t0 + 4499))
+  }
+
   test("an empty key matches only the empty token (database.py:170-187 " +
     "exact match): token 'x' may not read a sensor whose read key is ''") {
     val dir = Files.createTempDirectory("graft-empty-key").toString

@@ -391,6 +391,26 @@ class DocStoreSpec extends SparkSpec {
       "vacuum changed the live corpus")
   }
 
+  test("docs reads with the schema its commit record holds: building " +
+    "the corpus frame fires no job after an init, an ingest or a rewrite") {
+    val root = tmp("dsschema")
+    val cfgLite = DocStore.Config("doc_id", "text", bm25 = false,
+      exact = true)
+    def noJob(): Unit =
+      assert(graft.JobCount(spark)(DocStore.docs(spark, root)) == 0)
+    DocStore.init(spark, root, all.filter(col("doc_id") % 7 === 0), cfgLite)
+    noJob()
+    DocStore.ingestBatch(spark, root, all.filter(col("doc_id") % 7 === 1),
+      cfgLite)
+    noJob()
+    val v = DocStore.deleteDocs(spark, root,
+      all.filter(col("doc_id") % 7 === 1).select("doc_id"), cfgLite)
+    noJob()
+    val docs = DocStore.docs(spark, root)
+    assert(docs.schema == spark.read.parquet(s"$root/docs/r$v").schema)
+    assert(docs.count() == all.filter(col("doc_id") % 7 === 0).count())
+  }
+
   test("crash states: an ingest's files or intent without its record, a " +
     "torn temp record and an unpruned commit read as the last committed " +
     "version; the re-run heals") {

@@ -1,54 +1,28 @@
 package graft.ingest
 
-import graft.SparkSpec
+import org.scalatest.funsuite.AnyFunSuite
 
-class BinaryFrameSpec extends SparkSpec {
+class BinaryFrameSpec extends AnyFunSuite {
 
   test("encode→decode round-trips a dates+matrix frame bit-exactly") {
-    import spark.implicits._
     val dates = Array(1704067200.0, 1704067201.0, 1704067202.5)
     val values = Array(
       Array(1.5f, -2.25f), Array(Float.NaN, 4.0f), Array(0.0f, 1e-7f))
-    val frame = BinaryFrame.encode(7L, dates, values)
-    assert(frame.n_rows == 3 && frame.n_metrics == 2)
-    assert(frame.payload.length == 3 * 8 + 6 * 4)
+    val bytes = BinaryFrame.encode(dates, values)
+    assert(bytes.length == 3 * 8 + 6 * 4)
 
-    val out = BinaryFrame.decode(Seq(frame).toDS()).collect()
-      .sortBy(p => (p.row, p.metric_idx))
-    assert(out.length == 6)
-    assert(out.map(_.ts_sec).distinct.toSeq == dates.toSeq)
-    val got = out.map(_.value)
-    assert(got(0) == 1.5f && got(1) == -2.25f)
-    assert(got(2).isNaN && got(3) == 4.0f)
-    assert(got(4) == 0.0f && got(5) == 1e-7f)
+    val (gotDates, got) = BinaryFrame.decode(bytes, 3, 2)
+    assert(gotDates.toSeq == dates.toSeq)
+    assert(got(0)(0) == 1.5f && got(0)(1) == -2.25f)
+    assert(got(1)(0).isNaN && got(1)(1) == 4.0f)
+    assert(got(2)(0) == 0.0f && got(2)(1) == 1e-7f)
   }
 
   test("decode flags a truncated payload per frame, like the corrupt-chunk guard") {
-    import spark.implicits._
-    val good = BinaryFrame.encode(1L, Array(1.0), Array(Array(2.0f)))
-    val bad = good.copy(frame_id = 2L, payload = good.payload.dropRight(1))
-    val ex = intercept[org.apache.spark.SparkException] {
-      BinaryFrame.decode(Seq(bad).toDS()).collect()
+    val good = BinaryFrame.encode(Array(1.0), Array(Array(2.0f)))
+    val ex = intercept[graft.core.InvalidDataWriteException] {
+      BinaryFrame.decode(good.dropRight(1), 1, 1)
     }
-    assert(ex.getCause.getMessage.contains("frame 2"))
-  }
-
-  test("toPoints lands frames in the store via the normal ingest path") {
-    import spark.implicits._
-    val t0 = 1704067200.0
-    val frame = BinaryFrame.encode(1L,
-      Array(t0, t0 + 1), Array(Array(10f, 20f), Array(30f, 40f)))
-    val pts = BinaryFrame.toPoints(
-      BinaryFrame.decode(Seq(frame).toDS()), Seq("active", "reactive"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-bin").toString
-    val store = new graft.store.SensorStore(spark, dir)
-    store.createSensor(graft.store.SensorConfig("b", "s", "1s",
-      Seq(graft.store.MetricDef(Seq("active")),
-        graft.store.MetricDef(Seq("reactive")))))
-    store.write("b", "s", pts)
-    val back = store.read("b", "s").collect().sortBy(_.getTimestamp(0).getTime)
-    assert(back.length == 2)
-    assert(back(0).getFloat(1) == 10f && back(0).getFloat(2) == 20f)
-    assert(back(1).getFloat(1) == 30f && back(1).getFloat(2) == 40f)
+    assert(ex.getMessage.contains("expected 12 bytes, got 11"))
   }
 }

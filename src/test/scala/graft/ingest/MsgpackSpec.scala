@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.store.{MetricDef, SensorConfig, SensorStore}
+import graft.client.GraftClient
 
 /** Wire-compat matrix mirroring the reference's
   * `tests/test_write_point_list.py` on the `/influx_binary` path: the
@@ -44,36 +44,19 @@ class MsgpackSpec extends SparkSpec {
       Msgpack.PointRow("test", "s1", "reactive", 4.0, 1704067201.0)))
   }
 
-  // test 2 analog: a row introducing a new metric evolves the sensor
-  test("a row with a new metric flows through store schema evolution") {
-    import spark.implicits._
-    val st = new SensorStore(spark,
-      Files.createTempDirectory("graft-mp").toString)
-    st.createSensor(SensorConfig("test", "s1", "1s",
-      Seq(MetricDef(Seq("active")), MetricDef(Seq("reactive")))))
-    val pts = Msgpack.decode(
-      Seq(Msgpack.Payload(1L, hex(seq2))).toDS())
-      .filter(col("db") === "test" && col("sensor") === "s1")
-      .select("ts", "metric", "value")
-    st.write("test", "s1", pts)
-    assert(st.config("test", "s1").metricNames.contains("new_metric"))
+  /** A client over a fresh store holding the keyless sensor test/s1. */
+  private def client(tag: String): GraftClient = {
+    val c = new GraftClient(spark,
+      Files.createTempDirectory(s"graft-$tag").toString)
+    c.createSensor("test", "s1", "1s", Seq(Seq("active"), Seq("reactive")))
+    c
   }
 
-  // test 3 analog: the full binary-body -> store -> read-back path
-  test("full path: binary body decodes distributed, writes, reads back " +
-    "on the grid") {
-    import spark.implicits._
-    val st = new SensorStore(spark,
-      Files.createTempDirectory("graft-mp").toString)
-    st.createSensor(SensorConfig("test", "s1", "1s",
-      Seq(MetricDef(Seq("active")), MetricDef(Seq("reactive")))))
-    val pts = Msgpack.decode(Seq(Msgpack.Payload(7L, hex(seq1))).toDS())
-      .select("ts", "metric", "value")
-    st.write("test", "s1", pts)
-    val out = st.read("test", "s1").orderBy("ts").collect()
-    assert(out.length == 2)
-    assert(out(0).getFloat(1) == 1.0f && out(0).getFloat(2) == 2.0f)
-    assert(out(1).getFloat(1) == 3.0f && out(1).getFloat(2) == 4.0f)
+  // test 2 analog: a row introducing a new metric evolves the sensor
+  test("a row with a new metric flows through store schema evolution") {
+    val c = client("mp")
+    c.writePoints(Msgpack.decodePointList(hex(seq2)))
+    assert(c.metrics("test", "s1").contains("new_metric"))
   }
 
   test("width/int stress: str8 names, array16 metric lists, negative " +
@@ -103,11 +86,10 @@ class MsgpackSpec extends SparkSpec {
   // (`tests/test_client.py:148-153`: 10k points written, read back):
   // a 10k-point body — encoded with the SAME format choices
   // msgpack-python makes for these values (fixarray/array16, fixstr,
-  // float64 values, uint64 ns timestamps) — decodes distributed,
-  // writes, and reads back with EXACT frame equality.
+  // float64 values, uint64 ns timestamps) — decodes, writes through
+  // `writePoints`, and reads back with EXACT frame equality.
   test("10k-point volume body round-trips decode -> store -> read " +
     "with exact frame equality") {
-    import spark.implicits._
     // minimal msgpack encoder making msgpack-python's choices for
     // exactly this body shape (the fixtures above pin the byte format;
     // this pins the VOLUME path)
@@ -132,15 +114,9 @@ class MsgpackSpec extends SparkSpec {
     val rows = Msgpack.decodePointList(body)
     assert(rows.length == 10000, s"expected 10k points, got ${rows.length}")
 
-    val st = new SensorStore(spark,
-      Files.createTempDirectory("graft-mp10k").toString)
-    st.createSensor(SensorConfig("test", "s1", "1s",
-      Seq(MetricDef(Seq("active")), MetricDef(Seq("reactive")))))
-    val pts = Msgpack.decode(Seq(Msgpack.Payload(1L, body)).toDS()
-        .repartition(4)) // distributed decode, not one task
-      .select("ts", "metric", "value")
-    st.write("test", "s1", pts)
-    val out = st.read("test", "s1").orderBy("ts")
+    val c = client("mp10k")
+    c.writePoints(rows)
+    val out = c.read("test", "s1")
       .select(unix_timestamp(col("ts")).as("sec"), col("active"),
         col("reactive")).collect()
     assert(out.length == nRows)

@@ -171,6 +171,36 @@ class GraftServerSpec extends SparkSpec {
     assert(codes.forall(_._2 == 400), codes)
   }
 
+  test("an empty metric name is refused on both ingest routes: 400, " +
+    "nothing written, no metric '' in the schema") {
+    setupSensor()
+    val cfg = """{"period":"1s","metrics":["m1"],"write_key":"write-tok"}"""
+    assert(req("POST", "/db/plant/sensor/em", Some(Admin),
+      Some(cfg.getBytes)).statusCode == 201)
+    val bb = ByteBuffer.allocate(256)
+    def pStr(s: String): Unit = {
+      val b = s.getBytes("UTF-8"); bb.put((0xa0 | b.length).toByte); bb.put(b)
+    }
+    // [('plant', 'em', ['m1', ''], [1.0, 2.0], 1704067200e9)]
+    bb.put(0x91.toByte); bb.put(0x95.toByte); pStr("plant"); pStr("em")
+    bb.put(0x92.toByte); pStr("m1"); pStr("")
+    bb.put(0x92.toByte)
+    bb.put(0xcb.toByte); bb.putDouble(1.0)
+    bb.put(0xcb.toByte); bb.putDouble(2.0)
+    bb.put(0xcf.toByte); bb.putLong(1704067200L * 1000000000L)
+    val binary = java.util.Arrays.copyOf(bb.array(), bb.position())
+    val codes = Seq(
+        "/influx" -> "plant,circuit=em m1=1, 1704067200000000000".getBytes,
+        "/influx" -> "plant,circuit=em m1=1,=2 1704067200000000000".getBytes,
+        "/influx_binary" -> binary)
+      .map { case (path, body) =>
+        req("POST", path, Some(WriteK), Some(body)).statusCode }
+    assert(codes == Seq(400, 400, 400))
+    val c = new GraftClient(spark, dir, WriteK)
+    assert(c.metrics("plant", "em") == Seq("m1"))
+    assert(c.lastTimestamp("plant", "em").isEmpty)
+  }
+
   test("a corrupt stored CONFIG.JSON is the server's fault: 500, not 400") {
     assert(req("POST", "/db/scrap", Some(Admin)).statusCode == 201)
     val cfg = """{"period":"1s","metrics":["a"],"read_key":"r","write_key":"w"}"""
@@ -339,8 +369,6 @@ class GraftServerSpec extends SparkSpec {
 
   test("grafana /query returns every target as a JSON string: quotes, " +
     "backslashes and names outside Latin-1 round-trip") {
-    import org.apache.spark.sql.functions.{col, timestamp_seconds}
-    import spark.implicits._
     import graft.core.Wire.jstr
     setupSensor()
     val names = Seq("a\"b", "a\\b", "\u6e29\u5ea6")
@@ -349,12 +377,11 @@ class GraftServerSpec extends SparkSpec {
     assert(req("POST", "/db/plant/sensor/esc", Some(Admin),
       Some(cfg.getBytes(StandardCharsets.UTF_8))).statusCode == 201)
     val t0 = 1704326400L
-    val pts = names.zipWithIndex.flatMap { case (m, i) =>
-      (0 until 10).map(k => (t0 + k, m, (i * 10 + k).toDouble))
-    }.toDF("sec", "metric", "value")
-      .select(timestamp_seconds(col("sec")).as("ts"), col("metric"),
-        col("value"))
-    new GraftClient(spark, dir, WriteK).writeBatch(Seq(("plant", "esc") -> pts))
+    new GraftClient(spark, dir, WriteK).writePoints(
+      names.zipWithIndex.flatMap { case (m, i) => (0 until 10).map(k =>
+        graft.ingest.Msgpack.PointRow("plant", "esc", m, (i * 10 + k).toDouble,
+          (t0 + k).toDouble))
+      })
 
     val range = s"""{"from":"${java.time.Instant.ofEpochSecond(t0)}",""" +
       s""""to":"${java.time.Instant.ofEpochSecond(t0 + 9)}"}"""

@@ -51,6 +51,19 @@ class StreamIngestSpec extends SparkSpec {
     assert(byTs(t0 + 5) == (Some(11.0f), None))
   }
 
+  test("parse drops a line with one non-numeric field whole, its other " +
+    "fields too") {
+    import spark.implicits._
+    val t0 = 1704067200L
+    val got = StreamIngest.parse(Seq(
+        s"test,circuit=s1 active=1,reactive=abc ${t0}000000000",
+        s"test,circuit=s1 active=2 ${t0 + 1}000000000").toDF("line"),
+        "line", "test", "s1")
+      .select(unix_timestamp(col("ts")), col("metric"), col("value"))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
+    assert(got.toSeq == Seq((t0 + 1, "active", 2.0)))
+  }
+
   test("watermarked windowed stats aggregate per event-time window") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
