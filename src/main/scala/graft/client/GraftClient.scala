@@ -8,8 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Grid
 import graft.core.Wire.jstr
-import graft.ingest.{Influx, Pivot}
-import graft.ingest.Msgpack.PointRow
+import graft.ingest.{Influx, Pivot, PointRow}
 import graft.read.Downsample
 import graft.store.{MetricDef, RollupKind, SensorConfig, SensorStore, SensorVersion}
 

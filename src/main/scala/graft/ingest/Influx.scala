@@ -5,8 +5,6 @@ import java.util.regex.Pattern
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.ingest.Msgpack.PointRow
-
 /** InfluxDB-line-protocol ingest (reference operator A-1).
   *
   * Grammar (from `/root/reference/src/ong_tsdb/server_utils.py:8-25`):
@@ -17,7 +15,7 @@ import graft.ingest.Msgpack.PointRow
   *
   * One decoder, [[decodeLine]], plain Scala on whoever calls it: the
   * server and the library decode a write body on the driver into
-  * [[Msgpack.PointRow]]s ([[decode]]), the points the `/influx_binary`
+  * [[PointRow]]s ([[decode]]), the points the `/influx_binary`
   * body decodes to; a DataFrame of lines decodes through the same
   * function as a UDF ([[parseLines]]) into the engine's long rows
   * `(db, sensor, metric, value, ts_sec)`.

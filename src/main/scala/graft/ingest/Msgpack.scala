@@ -23,12 +23,6 @@ import java.nio.charset.StandardCharsets
   */
 object Msgpack {
 
-  /** One point of a write body, either wire format: `ts_sec` in epoch
-    * seconds, NaN `value` for a cell the write leaves alone.
-    */
-  case class PointRow(db: String, sensor: String, metric: String,
-                      value: Double, ts_sec: Double)
-
   // ---- minimal msgpack value model --------------------------------
   sealed trait V
   case class VArr(items: Vector[V]) extends V

@@ -399,7 +399,7 @@ class PropertySpec extends SparkSpec {
     val got = graft.ingest.Msgpack.decodePointList(body)
     val expected = cases.flatMap { case (db, sensor, ms, vs, ns) =>
       ms.zip(vs).map { case (m, v) =>
-        graft.ingest.Msgpack.PointRow(db, sensor, m, v, ns / 1e9)
+        graft.ingest.PointRow(db, sensor, m, v, ns / 1e9)
       }
     }
     assert(got == expected,

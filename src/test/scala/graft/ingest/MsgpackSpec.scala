@@ -38,10 +38,10 @@ class MsgpackSpec extends SparkSpec {
     "with ns->sec stamps") {
     val rows = Msgpack.decodePointList(hex(seq1))
     assert(rows == Seq(
-      Msgpack.PointRow("test", "s1", "active", 1.0, 1704067200.0),
-      Msgpack.PointRow("test", "s1", "reactive", 2.0, 1704067200.0),
-      Msgpack.PointRow("test", "s1", "active", 3.0, 1704067201.0),
-      Msgpack.PointRow("test", "s1", "reactive", 4.0, 1704067201.0)))
+      PointRow("test", "s1", "active", 1.0, 1704067200.0),
+      PointRow("test", "s1", "reactive", 2.0, 1704067200.0),
+      PointRow("test", "s1", "active", 3.0, 1704067201.0),
+      PointRow("test", "s1", "reactive", 4.0, 1704067201.0)))
   }
 
   /** A client over a fresh store holding the keyless sensor test/s1. */
@@ -77,7 +77,7 @@ class MsgpackSpec extends SparkSpec {
       "000000cb402c0000000000007b"
     val rows = Msgpack.decodePointList(hex(wide))
     assert(rows.length == 20)
-    assert(rows.head == Msgpack.PointRow("d" * 40, "s" * 40, "m0",
+    assert(rows.head == PointRow("d" * 40, "s" * 40, "m0",
       -5.0, 123 / 1e9))
     assert(rows(19).metric == "m19" && rows(19).value == 14.0)
   }

@@ -379,7 +379,7 @@ class GraftServerSpec extends SparkSpec {
     val t0 = 1704326400L
     new GraftClient(spark, dir, WriteK).writePoints(
       names.zipWithIndex.flatMap { case (m, i) => (0 until 10).map(k =>
-        graft.ingest.Msgpack.PointRow("plant", "esc", m, (i * 10 + k).toDouble,
+        graft.ingest.PointRow("plant", "esc", m, (i * 10 + k).toDouble,
           (t0 + k).toDouble))
       })
 
